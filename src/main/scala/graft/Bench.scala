@@ -411,6 +411,22 @@ object Bench {
         val fpj = fps.map("\"" + _ + "\"").mkString("[", ",", "]")
         f""""$k":{"end_s":$end%.1f,"load_1m":$ld%.2f,"shapes":$fpj}""" }
       .mkString("""{"metric":"rows","queries":{""", ",", "}}")
+    // CONTRACT (round-14 fix): the one-line total JSON must be the LAST
+    // line of the process's output — consumers json-parse the tail of
+    // what sbt prints. Every side channel (artifact write, plan_diff
+    // tripwire echo) therefore runs ABOVE; here we silence Spark's
+    // shutdown logging, stop the session, and only then print the two
+    // contract lines so nothing can follow them on stdout or stderr. A
+    // failing stop() is logged, never allowed to swallow the lines.
+    def stopAndPrintContract(): Unit = {
+      try {
+        spark.sparkContext.setLogLevel("OFF")
+        spark.stop()
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] spark.stop failed: $e") }
+      println(detailLine)
+      println(totalLine)
+    }
     // The driver archives only a ~2000-char TAIL of stdout, which truncates
     // the per-query map (BENCH_r09.json lost its first half). Persist the
     // FULL two-line artifact to a repo file so round-over-round comparison
@@ -456,22 +472,14 @@ object Bench {
               System.err.println("[bench] plan/volume tripwire FLAGGED " +
                 "rows (see PLAN_DIFF_latest.txt)")
               if (sys.env.get("SPARK_GRAFT_PLAN_GATE").contains("1")) {
-                spark.stop(); sys.exit(3)
+                // a gated run still prints the contract lines
+                stopAndPrintContract(); sys.exit(3)
               }
             }
           }
         } catch { case e: Throwable =>
           System.err.println(s"[bench] artifact write failed: $e") }
       }
-    // CONTRACT (round-14 fix): the one-line total JSON must be the LAST
-    // line of the process's output — the driver json-parses the tail of
-    // what sbt prints. Every side channel (artifact write, plan_diff
-    // tripwire echo) therefore runs ABOVE; here we silence Spark's
-    // shutdown logging, stop the session, and only then print the two
-    // contract lines so nothing can follow them on stdout or stderr.
-    spark.sparkContext.setLogLevel("OFF")
-    spark.stop()
-    println(detailLine)
-    println(totalLine)
+    stopAndPrintContract()
   }
 }

@@ -85,13 +85,11 @@ object BenchScale {
     /** Per-trigger maintainer COMMIT cost with the corpus index as the
       * pre-existing state (bootstrapped untimed) and one FIXED
       * ~200-novel-vector batch (negated 1×-replica vectors under fresh
-      * ids — near-dups of nothing stored): `snapshot=true` pays the
-      * VersionedView full-index rewrite (linear BY CONSTRUCTION, the
-      * comparison row), `snapshot=false` the DeltaView changes-only
+      * ids — near-dups of nothing stored): the DeltaView changes-only
       * commit whose residual is the fold scan inside the probe/accept
       * derivation.
       */
-    def idxCommitRow(dir: String, snapshot: Boolean): Double = {
+    def idxCommitRow(dir: String): Double = {
       import graft.operators.EmbeddingIndex
       import graft.streaming.EmbeddingDedupStream
       val root = java.nio.file.Files.createTempDirectory("graft-idxc").toString
@@ -105,21 +103,15 @@ object BenchScale {
       // way the maintainer's first commit would (flat router + quantizer)
       EmbeddingIndex.ensureIndexStamp(spark, root, cent,
         EmbeddingIndex.FlatRouter, stateExists = false)
-      if (snapshot)
-        graft.util.VersionedView(spark, root).applyBatch(0L)(_ => assigned)
-      else
-        graft.util.DeltaView(spark, root, Seq("vec_id"), compactEvery = 1000,
-            basePartitionCols = Seq("cell"))
-          .applyBatch(0L)(_ => (assigned, e.limit(0).select(col("vec_id"))))
+      graft.util.DeltaView(spark, root, Seq("vec_id"), compactEvery = 1000,
+          basePartitionCols = Seq("cell"))
+        .applyBatch(0L)(_ => (assigned, e.limit(0).select(col("vec_id"))))
       val batch = e.filter(col("vec_id") % 10 === 1 && col("vec_id") < 2000)
         .select(lit("I").as("op"), (col("vec_id") + 10000000L).as("vec_id"),
           transform(col("embedding"), x => -x).as("embedding"))
       val s = time {
-        if (snapshot)
-          EmbeddingDedupStream.applyBatch(spark, root, cent, batch, 1L)
-        else
-          EmbeddingDedupStream.applyBatchDelta(spark, root, cent, batch, 1L,
-            compactEvery = 1000)
+        EmbeddingDedupStream.applyBatchDelta(spark, root, cent, batch, 1L,
+          compactEvery = 1000)
       }
       cent.unpersist()
       spark.catalog.clearCache()
@@ -134,7 +126,7 @@ object BenchScale {
       * ingest: most reject at the LSH probe, which is the expensive
       * honest case — the full gate stack runs for every row).
       */
-    def curationBatchRow(dir: String, snapshot: Boolean = false): Double = {
+    def curationBatchRow(dir: String): Double = {
       import graft.operators.Dedup
       import graft.streaming.CurationStream
       val root = java.nio.file.Files.createTempDirectory("graft-curs").toString
@@ -144,8 +136,7 @@ object BenchScale {
       ok.count()
       val cap = Long.MaxValue / 2
       val bootstrap = docs.select(col("doc_id"), col("text"), col("source"))
-      if (snapshot) CurationStream.applyBatch(spark, root, ok, bootstrap, 0L, cap)
-      else CurationStream.applyBatchDelta(spark, root, ok, bootstrap, 0L, cap,
+      CurationStream.applyBatchDelta(spark, root, ok, bootstrap, 0L, cap,
         compactEvery = 1000)
       val batch = docs
         .filter(col("doc_id") % 10 === 3 && col("doc_id") < 5000)
@@ -153,8 +144,7 @@ object BenchScale {
           concat(col("text"), lit(" zq"), col("doc_id")).as("text"),
           col("source"))
       val s = time {
-        if (snapshot) CurationStream.applyBatch(spark, root, ok, batch, 1L, cap)
-        else CurationStream.applyBatchDelta(spark, root, ok, batch, 1L, cap,
+        CurationStream.applyBatchDelta(spark, root, ok, batch, 1L, cap,
           compactEvery = 1000)
       }
       ok.unpersist()
@@ -168,27 +158,24 @@ object BenchScale {
       * ts = orderdate, tb = orderkey, attr = priority — the q114
       * derivation), then one FIXED ~2k-observation batch of later-ts
       * priority changes for low-key customers (keys that exist at every
-      * scale point) commits. `snapshot=true` rewrites the whole dimension
-      * (VersionedView), `snapshot=false` ships only the affected keys'
-      * recomputed rows + tombstones (DeltaView).
+      * scale point) commits, shipping only the affected keys' recomputed
+      * rows + tombstones (DeltaView).
       */
-    def scd2CommitRow(dir: String, snapshot: Boolean): Double = {
+    def scd2CommitRow(dir: String): Double = {
       import graft.streaming.Scd2Maintenance
       val root = java.nio.file.Files.createTempDirectory("graft-scd2c").toString
       val o = Tables(spark, dir).orders
       val obs = o.select(col("o_custkey").as("key"),
         col("o_orderdate").cast("timestamp").cast("long").as("ts"),
         col("o_orderkey").as("tb"), col("o_orderpriority").as("attr"))
-      if (snapshot) Scd2Maintenance.applyBatch(spark, root, obs, 0L)
-      else Scd2Maintenance.applyBatchDelta(spark, root, obs, 0L,
+      Scd2Maintenance.applyBatchDelta(spark, root, obs, 0L,
         compactEvery = 1000)
       val batch = obs.filter(col("key") % 10 === 1 && col("key") < 20000)
         .groupBy("key").agg(max(col("ts")).as("mts"), max(col("tb")).as("mtb"))
         .select(col("key"), (col("mts") + 86400L).as("ts"),
           (col("mtb") + 1000000000L).as("tb"), lit("9-CHANGED").as("attr"))
       val s = time {
-        if (snapshot) Scd2Maintenance.applyBatch(spark, root, batch, 1L)
-        else Scd2Maintenance.applyBatchDelta(spark, root, batch, 1L,
+        Scd2Maintenance.applyBatchDelta(spark, root, batch, 1L,
           compactEvery = 1000)
       }
       spark.catalog.clearCache()
@@ -785,10 +772,7 @@ object BenchScale {
       // ~200-vector novel batch commits. The delta commit writes only the
       // accepted rows + tombstones; the residual growth term is the fold
       // SCAN inside the probe/accept derivation (no shuffle, no rewrite).
-      // Its pair row `idx_commit_snapshot` (comparison pass) rewrites the
-      // whole index per commit — linear BY CONSTRUCTION — which is
-      // exactly the difference the delta core exists to remove.
-      row("idx_commit_delta")(idxCommitRow(dir, snapshot = false)) ++
+      row("idx_commit_delta")(idxCommitRow(dir)) ++
       // Streamed POSTINGS maintainer commit cost (q160's machinery): the
       // corpus postings bootstrapped as batch 0 (untimed), then one FIXED
       // ~500-doc batch of fresh-id documents commits through the signed
@@ -859,9 +843,8 @@ object BenchScale {
       // bootstrapped untimed from the scaled orders change stream, one
       // FIXED ~2k-observation batch commits only the affected keys'
       // recomputed histories + tombstones — the cost must track batch +
-      // affected history, never the dimension (its snapshot pair row
-      // rewrites the whole dimension per trigger).
-      row("scd2_commit_delta")(scd2CommitRow(dir, snapshot = false))
+      // affected history, never the dimension.
+      row("scd2_commit_delta")(scd2CommitRow(dir))
     }
 
     def comparisonAt(dir: String, scale: Int): Seq[(String, Double)] = {
@@ -888,22 +871,7 @@ object BenchScale {
         // sum(cell), not count() — see idx_build_hier's pruning note
         EmbeddingIndex.assignCells(t.embeddings, cent, "embedding",
           "vec_id").agg(sum(col("cell"))).head(); ()
-      }) ++
-      // the snapshot-core maintainer commit: rewrites the full index per
-      // trigger — linear BY CONSTRUCTION, the comparison row for
-      // idx_commit_delta (see idxCommitRow)
-      row("idx_commit_snapshot")(idxCommitRow(dir, snapshot = true)) ++
-      // the snapshot-core curation batch: the same gate stack, but all
-      // three views rewrite the whole corpus per trigger — the comparison
-      // row for curation_stream_batch, on views big enough (500 k docs ×
-      // set/band rows at 100×) to make the rewrite visible where the
-      // 4-long embedding index hides it under fixed costs
-      row("curation_stream_batch_snapshot")(curationBatchRow(dir,
-        snapshot = true)) ++
-      // the snapshot-core SCD2 maintainer: full-dimension rewrite per
-      // trigger — linear BY CONSTRUCTION, the comparison row for
-      // scd2_commit_delta
-      row("scd2_commit_snapshot")(scd2CommitRow(dir, snapshot = true))
+      })
       // q121 (prefix-filtered exact Jaccard join) is deliberately NOT a
       // study row in ANY configuration: on the saturating-vocabulary
       // replicas its candidate volume is Σ (prefix-df)² ∝ n² (measured

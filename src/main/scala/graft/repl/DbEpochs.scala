@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * table B still at the old one. The reference has the same flaw (its
   * `REPL LOAD` applies per-table too); this module exceeds it with the
   * versioned-pointer recipe the engine already trusts
-  * ([[graft.util.VersionedView]]), lifted to database granularity:
+  * ([[graft.util.DeltaView]]'s pointer-per-commit), lifted to database
+  * granularity:
   *
   *  - a per-db pointer `<db>/_epochs/CURRENT` = `"<epoch>,<watermark>"`,
   *    swapped ONCE per VERIFIED replication cycle
@@ -48,7 +49,7 @@ import org.apache.spark.sql.functions._
   * resolve to the pre-load state, which is the whole point
   * (spec: DbEpochSpec "mid-load pinned reads").
   *
-  * Retention matches [[graft.util.VersionedView]]: `keepEpochs` states
+  * Retention matches [[graft.util.DeltaView]]: `keepEpochs` states
   * stay readable; `commit` prunes stash/manifest dirs below the floor, so
   * a pinned frame survives `keepEpochs - 1` further commits. Reading a
   * pruned epoch fails with a diagnosable error, never silently serves

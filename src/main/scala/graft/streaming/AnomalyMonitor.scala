@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.TimeSeries
-import graft.util.{DeltaView, VersionedView}
+import graft.util.DeltaView
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -19,13 +19,14 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * once-rounded z) carries over unchanged.
   *
   * Exactly-once effect = Spark's checkpointed offsets × the idempotent
-  * versioned commit ([[VersionedView]]: atomic pointer swap, replayed
+  * versioned commit ([[DeltaView]]: atomic pointer swap, replayed
   * batches no-op, crash windows recover by overwrite-replay).
   *
   * 100 TB shape: per trigger, the micro-batch aggregates map-side to its
   * touched (key, hour) grain before one merge groupBy against the view —
   * the view itself is keys × active hours, orders of magnitude smaller
-  * than the event volume. A warehouse deployment additionally
+  * than the event volume, and a commit ships only the touched cells'
+  * rows plus tombstones, so cold hours are never rewritten. A warehouse deployment additionally
   * range-partitions the view by hour so the merge rewrites only recent
   * partitions (the [[graft.repl.Catalog]] partition-scoped merge pattern);
   * retention (dropping hours older than the longest lookback + reporting
@@ -43,25 +44,6 @@ object AnomalyMonitor {
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ViewSchema)
 
-  /** The current hourly-count view (empty before the first commit). */
-  def readCounts(spark: SparkSession, viewDir: String): DataFrame =
-    VersionedView(spark, viewDir).read().getOrElse(emptyView(spark))
-
-  /** Apply one micro-batch of (key, us) events: aggregate to the hourly
-    * grain, merge counts into the view, commit a new version. Replayed
-    * batch ids no-op. Public so tests can drive replays directly.
-    */
-  def applyBatch(spark: SparkSession, viewDir: String, batch: DataFrame,
-                 batchId: Long): Unit = {
-    if (batch.isEmpty) return // idle trigger: no view rewrite, no commit
-    val delta = hourlyDelta(batch)
-    VersionedView(spark, viewDir).applyBatch(batchId) { cur =>
-      cur.getOrElse(emptyView(spark))
-        .unionByName(delta)
-        .groupBy(col("key"), col("hr")).agg(sum(col("cnt")).as("cnt"))
-    }: Unit
-  }
-
   /** Micro-batch (key, us) events at the hourly grain. Integral floor
     * division (q127's construction): double `/` would truncate toward
     * zero on pre-epoch hours.
@@ -71,20 +53,19 @@ object AnomalyMonitor {
     .groupBy(col("key"), col("hr")).agg(count(lit(1)).as("cnt"))
 
   private def deltaView(spark: SparkSession, viewDir: String,
-                        compactEvery: Int): DeltaView =
+                        compactEvery: Int = 8): DeltaView =
     DeltaView(spark, viewDir, keyCols = Seq("key", "hr"),
       compactEvery = compactEvery)
 
-  /** [[applyBatch]] on the [[DeltaView]] core: the commit ships only the
-    * TOUCHED (key, hour) cells' re-summed rows plus their tombstones —
-    * O(batch grain), not O(view), per trigger. The view is keys × active
-    * hours (already far smaller than event volume); the delta core
-    * additionally stops rewriting COLD hours every trigger, which is what
-    * lets retention-scale views commit at the batch's grain.
+  /** Apply one micro-batch of (key, us) events: aggregate to the hourly
+    * grain, re-sum the TOUCHED (key, hour) cells and commit only their rows
+    * plus tombstones — O(batch grain), not O(view), per trigger, which is
+    * what lets retention-scale views commit at the batch's grain. Replayed
+    * batch ids no-op. Public so tests can drive replays directly.
     */
   def applyBatchDelta(spark: SparkSession, viewDir: String, batch: DataFrame,
                       batchId: Long, compactEvery: Int = 8): Unit = {
-    if (batch.isEmpty) return
+    if (batch.isEmpty) return // idle trigger: no commit
     val delta = hourlyDelta(batch)
     deltaView(spark, viewDir, compactEvery).applyBatch(batchId) { cur =>
       val base = cur.getOrElse(emptyView(spark))
@@ -98,36 +79,13 @@ object AnomalyMonitor {
     }: Unit
   }
 
-  /** The current hourly-count view from the [[DeltaView]] core. */
-  def readCountsDelta(spark: SparkSession, viewDir: String,
-                      compactEvery: Int = 8): DataFrame =
-    deltaView(spark, viewDir, compactEvery).read()
-      .getOrElse(emptyView(spark))
+  /** The current hourly-count view (empty before the first commit). */
+  def readCountsDelta(spark: SparkSession, viewDir: String): DataFrame =
+    deltaView(spark, viewDir).read().getOrElse(emptyView(spark))
 
   /** Maintain the hourly-count view continuously from a streaming frame
     * with columns (key, us).
     */
-  def monitorStream(events: DataFrame, viewDir: String,
-                    checkpointDir: String): StreamingQuery = {
-    val spark = events.sparkSession
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(spark, viewDir, batch, batchId)
-      }
-      .start()
-  }
-
-  /** Score the CURRENT view: every (key, hour) with its trailing-24h
-    * z-score and anomaly flag — identical to running q127's operator over
-    * a batch recompute of the same events.
-    */
-  def anomalies(spark: SparkSession, viewDir: String,
-                minPrev: Int = 12, threshold: Double = 2.0): DataFrame =
-    TimeSeries.rollingZScore(readCounts(spark, viewDir),
-      lookbackHours = 24, minPrev = minPrev, threshold = threshold)
-
-  /** [[monitorStream]] on the [[DeltaView]] core — O(batch) commits. */
   def monitorStreamDelta(events: DataFrame, viewDir: String,
                          checkpointDir: String,
                          compactEvery: Int = 8): StreamingQuery = {
@@ -140,10 +98,12 @@ object AnomalyMonitor {
       .start()
   }
 
-  /** [[anomalies]] over the [[DeltaView]]-maintained counts. */
+  /** Score the CURRENT view: every (key, hour) with its trailing-24h
+    * z-score and anomaly flag — identical to running q127's operator over
+    * a batch recompute of the same events.
+    */
   def anomaliesDelta(spark: SparkSession, viewDir: String,
-                     minPrev: Int = 12, threshold: Double = 2.0,
-                     compactEvery: Int = 8): DataFrame =
-    TimeSeries.rollingZScore(readCountsDelta(spark, viewDir, compactEvery),
+                     minPrev: Int = 12, threshold: Double = 2.0): DataFrame =
+    TimeSeries.rollingZScore(readCountsDelta(spark, viewDir),
       lookbackHours = 24, minPrev = minPrev, threshold = threshold)
 }

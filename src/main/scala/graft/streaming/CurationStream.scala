@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.operators.{Dedup, TextAnalysis}
 import graft.operators.Dedup.LshIndex
-import graft.util.{DeltaView, VersionedView}
+import graft.util.DeltaView
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -87,25 +87,13 @@ object CurationStream {
     StructField("doc", LongType) +: StructField("band", IntegerType) +:
       (0 until bandSlots).map(bandField))
 
-  def committed(spark: SparkSession, dir: String): Option[(Long, Long)] =
-    VersionedView(spark, s"$dir/docs").committed
-
-  private def readOr(spark: SparkSession, dir: String,
-                     schema: StructType): DataFrame =
-    VersionedView(spark, dir).read().getOrElse(
-      graft.util.Frames.empty(spark, schema))
-
-  /** The curated corpus (doc_id, source, hash); empty before any commit. */
-  def readDocs(spark: SparkSession, dir: String): DataFrame =
-    readOr(spark, s"$dir/docs", DocsSchema)
-
   private def empty(spark: SparkSession, schema: StructType): DataFrame =
     graft.util.Frames.empty(spark, schema)
 
-  /** Stages 1+2+4's batch side, shared by both storage cores: per-row
-    * gates fused into one scan pass, in-batch exact dedup, LSH artifacts
-    * under the frozen universe, in-batch near-dup dominance. `e2` and
-    * `sets` come back CACHED — callers release them in a finally.
+  /** Stages 1+2+4's batch side: per-row gates fused into one scan pass,
+    * in-batch exact dedup, LSH artifacts under the frozen universe,
+    * in-batch near-dup dominance. `e2` and `sets` come back CACHED —
+    * callers release them in a finally.
     */
   private def gateBatch(ok: DataFrame, batch: DataFrame, n: Int,
                         threshold: Double)
@@ -187,52 +175,6 @@ object CurationStream {
         Seq("doc", "hash"))
       .select(col("doc"))
 
-  /** Apply one micro-batch of documents (doc_id, text, source): the full
-    * gate stack, then three idempotent commits. Public so tests drive
-    * replay/crash cases directly.
-    */
-  def applyBatch(spark: SparkSession, dir: String, ok: DataFrame,
-                 batch: DataFrame, batchId: Long, capN: Long,
-                 n: Int = 3, threshold: Double = 0.5): Unit = {
-    val vvDocs = VersionedView(spark, s"$dir/docs")
-    val vvSets = VersionedView(spark, s"$dir/sets")
-    val vvBands = VersionedView(spark, s"$dir/bands")
-    // fail loudly if the persisted views were built under a different LSH
-    // configuration (band retune / hash-family change) — see bandingStamp
-    Dedup.ensureBandingStamp(spark, dir, vvDocs.committed.isDefined)
-    if (Seq(vvDocs, vvSets, vvBands)
-        .forall(_.committed.exists(_._1 >= batchId))) return
-
-    val (e2, sets, bands, reps) = gateBatch(ok, batch, n, threshold)
-    try {
-      if (e2.isEmpty) return // idle trigger: no commits
-      // index state for the probe: the PREVIOUS batch's views (they only
-      // lag within the in-flight batch — see the object doc)
-      val index = LshIndex(ok,
-        readOr(spark, s"$dir/sets", SetsSchema),
-        readOr(spark, s"$dir/bands", BandsSchema))
-
-      vvDocs.applyBatch(batchId) { cur =>
-        val docsV = cur.getOrElse(empty(spark, DocsSchema))
-        docsV.unionByName(admit(docsV, index, reps, capN, n, threshold))
-      }
-
-      // checkpointed once: both appenders consume it, each evaluation
-      // would re-join the batch against the docs view
-      val accepted = acceptedOf(e2, readDocs(spark, dir)).localCheckpoint()
-      vvSets.applyBatch(batchId) { cur =>
-        val v = cur.getOrElse(empty(spark, SetsSchema))
-        v.unionByName(sets.join(accepted, "doc")
-          .join(v.select(col("doc")), Seq("doc"), "left_anti"))
-      }
-      vvBands.applyBatch(batchId) { cur =>
-        val v = cur.getOrElse(empty(spark, BandsSchema))
-        v.unionByName(bands.join(accepted, "doc")
-          .join(v.select(col("doc")), Seq("doc"), "left_anti"))
-      }: Unit
-    } finally { e2.unpersist(); sets.unpersist() }
-  }
-
   private def dvDocs(spark: SparkSession, dir: String, k: Int) =
     DeltaView(spark, s"$dir/docs", Seq("doc_id"), compactEvery = k)
   private def dvSets(spark: SparkSession, dir: String, k: Int) =
@@ -240,7 +182,7 @@ object CurationStream {
   private def dvBands(spark: SparkSession, dir: String, k: Int) =
     DeltaView(spark, s"$dir/bands", Seq("doc"), compactEvery = k)
 
-  /** The curated corpus under the DELTA core. */
+  /** The curated corpus (doc_id, source, hash); empty before any commit. */
   def readDocsDelta(spark: SparkSession, dir: String): DataFrame =
     dvDocs(spark, dir, 8).read().getOrElse(empty(spark, DocsSchema))
 
@@ -248,52 +190,20 @@ object CurationStream {
                      dir: String): Option[(Long, Long, Long)] =
     dvDocs(spark, dir, 8).committed
 
-  /** [[applyBatch]] on the [[DeltaView]] core: identical gate stack and
-    * admission semantics, but each of the three commits ships only the
-    * batch's ACCEPTED rows — O(batch), not O(corpus) — with periodic
-    * compaction. The curation stream never retracts (documents leave via
-    * the nightly re-curation, reference `TODO.md`-style retention is the
-    * index-retract path q150/q151), so the deltas are pure appends and
-    * the tombstone anti-join in the fold is empty.
+  /** Apply one micro-batch of documents (doc_id, text, source): the full
+    * gate stack, then three idempotent commits — [[applySignedBatchDelta]]
+    * with every row an insert. Each commit ships only the batch's ACCEPTED
+    * rows — O(batch), not O(corpus) — with periodic compaction.
     */
   def applyBatchDelta(spark: SparkSession, dir: String, ok: DataFrame,
                       batch: DataFrame, batchId: Long, capN: Long,
                       n: Int = 3, threshold: Double = 0.5,
-                      compactEvery: Int = 8): Unit = {
-    val (vDocs, vSets, vBands) = (dvDocs(spark, dir, compactEvery),
-      dvSets(spark, dir, compactEvery), dvBands(spark, dir, compactEvery))
-    Dedup.ensureBandingStamp(spark, dir, vDocs.committed.isDefined)
-    if (Seq(vDocs.committed, vSets.committed, vBands.committed)
-        .forall(_.exists(_._1 >= batchId))) return
+                      compactEvery: Int = 8): Unit =
+    applySignedBatchDelta(spark, dir, ok, asInserts(batch), batchId, capN, n,
+      threshold, compactEvery)
 
-    val (e2, sets, bands, reps) = gateBatch(ok, batch, n, threshold)
-    val noDel = empty(spark, StructType(Seq(StructField("doc", LongType))))
-    try {
-      if (e2.isEmpty) return // idle trigger: no commits
-      val index = LshIndex(ok,
-        vSets.read().getOrElse(empty(spark, SetsSchema)),
-        vBands.read().getOrElse(empty(spark, BandsSchema)))
-
-      vDocs.applyBatch(batchId) { cur =>
-        val docsV = cur.getOrElse(empty(spark, DocsSchema))
-        (admit(docsV, index, reps, capN, n, threshold),
-         noDel.withColumnRenamed("doc", "doc_id"))
-      }
-
-      val accepted = acceptedOf(e2, readDocsDelta(spark, dir))
-        .localCheckpoint() // consumed by both appenders
-      vSets.applyBatch(batchId) { cur =>
-        val v = cur.getOrElse(empty(spark, SetsSchema))
-        (sets.join(accepted, "doc")
-          .join(v.select(col("doc")), Seq("doc"), "left_anti"), noDel)
-      }
-      vBands.applyBatch(batchId) { cur =>
-        val v = cur.getOrElse(empty(spark, BandsSchema))
-        (bands.join(accepted, "doc")
-          .join(v.select(col("doc")), Seq("doc"), "left_anti"), noDel)
-      }: Unit
-    } finally { e2.unpersist(); sets.unpersist() }
-  }
+  private def asInserts(docs: DataFrame): DataFrame =
+    docs.select(lit("I").as("op"), col("doc_id"), col("text"), col("source"))
 
   /** SIGNED ingest on the [[DeltaView]] core: rows carry `op` ∈ I/D —
     * I rows (doc_id, text, source) run the full gate stack, D rows
@@ -312,10 +222,10 @@ object CurationStream {
     * matches a probe (its set/band rows are tombstoned in the same
     * commit).
     *
-    * Crash-window convergence is [[applyBatchDelta]]'s unchanged: docs
-    * commits first; replays re-derive accepted ids as `batch ∩ docs
-    * view` and re-ship the same delete keys, so every interleaving
-    * converges to the same three views.
+    * Crash-window convergence (the object doc's contract): docs commits
+    * first; replays re-derive accepted ids as `batch ∩ docs view` and
+    * re-ship the same delete keys, so every interleaving converges to the
+    * same three views.
     */
   def applySignedBatchDelta(spark: SparkSession, dir: String, ok: DataFrame,
                             batch: DataFrame, batchId: Long, capN: Long,
@@ -368,8 +278,12 @@ object CurationStream {
     } finally { e2.unpersist(); sets.unpersist(); dels.unpersist() }
   }
 
-  /** [[curationStreamDelta]] for a SIGNED document stream
-    * (op, doc_id, text, source) — admission plus takedown.
+  /** Maintain the curated corpus continuously from a SIGNED streaming
+    * document frame (op, doc_id, text, source) — admission plus takedown.
+    * No session-wide clearCache per trigger: [[applySignedBatchDelta]]
+    * releases its own caches in a finally and the probe's batch sets
+    * self-release (localCheckpoint), while a clearCache would evict the
+    * CALLER-owned frozen `ok` universe every trigger.
     */
   def signedCurationStreamDelta(docs: DataFrame, ok: DataFrame, dir: String,
                                 checkpointDir: String, capN: Long,
@@ -386,39 +300,13 @@ object CurationStream {
   }
 
   /** Maintain the curated corpus continuously from a streaming document
-    * frame with columns (doc_id, text, source).
-    */
-  def curationStream(docs: DataFrame, ok: DataFrame, dir: String,
-                     checkpointDir: String, capN: Long,
-                     n: Int = 3, threshold: Double = 0.5): StreamingQuery = {
-    val spark = docs.sparkSession
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // no clearCache here: applyBatch releases its own caches in a
-        // finally and lshIndexProbe's batch sets self-release
-        // (localCheckpoint) — a session-wide clearCache would evict the
-        // CALLER-owned frozen `ok` universe every trigger
-        applyBatch(spark, dir, ok, batch, batchId, capN, n, threshold)
-      }
-      .start()
-  }
-
-  /** [[curationStream]] on the [[DeltaView]] core — O(batch) commits with
-    * periodic compaction; same admission semantics, same exactly-once
-    * effect.
+    * frame with columns (doc_id, text, source) — [[signedCurationStreamDelta]]
+    * with every row an insert.
     */
   def curationStreamDelta(docs: DataFrame, ok: DataFrame, dir: String,
                           checkpointDir: String, capN: Long,
                           n: Int = 3, threshold: Double = 0.5,
-                          compactEvery: Int = 8): StreamingQuery = {
-    val spark = docs.sparkSession
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatchDelta(spark, dir, ok, batch, batchId, capN, n, threshold,
-          compactEvery)
-      }
-      .start()
-  }
+                          compactEvery: Int = 8): StreamingQuery =
+    signedCurationStreamDelta(asInserts(docs), ok, dir, checkpointDir, capN,
+      n, threshold, compactEvery)
 }

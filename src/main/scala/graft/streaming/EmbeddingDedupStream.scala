@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.EmbeddingIndex
-import graft.util.{DeltaView, VersionedView}
+import graft.util.DeltaView
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField,
   * through `foreachBatch` — the streaming form of
   * [[EmbeddingIndex.probeDedup]] (q149), completing the per-modality
   * maintainer set (text [[StatefulDedup]], media [[MediaDedupStream]],
-  * embeddings here) on the same [[VersionedView]] idempotent-commit core.
+  * embeddings here) on the same [[DeltaView]] idempotent-commit core.
   *
   * Per micro-batch, in order:
   *  1. retract: `D` rows remove their ids from the index
@@ -25,7 +25,8 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField,
   *     ([[EmbeddingIndex.probeDedup]]); matches reject — first arrival
   *     wins across batches;
   *  4. append: accepted vectors' (vec_id, cell, v) rows append, committed
-  *     as a new version.
+  *     as a new version (the accepted rows plus the batch's delete
+  *     tombstones).
   *
   * The CENTROIDS are a frozen parameter of the stream (built once from a
   * bootstrap corpus via [[EmbeddingIndex.seedCentroids]] or
@@ -56,13 +57,9 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField,
   * commit (replayed batchIds no-op — including replayed DELETES; crash
   * windows recover by overwrite-replay), the contract shared by every
   * maintainer on the core. Cost per trigger: batch-sized assignment + a
-  * probe against the probed cells + the commit — an O(index) snapshot
-  * rewrite on the [[VersionedView]] core ([[applyBatch]]/[[dedupStream]]),
-  * or O(batch) on the [[DeltaView]] core ([[applyBatchDelta]]/
-  * [[dedupStreamDelta]]: changes-only commits, cell-partitioned compacted
-  * bases every K commits — the 100 TB configuration; the
-  * `idx_commit_delta` vs `idx_commit_snapshot` study rows measure the
-  * difference).
+  * probe against the probed cells + an O(batch) changes-only commit, with
+  * cell-partitioned compacted bases every K commits — the 100 TB
+  * configuration (the `idx_commit_delta` study row measures it).
   */
 object EmbeddingDedupStream {
 
@@ -70,14 +67,6 @@ object EmbeddingDedupStream {
     StructField("vec_id", LongType),
     StructField("cell", LongType),
     StructField("v", ArrayType(DoubleType))))
-
-  def committed(spark: SparkSession, indexDir: String): Option[(Long, Long)] =
-    VersionedView(spark, indexDir).committed
-
-  /** The current accepted-vector cell index (empty before any commit). */
-  def readIndex(spark: SparkSession, indexDir: String): DataFrame =
-    VersionedView(spark, indexDir).read().getOrElse(
-      graft.util.Frames.empty(spark, IndexSchema))
 
   /** Batch-side frames (assignment + in-batch min-id dominance): they
     * depend only on the batch and the frozen quantizer — built and cached
@@ -107,54 +96,6 @@ object EmbeddingDedupStream {
     (assigned, dels, reps)
   }
 
-  /** The batch rows that enter the index, given the post-retract state:
-    * in-batch survivors that probe clean AND whose id is not already
-    * present (id uniqueness is an index INVARIANT — same rule as the
-    * media maintainer: a content-new row under a present id drops).
-    */
-  private def acceptedAgainst(afterDel: DataFrame, cent: DataFrame,
-                              reps: DataFrame, nProbe: Int,
-                              threshold: Double,
-                              router: EmbeddingIndex.Router): DataFrame = {
-    val kept = router.probe(afterDel, cent,
-        reps.select(col("vec_id"), col("v")), "v", "vec_id",
-        nProbe, threshold)
-      .filter(col("is_new")).select("vec_id")
-    reps.join(kept, "vec_id")
-      .join(afterDel.select(col("vec_id")), Seq("vec_id"), "left_anti")
-  }
-
-  /** Apply one micro-batch of signed rows (op, vec_id, embedding): skip if
-    * already committed (replay), else retract → in-batch dedup → probe →
-    * append. Public so tests drive replay/crash/delete cases directly.
-    */
-  def applyBatch(spark: SparkSession, indexDir: String, cent: DataFrame,
-                 batch: DataFrame, batchId: Long, nProbe: Int = 2,
-                 threshold: Double = 0.4,
-                 router: EmbeddingIndex.Router = EmbeddingIndex.AutoRouter): Unit = {
-    val vv = VersionedView(spark, indexDir)
-    // replay check FIRST (one pointer read), and cache the batch BEFORE
-    // the emptiness probe so the probe job and the commit work share one
-    // materialization instead of paying the source lineage twice
-    val cur = vv.committed
-    if (cur.exists(_._1 >= batchId)) return
-    // quantizer-freeze + router-consistency contract, enforced per trigger
-    // (one model-sized collect): a re-seeded quantizer or a mismatched
-    // router fails loudly here instead of silently losing recall
-    val r = EmbeddingIndex.ensureIndexStamp(spark, indexDir, cent, router,
-      stateExists = cur.nonEmpty)
-    val (assigned, dels, reps) = prepBatch(cent, batch, threshold, r)
-    try {
-      if (assigned.isEmpty && dels.isEmpty) return // idle trigger: no commit
-      vv.applyBatch(batchId) { cur2 =>
-        val index = cur2.getOrElse(graft.util.Frames.empty(spark, IndexSchema))
-        val afterDel = EmbeddingIndex.retract(index, dels)
-        afterDel.unionByName(
-          acceptedAgainst(afterDel, cent, reps, nProbe, threshold, r))
-      }: Unit
-    } finally { assigned.unpersist(); dels.unpersist() }
-  }
-
   /** The batch's probed cell ids — ≤ min(|batch|·nProbe, nCells) distinct
     * longs, a control-plane round-trip (the q91 `annIvfIndexed` pattern).
     * Collecting them lets the index read carry a LITERAL `cell IN (…)`
@@ -168,8 +109,10 @@ object EmbeddingDedupStream {
       .select(col("cell").cast("long")).distinct()
       .collect().map(_.getLong(0)).toIndexedSeq
 
-  /** [[applyBatch]] on the [[DeltaView]] core: identical dedup semantics,
-    * but the commit writes only the ACCEPTED rows plus the batch's delete
+  /** Apply one micro-batch of signed rows (op, vec_id, embedding): skip if
+    * already committed (replay), else retract → in-batch dedup → probe →
+    * append. Public so tests drive replay/crash/delete cases directly.
+    * The commit writes only the ACCEPTED rows plus the batch's delete
     * tombstones — O(batch), not O(index) — and the log compacts into a
     * cell-partitioned base (the q91 serving layout) every `compactEvery`
     * commits. The 100 TB configuration of this maintainer: a day's ingest
@@ -187,8 +130,14 @@ object EmbeddingDedupStream {
                       threshold: Double = 0.4, compactEvery: Int = 8,
                       router: EmbeddingIndex.Router = EmbeddingIndex.AutoRouter): Unit = {
     val dv = deltaView(spark, indexDir, compactEvery)
+    // replay check FIRST (one pointer read); prepBatch caches the batch
+    // BEFORE the emptiness probe so the probe job and the commit work
+    // share one materialization
     val cur0 = dv.committed
     if (cur0.exists(_._1 >= batchId)) return
+    // quantizer-freeze + router-consistency contract, enforced per trigger
+    // (one model-sized collect): a re-seeded quantizer or a mismatched
+    // router fails loudly here instead of silently losing recall
     val r = EmbeddingIndex.ensureIndexStamp(spark, indexDir, cent, router,
       stateExists = cur0.nonEmpty)
     val (assigned, dels, reps) = prepBatch(cent, batch, threshold, r)
@@ -197,9 +146,8 @@ object EmbeddingDedupStream {
       val cells = probedCellIds(cent, reps, nProbe, r)
       dv.applyBatch(batchId) { cur =>
         // the probe's view of the index is (current − this batch's
-        // deletes) pruned to the probed cells — the same post-retract
-        // state the snapshot core builds, LAZY (never written); the
-        // commit ships only changes
+        // deletes) pruned to the probed cells — the post-retract state,
+        // LAZY (never written); the commit ships only changes
         val index = cur.map(normalize).getOrElse(graft.util.Frames.empty(spark, IndexSchema))
         val afterDel = EmbeddingIndex.retract(
           index.filter(col("cell").isin(cells: _*)), dels)
@@ -473,7 +421,7 @@ object EmbeddingDedupStream {
   private def normalize(df: DataFrame): DataFrame =
     df.select(col("vec_id").cast("long"), col("cell").cast("long"), col("v"))
 
-  /** The current accepted-vector index under the DELTA core. */
+  /** The current accepted-vector index (empty before any commit). */
   def readIndexDelta(spark: SparkSession, indexDir: String): DataFrame =
     deltaView(spark, indexDir, compactEvery = 8).read().map(normalize)
       .getOrElse(graft.util.Frames.empty(spark, IndexSchema))
@@ -483,28 +431,10 @@ object EmbeddingDedupStream {
     deltaView(spark, indexDir, compactEvery = 8).committed
 
   /** Maintain the index continuously from a streaming signed frame with
-    * columns (op, vec_id, embedding).
-    */
-  def dedupStream(changes: DataFrame, cent: DataFrame, indexDir: String,
-                  checkpointDir: String, nProbe: Int = 2,
-                  threshold: Double = 0.4,
-                  router: EmbeddingIndex.Router = EmbeddingIndex.AutoRouter)
-      : StreamingQuery = {
-    val spark = changes.sparkSession
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // no clearCache here: applyBatch releases everything it caches in
-        // its own finally, and a session-wide clearCache would evict the
-        // CALLER-owned frozen `cent` quantizer every trigger
-        applyBatch(spark, indexDir, cent, batch, batchId, nProbe, threshold,
-          router)
-      }
-      .start()
-  }
-
-  /** [[dedupStream]] on the [[DeltaView]] core — O(batch) commits with
-    * periodic compaction; same dedup semantics, same exactly-once effect.
+    * columns (op, vec_id, embedding) — O(batch) commits with periodic
+    * compaction. No session-wide clearCache per trigger: applyBatchDelta
+    * releases everything it caches in its own finally, and a clearCache
+    * would evict the CALLER-owned frozen `cent` quantizer every trigger.
     */
   def dedupStreamDelta(changes: DataFrame, cent: DataFrame, indexDir: String,
                        checkpointDir: String, nProbe: Int = 2,

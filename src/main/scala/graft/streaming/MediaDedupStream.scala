@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Multimodal
-import graft.util.{DeltaView, VersionedView}
+import graft.util.DeltaView
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -24,7 +24,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *     index ([[Multimodal.fingerprintIndexProbe]]); matches are
   *     rejected — first arrival wins across batches;
   *  3. append: accepted fingerprints append to the index, committed as
-  *     a new [[VersionedView]] version.
+  *     a new [[DeltaView]] version.
   *
   * Exactly-once effect = checkpointed offsets × the idempotent versioned
   * commit (atomic pointer swap, replayed batchIds no-op, crash windows
@@ -33,18 +33,15 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *
   * Cost model, honestly: per trigger the in-batch cluster stage is
   * batch-sized and the probe is batch-driven, but the probe SCANS the
-  * current index's band rows and — on the [[VersionedView]] core — the
-  * commit REWRITES the index as a full snapshot, both O(index) at 4 longs
-  * per accepted clip, so the per-item constant is tiny but trigger time
-  * does grow with the accepted corpus. The [[DeltaView]] twins
-  * ([[applySignedBatchDelta]]/[[signedStreamDelta]]) remove the rewrite:
-  * a commit ships only accepted rows + delete tombstones (O(batch)) and
-  * the log compacts every K commits — the 100 TB configuration. The
-  * probe-side scan prunes with the q91/q144 band-bucketed serving layout
-  * (q147), orthogonal to the commit core.
+  * current index's band rows — O(index) at 4 longs per accepted clip, so
+  * the per-item constant is tiny but trigger time does grow with the
+  * accepted corpus. The commit ships only accepted rows + delete
+  * tombstones (O(batch)) and the log compacts every K commits — the
+  * 100 TB configuration. The probe-side scan prunes with the q91/q144
+  * band-bucketed serving layout (q147), orthogonal to the commit core.
   *
   * Caching: every per-trigger frame is released by its owner — the batch
-  * sides cache under try/finally in [[applySignedBatch]]/[[ingestFiles]],
+  * sides cache under try/finally in [[applySignedBatchDelta]]/[[ingestFiles]],
   * and the fingerprint operators' internal barriers are eager
   * localCheckpoints whose blocks self-release when unreachable — so a
   * long-running stream accumulates nothing and NO session-wide
@@ -70,39 +67,24 @@ object MediaDedupStream {
     StructField("length", LongType),
     StructField("content", org.apache.spark.sql.types.BinaryType)))
 
-  def committed(spark: SparkSession, indexDir: String): Option[(Long, Long)] =
-    VersionedView(spark, indexDir).committed
-
-  /** The current accepted-fingerprint index (empty before any commit). */
-  def readIndex(spark: SparkSession, indexDir: String): DataFrame =
-    VersionedView(spark, indexDir).read().getOrElse(
-      graft.util.Frames.empty(spark, IndexSchema))
-
-  /** Apply one micro-batch of fingerprints: skip if already committed
-    * (replay), else in-batch dedup → probe → append accepted. Public so
-    * tests drive replay/crash cases directly.
-    */
-  def applyBatch(spark: SparkSession, indexDir: String, batch: DataFrame,
-                 batchId: Long, maxDist: Int = 3): Unit =
-    applySignedBatch(spark, indexDir,
-      batch.select(lit("I").as("op"), col("media_id"), col("b0"),
-        col("b1"), col("b2"), col("b3")),
-      batchId, maxDist)
-
   /** Apply one SIGNED micro-batch (op ∈ I/D, media_id, b0..b3): `D` rows
     * retract their ids from the index (retention, takedown — rebuild-
     * equivalent by construction: fingerprint rows carry no derived
     * statistics, so removal IS the rebuild), then `I` rows run the normal
     * in-batch dedup → probe (against the post-delete index) → append.
-    * Replayed batchIds no-op — including replayed deletes.
+    * Replayed batchIds no-op — including replayed deletes. The commit
+    * ships only the ACCEPTED rows plus the batch's delete tombstones —
+    * O(batch), not O(index) — with the log compacting every
+    * `compactEvery` commits. Public so tests drive replay/crash cases
+    * directly.
     */
-  def applySignedBatch(spark: SparkSession, indexDir: String,
-                       batch: DataFrame, batchId: Long,
-                       maxDist: Int = 3): Unit = {
-    val vv = VersionedView(spark, indexDir)
+  def applySignedBatchDelta(spark: SparkSession, indexDir: String,
+                            batch: DataFrame, batchId: Long,
+                            maxDist: Int = 3, compactEvery: Int = 8): Unit = {
+    val dv = deltaView(spark, indexDir, compactEvery)
     // replay check FIRST (one pointer read): a recovered/replayed batch
     // must not pay the emptiness job below just to be skipped inside
-    val cur = vv.committed
+    val cur = dv.committed
     if (cur.exists(_._1 >= batchId)) return
     // fingerprint-family freeze, enforced per trigger: a hash-family or
     // band-layout change fails loudly instead of probing wrong emptiness
@@ -112,44 +94,18 @@ object MediaDedupStream {
     try {
       if (hashes.isEmpty && dels.isEmpty) return // idle trigger: no commit
       val repHashes = repsOf(hashes, maxDist)
-      vv.applyBatch(batchId) { cur =>
-        val index = cur.getOrElse(graft.util.Frames.empty(spark, IndexSchema))
-        val (afterDel, accepted) =
-          acceptedAgainst(index, repHashes, dels, maxDist)
-        afterDel.unionByName(accepted)
-      }: Unit
-    } finally { hashes.unpersist(); dels.unpersist() }
-  }
-
-  /** [[applySignedBatch]] on the [[DeltaView]] core: identical dedup and
-    * retraction semantics, but the commit ships only the ACCEPTED rows
-    * plus the batch's delete tombstones — O(batch), not O(index) — with
-    * the log compacting every `compactEvery` commits.
-    */
-  def applySignedBatchDelta(spark: SparkSession, indexDir: String,
-                            batch: DataFrame, batchId: Long,
-                            maxDist: Int = 3, compactEvery: Int = 8): Unit = {
-    val dv = deltaView(spark, indexDir, compactEvery)
-    val cur = dv.committed
-    if (cur.exists(_._1 >= batchId)) return
-    Multimodal.ensureFingerprintStamp(spark, indexDir,
-      stateExists = cur.nonEmpty)
-    val (hashes, dels) = splitSigned(batch)
-    try {
-      if (hashes.isEmpty && dels.isEmpty) return // idle trigger: no commit
-      val repHashes = repsOf(hashes, maxDist)
       dv.applyBatch(batchId) { cur =>
         val index = cur.getOrElse(graft.util.Frames.empty(spark, IndexSchema))
-        val (_, accepted) = acceptedAgainst(index, repHashes, dels, maxDist)
+        val accepted = acceptedAgainst(index, repHashes, dels, maxDist)
         (accepted, dels)
       }: Unit
     } finally { hashes.unpersist(); dels.unpersist() }
   }
 
-  /** Batch-side frames, shared by both cores: I-row fingerprints and D-row
-    * ids, CACHED (lazily — no job runs here) before the caller's emptiness
-    * probe so the probe and the commit share one materialization of the
-    * decode-priced lineage; callers release both in a finally.
+  /** Batch-side frames: I-row fingerprints and D-row ids, CACHED (lazily —
+    * no job runs here) before the caller's emptiness probe so the probe
+    * and the commit share one materialization of the decode-priced
+    * lineage; callers release both in a finally.
     */
   private def splitSigned(batch: DataFrame): (DataFrame, DataFrame) = (
     batch.filter(col("op") === "I").select(col("media_id"),
@@ -168,23 +124,23 @@ object MediaDedupStream {
     hashes.join(reps, "media_id")
   }
 
-  /** Post-retract index and the batch rows that enter it: representatives
-    * that probe clean against the post-delete index AND whose id is not
-    * already present — id uniqueness is an index INVARIANT: a later batch
+  /** The batch rows that enter the index: representatives that probe
+    * clean against the post-delete index AND whose id is not already
+    * present — id uniqueness is an index INVARIANT: a later batch
     * re-using an already-accepted id with different content (a bucket
     * overwrite, a producer bug) must not append a second row under that
     * id; content-new but id-stale rows drop via the anti join.
     */
   private def acceptedAgainst(index: DataFrame, repHashes: DataFrame,
                               dels: DataFrame,
-                              maxDist: Int): (DataFrame, DataFrame) = {
+                              maxDist: Int): DataFrame = {
     val afterDel = index.join(
       broadcast(dels.withColumnRenamed("media_id", "_drop")),
       col("media_id") === col("_drop"), "left_anti")
     val kept = Multimodal.fingerprintIndexProbe(afterDel, repHashes, maxDist)
       .filter(col("kept")).select("media_id")
-    (afterDel, repHashes.join(kept, "media_id")
-      .join(afterDel.select(col("media_id")), Seq("media_id"), "left_anti"))
+    repHashes.join(kept, "media_id")
+      .join(afterDel.select(col("media_id")), Seq("media_id"), "left_anti")
   }
 
   private def deltaView(spark: SparkSession, indexDir: String,
@@ -192,7 +148,7 @@ object MediaDedupStream {
     DeltaView(spark, indexDir, keyCols = Seq("media_id"),
       compactEvery = compactEvery)
 
-  /** The current accepted-fingerprint index under the DELTA core. */
+  /** The current accepted-fingerprint index (empty before any commit). */
   def readIndexDelta(spark: SparkSession, indexDir: String): DataFrame =
     deltaView(spark, indexDir, 8).read().getOrElse(
       graft.util.Frames.empty(spark, IndexSchema))
@@ -210,7 +166,7 @@ object MediaDedupStream {
     * file name (`..._<id>.wav`, the bucket convention); `pathGlobFilter`
     * keeps sidecar objects out of the source itself. Checkpointed file
     * offsets + the idempotent versioned commit give the same exactly-once
-    * contract as [[dedupStream]].
+    * contract as [[signedStreamDelta]].
     *
     * Poison-file safety — an always-on stream must never crash-loop on a
     * bad object (checkpoint replay would re-read it forever):
@@ -226,7 +182,7 @@ object MediaDedupStream {
     *    is the identity under the bucket convention, and a silent
     *    duplicate-id index row would corrupt every downstream join.
     *
-    * Index layout: one [[VersionedView]] per modality under
+    * Index layout: one [[DeltaView]] per modality under
     * `indexDir/audio` and `indexDir/image` (cross-kind hamming matches
     * are numerology, so per-kind views make cross-kind rejection
     * structurally impossible). This layout shipped WITH the multimodal
@@ -262,59 +218,30 @@ object MediaDedupStream {
         // cross-kind rejections must be impossible. Two idempotent
         // commits share the batchId: a crash between them replays the
         // batch, the committed side no-ops, the other converges.
-        def uniq(h: DataFrame): DataFrame = {
+        // One row per derived id, as signed inserts.
+        def uniqInserts(h: DataFrame): DataFrame = {
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(col("media_id"))
             .orderBy(col("b0"), col("b1"), col("b2"), col("b3"))
           h.withColumn("_rn", row_number().over(w))
-            .filter(col("_rn") === 1).drop("_rn")
+            .filter(col("_rn") === 1).drop("_rn").withColumn("op", lit("I"))
         }
         try {
-          applyBatch(spark, s"$indexDir/audio",
-            uniq(Multimodal.audioFingerprintHashesSafe(spark, media)),
+          applySignedBatchDelta(spark, s"$indexDir/audio",
+            uniqInserts(Multimodal.audioFingerprintHashesSafe(spark, media)),
             batchId, maxDist)
-          applyBatch(spark, s"$indexDir/image",
-            uniq(Multimodal.imageHashesSafe(spark, media)),
+          applySignedBatchDelta(spark, s"$indexDir/image",
+            uniqInserts(Multimodal.imageHashesSafe(spark, media)),
             batchId, maxDist)
         } finally media.unpersist() // trigger-owned; nothing session-wide
       }
       .start()
   }
 
-  /** Maintain the index continuously from a streaming fingerprint frame
-    * with columns (media_id, b0..b3).
-    */
-  def dedupStream(fingerprints: DataFrame, indexDir: String,
-                  checkpointDir: String, maxDist: Int = 3): StreamingQuery = {
-    val spark = fingerprints.sparkSession
-    fingerprints.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // no clearCache: applySignedBatch releases its caches in a finally
-        // and the probe/cluster internals self-release (localCheckpoint)
-        applyBatch(spark, indexDir, batch, batchId, maxDist)
-      }
-      .start()
-  }
-
   /** Maintain the index continuously from a SIGNED streaming frame with
     * columns (op ∈ I/D, media_id, b0..b3) — inserts dedup-and-append,
-    * deletes retract (see [[applySignedBatch]]).
-    */
-  def signedStream(changes: DataFrame, indexDir: String,
-                   checkpointDir: String, maxDist: Int = 3): StreamingQuery = {
-    val spark = changes.sparkSession
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applySignedBatch(spark, indexDir, batch, batchId, maxDist)
-      }
-      .start()
-  }
-
-  /** [[signedStream]] on the [[DeltaView]] core — O(batch) commits with
-    * periodic compaction; same dedup/retraction semantics, same
-    * exactly-once effect.
+    * deletes retract (see [[applySignedBatchDelta]]); O(batch) commits
+    * with periodic compaction.
     */
   def signedStreamDelta(changes: DataFrame, indexDir: String,
                         checkpointDir: String, maxDist: Int = 3,

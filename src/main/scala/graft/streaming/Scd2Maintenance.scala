@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Warehouse
-import graft.util.{DeltaView, VersionedView}
+import graft.util.DeltaView
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -30,71 +30,33 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * gone by design — the dimension is the retained state, not the raw log).
   * Within a batch, order is free: `scd2` sorts.
   *
-  * Exactly-once effect and 100 TB shape: [[graft.util.VersionedView]]
+  * Exactly-once effect and 100 TB shape: [[graft.util.DeltaView]]
   * commits (atomic pointer swap, replay no-ops, keep-two pruning); per
   * trigger the cost is ∝ batch + the affected keys' version history (a
-  * semi/anti join pair on the key against the current dimension), never the
-  * full dimension rework.
+  * semi join on the key against the current dimension), and the commit
+  * ships only the affected keys' rows plus tombstones — never the full
+  * dimension rework.
   */
 object Scd2Maintenance {
 
-  /** Apply one micro-batch of (key, ts, tb, attr) rows. Empty batches (an
-    * idle trigger) are a no-op — no version rewrite, no commit.
-    */
-  def applyBatch(spark: SparkSession, dimDir: String, batch: DataFrame,
-                 batchId: Long): Unit = {
-    if (batch.isEmpty) return
-    VersionedView(spark, dimDir).applyBatch(batchId) { cur =>
-      val obs = batch.select(col("key").as("k"), col("ts"), col("tb"),
-        col("attr").as("segment"))
-      cur match {
-        case None =>
-          Warehouse.scd2(obs, col("k"), col("ts"), col("tb"), col("segment"))
-        case Some(dim) =>
-          // Null-SAFE key joins: a null dimension key must route through
-          // the affected path like any other (plain equality would dump it
-          // in `untouched` AND rebuild it fresh — duplicating its history
-          // every batch it appears in).
-          val affectedKeys = obs.select(col("k").as("_ak")).distinct()
-          val affected = dim.join(affectedKeys,
-            dim("k") <=> affectedKeys("_ak"), "left_semi")
-          val untouched = dim.join(affectedKeys,
-            dim("k") <=> affectedKeys("_ak"), "left_anti")
-          // Existing versions re-enter as observations with their ORIGINAL
-          // retained tie-break (scd2 keeps the opening observation's tb),
-          // so an equal-ts arrival lands exactly where the batch recompute
-          // would put it.
-          val replay = affected.select(col("k"), col("valid_from").as("ts"),
-              col("tb"), col("segment"))
-            .unionByName(obs)
-          untouched.unionByName(
-            Warehouse.scd2(replay, col("k"), col("ts"), col("tb"),
-              col("segment")))
-      }
-    }: Unit
-  }
-
-  /** The current dimension (None before the first commit). */
-  def readDim(spark: SparkSession, dimDir: String): Option[DataFrame] =
-    VersionedView(spark, dimDir).read()
-
   private def deltaView(spark: SparkSession, dimDir: String,
-                        compactEvery: Int): DeltaView =
+                        compactEvery: Int = 8): DeltaView =
     // (k, valid_from, tb) is unique per dimension row — valid_from alone
     // is not (two changes at one timestamp make a zero-width version), but
     // each retained version keeps its OPENING observation's tie-break.
     // An affected key retires ALL its current rows and re-inserts its
     // recomputed history in one commit. Key equality in the fold is
     // null-safe, so the null dimension key routes through the affected
-    // path here exactly as in the snapshot core.
+    // path like any other key.
     DeltaView(spark, dimDir, keyCols = Seq("k", "valid_from", "tb"),
       compactEvery = compactEvery)
 
-  /** [[applyBatch]] on the [[DeltaView]] core: identical dimension
-    * semantics (affected keys replay their retained versions ∪ the new
-    * observations through the batch `scd2`), but the commit ships only
-    * the AFFECTED keys' recomputed rows plus tombstones for their retired
-    * rows — O(batch + affected history), not O(dimension), per trigger.
+  /** Apply one micro-batch of (key, ts, tb, attr) rows: affected keys
+    * replay their retained versions ∪ the new observations through the
+    * batch `scd2`, and the commit ships only their recomputed rows plus
+    * tombstones for their retired rows — O(batch + affected history), not
+    * O(dimension), per trigger. Empty batches (an idle trigger) are a
+    * no-op — no version rewrite, no commit.
     */
   def applyBatchDelta(spark: SparkSession, dimDir: String, batch: DataFrame,
                       batchId: Long, compactEvery: Int = 8): Unit = {
@@ -108,12 +70,19 @@ object Scd2Maintenance {
             col("segment"))
           (dim, dim.limit(0).select("k", "valid_from", "tb"))
         case Some(dim) =>
+          // Null-SAFE key join: a null dimension key must route through
+          // the affected path like any other (plain equality would leave
+          // its rows live AND rebuild it fresh — duplicating its history).
           val affectedKeys = obs.select(col("k").as("_ak")).distinct()
           val affected = dim.join(affectedKeys,
             dim("k") <=> affectedKeys("_ak"), "left_semi")
             // both the replay input and the tombstone set read `affected`;
             // localCheckpoint runs the fold once and self-releases
             .localCheckpoint()
+          // Existing versions re-enter as observations with their ORIGINAL
+          // retained tie-break (scd2 keeps the opening observation's tb),
+          // so an equal-ts arrival lands exactly where the batch recompute
+          // would put it.
           val replay = affected.select(col("k"), col("valid_from").as("ts"),
               col("tb"), col("segment"))
             .unionByName(obs)
@@ -123,26 +92,13 @@ object Scd2Maintenance {
     }: Unit
   }
 
-  /** The current dimension from the [[DeltaView]] core. */
-  def readDimDelta(spark: SparkSession, dimDir: String,
-                   compactEvery: Int = 8): Option[DataFrame] =
-    deltaView(spark, dimDir, compactEvery).read()
+  /** The current dimension (None before the first commit). */
+  def readDimDelta(spark: SparkSession, dimDir: String): Option[DataFrame] =
+    deltaView(spark, dimDir).read()
 
   /** Maintain the dimension continuously from a streaming change frame with
     * columns (key, ts, tb, attr).
     */
-  def maintainStream(changes: DataFrame, dimDir: String,
-                     checkpointDir: String): StreamingQuery = {
-    val spark = changes.sparkSession
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(spark, dimDir, batch, batchId)
-      }
-      .start()
-  }
-
-  /** [[maintainStream]] on the [[DeltaView]] core — O(batch) commits. */
   def maintainStreamDelta(changes: DataFrame, dimDir: String,
                           checkpointDir: String,
                           compactEvery: Int = 8): StreamingQuery = {

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Warehouse
-import graft.util.{DeltaView, VersionedView}
+import graft.util.DeltaView
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -17,14 +17,14 @@ import org.apache.spark.sql.types.{DecimalType, LongType, StringType, StructFiel
   *
   * Exactly-once effect = Spark's checkpointed offsets (at-least-once
   * micro-batch delivery) × the idempotent versioned commit of
-  * [[graft.util.VersionedView]] (atomic pointer swap; replayed batches
+  * [[graft.util.DeltaView]] (atomic pointer swap; replayed batches
   * no-op; crash windows recover by overwrite-replay).
   *
   * 100 TB shape: per trigger, cost ∝ micro-batch delta (map-side-combined
-  * signed aggregate) + one full-outer merge against the current view, same
-  * as the batch operator; the versioned-directory swap is the same pattern
-  * the replication plane uses for partition swaps, and keep-two pruning
-  * bounds storage.
+  * signed aggregate) + a full-outer merge against the TOUCHED keys' view
+  * rows, and the commit ships only those keys' rows plus tombstones; the
+  * log compacts every `compactEvery` commits and keep-two pruning bounds
+  * storage.
   */
 object ViewMaintenance {
 
@@ -33,39 +33,16 @@ object ViewMaintenance {
     StructField("cnt", LongType),
     StructField("sum_m", DecimalType(38, 2))))
 
-  /** (committedBatchId, version); None before the first commit. */
-  def committed(spark: SparkSession, viewDir: String): Option[(Long, Long)] =
-    VersionedView(spark, viewDir).committed
-
-  /** The current materialized view (empty frame before the first commit). */
-  def readView(spark: SparkSession, viewDir: String): DataFrame =
-    VersionedView(spark, viewDir).read().getOrElse(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ViewSchema))
-
-  /** Apply one micro-batch: skip if already committed (replay), else merge
-    * and commit a new version. Public so tests can drive replays directly.
-    */
-  def applyBatch(spark: SparkSession, viewDir: String, batch: DataFrame,
-                 batchId: Long): Unit = {
-    if (batch.isEmpty) return // idle trigger: no view rewrite, no commit
-    VersionedView(spark, viewDir).applyBatch(batchId) { cur =>
-      val base = cur.getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ViewSchema))
-      Warehouse.maintainAgg(base, batch)
-        .select(col("key"), col("cnt"), col("sum_m").cast(DecimalType(38, 2)))
-    }: Unit
-  }
-
   private def deltaView(spark: SparkSession, viewDir: String,
-                        compactEvery: Int): DeltaView =
+                        compactEvery: Int = 8): DeltaView =
     DeltaView(spark, viewDir, keyCols = Seq("key"),
       compactEvery = compactEvery)
 
-  /** [[applyBatch]] on the [[DeltaView]] core: identical merge semantics
-    * (`maintainAgg` full-outer + cnt>0 drop), but the commit ships only
-    * the TOUCHED keys' recomputed rows plus their tombstones — O(batch),
-    * not O(view), per trigger. A touched key whose count drops to zero is
+  /** Apply one micro-batch: skip if already committed (replay), else merge
+    * with `maintainAgg` (full-outer + cnt>0 drop) and commit. Public so
+    * tests can drive replays directly. The commit ships only the TOUCHED
+    * keys' recomputed rows plus their tombstones — O(batch), not O(view),
+    * per trigger. A touched key whose count drops to zero is
     * tombstoned without a re-insert (maintainAgg's cnt>0 filter), and a
     * delete tombstone for a not-yet-live key is a no-op by the
     * [[DeltaView]] fold contract, so the blanket per-touched-key
@@ -73,7 +50,7 @@ object ViewMaintenance {
     */
   def applyBatchDelta(spark: SparkSession, viewDir: String, batch: DataFrame,
                       batchId: Long, compactEvery: Int = 8): Unit = {
-    if (batch.isEmpty) return
+    if (batch.isEmpty) return // idle trigger: no commit
     deltaView(spark, viewDir, compactEvery).applyBatch(batchId) { cur =>
       val base = cur.getOrElse(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ViewSchema))
@@ -88,28 +65,15 @@ object ViewMaintenance {
     }: Unit
   }
 
-  /** The current view from the [[DeltaView]] core. */
-  def readViewDelta(spark: SparkSession, viewDir: String,
-                    compactEvery: Int = 8): DataFrame =
-    deltaView(spark, viewDir, compactEvery).read().getOrElse(
+  /** The current materialized view (empty frame before the first commit). */
+  def readViewDelta(spark: SparkSession, viewDir: String): DataFrame =
+    deltaView(spark, viewDir).read().getOrElse(
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ViewSchema))
 
   /** Maintain the view continuously from a streaming CDC frame with columns
     * (op, key, measure).
     */
-  def maintainStream(changes: DataFrame, viewDir: String,
-                     checkpointDir: String): StreamingQuery = {
-    val spark = changes.sparkSession
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(spark, viewDir, batch, batchId)
-      }
-      .start()
-  }
-
-  /** [[maintainStream]] on the [[DeltaView]] core — O(batch) commits. */
   def maintainStreamDelta(changes: DataFrame, viewDir: String,
                           checkpointDir: String,
                           compactEvery: Int = 8): StreamingQuery = {

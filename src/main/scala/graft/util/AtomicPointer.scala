@@ -6,7 +6,7 @@ import java.nio.charset.StandardCharsets
 
 /** One-line pointer files with an ATOMIC commit — the primitive under both
   * the replication watermark ([[graft.repl.MetadataStore]]) and the
-  * streamed-view pointer ([[graft.streaming.ViewMaintenance]]).
+  * streamed-view pointer ([[DeltaView]]).
   *
   * Commit writes `<name>.tmp` then renames over the target with
   * `Options.Rename.OVERWRITE` (atomic on HDFS and the local fs) — there is

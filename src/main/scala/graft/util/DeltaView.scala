@@ -4,28 +4,30 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** A materialized, versioned dataset with O(batch) delta commits — the
-  * LSM-shaped upgrade of [[VersionedView]] for indexes too large to
-  * rewrite per trigger.
+/** A materialized, versioned dataset with idempotent O(batch) micro-batch
+  * commits — the one storage core of the streamed maintainers
+  * ([[graft.streaming.ViewMaintenance]], [[graft.streaming.Scd2Maintenance]],
+  * [[graft.streaming.AnomalyMonitor]], the dedup/curation/postings
+  * streams).
   *
-  * [[VersionedView.applyBatch]] writes the FULL next snapshot every
-  * commit: correct and simple, but a streamed maintainer on a 100 TB
-  * corpus index would rewrite the corpus per micro-batch. Here a commit
-  * writes only the batch's CHANGES — inserted rows plus key tombstones —
-  * and the read side folds them, so steady-state commit cost tracks the
-  * batch while a periodic compaction (every [[compactEvery]] commits)
-  * folds the log back into one base and pays the snapshot cost 1/K as
-  * often. The same recipe as an LSM tree / log-structured table format,
-  * expressed as plain parquet + one atomic pointer — no new storage
-  * engine, and every property below is spec-gated (`DeltaViewSpec`).
+  * A commit writes only the batch's CHANGES — inserted rows plus key
+  * tombstones — and the read side folds them, so steady-state commit cost
+  * tracks the batch while a periodic compaction (every [[compactEvery]]
+  * commits) folds the log back into one base and pays the snapshot cost
+  * 1/K as often; `compactEvery = 1` writes a fresh base on every commit
+  * (snapshot-per-commit behaviour). The same recipe as an LSM tree /
+  * log-structured table format, expressed as plain parquet + one atomic
+  * pointer — no new storage engine, and every property below is
+  * spec-gated (`DeltaViewSpec`).
   *
   * Layout: `dir/base_v<B>` (a compacted snapshot; the first commit is one
   * by construction), `dir/delta_v<V>` for V in (B, current] (the view's
   * rows with an `_op` column: `I` rows carry payload, `D` rows carry only
   * the key), `dir/CURRENT` one-line pointer `"<batchId>,<version>,<base>"`
-  * swapped via [[AtomicPointer]]. A replayed batch no-ops; a crash between
-  * a data write and the pointer swap replays by overwriting the same
-  * version directory — the [[VersionedView]] crash contract unchanged.
+  * swapped via [[AtomicPointer]] (OVERWRITE rename — no crash instant
+  * without a pointer). A replayed batch (`batchId <= committed`) no-ops; a
+  * crash between a data write and the pointer swap replays by overwriting
+  * the same version directory.
   *
   * Fold rule (the read side): an `I` row at version v is live unless some
   * tombstone for its key exists at version v' > v. Deletes apply BEFORE
@@ -48,10 +50,12 @@ import org.apache.spark.sql.functions._
   * is a harmless no-op tombstone). A key's rows all land in one insert
   * version; "modify" is delete+reinsert.
   *
-  * Reader grace matches [[VersionedView]]: a `read()` frame stays valid
-  * for `keepVersions - 1` further commits; pruning keeps every file any
-  * of the last `keepVersions` states needs (each state u needs the
-  * largest base ≤ u plus the deltas after it).
+  * Reader grace: a `read()` frame stays valid for one further commit;
+  * pruning keeps every file either of the last [[DeltaView.KeepVersions]]
+  * states needs (each state u needs the largest base ≤ u plus the deltas
+  * after it). That covers the maintainers' own read-merge-commit cycle
+  * plus one commit of external grace; an external server holding a frame
+  * across more triggers retries on FileNotFoundException.
   *
   * @param keyCols   the live-unique key (tombstones carry exactly these)
   * @param compactEvery fold the log into a new base when it reaches this
@@ -69,12 +73,10 @@ import org.apache.spark.sql.functions._
   */
 final case class DeltaView(spark: SparkSession, dir: String,
                            keyCols: Seq[String], compactEvery: Int = 8,
-                           keepVersions: Int = 2,
                            basePartitionCols: Seq[String] = Nil,
                            writerLockStaleMs: Long = 15 * 60 * 1000L) {
   require(keyCols.nonEmpty, "keyCols must be non-empty")
   require(compactEvery >= 1, "compactEvery must be >= 1")
-  require(keepVersions >= 1, "keepVersions must be >= 1")
 
   private def conf = spark.sparkContext.hadoopConfiguration
   private def pointer = new Path(dir, "CURRENT")
@@ -82,8 +84,8 @@ final case class DeltaView(spark: SparkSession, dir: String,
 
   /** (committedBatchId, version, baseVersion), None before any commit.
     * Fails with a diagnosable error on a foreign pointer format — opening
-    * a directory previously maintained by [[VersionedView]] (2-field
-    * pointer) must say so, not throw a MatchError.
+    * a directory written by the retired snapshot-commit core (2-field
+    * pointer) must say so, not throw a MatchError or bootstrap over it.
     */
   def committed: Option[(Long, Long, Long)] =
     AtomicPointer.read(conf, pointer).map { s =>
@@ -239,9 +241,9 @@ final case class DeltaView(spark: SparkSession, dir: String,
     true
   }
 
-  /** Delete every base/delta no state in the last [[keepVersions]] needs:
-    * state u needs the largest base ≤ u plus deltas (base, u], so the
-    * keep-floor is the largest base ≤ (newV − keepVersions + 1). Listing
+  /** Delete every base/delta no state in the last [[DeltaView.KeepVersions]]
+    * needs: state u needs the largest base ≤ u plus deltas (base, u], so
+    * the keep-floor is the largest base ≤ (newV − KeepVersions + 1). Listing
     * makes the cleanup self-healing if a past prune was crash-skipped.
     */
   private def prune(newV: Long): Unit = {
@@ -253,10 +255,16 @@ final case class DeltaView(spark: SparkSession, dir: String,
         else None
       }
     val bases = versionsOf("base_v")
-    val oldest = math.max(0L, newV - keepVersions + 1)
+    val oldest = math.max(0L, newV - DeltaView.KeepVersions + 1)
     val floor = bases.map(_._1).filter(_ <= oldest)
       .reduceOption(_ max _).getOrElse(0L)
     (bases ++ versionsOf("delta_v"))
       .filter(_._1 < floor).foreach { case (_, p) => fs.delete(p, true) }
   }
+}
+
+object DeltaView {
+
+  /** States whose files survive a commit: the new one and its predecessor. */
+  val KeepVersions = 2
 }

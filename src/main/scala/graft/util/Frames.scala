@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.StructType
 object Frames {
 
   /** An empty DataFrame with exactly `schema` — the "view before any
-    * commit" value every [[VersionedView]]/[[DeltaView]] reader needs.
+    * commit" value every [[DeltaView]] reader needs.
     */
   def empty(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)

@@ -4,8 +4,8 @@ import graft.repl.{LockBusyException, Locks}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** Per-commit writer lock for the versioned-view storage cores
-  * ([[VersionedView]], [[DeltaView]]).
+/** Per-commit writer lock for the versioned-view storage core
+  * ([[DeltaView]]).
   *
   * Single-writer was previously only IMPLIED by the streaming checkpoint
   * contract (one query owns one checkpoint owns one view dir); a

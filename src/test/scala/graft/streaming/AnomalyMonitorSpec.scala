@@ -24,13 +24,13 @@ class AnomalyMonitorSpec extends SparkSpec {
     val (b1, b2) = all.partition { case (_, us) => us < 5 * H + 5 }
 
     val mem = MemoryStream[(String, Long)]
-    val q = AnomalyMonitor.monitorStream(
+    val q = AnomalyMonitor.monitorStreamDelta(
       mem.toDS().toDF("key", "us"), s"$dir/view", s"$dir/ckpt")
     mem.addData(b1: _*); q.processAllAvailable()
     mem.addData(b2: _*); q.processAllAvailable()
     q.stop()
 
-    val streamed = AnomalyMonitor.anomalies(spark, s"$dir/view")
+    val streamed = AnomalyMonitor.anomaliesDelta(spark, s"$dir/view")
       .orderBy("key", "hr").collect().toSeq
     val batch = TimeSeries.rollingZScore(
         all.toDF("key", "us")
@@ -49,18 +49,19 @@ class AnomalyMonitorSpec extends SparkSpec {
     val vd = s"$dir/view"
     def batch(rows: (String, Long)*) = rows.toDF("key", "us")
 
-    AnomalyMonitor.applyBatch(spark, vd, batch(("m", 0L), ("m", 1L)), 0L)
-    AnomalyMonitor.applyBatch(spark, vd, batch(("m", H + 1L)), 1L)
+    AnomalyMonitor.applyBatchDelta(spark, vd, batch(("m", 0L), ("m", 1L)), 0L)
+    AnomalyMonitor.applyBatchDelta(spark, vd, batch(("m", H + 1L)), 1L)
     // replay of batch 1 with bogus content must not double-count
-    AnomalyMonitor.applyBatch(spark, vd, batch(("m", H + 1L), ("x", 0L)), 1L)
+    AnomalyMonitor.applyBatchDelta(spark, vd,
+      batch(("m", H + 1L), ("x", 0L)), 1L)
 
-    val got = AnomalyMonitor.readCounts(spark, vd)
+    val got = AnomalyMonitor.readCountsDelta(spark, vd)
       .orderBy("key", "hr").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got == Seq(("m", 0L, 2L), ("m", 1L, 1L)))
   }
 
-  test("delta core equals the snapshot core (merged hours, compaction, replay)") {
+  test("delta core equals the batch reference (compaction, replay)") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-amd").toString
     def batch(rows: (String, Long)*) = rows.toDF("key", "us")
@@ -70,23 +71,25 @@ class AnomalyMonitorSpec extends SparkSpec {
       batch(("m", 0L), ("m", H + 1), ("n", 0L)),
       batch(("m", H + 2), ("m", H + 3)),
       batch(("m", 2 * H), ("m", 2 * H + 1)))
-    for ((b, i) <- batches.zipWithIndex) {
-      AnomalyMonitor.applyBatch(spark, s"$dir/snap", b, i.toLong)
+    for ((b, i) <- batches.zipWithIndex)
       AnomalyMonitor.applyBatchDelta(spark, s"$dir/delta", b, i.toLong,
         compactEvery = 2)
-    }
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val snap = rows(AnomalyMonitor.readCounts(spark, s"$dir/snap"))
+    // batch reference: hourly counts over every event at once
+    val hourly = batches.reduce(_ unionByName _)
+      .select(col("key"), expr("us DIV 3600000000").as("hr"))
+      .groupBy("key", "hr").agg(count(lit(1)).as("cnt"))
+    val reference = rows(hourly)
     val delta = rows(AnomalyMonitor.readCountsDelta(spark, s"$dir/delta"))
-    assert(snap == delta, s"snap=$snap delta=$delta")
+    assert(reference == delta, s"reference=$reference delta=$delta")
     assert(delta == Set(("m", 0L, 1L), ("m", 1L, 3L), ("m", 2L, 2L),
       ("n", 0L, 1L)))
     assert(graft.util.DeltaView(spark, s"$dir/delta", Seq("key", "hr"), 2)
       .committed.exists(_._3 > 0))
     // scoring the delta-maintained view goes through the same operator
     assert(AnomalyMonitor.anomaliesDelta(spark, s"$dir/delta").count() ==
-      AnomalyMonitor.anomalies(spark, s"$dir/snap").count())
+      TimeSeries.rollingZScore(hourly).count())
     // replayed batch id with bogus content no-ops
     AnomalyMonitor.applyBatchDelta(spark, s"$dir/delta",
       batch(("x", 9 * H)), 2L, compactEvery = 2)

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.operators.{Dedup, TextAnalysis}
-import graft.util.VersionedView
+import graft.util.DeltaView
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -66,9 +66,10 @@ class CurationStreamSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-cur").toString
     val waves = (0 until 3).map(k => docs.filter(col("doc_id") % 3 === k))
     waves.zipWithIndex.foreach { case (w, i) =>
-      CurationStream.applyBatch(spark, dir, frozenOk, w, i.toLong, capN = 60L)
+      CurationStream.applyBatchDelta(spark, dir, frozenOk, w, i.toLong,
+        capN = 60L)
     }
-    val streamed = CurationStream.readDocs(spark, dir)
+    val streamed = CurationStream.readDocsDelta(spark, dir)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val want = batchReference(waves, capN = 60L)
     assert(streamed == want,
@@ -76,7 +77,7 @@ class CurationStreamSpec extends SparkSpec {
     assert(streamed.nonEmpty)
     // the maintained index views cover only accepted docs (a doc whose
     // shingles are all df-capped has no set row — subset, not equality)
-    val setDocs = VersionedView(spark, s"$dir/sets").read().get
+    val setDocs = DeltaView(spark, s"$dir/sets", Seq("doc")).read().get
       .select("doc").collect().map(_.getLong(0)).toSet
     assert(setDocs.nonEmpty && setDocs.subsetOf(streamed), setDocs.size)
   }
@@ -95,15 +96,15 @@ class CurationStreamSpec extends SparkSpec {
       .toDF("doc_id", "text", "source")
     val w2 = Seq(doc(10, "delta four"), doc(11, "epsilon five"))
       .toDF("doc_id", "text", "source")
-    CurationStream.applyBatch(spark, dir, frozenOk, w1, 0L, capN = 4L)
-    CurationStream.applyBatch(spark, dir, frozenOk, w2, 1L, capN = 4L)
-    val got = CurationStream.readDocs(spark, dir)
+    CurationStream.applyBatchDelta(spark, dir, frozenOk, w1, 0L, capN = 4L)
+    CurationStream.applyBatchDelta(spark, dir, frozenOk, w2, 1L, capN = 4L)
+    val got = CurationStream.readDocsDelta(spark, dir)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(got == Set(1L, 2L, 3L, 10L), got) // cap 4: doc 11 refused
     // replay wave 2 with bogus content: every view no-ops
     val bogus = Seq(doc(99, "bogus")).toDF("doc_id", "text", "source")
-    CurationStream.applyBatch(spark, dir, frozenOk, bogus, 1L, capN = 4L)
-    val after = CurationStream.readDocs(spark, dir)
+    CurationStream.applyBatchDelta(spark, dir, frozenOk, bogus, 1L, capN = 4L)
+    val after = CurationStream.readDocsDelta(spark, dir)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(after == got, s"after=$after got=$got")
   }
@@ -124,7 +125,7 @@ class CurationStreamSpec extends SparkSpec {
     val ok3 = Dedup.lshIndexBuild(all, "text", "doc_id", maxShingleDf = 100).ok
 
     val mem = MemoryStream[(Long, String, String)]
-    val q = CurationStream.curationStream(
+    val q = CurationStream.curationStreamDelta(
       mem.toDS().toDF("doc_id", "text", "source"), ok3,
       dir, s"$dir/ckpt", capN = 10L)
     mem.addData((1L, base, "web"), (2L, base + " tail change here.", "web"))
@@ -134,30 +135,28 @@ class CurationStreamSpec extends SparkSpec {
       (21L, base + " tail change there.", "web"), (22L, other, "web"))
     q.processAllAvailable()
     q.stop()
-    val got = CurationStream.readDocs(spark, dir)
+    val got = CurationStream.readDocsDelta(spark, dir)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(got(1L) && got(22L), got)
     assert(!got(20L), s"exact dup straddling batches entered: $got")
     assert(!got(21L), s"near-dup straddling batches entered: $got")
   }
 
-  test("delta core: same curated corpus as the snapshot core, across a compaction") {
-    val dirS = java.nio.file.Files.createTempDirectory("graft-cur4s").toString
+  test("delta core equals the batch reference across a compaction") {
     val dirD = java.nio.file.Files.createTempDirectory("graft-cur4d").toString
     // four waves crossing a compactEvery=2 boundary on every view
     val waves = (0 until 4).map(k => docs.filter(col("doc_id") % 4 === k))
     waves.zipWithIndex.foreach { case (w, i) =>
-      CurationStream.applyBatch(spark, dirS, frozenOk, w, i.toLong, capN = 60L)
       CurationStream.applyBatchDelta(spark, dirD, frozenOk, w, i.toLong,
         capN = 60L, compactEvery = 2)
     }
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id").collect().map(_.getLong(0)).toSet
-    val snap = ids(CurationStream.readDocs(spark, dirS))
+    val want = batchReference(waves, capN = 60L)
     val delta = ids(CurationStream.readDocsDelta(spark, dirD))
-    assert(snap == delta,
-      s"diff=${(snap diff delta) ++ (delta diff snap)}")
-    assert(snap.nonEmpty)
+    assert(want == delta,
+      s"diff=${(want diff delta) ++ (delta diff want)}")
+    assert(delta.nonEmpty)
     // a compaction actually happened on the docs view
     assert(CurationStream.committedDelta(spark, dirD).exists(_._3 > 0))
     // replay of the last wave with bogus content no-ops on the delta core

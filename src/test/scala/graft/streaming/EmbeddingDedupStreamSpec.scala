@@ -27,7 +27,7 @@ class EmbeddingDedupStreamSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-eds").toString
 
     val mem = MemoryStream[(String, Long, Seq[Double])]
-    val q = EmbeddingDedupStream.dedupStream(
+    val q = EmbeddingDedupStream.dedupStreamDelta(
       mem.toDS().toDF("op", "vec_id", "embedding"), centFrame,
       s"$dir/index", s"$dir/ckpt")
 
@@ -41,7 +41,7 @@ class EmbeddingDedupStreamSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
 
-    val got = EmbeddingDedupStream.readIndex(spark, s"$dir/index")
+    val got = EmbeddingDedupStream.readIndexDelta(spark, s"$dir/index")
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(got == Set(2L, 30L), got.toString)
   }
@@ -53,23 +53,24 @@ class EmbeddingDedupStreamSpec extends SparkSpec {
     def batch(rows: (String, Long, Seq[Double])*) =
       rows.toDF("op", "vec_id", "embedding")
 
-    EmbeddingDedupStream.applyBatch(spark, idx, centFrame,
+    EmbeddingDedupStream.applyBatchDelta(spark, idx, centFrame,
       batch(("I", 1L, e1), ("I", 2L, e2)), 0L)
-    EmbeddingDedupStream.applyBatch(spark, idx, centFrame,
+    EmbeddingDedupStream.applyBatchDelta(spark, idx, centFrame,
       batch(("D", 1L, Seq.empty), ("I", 3L, e3)), 1L)
     // replay of batch 1 with DIFFERENT (bogus) content must be a no-op
-    EmbeddingDedupStream.applyBatch(spark, idx, centFrame,
+    EmbeddingDedupStream.applyBatchDelta(spark, idx, centFrame,
       batch(("D", 2L, Seq.empty), ("I", 99L, e4)), 1L)
 
-    val got = EmbeddingDedupStream.readIndex(spark, idx)
+    val got = EmbeddingDedupStream.readIndexDelta(spark, idx)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(got == Set(2L, 3L), got.toString)
-    assert(EmbeddingDedupStream.committed(spark, idx).map(_._1).contains(1L))
+    assert(EmbeddingDedupStream.committedDelta(spark, idx).map(_._1)
+      .contains(1L))
 
     // a deleted id's CONTENT may re-enter later under a new id
-    EmbeddingDedupStream.applyBatch(spark, idx, centFrame,
+    EmbeddingDedupStream.applyBatchDelta(spark, idx, centFrame,
       batch(("I", 10L, e1)), 2L)
-    val after = EmbeddingDedupStream.readIndex(spark, idx)
+    val after = EmbeddingDedupStream.readIndexDelta(spark, idx)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(after == Set(2L, 3L, 10L), after.toString)
   }
@@ -88,9 +89,9 @@ class EmbeddingDedupStreamSpec extends SparkSpec {
       .select(lit("I").as("op"), col("vec_id"), col("embedding"))
     val w2 = embs.filter(col("vec_id") % 2 === 1)
       .select(lit("I").as("op"), col("vec_id"), col("embedding"))
-    EmbeddingDedupStream.applyBatch(spark, idx, cent, w1, 0L)
-    EmbeddingDedupStream.applyBatch(spark, idx, cent, w2, 1L)
-    val streamed = EmbeddingDedupStream.readIndex(spark, idx)
+    EmbeddingDedupStream.applyBatchDelta(spark, idx, cent, w1, 0L)
+    EmbeddingDedupStream.applyBatchDelta(spark, idx, cent, w2, 1L)
+    val streamed = EmbeddingDedupStream.readIndexDelta(spark, idx)
       .select("vec_id").collect().map(_.getLong(0)).toSet
 
     // sequential reference from the BATCH primitives: wave-1 reps enter;
@@ -115,7 +116,7 @@ class EmbeddingDedupStreamSpec extends SparkSpec {
     assert(streamed == want, s"streamed=$streamed want=$want")
   }
 
-  test("delta core: same maintained index as the snapshot core, across a compaction") {
+  test("delta core equals the batch reference across a compaction") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-eds4").toString
     def batch(rows: (String, Long, Seq[Double])*) =
@@ -128,16 +129,15 @@ class EmbeddingDedupStreamSpec extends SparkSpec {
       batch(("I", 40L, e2)), // content of deleted 9 re-enters under 40
       batch(("D", 30L, Seq.empty), ("I", 50L, e4)))
     batches.zipWithIndex.foreach { case (b, i) =>
-      EmbeddingDedupStream.applyBatch(spark, s"$dir/snap", centFrame, b, i)
       EmbeddingDedupStream.applyBatchDelta(spark, s"$dir/delta", centFrame,
         b, i, compactEvery = 2)
     }
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.select("vec_id").collect().map(_.getLong(0)).toSet
-    val snap = ids(EmbeddingDedupStream.readIndex(spark, s"$dir/snap"))
     val delta = ids(EmbeddingDedupStream.readIndexDelta(spark, s"$dir/delta"))
-    assert(snap == delta, s"snap=$snap delta=$delta")
-    assert(snap == Set(2L, 40L, 50L), snap.toString)
+    // sequential reference: 2 beats its in-batch near-dup 5, 20 rejects
+    // against 2, 9 and then 30 are retracted, 40 re-enters 9's content
+    assert(delta == Set(2L, 40L, 50L), delta.toString)
     // a compaction actually happened (base advanced past version 0)
     assert(EmbeddingDedupStream.committedDelta(spark, s"$dir/delta")
       .exists(_._3 > 0))

@@ -15,8 +15,9 @@ class MediaDedupStreamSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-mds").toString
 
     val mem = MemoryStream[(Long, Long, Long, Long, Long)]
-    val q = MediaDedupStream.dedupStream(
-      mem.toDS().toDF("media_id", "b0", "b1", "b2", "b3"),
+    val q = MediaDedupStream.signedStreamDelta(
+      mem.toDS().toDF("media_id", "b0", "b1", "b2", "b3")
+        .withColumn("op", lit("I")),
       s"$dir/index", s"$dir/ckpt")
 
     // batch 1: two fingerprint-identical clips arrive TOGETHER — only the
@@ -29,7 +30,7 @@ class MediaDedupStreamSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
 
-    val got = MediaDedupStream.readIndex(spark, s"$dir/index")
+    val got = MediaDedupStream.readIndexDelta(spark, s"$dir/index")
       .select("media_id").collect().map(_.getLong(0)).toSet
     assert(got == Set(2L, 9L, 30L), got.toString)
   }
@@ -39,20 +40,20 @@ class MediaDedupStreamSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-mds2").toString
     val idx = s"$dir/index"
     def batch(rows: (Long, Long, Long, Long, Long)*) =
-      rows.toDF("media_id", "b0", "b1", "b2", "b3")
+      rows.toDF("media_id", "b0", "b1", "b2", "b3").withColumn("op", lit("I"))
 
-    MediaDedupStream.applyBatch(spark, idx, batch(fp(1L, 50L)), 0L)
+    MediaDedupStream.applySignedBatchDelta(spark, idx, batch(fp(1L, 50L)), 0L)
     // far from clip 1 in every band (hamming >> 3)
-    MediaDedupStream.applyBatch(spark, idx,
+    MediaDedupStream.applySignedBatchDelta(spark, idx,
       batch(fp(2L, 1L << 10, 1L << 11, 1L << 12, 1L << 13)), 1L)
     // replay of batch 1 with DIFFERENT (bogus) content must be a no-op
-    MediaDedupStream.applyBatch(spark, idx,
+    MediaDedupStream.applySignedBatchDelta(spark, idx,
       batch(fp(99L, 1L << 3, 1L << 4, 1L << 5, 1L << 6)), 1L)
 
-    val got = MediaDedupStream.readIndex(spark, idx)
+    val got = MediaDedupStream.readIndexDelta(spark, idx)
       .select("media_id").collect().map(_.getLong(0)).toSet
     assert(got == Set(1L, 2L), got.toString)
-    assert(MediaDedupStream.committed(spark, idx).map(_._1).contains(1L))
+    assert(MediaDedupStream.committedDelta(spark, idx).map(_._1).contains(1L))
   }
 
   test("streamed ingest equals the sequential batch reference on real audio fingerprints") {
@@ -76,10 +77,12 @@ class MediaDedupStreamSpec extends SparkSpec {
     val h2 = graft.operators.Multimodal
       .audioFingerprintHashes(spark, copies).cache()
 
-    MediaDedupStream.applyBatch(spark, idx, h1, 0L)
-    MediaDedupStream.applyBatch(spark, idx, h2, 1L)
+    MediaDedupStream.applySignedBatchDelta(spark, idx,
+      h1.withColumn("op", lit("I")), 0L)
+    MediaDedupStream.applySignedBatchDelta(spark, idx,
+      h2.withColumn("op", lit("I")), 1L)
 
-    val streamed = MediaDedupStream.readIndex(spark, idx)
+    val streamed = MediaDedupStream.readIndexDelta(spark, idx)
       .select("media_id").collect().map(_.getLong(0)).toSet
     // sequential reference: batch-1 reps enter; every batch-2 copy whose
     // fingerprint is within dist 3 of an accepted batch-1 rep is rejected
@@ -133,10 +136,10 @@ class MediaDedupStreamSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
 
-    val audioIdx = MediaDedupStream.readIndex(spark, s"$root/index/audio")
+    val audioIdx = MediaDedupStream.readIndexDelta(spark, s"$root/index/audio")
       .select("media_id").collect().map(_.getLong(0)).toSeq.sorted
     assert(audioIdx == Seq(1L, 4L, 7L), audioIdx.toString)
-    val imageIdx = MediaDedupStream.readIndex(spark, s"$root/index/image")
+    val imageIdx = MediaDedupStream.readIndexDelta(spark, s"$root/index/image")
       .select("media_id").collect().map(_.getLong(0)).toSeq.sorted
     assert(imageIdx == Seq(11L), imageIdx.toString)
   }
@@ -150,7 +153,7 @@ class MediaDedupStreamSpec extends SparkSpec {
       rows.toDF("op", "media_id", "b0", "b1", "b2", "b3")
 
     val mem = MemoryStream[(String, Long, Long, Long, Long, Long)]
-    val q = MediaDedupStream.signedStream(
+    val q = MediaDedupStream.signedStreamDelta(
       mem.toDS().toDF("op", "media_id", "b0", "b1", "b2", "b3"),
       idx, s"$dir/ckpt")
     // batch 1: two distinct clips enter
@@ -162,19 +165,19 @@ class MediaDedupStreamSpec extends SparkSpec {
     mem.addData(("D", 1L, 0L, 0L, 0L, 0L), ("I", 10L, 51L, 7L, 9L, 11L))
     q.processAllAvailable()
     q.stop()
-    val got = MediaDedupStream.readIndex(spark, idx)
+    val got = MediaDedupStream.readIndexDelta(spark, idx)
       .select("media_id").collect().map(_.getLong(0)).toSet
     assert(got == Set(2L, 10L), got.toString)
 
     // a replayed delete batch must no-op (direct driver, same batchId)
-    MediaDedupStream.applySignedBatch(spark, idx,
+    MediaDedupStream.applySignedBatchDelta(spark, idx,
       sb(("D", 2L, 0L, 0L, 0L, 0L)), 1L)
-    val after = MediaDedupStream.readIndex(spark, idx)
+    val after = MediaDedupStream.readIndexDelta(spark, idx)
       .select("media_id").collect().map(_.getLong(0)).toSet
     assert(after == Set(2L, 10L), after.toString)
   }
 
-  test("delta core: same signed-batch index as the snapshot core, across a compaction") {
+  test("delta core equals the batch reference across a compaction") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-mds5").toString
     def sb(rows: (String, Long, Long, Long, Long, Long)*) =
@@ -188,16 +191,15 @@ class MediaDedupStreamSpec extends SparkSpec {
       sb(("I", 30L, 1L << 20, 1L << 21, 1L << 22, 1L << 23)),
       sb(("D", 30L, 0L, 0L, 0L, 0L)))
     batches.zipWithIndex.foreach { case (b, i) =>
-      MediaDedupStream.applySignedBatch(spark, s"$dir/snap", b, i.toLong)
       MediaDedupStream.applySignedBatchDelta(spark, s"$dir/delta", b,
         i.toLong, compactEvery = 2)
     }
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.select("media_id").collect().map(_.getLong(0)).toSet
-    val snap = ids(MediaDedupStream.readIndex(spark, s"$dir/snap"))
     val delta = ids(MediaDedupStream.readIndexDelta(spark, s"$dir/delta"))
-    assert(snap == delta, s"snap=$snap delta=$delta")
-    assert(snap == Set(2L, 10L), snap.toString)
+    // sequential reference: 1 and 2 enter, 1 is retracted and its near-copy
+    // 10 re-enters against the post-delete index, 30 enters then leaves
+    assert(delta == Set(2L, 10L), delta.toString)
     assert(MediaDedupStream.committedDelta(spark, s"$dir/delta")
       .exists(_._3 > 0))
     // replayed delete with bogus content no-ops on the delta core too
@@ -221,8 +223,8 @@ class MediaDedupStreamSpec extends SparkSpec {
       new org.apache.hadoop.fs.Path(idx, "FPFAMILY"))
     assert(stamp.contains(graft.operators.Multimodal.fingerprintStamp))
 
-    // a FUTURE family retune (simulated foreign stamp) must refuse both
-    // maintainer cores instead of probing wrong emptiness
+    // a FUTURE family retune (simulated foreign stamp) must refuse the
+    // maintainer instead of probing wrong emptiness
     graft.util.AtomicPointer.commit(conf,
       new org.apache.hadoop.fs.Path(idx, "FPFAMILY"),
       "family=phash64,bands=8x8,v=2")
@@ -244,15 +246,5 @@ class MediaDedupStreamSpec extends SparkSpec {
     }
     assert(e2.getMessage.contains("no FPFAMILY stamp"), e2.getMessage)
 
-    // snapshot core enforces the same contract
-    val snap = s"$dir/snap"
-    MediaDedupStream.applySignedBatch(spark, snap, batch(fp(1L, 50L)), 0L)
-    graft.util.AtomicPointer.commit(conf,
-      new org.apache.hadoop.fs.Path(snap, "FPFAMILY"),
-      "family=phash64,bands=8x8,v=2")
-    val e3 = intercept[IllegalStateException] {
-      MediaDedupStream.applySignedBatch(spark, snap, batch(fp(2L, 60L)), 1L)
-    }
-    assert(e3.getMessage.contains("fingerprint-family mismatch"), e3.getMessage)
   }
 }

@@ -21,7 +21,7 @@ class Scd2MaintenanceSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-scd2m").toString
 
     val mem = MemoryStream[(Long, Long, Long, String)]
-    val q = Scd2Maintenance.maintainStream(
+    val q = Scd2Maintenance.maintainStreamDelta(
       mem.toDS().toDF("key", "ts", "tb", "attr"), s"$dir/dim", s"$dir/ckpt")
 
     // event-time ordered per key across batches
@@ -38,7 +38,7 @@ class Scd2MaintenanceSpec extends SparkSpec {
       (2L, 45L, 7L, "Y")).toDF("key", "ts", "tb", "attr")
     val expected = dimTuples(Warehouse.scd2(all, col("key"), col("ts"),
       col("tb"), col("attr")))
-    val got = dimTuples(Scd2Maintenance.readDim(spark, s"$dir/dim").get)
+    val got = dimTuples(Scd2Maintenance.readDimDelta(spark, s"$dir/dim").get)
     // key 1: A@10 (20 compacted), B@30, A@40 -> 3 versions; key 2: Z,Y.
     assert(got.count(_._1 == 1L) == 3)
     assert(got == expected)
@@ -51,10 +51,9 @@ class Scd2MaintenanceSpec extends SparkSpec {
       rows.toDF("key", "ts", "tb", "attr")
     // batch recompute over the raw log: A@10(tb1), B@20(tb5), C@20(tb3):
     // at ts=20, tb orders C before B -> A, C (zero-width), B current.
-    Scd2Maintenance.applyBatch(spark, s"$dir/dim",
-      b((1L, 10L, 1L, "A"), (1L, 20L, 5L, "B")), 0L)
-    Scd2Maintenance.applyBatch(spark, s"$dir/dim", b((1L, 20L, 3L, "C")), 1L)
-    val got = dimTuples(Scd2Maintenance.readDim(spark, s"$dir/dim").get)
+    Scd2Maintenance.applyBatchDelta(spark, s"$dir/dim", b((1L, 10L, 1L, "A"), (1L, 20L, 5L, "B")), 0L)
+    Scd2Maintenance.applyBatchDelta(spark, s"$dir/dim", b((1L, 20L, 3L, "C")), 1L)
+    val got = dimTuples(Scd2Maintenance.readDimDelta(spark, s"$dir/dim").get)
     val expected = dimTuples(Warehouse.scd2(
       b((1L, 10L, 1L, "A"), (1L, 20L, 5L, "B"), (1L, 20L, 3L, "C")),
       col("key"), col("ts"), col("tb"), col("attr")))
@@ -67,11 +66,9 @@ class Scd2MaintenanceSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-scd2m4").toString
     def b(rows: (Option[Long], Long, Long, String)*) =
       rows.toDF("key", "ts", "tb", "attr")
-    Scd2Maintenance.applyBatch(spark, s"$dir/dim",
-      b((None, 10L, 1L, "A")), 0L)
-    Scd2Maintenance.applyBatch(spark, s"$dir/dim",
-      b((None, 20L, 2L, "B")), 1L)
-    val dim = Scd2Maintenance.readDim(spark, s"$dir/dim").get.collect()
+    Scd2Maintenance.applyBatchDelta(spark, s"$dir/dim", b((None, 10L, 1L, "A")), 0L)
+    Scd2Maintenance.applyBatchDelta(spark, s"$dir/dim", b((None, 20L, 2L, "B")), 1L)
+    val dim = Scd2Maintenance.readDimDelta(spark, s"$dir/dim").get.collect()
     assert(dim.length == 2) // one closed A + one current B, no duplicates
     assert(dim.count(_.getAs[Boolean]("is_current")) == 1)
   }
@@ -81,10 +78,11 @@ class Scd2MaintenanceSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-scd2m5").toString
     def b(rows: (Long, Long, Long, String)*) =
       rows.toDF("key", "ts", "tb", "attr")
-    Scd2Maintenance.applyBatch(spark, s"$dir/dim", b((1L, 10L, 1L, "A")), 0L)
-    val before = graft.util.VersionedView(spark, s"$dir/dim").committed
-    Scd2Maintenance.applyBatch(spark, s"$dir/dim", b(), 1L)
-    assert(graft.util.VersionedView(spark, s"$dir/dim").committed == before)
+    Scd2Maintenance.applyBatchDelta(spark, s"$dir/dim", b((1L, 10L, 1L, "A")), 0L)
+    val dv = graft.util.DeltaView(spark, s"$dir/dim", Seq("k"))
+    val before = dv.committed
+    Scd2Maintenance.applyBatchDelta(spark, s"$dir/dim", b(), 1L)
+    assert(dv.committed == before)
   }
 
   test("same-segment observations keep compacting away incrementally") {
@@ -92,16 +90,16 @@ class Scd2MaintenanceSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-scd2m2").toString
     def b(rows: (Long, Long, Long, String)*) =
       rows.toDF("key", "ts", "tb", "attr")
-    Scd2Maintenance.applyBatch(spark, s"$dir/dim", b((1L, 10L, 1L, "A")), 0L)
-    Scd2Maintenance.applyBatch(spark, s"$dir/dim", b((1L, 20L, 2L, "A")), 1L)
-    val got = dimTuples(Scd2Maintenance.readDim(spark, s"$dir/dim").get)
+    Scd2Maintenance.applyBatchDelta(spark, s"$dir/dim", b((1L, 10L, 1L, "A")), 0L)
+    Scd2Maintenance.applyBatchDelta(spark, s"$dir/dim", b((1L, 20L, 2L, "A")), 1L)
+    val got = dimTuples(Scd2Maintenance.readDimDelta(spark, s"$dir/dim").get)
     assert(got == Set((1L, "A", 10L, None, 1L, true)))
     // replay of batch 1 with different content: no-op
-    Scd2Maintenance.applyBatch(spark, s"$dir/dim", b((1L, 99L, 9L, "X")), 1L)
-    assert(dimTuples(Scd2Maintenance.readDim(spark, s"$dir/dim").get) == got)
+    Scd2Maintenance.applyBatchDelta(spark, s"$dir/dim", b((1L, 99L, 9L, "X")), 1L)
+    assert(dimTuples(Scd2Maintenance.readDimDelta(spark, s"$dir/dim").get) == got)
   }
 
-  test("delta core equals the snapshot core (affected rewrite, zero-width versions, nulls, compaction, replay)") {
+  test("delta core equals the batch reference (compaction, replay)") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-scd2d").toString
     def b(rows: (Option[Long], Long, Long, String)*) =
@@ -115,11 +113,9 @@ class Scd2MaintenanceSpec extends SparkSpec {
         (None, 10L, 8L, "N1")),
       b((Some(1L), 20L, 5L, "B"), (Some(1L), 20L, 3L, "C")),
       b((Some(1L), 40L, 6L, "A"), (None, 30L, 9L, "N2")))
-    for ((batch, i) <- batches.zipWithIndex) {
-      Scd2Maintenance.applyBatch(spark, s"$dir/snap", batch, i.toLong)
+    for ((batch, i) <- batches.zipWithIndex)
       Scd2Maintenance.applyBatchDelta(spark, s"$dir/delta", batch, i.toLong,
         compactEvery = 2)
-    }
     def tuples(df: org.apache.spark.sql.DataFrame) = df
       .select(col("k"), col("segment"), col("valid_from"), col("valid_to"),
         col("version").cast("long"), col("is_current"))
@@ -128,9 +124,11 @@ class Scd2MaintenanceSpec extends SparkSpec {
         r.getLong(2), Option(r.get(3)).map(_.toString), r.getLong(4),
         r.getBoolean(5)))
       .toSet
-    val snap = tuples(Scd2Maintenance.readDim(spark, s"$dir/snap").get)
+    // batch reference: one scd2 over every observation at once
+    val reference = tuples(Warehouse.scd2(batches.reduce(_ unionByName _),
+      col("key"), col("ts"), col("tb"), col("attr")))
     val delta = tuples(Scd2Maintenance.readDimDelta(spark, s"$dir/delta").get)
-    assert(snap == delta, s"snap=$snap delta=$delta")
+    assert(reference == delta, s"reference=$reference delta=$delta")
     // zero-width version retained, exactly one current row per live key
     assert(delta.count { case (k, _, _, _, _, _) => k.contains("1") } == 4)
     assert(delta.count { case (k, _, _, _, _, cur) => k.isEmpty && cur } == 1)

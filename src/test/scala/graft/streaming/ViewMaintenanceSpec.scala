@@ -1,10 +1,16 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.operators.Warehouse
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 class ViewMaintenanceSpec extends SparkSpec {
+
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.select(col("key"), col("cnt"), col("sum_m").cast("double"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+      .toSet
 
   test("streamed CDC maintenance equals a recompute over all changes") {
     implicit val sqlCtx = spark.sqlContext
@@ -12,7 +18,7 @@ class ViewMaintenanceSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-vm").toString
 
     val mem = MemoryStream[(String, String, Double)]
-    val q = ViewMaintenance.maintainStream(
+    val q = ViewMaintenance.maintainStreamDelta(
       mem.toDS().toDF("op", "key", "measure"), s"$dir/view", s"$dir/ckpt")
 
     mem.addData(("I", "A", 10.0), ("I", "A", 20.0), ("I", "B", 5.0))
@@ -24,11 +30,8 @@ class ViewMaintenanceSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
 
-    val got = ViewMaintenance.readView(spark, s"$dir/view")
-      .select(col("key"), col("cnt"), col("sum_m").cast("double"))
-      .orderBy("key").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(got == Seq(("A", 2L, 31.0), ("C", 1L, 7.0)))
+    assert(rows(ViewMaintenance.readViewDelta(spark, s"$dir/view")) ==
+      Set(("A", 2L, 31.0), ("C", 1L, 7.0)))
   }
 
   test("replayed micro-batches are skipped; old versions are pruned") {
@@ -38,27 +41,27 @@ class ViewMaintenanceSpec extends SparkSpec {
     def batch(rows: (String, String, Double)*) =
       rows.toDF("op", "key", "measure")
 
-    ViewMaintenance.applyBatch(spark, vd, batch(("I", "A", 1.0)), 0L)
-    ViewMaintenance.applyBatch(spark, vd, batch(("I", "A", 2.0)), 1L)
-    ViewMaintenance.applyBatch(spark, vd, batch(("I", "B", 3.0)), 2L)
+    // compactEvery = 1: every commit writes a fresh base (snapshot per
+    // commit), so pruning is visible after three commits
+    def commit(b: org.apache.spark.sql.DataFrame, id: Long): Unit =
+      ViewMaintenance.applyBatchDelta(spark, vd, b, id, compactEvery = 1)
+    commit(batch(("I", "A", 1.0)), 0L)
+    commit(batch(("I", "A", 2.0)), 1L)
+    commit(batch(("I", "B", 3.0)), 2L)
     // replay of batch 1 with DIFFERENT (bogus) content must be a no-op
-    ViewMaintenance.applyBatch(spark, vd, batch(("I", "X", 99.0)), 1L)
+    commit(batch(("I", "X", 99.0)), 1L)
 
-    val got = ViewMaintenance.readView(spark, vd)
-      .select(col("key"), col("cnt"), col("sum_m").cast("double"))
-      .orderBy("key").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(got == Seq(("A", 2L, 3.0), ("B", 1L, 3.0)))
-    assert(ViewMaintenance.committed(spark, vd).contains((2L, 2L)))
+    assert(rows(ViewMaintenance.readViewDelta(spark, vd)) ==
+      Set(("A", 2L, 3.0), ("B", 1L, 3.0)))
+    assert(graft.util.DeltaView(spark, vd, Seq("key")).committed
+      .contains((2L, 2L, 2L)))
     // keep-two pruning: v0 gone, v1 + v2 remain.
-    val fsys = new org.apache.hadoop.fs.Path(vd)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fsys.exists(new org.apache.hadoop.fs.Path(vd, "view_v0")))
-    assert(fsys.exists(new org.apache.hadoop.fs.Path(vd, "view_v1")))
-    assert(fsys.exists(new org.apache.hadoop.fs.Path(vd, "view_v2")))
+    val files = new java.io.File(vd).list().toSet
+    assert(!files("base_v0") && files("base_v1") && files("base_v2"),
+      files.toString)
   }
 
-  test("delta core equals the snapshot core across updates, deletes, compaction and replay") {
+  test("delta core equals the batch reference (compaction, replay)") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-vmd").toString
     def batch(rows: (String, String, Double)*) =
@@ -68,18 +71,15 @@ class ViewMaintenanceSpec extends SparkSpec {
       batch(("D", "A", 20.0), ("I", "A", 21.0), ("D", "B", 5.0)),
       batch(("I", "C", 7.0)),
       batch(("I", "B", 4.0), ("D", "C", 7.0)))
-    for ((b, i) <- batches.zipWithIndex) {
-      ViewMaintenance.applyBatch(spark, s"$dir/snap", b, i.toLong)
+    for ((b, i) <- batches.zipWithIndex)
       ViewMaintenance.applyBatchDelta(spark, s"$dir/delta", b, i.toLong,
         compactEvery = 2)
-    }
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("key"), col("cnt"), col("sum_m").cast("double"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-        .toSet
-    val snap = rows(ViewMaintenance.readView(spark, s"$dir/snap"))
+    // batch reference: one maintainAgg over every change at once
+    val reference = rows(Warehouse.maintainAgg(
+      graft.util.Frames.empty(spark, ViewMaintenance.ViewSchema),
+      batches.reduce(_ unionByName _)))
     val delta = rows(ViewMaintenance.readViewDelta(spark, s"$dir/delta"))
-    assert(snap == delta, s"snap=$snap delta=$delta")
+    assert(reference == delta, s"reference=$reference delta=$delta")
     assert(delta == Set(("A", 2L, 31.0), ("B", 1L, 4.0)))
     // a compaction actually happened (base advanced past version 0)
     assert(graft.util.DeltaView(spark, s"$dir/delta", Seq("key"), 2)
@@ -96,14 +96,13 @@ class ViewMaintenanceSpec extends SparkSpec {
     val vd = s"$dir/view"
     def batch(rows: (String, String, Double)*) =
       rows.toDF("op", "key", "measure")
-    ViewMaintenance.applyBatch(spark, vd, batch(("I", "A", 1.0)), 0L)
+    ViewMaintenance.applyBatchDelta(spark, vd, batch(("I", "A", 1.0)), 0L)
     // simulate the crash window: v1 data written (garbage), pointer NOT
     // swapped — the replayed batch must overwrite it and commit correctly.
-    batch(("I", "Z", 123.0)).write.mode("overwrite").parquet(s"$vd/view_v1")
-    ViewMaintenance.applyBatch(spark, vd, batch(("I", "A", 2.0)), 1L)
-    val got = ViewMaintenance.readView(spark, vd)
-      .select(col("key"), col("cnt"), col("sum_m").cast("double"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(got == Seq(("A", 2L, 3.0)))
+    Seq(("Z", 1L, BigDecimal(123), "I")).toDF("key", "cnt", "sum_m", "_op")
+      .write.mode("overwrite").parquet(s"$vd/delta_v1")
+    ViewMaintenance.applyBatchDelta(spark, vd, batch(("I", "A", 2.0)), 1L)
+    assert(rows(ViewMaintenance.readViewDelta(spark, vd)) ==
+      Set(("A", 2L, 3.0)))
   }
 }

@@ -117,7 +117,7 @@ class DeltaViewSpec extends SparkSpec {
 
   test("pruning keeps exactly what the last keepVersions states need") {
     val d = tmp("prune")
-    val dv = DeltaView(spark, d, Seq("k"), compactEvery = 3, keepVersions = 2)
+    val dv = DeltaView(spark, d, Seq("k"), compactEvery = 3)
     for (b <- 0 until 7) dv.applyBatch(b)(_ => (ins(b.toLong -> s"p$b"), del()))
     // version 6 = base 6 (compaction at 3 and 6); state 5 needs base_v3 +
     // deltas 4,5 — all kept; everything at versions < 3 pruned
@@ -170,20 +170,20 @@ class DeltaViewSpec extends SparkSpec {
     assert(!fs.exists(p), "lock must release after the commit")
   }
 
-  test("writer lock guards the VersionedView core too") {
-    val d = tmp("vvlock")
-    val vv = VersionedView(spark, d)
-    vv.applyBatch(0)(_ => ins(1L -> "a"))
-    val p = new org.apache.hadoop.fs.Path(d, WriterLock.MarkerName)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val other = graft.repl.Locks.acquire(fs, p, "other-maintainer", staleMs = 600000)
-    val e = intercept[graft.repl.LockBusyException] {
-      vv.applyBatch(1)(_ => ins(2L -> "b"))
-    }
-    assert(e.getMessage.contains("another maintainer owns this view"))
-    other.release()
-    assert(vv.applyBatch(1)(_ => ins(2L -> "b")))
-    assert(rows(vv.read()) == Set(2L -> "b"))
+  test("a foreign 2-field pointer is refused by name, never bootstrapped over") {
+    val d = tmp("foreign")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val pointer = new org.apache.hadoop.fs.Path(d, "CURRENT")
+    AtomicPointer.commit(conf, pointer, "3,3") // the retired snapshot core's
+    def refused(body: => Any): Unit = assert(intercept[IllegalStateException](
+      body).getMessage.contains("a 2-field pointer is a VersionedView directory"))
+    refused(graft.streaming.ViewMaintenance.readViewDelta(spark, d))
+    refused(graft.streaming.ViewMaintenance.applyBatchDelta(spark, d,
+      Seq(("I", "A", 1.0)).toDF("op", "key", "measure"), 4L))
+    // neither call bootstrapped: pointer untouched, no data, lock released
+    assert(AtomicPointer.read(conf, pointer).contains("3,3"))
+    assert(new java.io.File(d).list().filterNot(_.startsWith(".")).toSeq ==
+      Seq("CURRENT"))
   }
 
   test("random op sequence matches the in-memory reference model") {
