@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main. Emits ONE JSON line:
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}
   *
@@ -13,18 +11,53 @@ import org.apache.spark.sql.SparkSession
   * bootstrap / ~45.5 s incremental on the reference's two-cluster rig).
   */
 object Bench {
+  /** Canonical shape of the POST-EXECUTION physical plan (AQE
+    * finalized): the operator tree — node names plus join types — with
+    * exprIds/paths/sizes excluded by construction. A round-over-round
+    * [[fingerprint]] change means the plan structurally changed (a lost
+    * broadcast, a new exchange, a join strategy flip); tools/plan_diff.py
+    * flags rows whose plan changed without a bench win, and
+    * `tools.PlanFlip` prints the shapes themselves. PlanSpec gates the ~40
+    * named plans; this tripwire covers the whole corpus.
+    */
+  def planShape(p: org.apache.spark.sql.execution.SparkPlan): String = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val extra = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case qs: QueryStageExec => Seq(qs.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case _ => Seq.empty
+    }
+    val label = p match {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec =>
+        s"${p.nodeName}[${j.joinType}]"
+      // WholeStageCodegenExec's nodeName embeds its codegenStageId — a
+      // session-GLOBAL counter whose value depends on what compiled
+      // before and on AQE stage-materialization order (thread timing).
+      // It is not a plan property: r12's six "AQE-multistable" rows
+      // (q24/q27/q53/q72/q110/q133) were all IDENTICAL trees whose ids
+      // drifted (PlanFlip probe: 4-5 raw shapes each, exactly 1 after
+      // stripping the id). Normalize so the fingerprint hashes the
+      // tree, not the compile order.
+      case _: org.apache.spark.sql.execution.WholeStageCodegenExec =>
+        "WholeStageCodegen"
+      case _ => p.nodeName
+    }
+    label + "(" + (p.children ++ extra).map(planShape).mkString(",") + ")"
+  }
+
+  /** The artifact's `plans` hash: 6 bytes of SHA-1 over [[planShape]]. */
+  def fingerprint(df: org.apache.spark.sql.DataFrame): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-1")
+    md.digest(planShape(df.queryExecution.executedPlan).getBytes("UTF-8"))
+      .take(6).map("%02x".format(_)).mkString
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val spark = Session.local()
 
     def time(body: => Unit): Double = {
       val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
@@ -47,45 +80,6 @@ object Bench {
       catch { case _: Throwable => -1.0 }
     val errors = scala.collection.mutable.ListBuffer[String]()
     val refused = scala.collection.mutable.LinkedHashSet[String]()
-
-    // Canonical fingerprint of the POST-EXECUTION physical plan (AQE
-    // finalized): the operator-tree shape — node names plus join types —
-    // with exprIds/paths/sizes excluded by construction. A round-over-round
-    // hash change means the plan structurally changed (a lost broadcast, a
-    // new exchange, a join strategy flip); tools/plan_diff.py flags rows
-    // whose plan changed without a bench win. PlanSpec gates the ~40 named
-    // plans; this tripwire covers the whole corpus.
-    def planShape(p: org.apache.spark.sql.execution.SparkPlan): String = {
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-      val extra = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case qs: QueryStageExec => Seq(qs.plan)
-        case r: ReusedExchangeExec => Seq(r.child)
-        case _ => Seq.empty
-      }
-      val label = p match {
-        case j: org.apache.spark.sql.execution.joins.BaseJoinExec =>
-          s"${p.nodeName}[${j.joinType}]"
-        // WholeStageCodegenExec's nodeName embeds its codegenStageId — a
-        // session-GLOBAL counter whose value depends on what compiled
-        // before and on AQE stage-materialization order (thread timing).
-        // It is not a plan property: r12's six "AQE-multistable" rows
-        // (q24/q27/q53/q72/q110/q133) were all IDENTICAL trees whose ids
-        // drifted (PlanFlip probe: 4-5 raw shapes each, exactly 1 after
-        // stripping the id). Normalize so the fingerprint hashes the
-        // tree, not the compile order.
-        case _: org.apache.spark.sql.execution.WholeStageCodegenExec =>
-          "WholeStageCodegen"
-        case _ => p.nodeName
-      }
-      label + "(" + (p.children ++ extra).map(planShape).mkString(",") + ")"
-    }
-    def fingerprint(df: org.apache.spark.sql.DataFrame): String = {
-      val md = java.security.MessageDigest.getInstance("SHA-1")
-      md.digest(planShape(df.queryExecution.executedPlan).getBytes("UTF-8"))
-        .take(6).map("%02x".format(_)).mkString
-    }
 
     // DATA-VOLUME companion to the plan fingerprint: per query, the bytes
     // the final plan's execution shuffled (sum of shuffleBytesWritten over
@@ -161,8 +155,8 @@ object Bench {
     // accumulate across 66 queries and squeeze the later ones' memory —
     // round-2's repl numbers were inflated ~10× by exactly that pileup.
     // SPARK_GRAFT_BENCH_ONLY=q24_…,q27_… restricts the corpus (and skips
-    // the replication sections) — used by the sf-growth bench, which times
-    // the heavy family at two scales back to back.
+    // the replication sections) — attributes a single row, e.g. under
+    // `-Dspark.eventLog.enabled=true` (see the verify skill).
     val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val corpus = only match {
@@ -318,7 +312,7 @@ object Bench {
       }
       import spark.implicits._
       val root = java.nio.file.Files.createTempDirectory("graft-bench-jdbc").toString
-      val source = JdbcSource(spark, url, numPartitions = cpus.toInt.min(8))
+      val source = JdbcSource(spark, url, numPartitions = cpus.min(8))
       val target = DbCatalog(spark, s"$root/tgt")
       val job = ReplicationJob(spark, source, target, s"$root/dumps",
         ReplConfig(dumpRoot = s"$root/dumps", rerunSleepMs = 100))
@@ -431,8 +425,8 @@ object Bench {
     // the per-query map (BENCH_r09.json lost its first half). Persist the
     // FULL two-line artifact to a repo file so round-over-round comparison
     // never depends on the driver's tail buffer. Opt-out/override via
-    // SPARK_GRAFT_BENCH_OUT ("" disables; the scale/growth benches write
-    // their own artifacts).
+    // SPARK_GRAFT_BENCH_OUT ("" disables; the scale bench writes its own
+    // artifact).
     sys.env.get("SPARK_GRAFT_BENCH_OUT")
       .orElse(Some(new java.io.File("BENCH_full_latest.json").getAbsolutePath))
       .filter(_.nonEmpty).foreach { p =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Three-point scale study: times the bucketed operator family (the
@@ -34,23 +33,13 @@ object BenchScale {
     val dirs = (if (out.isDefined) args.dropRight(1) else args).toSeq
     require(dirs.size >= 2 && dirs.size <= 4,
       "usage: BenchScale <dir1x> <dir10x> [<dir30x> [<dir100x>]] [out.json]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = Session.local(
       // a multi-hour single-JVM study accumulates shuffle files until the
       // ContextCleaner's periodic GC (default 30 min) releases them — at
       // the 100× point that filled the disk mid-row (ENOSPC in a spill).
       // Clean every 3 min; runs between rows, outside any timer that
       // matters at these durations.
-      .config("spark.cleaner.periodicGC.interval", "3min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.cleaner.periodicGC.interval" -> "3min")
 
     def time(body: => Unit): Double = {
       val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9

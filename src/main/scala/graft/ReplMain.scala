@@ -1,7 +1,6 @@
 package graft
 
 import graft.repl._
-import org.apache.spark.sql.SparkSession
 
 /** Operational CLI — the engine's form of the reference's invocation
   * surface (`/root/reference/README.md:58-62`: cron runs
@@ -114,6 +113,19 @@ object ReplMain {
     (on, rest)
   }
 
+  /** One db's CLI line: a run prints its [[repl.RunReport.json]], the run
+    * log's own record; a skip or error prints `db`, `skipped` and `error`.
+    * Strings go through [[repl.Json]]: exception messages carry quotes,
+    * backslashes and (Spark plans) newlines, and the one-line-per-db
+    * contract must survive exactly the failure case alerting depends on.
+    */
+  private[graft] def line(o: Sweep#Outcome): String = o.report match {
+    case Some(r) => r.json
+    case None =>
+      s"""{"db":${Json.str(o.db)},"skipped":${o.skipped},""" +
+      s""""error":${o.error.map(Json.str).getOrElse("null")}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     if (args.length < 4) {
       System.err.println(
@@ -132,15 +144,7 @@ object ReplMain {
     val allow: Set[String] =
       allowArg.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
         .getOrElse(Set.empty)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-repl")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("spark.app.name" -> "graft-repl")
 
     val (urlFiles, cfgArgs0) = splitUrlFiles(kvArgs)
     val (targetEpochs, cfgArgs) = try splitTargetEpochs(cfgArgs0) catch {
@@ -186,21 +190,7 @@ object ReplMain {
       else DbCatalog(spark, targetRoot, epochMode = targetEpochs)
     val sweep = Sweep(spark, source, target, dumpRoot, cfg)
     val outcomes = sweep.run(dbArg.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    // JSON string escaping ([[repl.Json]]): exception messages carry
-    // quotes, backslashes and (Spark plans) newlines — the one-line-per-db
-    // contract must survive exactly the failure case alerting depends on.
-    def jstr(v: String): String = repl.Json.str(v)
-    outcomes.foreach { o =>
-      val body = o.report match {
-        case Some(r) =>
-          s""""kind":"${r.kind}","verify":"${r.verify}","fromId":${r.fromId},""" +
-          s""""toId":${r.toId},"attempts":${r.attempts},"durationMs":${r.durationMs},""" +
-          s""""tables":${r.tablesJson}"""
-        case None =>
-          s""""skipped":${o.skipped},"error":${o.error.map(jstr).getOrElse("null")}"""
-      }
-      println(s"""{"db":${jstr(o.db)},$body}""")
-    }
+    outcomes.foreach(o => println(line(o)))
     spark.stop()
     // skips are benign (held lock or allowlist — the reference's
     // exit-0-equivalent); real errors and failed verifies are not

@@ -398,7 +398,7 @@ object Dedup {
     * [[graft.util.ContractRefusal]] above the bound, naming
     * [[minhashLshPairs]] (probabilistic, S-curve-contracted) as the
     * scale path for corpora past exactness's reach. Default calibrated
-    * against measured volumes (Scratch `simhash_cand_probe`): 3.9·10⁶ /
+    * against measured volumes (archived in BENCH_sf3.md): 3.9·10⁶ /
     * 2.8·10⁸ / 2.6·10⁹ at 1×/10×/30× — the 30× volume verifiably ran
     * (42 s, ~62 GB through the join); a 100× corpus's ~2.9·10¹⁰
     * (~700 GB) is the q121 spill-death mode and refuses.

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` of named declared queries to files —
   * the per-round plan evidence (`plans/r<n>/<query>_<tag>.txt`).
   * Usage: ExplainDump <outDir> <tag> <query...>
@@ -14,16 +12,7 @@ object ExplainDump {
     val tag = args(1)
     val names = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (name <- names) {
       try {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic: run named queries N times each, print the DISTINCT
   * post-execution plan shapes observed (full shape string, not just the
   * hash) so an AQE-multistable row's flipping exchange can be located.
@@ -13,47 +11,19 @@ object PlanFlip {
     val reps = args.head.toInt
     val names = args.tail
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def planShape(p: org.apache.spark.sql.execution.SparkPlan): String = {
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-      val extra = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case qs: QueryStageExec => Seq(qs.plan)
-        case r: ReusedExchangeExec => Seq(r.child)
-        case _ => Seq.empty
-      }
-      val label = p match {
-        case j: org.apache.spark.sql.execution.joins.BaseJoinExec =>
-          s"${p.nodeName}[${j.joinType}]"
-        case _: org.apache.spark.sql.execution.WholeStageCodegenExec =>
-          "WholeStageCodegen" // strip the session-global codegenStageId
-        case _ => p.nodeName
-      }
-      label + "(" + (p.children ++ extra).map(planShape).mkString(",") + ")"
-    }
-
-    def fpOf(s: String): String =
-      java.security.MessageDigest.getInstance("SHA-1")
-        .digest(s.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
+    val spark = graft.Session.local()
     for (name <- names) {
-      val shapes = scala.collection.mutable.LinkedHashMap[String, Int]()
+      // shape -> (its graft.Bench fingerprint, times seen): the canonical
+      // form is Bench's own, so this probe cannot disagree with the
+      // tripwire it adjudicates
+      val shapes = scala.collection.mutable.LinkedHashMap[String, (String, Int)]()
       for (_ <- 1 to reps) {
         try {
           val df = graft.util.Consume.frame(
             graft.SparkEntry.queries(name)(spark, sfDir))
           df.collect()
-          val s = planShape(df.queryExecution.executedPlan)
-          shapes(s) = shapes.getOrElse(s, 0) + 1
+          val s = graft.Bench.planShape(df.queryExecution.executedPlan)
+          shapes(s) = (graft.Bench.fingerprint(df), shapes.get(s).fold(0)(_._2) + 1)
         } catch { case e: Throwable =>
           System.err.println(s"[planflip] $name failed: $e")
         }
@@ -63,8 +33,8 @@ object PlanFlip {
       }
       spark.catalog.clearCache()
       println(s"== $name: ${shapes.size} distinct shapes over $reps runs " +
-        shapes.keys.map(fpOf).mkString("[", " ", "]"))
-      shapes.zipWithIndex.foreach { case ((s, n), i) =>
+        shapes.values.map(_._1).mkString("[", " ", "]"))
+      shapes.zipWithIndex.foreach { case ((s, (_, n)), i) =>
         println(s"-- shape $i (x$n):")
         // indent nested structure for readability
         println(s.replace("(", "(\n").replace(")", "\n)")

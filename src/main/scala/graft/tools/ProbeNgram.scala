@@ -1,8 +1,6 @@
 package graft.tools
 
 import graft.Tables
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** A/B probe: ngramJaccardPairs at a given dir with a scale-appropriate
   * df cap (BENCH_sf1's cap-200 convention), consumption-faithful. Dev
@@ -12,15 +10,7 @@ object ProbeNgram {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/sf1")
     val cap = if (args.length > 1) args(1).toInt else 200
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     val docs = Tables(spark, dir).documents
     for (i <- 1 to 3) {
       val t0 = System.nanoTime()

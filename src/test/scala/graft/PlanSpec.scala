@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
@@ -575,6 +575,18 @@ class PlanSpec extends SparkSpec {
           (s.contains(" IN (") || s.contains("INSET"))),
         s"$name: no pk IN/INSET partition filter on the index scan: $pruned")
     }
+  }
+
+  test("Bench.planShape strips WholeStageCodegen's stage id") {
+    // The id is a counter whose values follow AQE's stage-materialization
+    // order, not the plan: two runs of one query can number the same tree
+    // differently. Renumbering a stage of an executed plan must not move
+    // its canonical shape (and so the bench's plan fingerprint).
+    val stage = deepNodes(executed(q("q3_revenue_by_nation")))
+      .collectFirst { case w: WholeStageCodegenExec => w }.get
+    val renumbered = stage.copy()(codegenStageId = stage.codegenStageId + 100)
+    assert(renumbered.toString != stage.toString)
+    assert(Bench.planShape(renumbered) == Bench.planShape(stage))
   }
 
   test("no InMemory/Cartesian surprises across the whole corpus") {

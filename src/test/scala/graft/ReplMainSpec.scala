@@ -1,6 +1,6 @@
 package graft
 
-import graft.repl.ReplConfig
+import graft.repl.{ReplConfig, RunReport, Sweep, TableMergeStats}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The CLI's `env.sh` surface: every reference config variable reachable
@@ -79,5 +79,21 @@ class ReplMainSpec extends AnyFunSuite {
       ReplMain.parseConfig(repl.ReplConfig(dumpRoot = "/tmp/d"),
         Seq("targetEpochs=true"))
     }
+  }
+
+  test("CLI line: a run renders its RunReport.json; an error renders one valid JSON line") {
+    // Outcome is Sweep's member type; the constructor touches no endpoint
+    val sweep = Sweep(null, null, null, "/d", base)
+    val r = RunReport("a", "incremental", 1, 2, 1, "SUCCESS", 10,
+      Seq(TableMergeStats("t", 1, 2, 3)))
+    assert(ReplMain.line(sweep.Outcome("a", Some(r), skipped = false, None)) == r.json)
+
+    val msg = "boom \"quoted\" C:\\path\nsecond line"
+    val line = ReplMain.line(sweep.Outcome("d\"b", None, skipped = false, Some(msg)))
+    assert(!line.contains("\n"), line)
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(node.get("db").asText == "d\"b")
+    assert(!node.get("skipped").asBoolean)
+    assert(node.get("error").asText == msg)
   }
 }
