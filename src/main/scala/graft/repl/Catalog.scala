@@ -1,7 +1,12 @@
 package graft.repl
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -119,8 +124,42 @@ final case class DbCatalog(spark: SparkSession, root: String,
     */
   def isExternal(table: String): Boolean = table.startsWith("ext_")
 
-  def readTable(db: String, table: String): DataFrame =
-    spark.read.parquet(tablePath(db, table).toString)
+  /** A table as a DataFrame, with no Spark job. Spark's own inference
+    * (`mergeSchema=false`) opens one data file's footer inside a job; this
+    * reads that footer directly, outside any job, and hands the schema to
+    * the reader, which still appends the partition columns it discovers. A
+    * table with no data file falls through to plain inference, so a
+    * missing or empty table keeps Spark's own error.
+    */
+  def readTable(db: String, table: String): DataFrame = {
+    val path = tablePath(db, table)
+    firstDataFile(path) match {
+      case Some(f) =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, spark.sparkContext.hadoopConfiguration),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        val schema = ParquetFileFormat.readSchemaFromFooter(
+          new Footer(f.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        spark.read.schema(schema).parquet(path.toString)
+      case None => spark.read.parquet(path.toString)
+    }
+  }
+
+  /** The first leaf file under `path` that Spark's file index would list:
+    * names starting with `.` or `_` are hidden, except `col=value` dirs.
+    */
+  private def firstDataFile(path: Path): Option[FileStatus] = {
+    def visible(s: FileStatus) = {
+      val n = s.getPath.getName
+      !n.startsWith(".") && !(n.startsWith("_") && !n.contains("="))
+    }
+    def first(dir: Path): Option[FileStatus] = {
+      val (files, dirs) = fs.listStatus(dir).filter(visible).partition(_.isFile)
+      files.headOption.orElse(dirs.iterator.flatMap(d => first(d.getPath)).nextOption())
+    }
+    if (fs.isDirectory(path)) first(path) else None
+  }
 
   /** Overwrite-write a table (bootstrap load / merge rewrite). */
   def writeTable(db: String, table: String, df: DataFrame): Unit =
@@ -259,27 +298,39 @@ final case class DbCatalog(spark: SparkSession, root: String,
     appendEvents(db, Seq(Event(table, OpTruncateTable, null, null)))
   }
 
-  /** Small-file compaction. Every incremental merge rewrites a table with
-    * one file per shuffle partition, so a frequently-replicated table
-    * accumulates files until scan planning (and the NameNode/object-store
-    * listing) is the bottleneck — the standard maintenance job of any
-    * streaming-ingest warehouse. Rewrites through the same staged swap as
-    * ALTER, sized to ~`targetBytesPerFile` per output file; row content is
+  /** Small-file compaction for tables written by something other than the
+    * merge (which already sizes its output by [[filesFor]]): a bootstrap
+    * restore or an ALTER rewrite writes one file per input partition, so a
+    * table can still hold more files than its bytes need. Rewrites through
+    * the same staged swap as ALTER, to [[filesFor]] files; row content is
     * untouched. Returns (filesBefore, filesAfter).
     */
-  def compactTable(db: String, table: String,
-                   targetBytesPerFile: Long = 128L << 20): (Int, Int) = {
+  def compactTable(db: String, table: String): (Int, Int) = {
     val path = tablePath(db, table)
     def dataFiles: Seq[Path] = fs.listStatus(path).toSeq
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .map(_.getPath)
     val before = dataFiles.size
-    val totalBytes = fs.listStatus(path).toSeq
-      .filter(_.isFile).map(_.getLen).sum
-    val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytesPerFile).toInt)
+    val nOut = filesFor(fs.getContentSummary(path).getLength)
     if (nOut < before) // never split files to reach a target — only merge
       rewriteTable(db, table, readTable(db, table).repartition(nOut))
     (before, dataFiles.size)
+  }
+
+  /** Output files for `bytes` of table data, by the rule Spark's file
+    * scan splits its input with (`FilePartition.maxSplitBytes`): a split
+    * is `bytes / parallelism`, at least the file open cost (4 MB) and at
+    * most `maxPartitionBytes` (128 MB). A small table is one file, a
+    * mid-size one keeps one file per core so its rewrite keeps every core
+    * busy, and past `parallelism × 128 MB` it is one file per 128 MB — the
+    * split count a scan of the table already has. The merge and
+    * [[compactTable]] both size their writes by it.
+    */
+  private def filesFor(bytes: Long): Int = {
+    val conf = spark.sessionState.conf
+    val split = math.min(conf.filesMaxPartitionBytes, math.max(conf.filesOpenCostInBytes,
+      bytes / math.max(1, spark.sparkContext.defaultParallelism)))
+    math.min(Int.MaxValue.toDouble, math.max(1.0, math.ceil(bytes.toDouble / split))).toInt
   }
 
   def dropTable(db: String, table: String): Unit =
@@ -371,6 +422,16 @@ final case class DbCatalog(spark: SparkSession, root: String,
       case None => ()
     }
 
+    val livePath = tablePath(db, table)
+    val tmpPath = new Path(dbPath(db), s"_tmp_$table")
+    val bakPath = new Path(dbPath(db), s"_bak_$table")
+    // Output files follow bytes ([[filesFor]]), not the input's file
+    // count, which would otherwise grow by the upserts' partitions every
+    // cycle. Bytes are the live table's size from the namenode plus the
+    // planner's size of the upserts (exact for the cached delta [[Load]]
+    // hands in; an unknown size only makes the coalesce a no-op).
+    val upsertBytes = upserts.queryExecution.optimizedPlan.stats.sizeInBytes
+      .min(BigInt(Long.MaxValue / 2)).toLong
     // Row count rides the rewrite's own job as a CollectMetrics node
     // (`observe`) — observability never adds a scan to the merge.
     val obs = new org.apache.spark.sql.Observation()
@@ -378,10 +439,8 @@ final case class DbCatalog(spark: SparkSession, root: String,
       .join(deadKeys, current(keyCol).cast("string") === deadKeys("key"), "left_anti")
       .unionByName(upserts)
       .observe(obs, count(lit(1)).as("rows"))
+      .coalesce(filesFor(fs.getContentSummary(livePath).getLength + upsertBytes))
 
-    val livePath = tablePath(db, table)
-    val tmpPath = new Path(dbPath(db), s"_tmp_$table")
-    val bakPath = new Path(dbPath(db), s"_bak_$table")
     merged.write.mode("overwrite").parquet(tmpPath.toString)
     // Bytes from the staged dir's metadata (a namenode summary, not a data
     // read) BEFORE the swap renames it live.
@@ -700,14 +759,22 @@ final case class DbCatalog(spark: SparkSession, root: String,
     * already-consumed ranges. Returns events dropped.
     */
   def purgeEvents(db: String, belowId: Long): Long = {
-    val cur = currentTxnId(db)
+    val r = readEvents(db)
+      .agg(max("event_id"), count(when(col("event_id") <= belowId, 1))).head()
+    val cur = if (r.isNullAt(0)) 0L else r.getLong(0)
     require(belowId < cur,
       s"purge up to $belowId would drop the newest event (txn counter $cur)")
-    val ev = readEvents(db)
-    val before = ev.count()
-    rewriteTable(db, EventsTable, ev.filter(col("event_id") > belowId))
-    before - readEvents(db).count()
+    val dropped = r.getLong(1)
+    if (dropped > 0) dropEventsThrough(db, belowId)
+    dropped
   }
+
+  /** The purge's rewrite alone, for a caller that already knows `belowId`
+    * is below the txn counter and how many events it drops (event ids are
+    * unique, so that count is exact without a second scan).
+    */
+  private[repl] def dropEventsThrough(db: String, belowId: Long): Unit =
+    rewriteTable(db, EventsTable, readEvents(db).filter(col("event_id") > belowId))
 
   /** Append DML/DDL events. Ids are assigned here, contiguously after the
     * current watermark; callers hold the per-db writer lock (single writer,

@@ -1,7 +1,7 @@
 package graft.repl
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -14,20 +14,26 @@ import org.apache.spark.sql.types.StructType
   * `beeline_functions.sh:220-226`).
   *
   * Bootstrap: recreate every table from the snapshot (overwrite).
-  * Incremental: apply the event delta **as one distributed merge per table**,
-  * not an event-at-a-time loop — the Spark-first re-expression of Hive's
+  * Incremental: apply the event delta **in one pass**, not an
+  * event-at-a-time loop — the Spark-first re-expression of Hive's
   * ordered event replay (`/root/reference/README.md:38,43`):
   *
-  *   1. events are compacted to their net effect: latest event per key
-  *      (`row_number` over a key-partitioned, event_id-descending window);
-  *   2. the target table is rewritten once ([[ReplTarget.mergeDml]]): rows
-  *      whose key has any event are anti-joined away, then surviving UPSERT
-  *      payloads are unioned in.
+  *   1. the control plane (renames, table DDL, view DDL) is collected
+  *      once;
+  *   2. the whole delta is compacted to its net effect once: latest event
+  *      per (rename epoch, table, key) (`row_number` over a key-partitioned,
+  *      event_id-descending window), persisted for the cycle;
+  *   3. each touched table is rewritten once ([[ReplTarget.mergeDml]]) from
+  *      its slice of that frame: rows whose key has any event are
+  *      anti-joined away, then surviving UPSERT payloads are unioned in.
   *
   * Applying a delta is therefore idempotent (same delta twice ≡ once) and
-  * O(one shuffle per touched table) regardless of event count — at 100 TB
-  * the merge is a key-partitioned join that AQE can skew-split, and the
-  * anti-join key set is broadcast when the delta is small (the common case).
+  * costs one shuffle for the whole delta, whatever its event or table
+  * count, plus one rewrite per touched table. Each table's anti-join key
+  * set is a slice of the cached net effect, whose cached size bounds it
+  * for the planner: it is broadcast when the delta is small (the common
+  * case) and otherwise joins key-partitioned, which AQE can skew-split at
+  * 100 TB.
   *
   * Engine key convention: a table's primary key is its FIRST column, cast to
   * string (matches [[DbCatalog.Event.key]]). Composite keys concatenate at
@@ -205,55 +211,80 @@ final case class Load(spark: SparkSession, target: ReplTarget, cfg: ReplConfig) 
     * replication's foreachBatch
     * ([[graft.streaming.StreamingReplication]]).
     *
+    * One pass over the delta: the control plane (renames, table DDL, view
+    * DDL) is collected once, and the net effect of every table's DML is
+    * computed once, persisted, and sliced per table.
+    *
     * RENAME splits the delta into epochs: everything before the rename is
     * merged under the OLD name, the rename applies as one metadata move,
     * then the remainder merges under the NEW name — the only way net-effect
     * compaction stays correct when one table's DML stream crosses a rename
-    * (renames are control-plane rare, so epochs are too). A table whose
-    * stream crosses epochs reports ONE summed stats row per (post-rename)
-    * name per epoch — names are the log's, so pre- and post-rename rows
-    * stay distinguishable.
+    * (renames are control-plane rare, so epochs are too). An event's epoch
+    * is the number of renames before it, so the net-effect window keys on
+    * (epoch, table, key). A table whose stream crosses epochs reports ONE
+    * summed stats row per (post-rename) name per epoch — names are the
+    * log's, so pre- and post-rename rows stay distinguishable.
     */
   def applyEvents(db: String, events: DataFrame): Seq[TableMergeStats] = {
-    val renames = events.filter(col("op") === DbCatalog.OpRenameTable)
-      .select("event_id", "table", "row_json")
+    val isDml = col("op").isin(DbCatalog.OpUpsert, DbCatalog.OpDelete)
+    // Control plane — a few rows per table; row payloads never leave
+    // executors.
+    val ctrl = events.filter(!isDml)
+      .select("event_id", "table", "op", "row_json")
       .collect().sortBy(_.getLong(0))
-    if (renames.isEmpty) return applyEpoch(db, events)
-    val acc = scala.collection.mutable.ArrayBuffer[TableMergeStats]()
-    var lo = Long.MinValue
-    renames.foreach { r =>
-      acc ++= applyEpoch(db, events.filter(
-        col("event_id") > lo && col("event_id") < r.getLong(0)))
-      target.applyRename(db, r.getString(1), r.getString(2))
-      lo = r.getLong(0)
-    }
-    acc ++= applyEpoch(db, events.filter(col("event_id") > lo))
-    // One row per table name: epochs of the same name sum.
-    acc.groupBy(_.table).values.map(_.reduce(_ + _)).toSeq
+    val (renames, ddl) = ctrl.partition(_.getString(2) == DbCatalog.OpRenameTable)
+    val renameIds = renames.map(_.getLong(0))
+    val ddlByEpoch = ddl.groupBy(r => renameIds.count(_ < r.getLong(0)))
+
+    // Net effect of the whole delta: latest event per (epoch, table, key).
+    // Taking the latest first and filtering a table's DML floor after
+    // gives the same rows as the other order: a key's latest event passes
+    // the floor whenever any of its events does.
+    val latest = events.filter(isDml)
+      .withColumn("_epoch",
+        size(filter(typedLit(renameIds.toSeq), _ < col("event_id"))))
+      .withColumn("_rn", row_number().over(
+        Window.partitionBy(col("_epoch"), col("table"), col("key"))
+          .orderBy(col("event_id").desc)))
+      .filter(col("_rn") === 1)
+      .drop("_rn")
+      .persist()
+    try {
+      // Newest DML id per (epoch, table): a table has DML to merge iff it
+      // is above the table's last reset.
+      val lastDml: Map[(Int, String), Long] = latest
+        .groupBy(col("_epoch"), col("table")).agg(max("event_id"))
+        .collect().map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)).toMap
+      val acc = scala.collection.mutable.ArrayBuffer[TableMergeStats]()
+      (0 to renames.length).foreach { e =>
+        acc ++= applyEpoch(db, e, ddlByEpoch.getOrElse(e, Array.empty), lastDml, latest)
+        if (e < renames.length)
+          target.applyRename(db, renames(e).getString(1), renames(e).getString(3))
+      }
+      // One row per table name: epochs of the same name sum.
+      acc.groupBy(_.table).values.map(_.reduce(_ + _)).toSeq
+    } finally latest.unpersist()
   }
 
-  private def applyEpoch(db: String, events: DataFrame): Seq[TableMergeStats] = {
-    // Tables touched + their DDL history — control-plane sized (a few rows
-    // per table), so collecting is fine; row payloads never leave executors.
-    val ddl = events
-      .filter(col("op").isin(DbCatalog.OpCreateTable, DbCatalog.OpDropTable,
-        DbCatalog.OpAlterTable, DbCatalog.OpTruncateTable))
-      .select("event_id", "table", "op", "row_json")
-      .collect().sortBy(_.getLong(0))
-    val touched = events.select("table").distinct().collect().map(_.getString(0))
-
-    // View DDL replays by definition text — latest event per view wins
-    // (control-plane sized, like table DDL above).
-    events
-      .filter(col("op").isin(DbCatalog.OpCreateView, DbCatalog.OpDropView))
-      .select("event_id", "table", "op", "row_json")
-      .collect().sortBy(_.getLong(0))
-      .groupBy(_.getString(1)).foreach { case (v, evs) =>
+  /** One rename epoch: replay its collected view DDL and table DDL, then
+    * merge each table's slice of the persisted net effect.
+    */
+  private def applyEpoch(db: String, epoch: Int, ctrl: Array[Row],
+                         lastDml: Map[(Int, String), Long],
+                         latest: DataFrame): Seq[TableMergeStats] = {
+    val isView = Set(DbCatalog.OpCreateView, DbCatalog.OpDropView)
+    // View DDL replays by definition text — latest event per view wins.
+    ctrl.filter(r => isView(r.getString(2))).groupBy(_.getString(1)).foreach {
+      case (v, evs) =>
         evs.last.getString(2) match {
           case DbCatalog.OpCreateView => target.createView(db, v, evs.last.getString(3))
           case DbCatalog.OpDropView => target.dropView(db, v)
         }
-      }
+    }
+    val ddl = ctrl.filter(r => Set(DbCatalog.OpCreateTable, DbCatalog.OpDropTable,
+      DbCatalog.OpAlterTable, DbCatalog.OpTruncateTable)(r.getString(2)))
+    val touched = (ddl.map(_.getString(1)) ++
+      lastDml.keys.collect { case (`epoch`, t) => t }).distinct
 
     // Per-table stats accumulate from concurrent merge jobs.
     val stats = new java.util.concurrent.ConcurrentLinkedQueue[TableMergeStats]()
@@ -272,7 +303,7 @@ final case class Load(spark: SparkSession, target: ReplTarget, cfg: ReplConfig) 
           case DbCatalog.OpCreateTable =>
             val schema = StructType.fromDDL(r.getString(3))
             target.writeTable(db, t, spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
+              spark.sparkContext.emptyRDD[Row], schema))
           case DbCatalog.OpTruncateTable =>
             // Data gone, schema kept (Hive's TRUNCATE contract). The table
             // must already exist at the target — same lost-table refusal as
@@ -293,10 +324,7 @@ final case class Load(spark: SparkSession, target: ReplTarget, cfg: ReplConfig) 
           target.repairTable(db, t) // an earlier crash mid-rewrite is repairable here too
           target.migrateTable(db, t, StructType.fromDDL(r.getString(3)))
         }
-      val dml = events.filter(col("table") === t &&
-        col("op").isin(DbCatalog.OpUpsert, DbCatalog.OpDelete) &&
-        col("event_id") > minDml)
-      if (!dml.isEmpty) {
+      if (lastDml.get((epoch, t)).exists(_ > minDml)) {
         target.repairTable(db, t)
         // A missing table here is NOT skippable: with no CREATE_TABLE in the
         // delta the DML has nowhere to land, and silently dropping it would
@@ -307,25 +335,20 @@ final case class Load(spark: SparkSession, target: ReplTarget, cfg: ReplConfig) 
           throw new NonRetryableException(
             s"delta carries DML for missing table $db.$t and no CREATE_TABLE " +
             "event — refusing to skip (possible lost table)")
-        stats.add(mergeTable(db, t, dml))
+        stats.add(mergeTable(db, t, latest.filter(col("_epoch") === epoch &&
+          col("table") === t && col("event_id") > minDml)))
       }
     }
     import scala.jdk.CollectionConverters._
     stats.asScala.toSeq
   }
 
-  /** Net-effect compaction of one table's DML, handed to the target's
-    * merge: latest event per key wins; every evented key is replaced or
-    * deleted.
+  /** Hand one table's net-effect DML (one event per key) to the target's
+    * merge: every evented key is replaced or deleted.
     */
   private def mergeTable(db: String, table: String,
-                         dml: DataFrame): TableMergeStats = {
+                         latest: DataFrame): TableMergeStats = {
     val schema = target.readTable(db, table).schema
-
-    val latest = dml
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col("key")).orderBy(col("event_id").desc)))
-      .filter(col("_rn") === 1)
 
     val upserts = latest
       .filter(col("op") === DbCatalog.OpUpsert)

@@ -9,14 +9,21 @@ import org.apache.spark.sql.functions._
   * [[ReplicationJob]] after a verified cycle so a long-lived source's log
   * stays bounded without a separate cron.
   *
-  * Trigger economics: deciding WHETHER to compact costs ONE aggregate scan
-  * of the log — `count` vs an estimate of the compacted size
-  * (`approx_count_distinct` of the DML (table, key) pairs + exact non-DML
-  * count). The O(log)-shuffle compaction itself only runs when the log
-  * holds more than `factor ×` that estimate, so steady-state cycles pay a
-  * scan, not a rewrite. (The estimate ignores barrier epochs — a table
-  * recreated N times keeps N copies of a key, making the estimate LOW and
-  * compaction slightly eager — the safe direction.)
+  * Trigger economics: a steady cycle costs ONE aggregate scan of the log,
+  * plus the purge's rewrite when the replica floor has passed any event.
+  * The scan answers both decisions:
+  *   - compaction: `count` vs an estimate of the compacted size
+  *     (`approx_count_distinct` of the DML (table, key) pairs + exact
+  *     non-DML count). The O(log)-shuffle compaction only runs when the
+  *     log holds more than `factor ×` that estimate. (The estimate ignores
+  *     barrier epochs — a table recreated N times keeps N copies of a key,
+  *     making the estimate LOW and compaction slightly eager — the safe
+  *     direction.)
+  *   - purge: the max event_id (the txn counter, which must survive) and
+  *     the count at or below the floor. Event ids are unique, so the count
+  *     the rewrite drops is known before it runs; no before/after counts.
+  * A cycle that compacts decides its purge from one more scan of the
+  * compacted log.
   *
   * CONCURRENCY: like [[DbCatalog.compactEvents]], callers must hold the
   * db's writer lock; [[ReplicationJob]] additionally holds the dump lock so
@@ -37,29 +44,44 @@ object Maintenance {
     */
   def run(source: DbCatalog, db: String, factor: Double,
           replicaFloor: Option[Long]): Report = {
-    val ev = source.readEvents(db)
-    val isDml = col("op").isin(DbCatalog.OpUpsert, DbCatalog.OpDelete)
-    val stats = ev.agg(
-      count(lit(1)).as("n"),
-      approx_count_distinct(
-        when(isDml, concat_ws("\u0000", col("table"), col("key")))).as("dml_keys"),
-      sum(when(!isDml, 1L).otherwise(0L)).as("non_dml")).head()
-    val n = stats.getLong(0)
-    val estimate = math.max(1L, stats.getLong(1) + (if (stats.isNullAt(2)) 0L else stats.getLong(2)))
-
-    val (before, after) =
-      if (factor > 0 && n > factor * estimate) source.compactEvents(db)
-      else (n, n)
+    val floor = replicaFloor.getOrElse(Long.MinValue)
+    val seen = scan(source, db, floor)
+    val (before, after, log) =
+      if (factor > 0 && seen.n > factor * seen.estimate) {
+        val (b, a) = source.compactEvents(db)
+        (b, a, if (replicaFloor.isDefined) scan(source, db, floor) else seen)
+      } else (seen.n, seen.n, seen)
 
     val purged = replicaFloor match {
-      case Some(floor) =>
-        val cur = source.currentTxnId(db)
-        val belowId = math.min(floor, cur - 1) // never behead the txn counter
-        if (belowId <= 0 ||
-            source.readEvents(db).filter(col("event_id") <= belowId).isEmpty) 0L
-        else source.purgeEvents(db, belowId)
+      case Some(f) =>
+        // never behead the txn counter: a floor at or above it keeps
+        // exactly the newest event
+        val (belowId, dropped) =
+          if (f < log.top) (f, log.atOrBelowFloor) else (log.top - 1, log.n - 1)
+        if (dropped <= 0) 0L
+        else { source.dropEventsThrough(db, belowId); dropped }
       case None => 0L
     }
     Report(before, after, purged)
+  }
+
+  /** What one aggregate scan of the log says: its size, the estimate of
+    * its compacted size, the txn counter (`top`, 0 for an empty log) and
+    * the events at or below the replica floor.
+    */
+  private final case class LogState(n: Long, estimate: Long, top: Long,
+                                    atOrBelowFloor: Long)
+
+  private def scan(source: DbCatalog, db: String, floor: Long): LogState = {
+    val isDml = col("op").isin(DbCatalog.OpUpsert, DbCatalog.OpDelete)
+    val r = source.readEvents(db).agg(
+      count(lit(1)),
+      approx_count_distinct(
+        when(isDml, concat_ws("\u0000", col("table"), col("key")))),
+      count(when(!isDml, 1)),
+      max("event_id"),
+      count(when(col("event_id") <= floor, 1))).head()
+    LogState(n = r.getLong(0), estimate = math.max(1L, r.getLong(1) + r.getLong(2)),
+      top = if (r.isNullAt(3)) 0L else r.getLong(3), atOrBelowFloor = r.getLong(4))
   }
 }

@@ -180,4 +180,33 @@ class CompactionSpec extends SparkSpec {
       source.purgeEvents("dbp", source.currentTxnId("dbp"))
     }
   }
+
+  test("maintenance reports exactly the events its purge removed") {
+    import DbCatalog._
+    val root = java.nio.file.Files.createTempDirectory("graft-purgecount").toString
+    val source = DbCatalog(spark, s"$root/src")
+    source.createDb("dbm")
+    def logSize = source.readEvents("dbm").count()
+    def upserts(keys: Seq[Int]): Long = source.appendEvents("dbm", keys.map { k =>
+      Event("region", OpUpsert, k.toString, s"""{"r_regionkey":$k,"r_name":"v"}""")
+    })
+
+    // floor below the txn counter: events 1..4 of 1..10 go
+    upserts(0 until 10)
+    val r1 = Maintenance.run(source, "dbm", 0.0, Some(4L))
+    assert(!r1.compacted && r1.purged == 4L && logSize == 6L)
+
+    // floor at or above the counter: all but the newest event (id 10) go
+    val r2 = Maintenance.run(source, "dbm", 0.0, Some(99L))
+    assert(r2.purged == 5L && logSize == 1L && source.currentTxnId("dbm") == 10L)
+
+    // compaction fires first: 36 events over 7 keys compact to 7 (event 10
+    // for key 9, the latest of key 0's thirty at id 40, keys 1..5 at
+    // 41..45); the purge then counts against the COMPACTED log
+    upserts(Seq.fill(30)(0) ++ (1 to 5))
+    val r3 = Maintenance.run(source, "dbm", 2.0, Some(40L))
+    assert(r3.compacted && r3.eventsBefore == 36L && r3.eventsAfter == 7L)
+    assert(r3.purged == 2L && r3.purged == r3.eventsAfter - logSize)
+    assert(source.currentTxnId("dbm") == 45L)
+  }
 }

@@ -561,6 +561,114 @@ class ReplicationSpec extends SparkSpec {
     assert(source.compactTable("db_c", "nation") == (1, 1))
   }
 
+  test("merges size output by bytes: a small table stays one file across cycles") {
+    import DbCatalog._
+    val (_, source, target, job) = freshWorld()
+    seedDb(source, "db_one")
+    assert(job.run("db_one").verify == "SUCCESS")
+    (1 to 10).foreach { i =>
+      source.appendEvents("db_one", Seq(
+        Event("region", OpUpsert, (i % 4).toString,
+          s"""{"r_regionkey":${i % 4},"r_name":"C$i"}"""),
+        Event("region", OpDelete, "4", null)))
+      assert(job.run("db_one").verify == "SUCCESS")
+    }
+    val fs = target.dbPath("db_one").getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = fs.listStatus(new Path(target.dbPath("db_one"), "region"))
+      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+    assert(files.length == 1, s"region holds ${files.length} data files")
+    val names = target.readTable("db_one", "region").collect()
+      .map(r => r.get(0).toString.toInt -> r.getString(1)).toMap
+    assert(names == Map(0 -> "C8", 1 -> "C9", 2 -> "C10", 3 -> "C7"))
+  }
+
+  test("readTable's footer schema equals Spark's own inference") {
+    import DbCatalog._
+    import spark.implicits._
+    import org.apache.spark.sql.types._
+    val (_, source, target, job) = freshWorld()
+    source.createDb("db_sch")
+    source.writeTable("db_sch", "region", spark.read.parquet(s"${sf()}/region.parquet"))
+    source.writeTablePartitioned("db_sch", "items", Seq(
+      (1L, "one", "2024-01-01 00:00:00"), (2L, "two", "2024-02-01 00:00:00"))
+      .toDF("id", "name", "ts_part"), "ts_part")
+    def sameSchema(cat: DbCatalog, t: String): Unit =
+      assert(cat.readTable("db_sch", t).schema ==
+        spark.read.parquet(new Path(cat.dbPath("db_sch"), t).toString).schema, t)
+    sameSchema(source, "region")
+    sameSchema(source, "items") // partition column appended, inferred as timestamp
+    assert(source.readTable("db_sch", "items").schema("ts_part").dataType == TimestampType)
+    assert(job.run("db_sch").verify == "SUCCESS")
+    // an ALTER replay and a table created empty by a CREATE_TABLE replay
+    val cur = source.readTable("db_sch", "region").schema
+    source.alterTable("db_sch", "region", StructType(cur.fields :+ StructField("pop", LongType)))
+    source.appendEvents("db_sch", Seq(Event("fresh", OpCreateTable, null, "id BIGINT, name STRING")))
+    assert(job.run("db_sch").verify == "SUCCESS")
+    Seq("region", "items", "fresh").foreach(sameSchema(target, _))
+    assert(target.readTable("db_sch", "region").schema.fieldNames.last == "pop")
+    assert(target.readTable("db_sch", "fresh").isEmpty)
+  }
+
+  test("an incremental cycle's Spark jobs grow by at most 2 per touched table") {
+    import DbCatalog._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val marker = "graft-job-count-marker"
+    // Every job started while `body` runs. Listener events arrive in order,
+    // so once a marker job's start is seen, every earlier start has been.
+    def jobsDuring(body: => Unit): Int = {
+      val sc = spark.sparkContext
+      val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = seen.put(
+          Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+            .getOrElse(""))
+      }
+      sc.addSparkListener(listener)
+      try {
+        body
+        sc.setJobDescription(marker)
+        try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+        Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+          .takeWhile { d => assert(d != null, "marker job never seen"); d != marker }
+          .size
+      } finally sc.removeSparkListener(listener)
+    }
+    // Production single-replica settings: maintenance runs in the cycle.
+    def cycleJobs(db: String, tables: Seq[String]): Int = {
+      val root = tmpRoot()
+      val source = DbCatalog(spark, s"$root/src")
+      val cfg = ReplConfig(dumpRoot = s"$root/dumps", rerunSleepMs = 10,
+        autoCompactFactor = 1.2, autoPurge = true)
+      val job = ReplicationJob(spark, source, DbCatalog(spark, s"$root/tgt"),
+        s"$root/dumps", cfg)
+      source.createDb(db)
+      tables.foreach(t => source.writeTable(db, t, spark.read.parquet(s"${sf()}/$t.parquet")))
+      assert(job.run(db).verify == "SUCCESS")
+      // one upsert and one delete per table on rows `from` and `from + 1`
+      // (by the first column): fresh keys every cycle keep the log below
+      // the compaction trigger, so the cycle measured is the steady one
+      def delta(from: Int) = tables.flatMap { t =>
+        val df = source.readTable(db, t)
+        val rows = df.orderBy(col(df.columns.head)).limit(from + 2)
+        val (json, keys) = (rows.toJSON.collect().drop(from),
+          rows.collect().drop(from).map(_.get(0).toString))
+        Seq(Event(t, OpUpsert, keys(0), json(0)), Event(t, OpDelete, keys(1), null))
+      }
+      source.appendEvents(db, delta(0))
+      assert(job.run(db).verify == "SUCCESS") // warm-up
+      source.appendEvents(db, delta(2))
+      var verify = ""
+      val n = jobsDuring { verify = job.run(db).verify }
+      assert(verify == "SUCCESS")
+      n
+    }
+    val one = cycleJobs("db_jobs1", Seq("region"))
+    val five = cycleJobs("db_jobs5", Seq("region", "nation", "supplier", "customer", "part"))
+    info(s"1 table: $one jobs, 5 tables: $five jobs")
+    assert(five - one <= 2 * 4, s"1 table: $one jobs, 5 tables: $five jobs")
+    assert(five <= 22, s"5-table incremental cycle ran $five Spark jobs")
+  }
+
   test("five-way verify enum matches the reference's comparisons") {
     import VerifyResult._
     assert(of(Some(10), 10, Some(5)) == Success)
