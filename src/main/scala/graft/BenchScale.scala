@@ -944,10 +944,11 @@ object BenchScale {
         time { assert(jobP.run("pdb").verify == "SUCCESS") }
       }
       // The SAME partitioned incremental with db EPOCHS on (DbEpochs):
-      // pre-image stash renames + one pointer/manifest commit per verified
-      // cycle. The row exists to PROVE the consistency feature is
-      // rename-priced — it must track the non-epoch row above at every
-      // scale, or the feature costs what it claims not to.
+      // superseded files kept for pinned readers + one db manifest and
+      // pointer commit per verified cycle. The row exists to PROVE the
+      // consistency feature is metadata-priced — it must track the
+      // non-epoch row above at every scale, or the feature costs what it
+      // claims not to.
       val srcE = DbCatalog(spark, s"$root/srce")
       val tgtE = DbCatalog(spark, s"$root/tgte", epochMode = true)
       srcE.createDb("edb")

@@ -1,105 +1,57 @@
 package graft.repl
 
+import graft.util.AtomicPointer
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.Footer
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
-  ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
+  InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Directory-backed database catalog + engine-owned change log.
   *
   * A "database" is a directory `<root>/<db>/` holding one parquet directory
-  * per table plus the engine's append-only event log `_events`. This is the
+  * per table plus the engine's append-only event log `graft_events`. This is the
   * Spark-native stand-in for the Hive metastore + ACID write-ids the
   * reference leans on (`/root/reference/README.md:36-44`): plain Spark
   * tables are not transactional, so the engine owns the change log and the
   * monotonically increasing `event_id` plays the role of Hive's
   * `last_repl_id` transaction watermark (`/root/reference/HQL/replstatus.hql:2-4`).
   *
+  * Every table the catalog writes, the event log included, is a sequence
+  * of versioned MANIFESTS ([[DbCatalog.TableManifest]]): a write appends
+  * new, uniquely named parquet files to the table's own layout (`col=value`
+  * dirs when partitioned), then commits one manifest naming the live files,
+  * the schema and the partition column through [[AtomicPointer]] — the
+  * [[graft.util.DeltaView]] recipe. Readers read the files the current
+  * manifest names, so a crash before the commit leaves the old version and
+  * a crash after it the new one; files no manifest names are invisible and
+  * the next write in the same scope deletes them. A directory with no
+  * manifest (a table some other writer laid down, an `ext_` tree) still
+  * reads by listing. Without `epochMode` a write deletes the files it
+  * superseded right after its commit; with it, files a kept [[DbEpochs]]
+  * epoch names stay until that epoch falls below the retention floor.
+  *
   * Scale notes: all reads/writes go through `spark.read.parquet` /
   * `df.write.parquet` on Hadoop `FileSystem` paths, so the same code runs on
   * HDFS/S3 with a real cluster; nothing ever collects table data to the
   * driver. The event log is itself a parquet table, so "events since
   * watermark" is a pushed-down filter scan, not a log replay on the driver.
+  * CONCURRENCY: one writer per table — [[ReplicationJob]]'s locks on the
+  * replication path, the caller's on the source.
   */
 final case class DbCatalog(spark: SparkSession, root: String,
                            epochMode: Boolean = false)
     extends ReplSource with ReplTarget {
   import DbCatalog._
 
-  // ------------------------- db-epoch pre-image stashes (see [[DbEpochs]])
-  // With `epochMode` on and an epoch committed, every destructive table op
-  // MOVES the data it would have deleted into the current epoch's stash
-  // (rename, no copy), so pinned readers keep a consistent pre-load view.
-
-  private def epochStash(db: String, kind: String, table: String): Option[Path] =
-    if (!epochMode) None
-    else {
-      val e = DbEpochs(spark, this, db)
-      e.current.map { case (n, _) => e.stashPath(n, kind, table) }
-    }
-
-  /** Stash `src` (a pre-image the non-epoch path would DELETE) under the
-    * current epoch, or delete it when epochs are off, no epoch is
-    * committed yet, or the stash already holds this table's pre-image (a
-    * RETRY's backup holds post-merge data once the stash exists).
-    */
-  private def stashOrDelete(db: String, table: String, src: Path): Unit =
-    epochStash(db, "full", table) match {
-      case Some(dst) if fs.exists(src) && !fs.exists(dst) =>
-        fs.mkdirs(dst.getParent)
-        if (!fs.rename(src, dst))
-          throw new IllegalStateException(s"epoch stash rename failed: $src -> $dst")
-      case _ => fs.delete(src, true)
-    }
-
-  /** Partition-dir variant: move each `col=value` dir of `bakPath` into
-    * the epoch's partial stash (first pre-image per partition wins) and
-    * record `_absent_` markers for partitions the merge CREATED; then
-    * drop the remainder. Crash-retry caveat: a cycle that crashes inside
-    * the swap loop and retries can stash a created partition's merged
-    * data as its pre-image — pre-images are exact for crash-free cycles
-    * (the spec'd contract), best-effort across a crashed retry.
-    */
-  private def stashPartsOrDelete(db: String, table: String, bakPath: Path,
-                                 absentDirNames: Seq[String]): Unit =
-    epochStash(db, "parts", table) match {
-      case Some(dst) =>
-        fs.mkdirs(dst)
-        if (fs.exists(bakPath))
-          fs.listStatus(bakPath).filter(_.isDirectory).foreach { st =>
-            val d = new Path(dst, st.getPath.getName)
-            val marker = new Path(dst, "_absent_" + st.getPath.getName)
-            if (!fs.exists(d) && !fs.exists(marker)) {
-              if (!fs.rename(st.getPath, d))
-                throw new IllegalStateException(
-                  s"epoch stash rename failed: ${st.getPath} -> $d")
-            }
-          }
-        // absent markers live in a SIBLING stash ("absent/<table>/<dir>"),
-        // never inside the parquet tree (root-level non-parquet files trip
-        // the reader even with a `_` prefix)
-        epochStash(db, "absent", table).foreach { ab =>
-          fs.mkdirs(ab)
-          absentDirNames.foreach { n =>
-            val marker = new Path(ab, n)
-            if (!fs.exists(new Path(dst, n)) && !fs.exists(marker))
-              fs.create(marker, true).close()
-          }
-        }
-        fs.delete(bakPath, true)
-      case None => fs.delete(bakPath, true)
-    }
-
   def dbPath(db: String): Path = new Path(root, db)
   private def tablePath(db: String, table: String) = new Path(dbPath(db), table)
   private def eventsPath(db: String) = new Path(dbPath(db), EventsTable)
 
-  private def fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def conf = spark.sparkContext.hadoopConfiguration
+  private def fs = new Path(root).getFileSystem(conf)
 
   override def sourceDbPath(db: String): String = dbPath(db).toString
 
@@ -124,66 +76,202 @@ final case class DbCatalog(spark: SparkSession, root: String,
     */
   def isExternal(table: String): Boolean = table.startsWith("ext_")
 
-  /** A table as a DataFrame, with no Spark job. Spark's own inference
-    * (`mergeSchema=false`) opens one data file's footer inside a job; this
-    * reads that footer directly, outside any job, and hands the schema to
-    * the reader, which still appends the partition columns it discovers. A
-    * table with no data file falls through to plain inference, so a
-    * missing or empty table keeps Spark's own error.
+  // ------------------------------------------------------- table manifests
+
+  private def manifestPath(dir: Path) = new Path(dir, ManifestFile)
+
+  /** The table's committed manifest; None for a dir no catalog write made. */
+  private def manifestAt(dir: Path): Option[TableManifest] =
+    AtomicPointer.read(conf, manifestPath(dir)).map(TableManifest.parse)
+
+  private[repl] def manifest(db: String, table: String): Option[TableManifest] =
+    manifestAt(tablePath(db, table))
+
+  /** The table's current version: its committed manifest or, for a dir no
+    * catalog write made (a raw-written table, an `ext_` tree, a table an
+    * older engine wrote), version -1 built from a listing — the partition
+    * column from the `col=value` layout, `schema` as given (by default as
+    * Spark infers it; a caller that needs no schema passes its own). Every
+    * reader and writer starts here, so the no-manifest case is decided once.
+    */
+  private def current(dir: Path): TableManifest =
+    current(dir, spark.read.parquet(dir.toString).schema)
+
+  private def current(dir: Path, schema: => StructType): TableManifest =
+    manifestAt(dir).getOrElse {
+      val files = dataFiles(dir)
+      val partCol = files.map(_.path).filter(_.contains('/')).map(_.takeWhile(_ != '/'))
+        .find(_.contains('=')).map(_.takeWhile(_ != '='))
+      TableManifest(-1L, java.util.UUID.randomUUID().toString, partCol, schema, files)
+    }
+
+  /** A table as a DataFrame, with no Spark job: the current manifest's
+    * files under its schema, so no footer is opened and no directory is
+    * listed. The reader appends the partition columns it discovers from the
+    * files' `col=value` dirs, as Spark's own inference does. A directory
+    * with no manifest reads by listing.
     */
   def readTable(db: String, table: String): DataFrame = {
-    val path = tablePath(db, table)
-    firstDataFile(path) match {
-      case Some(f) =>
-        val footer = ParquetFooterReader.readFooter(
-          HadoopInputFile.fromStatus(f, spark.sparkContext.hadoopConfiguration),
-          ParquetMetadataConverter.SKIP_ROW_GROUPS)
-        val schema = ParquetFileFormat.readSchemaFromFooter(
-          new Footer(f.getPath, footer),
-          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-        spark.read.schema(schema).parquet(path.toString)
-      case None => spark.read.parquet(path.toString)
-    }
+    val dir = tablePath(db, table)
+    readFiles(dir, current(dir))
   }
 
-  /** The first leaf file under `path` that Spark's file index would list:
-    * names starting with `.` or `_` are hidden, except `col=value` dirs.
+  /** The files one manifest names, under `dir`, as a relation over exactly
+    * those files. The file index is built from the manifest's paths and
+    * sizes, so no file is stat-ed or listed and no listing job runs however
+    * many files a partitioned table has; partition columns are still
+    * inferred from the `col=value` dirs, and data columns read nullable, as
+    * in a plain directory read. A version with no file keeps its schema,
+    * partition column included.
     */
-  private def firstDataFile(path: Path): Option[FileStatus] = {
-    def visible(s: FileStatus) = {
-      val n = s.getPath.getName
-      !n.startsWith(".") && !(n.startsWith("_") && !n.contains("="))
+  private def readFiles(dir: Path, m: TableManifest): DataFrame =
+    if (m.files.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(m.dataSchema ++ m.schema.filter(f => m.partCol.contains(f.name))))
+    else {
+      val base = fs.makeQualified(dir)
+      val files = m.files.map(f => new FileStatus(f.bytes, false, 1, 0L, 0L, new Path(base, f.path)))
+      val known = files.map(s => s.getPath -> Array(s)).toMap
+      val index = new InMemoryFileIndex(spark, files.map(_.getPath),
+        Map("basePath" -> base.toString), Some(m.dataSchema), new FileStatusCache {
+          override def getLeafFiles(p: Path): Option[Array[FileStatus]] = known.get(p)
+          override def putLeafFiles(p: Path, leafFiles: Array[FileStatus]): Unit = ()
+          override def invalidateAll(): Unit = ()
+        })
+      def nullable(t: DataType): DataType = t match {
+        case s: StructType =>
+          StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+        case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+        case mt: MapType => MapType(nullable(mt.keyType), nullable(mt.valueType), valueContainsNull = true)
+        case other => other
+      }
+      val data = StructType(m.dataSchema.filterNot(f => index.partitionSchema.fieldNames.contains(f.name)))
+      spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+        nullable(data).asInstanceOf[StructType], None, new ParquetFileFormat, Map.empty)(spark))
     }
-    def first(dir: Path): Option[FileStatus] = {
-      val (files, dirs) = fs.listStatus(dir).filter(visible).partition(_.isFile)
-      files.headOption.orElse(dirs.iterator.flatMap(d => first(d.getPath)).nextOption())
-    }
-    if (fs.isDirectory(path)) first(path) else None
+
+  /** Data files under `dir` as Spark's file index sees them (names
+    * starting with `.` or `_` are hidden, except `col=value` dirs), with
+    * paths relative to `dir`; `scope` picks which top-level dirs to descend.
+    */
+  private def dataFiles(dir: Path, scope: String => Boolean = _ => true): Seq[DataFile] = {
+    def visible(n: String) = !n.startsWith(".") && !(n.startsWith("_") && !n.contains("="))
+    def walk(d: Path, prefix: String): Seq[DataFile] =
+      (try fs.listStatus(d).toSeq catch { case _: java.io.FileNotFoundException => Nil })
+        .filter(s => visible(s.getPath.getName)).flatMap { s =>
+          val rel = prefix + s.getPath.getName
+          if (s.isFile) Seq(DataFile(rel, s.getLen))
+          else if (prefix.nonEmpty || scope(s.getPath.getName)) walk(s.getPath, rel + "/")
+          else Nil
+        }
+    walk(dir, "")
   }
 
-  /** Overwrite-write a table (bootstrap load / merge rewrite). */
+  /** The one write path of every table: append `df` to the table's layout
+    * as new files, then commit one manifest naming the files of `cur`
+    * that `keep` accepts plus the new ones. `scope` names the top-level
+    * dirs the write can land in; both listings that find the new files
+    * stay inside it. `check` sees the new files before the commit.
+    *
+    * Spark's output committer moves every committed task dir it finds under
+    * `_temporary` into the table, so a crashed job's leftovers there are
+    * deleted first (one writer per table: nothing else is staging). After
+    * the commit, files in scope that neither the new manifest nor a kept
+    * [[DbEpochs]] epoch names (the superseded ones, and any a crashed write
+    * left) are deleted. Returns the new files.
+    */
+  private def commitWrite(db: String, dir: Path, cur: TableManifest, df: DataFrame,
+                          partCol: Option[String], keep: DataFile => Boolean,
+                          scope: String => Boolean = _ => true,
+                          check: Seq[DataFile] => Unit = _ => ()): Seq[DataFile] = {
+    fs.delete(new Path(dir, "_temporary"), true)
+    val before = dataFiles(dir, scope).map(_.path).toSet
+    (partCol match {
+      case Some(p) => graft.PartitionedWrites.cluster(df, p).write.partitionBy(p)
+      case None => df.write
+    }).mode("append").parquet(dir.toString)
+    val after = dataFiles(dir, scope)
+    val added = after.filterNot(f => before(f.path))
+    check(added)
+    val next = TableManifest(cur.version + 1, cur.id, partCol, df.schema,
+      cur.files.filter(keep) ++ added)
+    CrashHooks.beforeCommit(dir.getName)
+    AtomicPointer.commit(conf, manifestPath(dir), next.json)
+    CrashHooks.afterCommit(dir.getName)
+    deleteUnnamed(dir, after, next.files.map(_.path).toSet ++ keptFiles(db).getOrElse(next.id, Set.empty))
+    added
+  }
+
+  /** Data file paths, by table id, that a kept [[DbEpochs]] epoch of `db`
+    * names — what pinned readers may still read. Empty without `epochMode`.
+    */
+  private def keptFiles(db: String): Map[String, Set[String]] =
+    if (epochMode) DbEpochs(spark, this, db).keptFiles else Map.empty
+
+  /** Delete the `listed` files `named` lacks, and each partition dir left
+    * with no named file.
+    */
+  private def deleteUnnamed(dir: Path, listed: Seq[DataFile], named: Set[String]): Unit = {
+    def partDir(path: String) = Some(path.indexOf('/')).filter(_ > 0).map(path.take)
+    val dead = listed.filterNot(f => named(f.path))
+    dead.foreach(f => fs.delete(new Path(dir, f.path), false))
+    val namedDirs = named.flatMap(partDir)
+    dead.flatMap(f => partDir(f.path)).distinct.filterNot(namedDirs)
+      .foreach(d => fs.delete(new Path(dir, d), true))
+  }
+
+  /** The dir that holds table id `id` now: the table's recorded name, a
+    * later name, or `_dropped/<id>`.
+    */
+  private def dirOf(db: String, table: String, id: String): Option[Path] =
+    (Iterator(tablePath(db, table), new Path(dbPath(db), s"$DroppedDir/$id")) ++
+      listTables(db).iterator.map(tablePath(db, _)))
+      .find(d => manifestAt(d).exists(_.id == id))
+
+  /** A table version a pinned epoch recorded, read from whichever dir
+    * holds the table's id now.
+    */
+  private[repl] def readVersion(db: String, table: String, m: TableManifest): DataFrame =
+    readFiles(dirOf(db, table, m.id).getOrElse(
+      throw new IllegalStateException(s"pinned version of $db.$table is gone")), m)
+
+  /** Retention of one db epoch that fell below the floor, from manifests
+    * alone: delete the files its table versions name that no kept epoch
+    * (`kept`, paths by table id) and no live manifest names, and a dropped
+    * table no kept epoch names. Idempotent, so a crash mid-way is finished
+    * by the next epoch commit.
+    */
+  private[repl] def release(db: String, tables: Seq[(String, TableManifest)],
+                            kept: Map[String, Set[String]]): Unit =
+    tables.foreach { case (t, m) =>
+      dirOf(db, t, m.id).foreach { dir =>
+        if (dir.getParent.getName == DroppedDir && !kept.contains(m.id)) fs.delete(dir, true)
+        else deleteUnnamed(dir, m.files, kept.getOrElse(m.id, Set.empty) ++
+          manifestAt(dir).toSeq.flatMap(_.files.map(_.path)))
+      }
+    }
+
+  /** Replace a table's content with `df`: the new manifest names only the
+    * new files.
+    */
+  private def overwrite(db: String, table: String, df: DataFrame,
+                        partCol: Option[String]): Unit = {
+    val dir = tablePath(db, table)
+    commitWrite(db, dir, current(dir, df.schema), df, partCol, keep = _ => false): Unit
+  }
+
+  /** Overwrite-write a table (bootstrap load / CREATE_TABLE replay). */
   def writeTable(db: String, table: String, df: DataFrame): Unit =
-    df.write.mode("overwrite").parquet(tablePath(db, table).toString)
+    overwrite(db, table, df, None)
 
   // ------------------------------------------------------- partitioned tables
 
-  /** Physical partition column of a parquet dir laid out `col=value/`, if
-    * any. The LAYOUT is the metadata: dumps and replicas recover the spec
-    * from directory names, so nothing extra has to travel in the manifest.
-    * One partition level (the warehouse-standard date/bucket column).
-    * Values with filesystem-special characters are fine: Spark
-    * percent-escapes them in dir names, and the merge path swaps dirs by
-    * their REAL names ([[Load]]), never by reconstructed ones.
+  /** Partition column of a table, if it is partitioned: the manifest's,
+    * or for a dir with no manifest its layout (`col=value/` subdirs — one
+    * level, the warehouse-standard date/bucket column). Dumps carry the
+    * spec the same way, in their directory layout.
     */
-  def partitionColOf(path: Path): Option[String] =
-    if (!fs.exists(path)) None
-    else fs.listStatus(path).filter(_.isDirectory).map(_.getPath.getName)
-      .find(n => n.contains("=") && !n.startsWith("_"))
-      .map(_.split("=")(0))
-
-  /** Partition column of a table, if it is partitioned. */
   def partitionSpec(db: String, table: String): Option[String] =
-    partitionColOf(tablePath(db, table))
+    current(tablePath(db, table), new StructType()).partCol
 
   /** Overwrite-write a table partitioned by `partCol` (`col=value/`
     * subdirs). Incremental merges on such a table rewrite ONLY partitions
@@ -194,29 +282,15 @@ final case class DbCatalog(spark: SparkSession, root: String,
     */
   def writeTablePartitioned(db: String, table: String, df: DataFrame,
                             partCol: String): Unit =
-    graft.PartitionedWrites.cluster(df, partCol)
-      .write.mode("overwrite").partitionBy(partCol)
-      .parquet(tablePath(db, table).toString)
+    overwrite(db, table, df, Some(partCol))
 
-  /** Rewrite a table whose current files are an INPUT of `df` — parquet
-    * cannot overwrite its own read path, so stage to a temp dir and swap
-    * by rename (the same crash-ordered sequence as the merge swap in
-    * [[Load]]: live is never gone without a backup existing).
+  /** Rewrite a table whose current files are an INPUT of `df` (ALTER,
+    * TRUNCATE, compaction, event-log compaction and purge) in its own
+    * layout: the new files land beside the ones `df` reads, and the
+    * manifest commit replaces them.
     */
-  def rewriteTable(db: String, table: String, df: DataFrame): Unit = {
-    val live = tablePath(db, table)
-    val tmp = new Path(dbPath(db), s"_tmp_$table")
-    val bak = new Path(dbPath(db), s"_bak_$table")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    stashOrDelete(db, table, bak) // stale bak = a crashed cycle's pre-image
-    if (!fs.rename(live, bak))
-      throw new IllegalStateException(s"backup rename failed for $db.$table")
-    if (!fs.rename(tmp, live)) {
-      fs.rename(bak, live)
-      throw new IllegalStateException(s"rewrite swap failed for $db.$table")
-    }
-    stashOrDelete(db, table, bak)
-  }
+  def rewriteTable(db: String, table: String, df: DataFrame): Unit =
+    overwrite(db, table, df, partitionSpec(db, table))
 
   /** Widen `df` to `newSchema`: missing columns appear as typed nulls,
     * column order follows the new schema. Existing columns must keep their
@@ -252,7 +326,8 @@ final case class DbCatalog(spark: SparkSession, root: String,
   def migrateTable(db: String, table: String, newSchema: StructType): Unit =
     rewriteTable(db, table, widenTo(readTable(db, table), newSchema))
 
-  /** Replay-side table rename: a pure metadata move (one fs rename).
+  /** Replay-side table rename: a pure metadata move (one fs rename; the
+    * manifest travels with the files, and pinned epochs find it by id).
     * Idempotent for replayed deltas — if the old name is already gone and
     * the new one exists, the rename has been applied and this is a no-op.
     */
@@ -263,16 +338,6 @@ final case class DbCatalog(spark: SparkSession, root: String,
     require(!fs.exists(dst), s"rename target exists: $db.$to")
     if (!fs.rename(src, dst))
       throw new IllegalStateException(s"rename failed: $db.$from -> $to")
-    // epoch mode: a marker redirects pinned reads of the OLD name to the
-    // new name's resolution chain (data travels with the rename)
-    epochStash(db, "renamed", from).foreach { marker =>
-      if (!fs.exists(marker)) {
-        fs.mkdirs(marker.getParent)
-        val out = fs.create(marker, false)
-        try out.write(to.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-      }
-    }
   }
 
   /** Source-side RENAME TABLE: apply locally and log the event so replicas
@@ -301,20 +366,19 @@ final case class DbCatalog(spark: SparkSession, root: String,
   /** Small-file compaction for tables written by something other than the
     * merge (which already sizes its output by [[filesFor]]): a bootstrap
     * restore or an ALTER rewrite writes one file per input partition, so a
-    * table can still hold more files than its bytes need. Rewrites through
-    * the same staged swap as ALTER, to [[filesFor]] files; row content is
-    * untouched. Returns (filesBefore, filesAfter).
+    * table can still hold more files than its bytes need. Rewrites an
+    * unpartitioned table like ALTER does, to [[filesFor]] files; row
+    * content is untouched. Counts the files the manifest names. Returns
+    * (filesBefore, filesAfter).
     */
   def compactTable(db: String, table: String): (Int, Int) = {
-    val path = tablePath(db, table)
-    def dataFiles: Seq[Path] = fs.listStatus(path).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath)
-    val before = dataFiles.size
-    val nOut = filesFor(fs.getContentSummary(path).getLength)
-    if (nOut < before) // never split files to reach a target — only merge
+    def files = current(tablePath(db, table), new StructType()).files
+    val before = files
+    val nOut = filesFor(before.map(_.bytes).sum)
+    // never split files to reach a target — only merge
+    if (nOut < before.size && partitionSpec(db, table).isEmpty)
       rewriteTable(db, table, readTable(db, table).repartition(nOut))
-    (before, dataFiles.size)
+    (before.size, files.size)
   }
 
   /** Output files for `bytes` of table data, by the rule Spark's file
@@ -327,18 +391,31 @@ final case class DbCatalog(spark: SparkSession, root: String,
     * [[compactTable]] both size their writes by it.
     */
   private def filesFor(bytes: Long): Int = {
-    val conf = spark.sessionState.conf
-    val split = math.min(conf.filesMaxPartitionBytes, math.max(conf.filesOpenCostInBytes,
+    val sql = spark.sessionState.conf
+    val split = math.min(sql.filesMaxPartitionBytes, math.max(sql.filesOpenCostInBytes,
       bytes / math.max(1, spark.sparkContext.defaultParallelism)))
     math.min(Int.MaxValue.toDouble, math.max(1.0, math.ceil(bytes.toDouble / split))).toInt
   }
 
-  def dropTable(db: String, table: String): Unit =
-    stashOrDelete(db, table, tablePath(db, table))
+  /** Drop a table. If a kept [[DbEpochs]] epoch names it, its files move
+    * aside to `_dropped/<id>` (one fs rename), where pinned epochs still
+    * read them until that epoch falls below the floor ([[release]]).
+    */
+  def dropTable(db: String, table: String): Unit = {
+    val dir = tablePath(db, table)
+    manifestAt(dir).filter(m => keptFiles(db).contains(m.id)) match {
+      case Some(m) =>
+        val to = new Path(dbPath(db), s"$DroppedDir/${m.id}")
+        fs.mkdirs(to.getParent)
+        if (!fs.rename(dir, to))
+          throw new IllegalStateException(s"drop failed: $db.$table -> $to")
+      case None => fs.delete(dir, true)
+    }
+  }
 
   // ------------------------------------------------- replication target plane
-  // ([[ReplTarget]] — the file-native loader: staged rename swaps for
-  // atomicity, metadata in `_repl_metadata/` under the warehouse root)
+  // ([[ReplTarget]] — the file-native loader: one manifest commit per table
+  // write, metadata in `_repl_metadata/` under the warehouse root)
 
   override def applyRename(db: String, from: String, to: String): Unit =
     renameTableFs(db, from, to)
@@ -355,109 +432,68 @@ final case class DbCatalog(spark: SparkSession, root: String,
   override def extTablePath(db: String, table: String): Option[String] =
     Some(new Path(dbPath(db), table).toString)
 
-  /** Bootstrap-scope staging debris from a crashed earlier load: `_tmp_`/
-    * `_bak_` dirs a crashed swap left behind (repairTable handles the
-    * incremental path; bootstrap replaces wholesale, so both dirs go).
+  /** Bootstrap-scope repair, the catalog's one listing sweep: in every
+    * table of `db` that has a manifest, delete `_temporary` and every data
+    * file neither the manifest nor a kept epoch names; delete each
+    * `_dropped` table no kept epoch names.
     */
-  override def cleanStaging(db: String): Unit =
-    fs.listStatus(dbPath(db)).filter(_.isDirectory)
-      .map(_.getPath)
-      .filter(p => p.getName.startsWith("_tmp_") || p.getName.startsWith("_bak_"))
-      .foreach(fs.delete(_, true))
-
-  /** Repair a merge swap interrupted between its two renames: if the live
-    * dir was renamed to `_bak_<table>` but the staged dir never became live,
-    * restore the backup; if the crash hit after the new live landed, the
-    * leftover backup is cleared. A PARTITIONED backup (a bak dir holding
-    * `col=value` subdirs) repairs per partition the same way — each
-    * partition dir is its own swap unit. Idempotent — safe on every retry
-    * entry.
-    */
-  override def repairTable(db: String, table: String): Unit = {
-    val live = tablePath(db, table)
-    val bak = new Path(dbPath(db), s"_bak_$table")
-    if (!fs.exists(bak)) return
-    partitionColOf(bak) match {
-      case Some(_) =>
-        fs.listStatus(bak).filter(_.isDirectory).foreach { st =>
-          val lp = new Path(live, st.getPath.getName)
-          if (!fs.exists(lp)) {
-            if (!fs.rename(st.getPath, lp))
-              throw new IllegalStateException(
-                s"partition backup restore failed for $db.$table/${st.getPath.getName}")
-          } // else: completed swap — leave for the stash sweep below
-        }
-        // remaining bak dirs are a COMPLETED swap's pre-images (crash hit
-        // between the swap loop and the stash/cleanup) — epoch mode must
-        // stash them, not drop them
-        stashPartsOrDelete(db, table, bak, Nil)
-      case None =>
-        if (!fs.exists(live)) {
-          if (!fs.rename(bak, live))
-            throw new IllegalStateException(s"backup restore failed for $db.$table")
-        } else stashOrDelete(db, table, bak) // completed swap's pre-image
+  override def cleanStaging(db: String): Unit = {
+    val kept = keptFiles(db)
+    listTables(db).map(tablePath(db, _)).foreach { dir =>
+      manifestAt(dir).foreach { m =>
+        fs.delete(new Path(dir, "_temporary"), true)
+        deleteUnnamed(dir, dataFiles(dir), m.files.map(_.path).toSet ++ kept.getOrElse(m.id, Set.empty))
+      }
     }
+    val dropped = new Path(dbPath(db), DroppedDir)
+    if (fs.exists(dropped)) fs.listStatus(dropped).map(_.getPath)
+      .filterNot(d => kept.contains(d.getName)).foreach(fs.delete(_, true))
   }
 
+  /** Nothing to repair: a crash never hides a table (its last committed
+    * manifest still reads), and the next write in the same scope deletes
+    * the files a crashed one left ([[commitWrite]]).
+    */
+  override def repairTable(db: String, table: String): Unit = ()
+
   /** One distributed merge: anti-join the dead keys away, union the
-    * upserts in. A PARTITIONED table takes the partition-scoped path
-    * instead: only the partitions the delta touches are rewritten and
-    * swapped.
-    *
-    * Parquet overwrite of the read path requires a materialization barrier:
-    * stage to a temp dir, then swap. The swap is crash-recoverable: live is
-    * renamed aside to `_bak_<table>` (atomic), the staged dir renamed in,
-    * then the backup dropped — at no point is the table unrecoverable, and
-    * [[repairTable]] repairs any window a crash can hit. On HDFS all steps
-    * are metadata renames.
+    * upserts in, write the result as new files and commit the manifest
+    * that replaces the old ones. A PARTITIONED table takes the
+    * partition-scoped path instead: only the partitions the delta touches
+    * are rewritten.
     */
   override def mergeDml(db: String, table: String, upserts: DataFrame,
                         deadKeys: DataFrame): TableMergeStats = {
-    val current = readTable(db, table)
-    val keyCol = current.schema.fields.head.name
+    val dir = tablePath(db, table)
+    val cur = current(dir)
+    val live = readFiles(dir, cur)
+    val keyCol = live.schema.fields.head.name
 
-    partitionSpec(db, table) match {
+    cur.partCol match {
       case Some(p) =>
-        return mergePartitions(db, table, p, current, keyCol, upserts, deadKeys)
+        return mergePartitions(db, table, p, cur, live, keyCol, upserts, deadKeys)
       case None => ()
     }
 
-    val livePath = tablePath(db, table)
-    val tmpPath = new Path(dbPath(db), s"_tmp_$table")
-    val bakPath = new Path(dbPath(db), s"_bak_$table")
     // Output files follow bytes ([[filesFor]]), not the input's file
     // count, which would otherwise grow by the upserts' partitions every
-    // cycle. Bytes are the live table's size from the namenode plus the
+    // cycle. Bytes are the live files' sizes from the manifest plus the
     // planner's size of the upserts (exact for the cached delta [[Load]]
     // hands in; an unknown size only makes the coalesce a no-op).
+    val liveBytes = cur.files.map(_.bytes).sum
     val upsertBytes = upserts.queryExecution.optimizedPlan.stats.sizeInBytes
       .min(BigInt(Long.MaxValue / 2)).toLong
     // Row count rides the rewrite's own job as a CollectMetrics node
     // (`observe`) — observability never adds a scan to the merge.
     val obs = new org.apache.spark.sql.Observation()
-    val merged = current
-      .join(deadKeys, current(keyCol).cast("string") === deadKeys("key"), "left_anti")
+    val merged = live
+      .join(deadKeys, live(keyCol).cast("string") === deadKeys("key"), "left_anti")
       .unionByName(upserts)
       .observe(obs, count(lit(1)).as("rows"))
-      .coalesce(filesFor(fs.getContentSummary(livePath).getLength + upsertBytes))
-
-    merged.write.mode("overwrite").parquet(tmpPath.toString)
-    // Bytes from the staged dir's metadata (a namenode summary, not a data
-    // read) BEFORE the swap renames it live.
-    val bytes = fs.getContentSummary(tmpPath).getLength
-    // stale leftover from an earlier completed swap — in epoch mode a
-    // crashed cycle's bak is that cycle's PRE-IMAGE: stash it, don't drop
-    stashOrDelete(db, table, bakPath)
-    if (!fs.rename(livePath, bakPath))
-      throw new IllegalStateException(s"backup rename failed for $db.$table")
-    CrashHooks.betweenSwapRenames() // fault injection: the swap's worst window
-    if (!fs.rename(tmpPath, livePath)) {
-      fs.rename(bakPath, livePath) // restore before failing
-      throw new IllegalStateException(s"merge swap failed for $db.$table")
-    }
-    stashOrDelete(db, table, bakPath)
+      .coalesce(filesFor(liveBytes + upsertBytes))
+    val added = commitWrite(db, dir, cur, merged, None, keep = _ => false)
     TableMergeStats(table, rowsMerged = obs.get("rows").asInstanceOf[Long],
-      bytesRewritten = bytes, partitionsTouched = 1)
+      bytesRewritten = added.map(_.bytes).sum, partitionsTouched = 1)
   }
 
   /** Partition-scoped merge for a table laid out `partCol=value/`: rewrite
@@ -471,10 +507,64 @@ final case class DbCatalog(spark: SparkSession, root: String,
     * scan — parquet reads two columns). The affected VALUES come to the
     * driver, but that list is bounded by the delta's partition spread
     * (control-plane sized, like the touched-table list); row data never
-    * leaves executors. The staged slice swaps in per partition dir — each
-    * `col=value` dir is its own crash-recoverable swap unit
-    * ([[repairTable]] repairs partition-level backups).
+    * leaves executors. The merged slice lands as new files in the affected
+    * `col=value` dirs, and the manifest commit swaps those partitions'
+    * files while every other partition keeps its files untouched.
     */
+  private def mergePartitions(db: String, table: String, partCol: String,
+                              cur: TableManifest, live: DataFrame,
+                              keyCol: String, upserts: DataFrame,
+                              deadKeys: DataFrame): TableMergeStats = {
+    // Partition values are collected AS SPARK RENDERS THEM (cast to
+    // string), not via JVM toString: partition type inference can read a
+    // date-like dir back as TimestampType, whose java.sql.Timestamp
+    // toString ("… 00:00:00.0") differs from the dir's value string —
+    // Spark's own cast is the same rendering the writer used for the dir.
+    def strVals(df: DataFrame): Array[String] =
+      df.distinct().collect().map(r => if (r.isNullAt(0)) null else r.getString(0))
+    val upVals = strVals(upserts.select(col(partCol).cast("string")))
+    // An upsert without the partition column has no home partition — that is
+    // a malformed payload, not a skippable row (silently dropping it would
+    // commit the watermark past lost data, like the missing-table case).
+    if (upVals.contains(null))
+      throw new NonRetryableException(
+        s"upsert payload for partitioned table $db.$table lacks $partCol")
+    val deadVals = locateEventedPartitions(live, keyCol, partCol, deadKeys)
+    val affected = (upVals ++ deadVals).distinct.filter(_ != null).toIndexedSeq
+    if (affected.isEmpty) return TableMergeStats(table, 0L, 0L, 0L)
+
+    val obs = new org.apache.spark.sql.Observation()
+    val slice = live.filter(col(partCol).cast("string").isin(affected: _*))
+    val merged = slice
+      .join(deadKeys, slice(keyCol).cast("string") === deadKeys("key"), "left_anti")
+      .unionByName(upserts.filter(col(partCol).cast("string").isin(affected: _*)))
+      .observe(obs, count(lit(1)).as("rows"))
+
+    // Files are matched to values by their dir's UNESCAPED name — Spark
+    // percent-escapes special characters (space, colon, %, …) in partition
+    // dirs, so a `s"$partCol=$v"` rebuild would miss those dirs and keep a
+    // stale partition alive.
+    val dir = tablePath(db, table)
+    def valueOf(path: String): Option[String] =
+      Some(path.takeWhile(_ != '/')).filter(_.startsWith(partCol + "="))
+        .map(d => PartitionPaths.unescape(d.drop(partCol.length + 1)))
+    val inScope = affected.toSet
+    val added = commitWrite(db, dir, cur, merged, Some(partCol),
+      keep = f => !valueOf(f.path).exists(inScope),
+      scope = valueOf(_).exists(inScope),
+      // an affected value with no live or new dir is a dir-name/value
+      // mismatch: refused before the commit, never a silently kept partition
+      check = added => {
+        val seen = (cur.files ++ added).flatMap(f => valueOf(f.path)).toSet
+        affected.find(v => !seen(v)).foreach { v =>
+          throw new NonRetryableException(s"partition $partCol=$v of $db.$table " +
+            "resolves to no live or written dir — refusing silent skip (dir-name/value mismatch)")
+        }
+      })
+    TableMergeStats(table, rowsMerged = obs.get("rows").asInstanceOf[Long],
+      bytesRewritten = added.map(_.bytes).sum, partitionsTouched = affected.length.toLong)
+  }
+
   /** Partition values holding any EVENTED key — the merge must rewrite those
     * partitions even when no upsert lands there (deletes, and upserts that
     * MOVE a row out of its old partition). Locating them is the one step of
@@ -499,10 +589,10 @@ final case class DbCatalog(spark: SparkSession, root: String,
     * Null keys match nothing on either path (SQL equality and `isin` are
     * both null-rejecting), preserving the original join's semantics.
     */
-  private def locateEventedPartitions(current: DataFrame, keyCol: String,
+  private def locateEventedPartitions(live: DataFrame, keyCol: String,
                                       partCol: String,
                                       deadKeys: DataFrame): Array[String] = {
-    val dt = current.schema(keyCol).dataType
+    val dt = live.schema(keyCol).dataType
     def parse(s: String): Any = dt match {
       case LongType    => s.toLong
       case IntegerType => s.toInt
@@ -521,98 +611,15 @@ final case class DbCatalog(spark: SparkSession, root: String,
     }
     val located = inlined match {
       case Some(ks) =>
-        current.filter(col(keyCol).isin(ks: _*)).select(col(partCol).cast("string"))
+        live.filter(col(keyCol).isin(ks: _*)).select(col(partCol).cast("string"))
       case None =>
-        current.select(col(keyCol).as("_k"), col(partCol))
+        live.select(col(keyCol).as("_k"), col(partCol))
           .join(deadKeys.select(col("key").cast(dt).as("_dk")),
             col("_k") === col("_dk"), "left_semi")
           .select(col(partCol).cast("string"))
     }
     located.distinct().collect()
       .map(r => if (r.isNullAt(0)) null else r.getString(0))
-  }
-
-  private def mergePartitions(db: String, table: String, partCol: String,
-                              current: DataFrame, keyCol: String,
-                              upserts: DataFrame,
-                              deadKeys: DataFrame): TableMergeStats = {
-    // Partition values are collected AS SPARK RENDERS THEM (cast to
-    // string), not via JVM toString: partition type inference can read a
-    // date-like dir back as TimestampType, whose java.sql.Timestamp
-    // toString ("… 00:00:00.0") differs from the dir's value string —
-    // Spark's own cast is the same rendering the writer used for the dir.
-    def strVals(df: DataFrame): Array[String] =
-      df.distinct().collect().map(r => if (r.isNullAt(0)) null else r.getString(0))
-    val upVals = strVals(upserts.select(col(partCol).cast("string")))
-    // An upsert without the partition column has no home partition — that is
-    // a malformed payload, not a skippable row (silently dropping it would
-    // commit the watermark past lost data, like the missing-table case).
-    if (upVals.contains(null))
-      throw new NonRetryableException(
-        s"upsert payload for partitioned table $db.$table lacks $partCol")
-    val deadVals = locateEventedPartitions(current, keyCol, partCol, deadKeys)
-    val affected = (upVals ++ deadVals).distinct.filter(_ != null).toIndexedSeq
-    if (affected.isEmpty) return TableMergeStats(table, 0L, 0L, 0L)
-
-    val obs = new org.apache.spark.sql.Observation()
-    val slice = current.filter(col(partCol).cast("string").isin(affected: _*))
-    val merged = slice
-      .join(deadKeys, slice(keyCol).cast("string") === deadKeys("key"), "left_anti")
-      .unionByName(upserts.filter(col(partCol).cast("string").isin(affected: _*)))
-      .observe(obs, count(lit(1)).as("rows"))
-
-    val livePath = tablePath(db, table)
-    val tmpPath = new Path(dbPath(db), s"_tmp_$table")
-    val bakPath = new Path(dbPath(db), s"_bak_$table")
-    graft.PartitionedWrites.cluster(merged, partCol)
-      .write.mode("overwrite").partitionBy(partCol).parquet(tmpPath.toString)
-    val bytes = fs.getContentSummary(tmpPath).getLength
-    // stale bak from a crashed cycle = that cycle's per-partition
-    // pre-images: stash before clearing (no-op outside epoch mode)
-    stashPartsOrDelete(db, table, bakPath, Nil)
-    fs.mkdirs(bakPath)
-    // Swap each affected partition dir: live aside to bak (if present), then
-    // staged in (if present — a fully-deleted partition has no staged dir
-    // and simply disappears). Dir NAMES are taken from the dirs Spark
-    // actually wrote (and the live layout), never reconstructed from raw
-    // values — Spark percent-escapes special characters in partition dirs
-    // (space, colon, %, …), so a `s"$partCol=$v"` rebuild would miss those
-    // dirs and silently skip the partition. Values are matched by their
-    // unescaped dir string; an affected value resolving to NO staged or
-    // live dir is a refused invariant violation, not a skip.
-    def dirsByValue(base: Path): Map[String, Path] =
-      if (!fs.exists(base)) Map.empty
-      else fs.listStatus(base).filter(_.isDirectory).map(_.getPath)
-        .filter(_.getName.startsWith(partCol + "="))
-        .map(p => PartitionPaths.unescape(p.getName.drop(partCol.length + 1)) -> p)
-        .toMap
-    val tmpDirs = dirsByValue(tmpPath)
-    val liveDirs = dirsByValue(livePath)
-    val createdDirs = scala.collection.mutable.Buffer[String]()
-    affected.foreach { vStr =>
-      val tmpDir = tmpDirs.get(vStr)
-      val liveDir = liveDirs.get(vStr)
-      if (tmpDir.isEmpty && liveDir.isEmpty)
-        throw new NonRetryableException(
-          s"partition $partCol=$vStr of $db.$table resolves to no staged or " +
-          "live dir — refusing silent skip (dir-name/value mismatch)")
-      val dirName = tmpDir.orElse(liveDir).get.getName
-      if (liveDir.isEmpty) createdDirs += dirName // absent pre-merge
-      liveDir.foreach { ld =>
-        if (!fs.rename(ld, new Path(bakPath, dirName)))
-          throw new IllegalStateException(
-            s"partition backup rename failed for $db.$table/$dirName")
-      }
-      tmpDir.foreach { td =>
-        if (!fs.rename(td, new Path(livePath, dirName)))
-          throw new IllegalStateException(
-            s"partition swap failed for $db.$table/$dirName")
-      }
-    }
-    stashPartsOrDelete(db, table, bakPath, createdDirs.toSeq)
-    fs.delete(tmpPath, true)
-    TableMergeStats(table, rowsMerged = obs.get("rows").asInstanceOf[Long],
-      bytesRewritten = bytes, partitionsTouched = affected.length.toLong)
   }
 
   // ------------------------------------------------------------------ views
@@ -672,8 +679,7 @@ final case class DbCatalog(spark: SparkSession, root: String,
     */
   def readEvents(db: String): DataFrame = {
     val p = eventsPath(db)
-    if (fs.exists(p)) spark.read.schema(EventSchema).parquet(p.toString)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], EventSchema)
+    readFiles(p, current(p, EventSchema))
   }
 
   /** Events strictly after `fromId` (pushed down to the parquet scan). */
@@ -714,13 +720,13 @@ final case class DbCatalog(spark: SparkSession, root: String,
     * event is then a codegen'd array scan instead of a per-table running
     * window (which would put one hot table's whole history in one task).
     * The latest-per-key pick is a (table, epoch, key) window — fine-grained
-    * keys, shuffles evenly. Rewrite goes through the same staged swap as
-    * table rewrites. Returns (eventsBefore, eventsAfter).
+    * keys, shuffles evenly. The rewrite is one manifest commit, like every
+    * table rewrite. Returns (eventsBefore, eventsAfter).
     *
     * CONCURRENCY: compaction is a WRITER of the event log — the caller
     * must hold the db's single-writer lock, exactly like [[appendEvents]]
-    * (an append racing the rewrite's dir swap could land a part-file in
-    * the dir being renamed aside and lose it). The natural slot is a
+    * (an append committed between the rewrite's read and its manifest
+    * commit would drop out of the log). The natural slot is a
     * maintenance window under the same per-db lock the sweep/cron holds.
     */
   def compactEvents(db: String): (Long, Long) = {
@@ -787,7 +793,8 @@ final case class DbCatalog(spark: SparkSession, root: String,
     }
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1), EventSchema)
-    df.write.mode("append").parquet(eventsPath(db).toString)
+    val dir = eventsPath(db)
+    commitWrite(db, dir, current(dir, EventSchema), df, None, keep = _ => true)
     from + events.size
   }
 }
@@ -809,6 +816,49 @@ object DbCatalog {
 
   /** Per-db directory of view definition files (`<name>.sql`). */
   val ViewsDir = "_views"
+
+  /** A table's manifest pointer, inside the table dir (the `_` prefix
+    * keeps it out of Spark's file index).
+    */
+  val ManifestFile = "_manifest"
+
+  /** Per-db directory where an epoch-mode drop moves a table, by id. */
+  val DroppedDir = "_dropped"
+
+  /** One data file of a table version: its path under the table dir and
+    * its size.
+    */
+  final case class DataFile(path: String, bytes: Long)
+
+  /** One committed version of a table: the files it is made of, the
+    * schema it was written with (the partition column included) and the
+    * partition column. `id` names the table across renames and drops, so a
+    * pinned epoch can find the files of a version it recorded; `version`
+    * counts the table's commits.
+    */
+  final case class TableManifest(version: Long, id: String, partCol: Option[String],
+                                 schema: StructType, files: Seq[DataFile]) {
+    /** The columns stored in the files; partition values live in dir names. */
+    def dataSchema: StructType = StructType(schema.filterNot(f => partCol.contains(f.name)))
+
+    def json: String =
+      s"""{"version":$version,"id":${Json.str(id)},""" +
+      s""""partCol":${partCol.fold("null")(Json.str)},"schema":${schema.json},""" +
+      files.map(f => s"""{"path":${Json.str(f.path)},"bytes":${f.bytes}}""")
+        .mkString(""""files":[""", ",", "]}")
+  }
+
+  object TableManifest {
+    def parse(json: String): TableManifest = parse(Json.parse(json))
+
+    def parse(n: com.fasterxml.jackson.databind.JsonNode): TableManifest = {
+      import scala.jdk.CollectionConverters._
+      TableManifest(n.get("version").asLong, n.get("id").asText,
+        Option(n.get("partCol")).filterNot(_.isNull).map(_.asText),
+        DataType.fromJson(n.get("schema").toString).asInstanceOf[StructType],
+        n.get("files").asScala.toSeq.map(f => DataFile(f.get("path").asText, f.get("bytes").asLong)))
+    }
+  }
 
   /** One change event. Engine DML semantics (documented divergence from
     * Hive ACID row-ids, which are not reproducible outside Hive): every DML
@@ -837,4 +887,14 @@ object DbCatalog {
     StructField("op", StringType, nullable = false),
     StructField("key", StringType, nullable = true),
     StructField("row_json", StringType, nullable = true)))
+}
+
+/** Fault-injection points around a table write's one commit, called with
+  * the table's name. Production value is a no-op; the crash specs throw
+  * here, and the kill-9 spec's forked victim JVM parks in `beforeCommit`
+  * (new files written, manifest not yet committed) until it is SIGKILLed.
+  */
+private[repl] object CrashHooks {
+  @volatile var beforeCommit: String => Unit = _ => ()
+  @volatile var afterCommit: String => Unit = _ => ()
 }

@@ -1,79 +1,52 @@
 package graft.repl
 
 import graft.util.AtomicPointer
+import graft.repl.DbCatalog.TableManifest
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Db-LEVEL read consistency across incremental loads.
   *
   * [[Load.replay]] merges table by table, so a reader between two table
-  * swaps sees a TORN database — table A already at the new watermark,
+  * commits sees a TORN database — table A already at the new watermark,
   * table B still at the old one. The reference has the same flaw (its
   * `REPL LOAD` applies per-table too); this module exceeds it with the
-  * versioned-pointer recipe the engine already trusts
-  * ([[graft.util.DeltaView]]'s pointer-per-commit), lifted to database
-  * granularity:
+  * versioned-pointer recipe every [[DbCatalog]] table already commits
+  * through ([[graft.util.DeltaView]]'s pointer-per-commit), lifted to
+  * database granularity:
   *
   *  - a per-db pointer `<db>/_epochs/CURRENT` = `"<epoch>,<watermark>"`,
   *    swapped ONCE per VERIFIED replication cycle
   *    ([[ReplicationJob.run]] commits it after the five-way verify);
-  *  - a per-epoch MANIFEST (the db's table list at commit time), so
-  *    pinned readers see exactly the tables that existed at their epoch —
-  *    tables created by later cycles are invisible, dropped ones remain
-  *    readable;
-  *  - PRE-IMAGE STASHES: when the owning [[DbCatalog]] runs in
-  *    `epochMode`, every destructive table operation (merge swap, rewrite,
-  *    drop, rename) moves the data it would have deleted into
-  *    `<db>/_epochstash/<epoch>/...` by RENAME (no copy — the same
-  *    metadata-only economy as the merge swap itself):
-  *      `full/<table>`     whole-table pre-image (unpartitioned merge,
-  *                         rewrite, drop)
-  *      `parts/<table>/`   the AFFECTED `col=value` partition dirs of a
-  *                         partition-scoped merge
-  *      `absent/<table>/`  one marker file per partition the merge
-  *                         CREATED (pinned reads must mask it out of the
-  *                         live scan; kept OUTSIDE the parquet tree)
-  *      `renamed/<table>`  marker file carrying the new name of a renamed
-  *                         table (data travels with the new name; the
-  *                         marker redirects pinned resolution)
+  *  - a per-epoch DB MANIFEST `<db>/_epochs/manifest_v<epoch>` holding each
+  *    table's committed [[DbCatalog.TableManifest]] at commit time (a table
+  *    with no manifest — an `ext_` file tree — is listed by name and reads
+  *    live).
   *
-  * A pinned reader resolves table `t` at epoch `N` by walking epochs
-  * upward from `N`: a rename marker rebinds the name; the FIRST full
-  * stash ends the walk (it is the data as of its epoch, and nothing
-  * touched `t` between `N` and it — otherwise an earlier stash would
-  * exist); partial stashes contribute their partitions (first epoch to
-  * mention a partition wins); whatever is still unresolved reads from the
-  * LIVE table. Mid-load, a swapped table's pre-image is already in the
-  * current epoch's stash and an unswapped table is still live — both
-  * resolve to the pre-load state, which is the whole point
-  * (spec: DbEpochSpec "mid-load pinned reads").
+  * A pinned read is a manifest lookup: the files the epoch's table
+  * manifest names, under whichever dir holds the table's id now, so a
+  * table renamed or dropped after the epoch still reads as it was. Tables
+  * created by later cycles are invisible. Mid-load, a table the load
+  * already merged has new files and a new manifest, but an `epochMode`
+  * catalog keeps the files it superseded, so the pinned epoch still reads
+  * the pre-load state (spec: DbEpochSpec "mid-load pinned reads").
   *
-  * Retention matches [[graft.util.DeltaView]]: `keepEpochs` states
-  * stay readable; `commit` prunes stash/manifest dirs below the floor, so
-  * a pinned frame survives `keepEpochs - 1` further commits. Reading a
-  * pruned epoch fails with a diagnosable error, never silently serves
-  * newer data.
-  *
-  * Crash notes (same class as the merge swap's own contract): the stash
-  * move happens where the old delete happened, and a RETRY that finds a
-  * stale `_bak_` from a crashed cycle stashes it instead of deleting, so
-  * pre-images survive retried merges. The residual window is a reader
-  * hitting the instant between the two swap renames — transient, retried
-  * by the caller exactly as live readers already do.
+  * Retention matches [[graft.util.DeltaView]]: [[DbEpochs.KeepEpochs]]
+  * states stay readable. A table write deletes the superseded files no
+  * kept epoch names; `commit` then releases each db manifest that falls
+  * below the floor — the files it names that no kept epoch and no live
+  * manifest names ([[DbCatalog.release]]), found from manifests with no
+  * listing — so a pinned frame survives `KeepEpochs - 1` further commits.
+  * Reading a pruned epoch fails with a diagnosable error, never silently
+  * serves newer data.
   */
-final case class DbEpochs(spark: SparkSession, catalog: DbCatalog, db: String,
-                          keepEpochs: Int = 2) {
-  require(keepEpochs >= 1, "keepEpochs must be >= 1")
+final case class DbEpochs(spark: SparkSession, catalog: DbCatalog, db: String) {
+  import DbEpochs.KeepEpochs
 
   private def conf = spark.sparkContext.hadoopConfiguration
-  private def dbPath = catalog.dbPath(db)
-  private def fs = dbPath.getFileSystem(conf)
-  private def pointer = new Path(dbPath, "_epochs/CURRENT")
-  private def manifestPath(e: Long) = new Path(dbPath, s"_epochs/manifest_v$e")
-  private def stashRoot = new Path(dbPath, "_epochstash")
-  private[repl] def stashPath(e: Long, kind: String, table: String): Path =
-    new Path(stashRoot, s"$e/$kind/$table")
+  private def epochsDir = new Path(catalog.dbPath(db), "_epochs")
+  private def pointer = new Path(epochsDir, "CURRENT")
+  private def manifestPath(e: Long) = new Path(epochsDir, s"manifest_v$e")
 
   /** (epoch, watermark), None before the first commit. */
   def current: Option[(Long, Long)] =
@@ -86,169 +59,89 @@ final case class DbEpochs(spark: SparkSession, catalog: DbCatalog, db: String,
       }
     }
 
-  /** Publish the CURRENT live state as the next epoch: write the table
-    * manifest, swap the pointer, prune epochs below the retention floor.
-    * Called once per verified replication cycle. Returns the new epoch.
+  /** Publish the CURRENT live state as the next epoch: write the db
+    * manifest, swap the pointer, then apply retention. Called once per
+    * verified replication cycle. Returns the new epoch.
     */
   def commit(watermark: Long): Long = {
     val e = current.map(_._1 + 1).getOrElse(0L)
-    val m = manifestPath(e)
-    fs.mkdirs(m.getParent)
-    val out = fs.create(m, true)
-    try out.write(catalog.listTables(db).mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    val tables = catalog.listTables(db).map { t =>
+      s"""{"name":${Json.str(t)},"manifest":${catalog.manifest(db, t).fold("null")(_.json)}}"""
+    }
+    AtomicPointer.commit(conf, manifestPath(e), tables.mkString("""{"tables":[""", ",", "]}"))
     AtomicPointer.commit(conf, pointer, s"$e,$watermark")
-    prune(e)
+    val fs = epochsDir.getFileSystem(conf)
+    val kept = keptFiles
+    fs.listStatus(epochsDir).map(_.getPath.getName.stripPrefix("manifest_v"))
+      .filter(v => v.matches("\\d{1,18}") && v.toLong < e - KeepEpochs + 1)
+      .foreach { v =>
+        tablesAt(v.toLong).foreach(ts => catalog.release(db, ts.collect { case (t, Some(m)) => t -> m }, kept))
+        fs.delete(manifestPath(v.toLong), false)
+      }
     e
   }
 
-  private def prune(newEpoch: Long): Unit = {
-    val floor = newEpoch - keepEpochs + 1
-    def sweep(dir: Path, prefix: String): Unit =
-      if (fs.exists(dir)) fs.listStatus(dir).foreach { st =>
-        val v = st.getPath.getName.stripPrefix(prefix)
-        if (v.nonEmpty && v.matches("\\d{1,18}") && v.toLong < floor)
-          fs.delete(st.getPath, true)
-      }
-    sweep(stashRoot, "")
-    sweep(new Path(dbPath, "_epochs"), "manifest_v")
-  }
-
   /** Pin the current epoch: the returned handle reads every table AS OF
-    * that epoch, immune to concurrent loads for `keepEpochs - 1` further
+    * that epoch, immune to concurrent loads for `KeepEpochs - 1` further
     * commits.
     */
   def pin(): PinnedDb = current match {
     case None => throw new IllegalStateException(
       s"no epoch committed for $db yet — run a verified cycle first")
-    case Some((e, w)) =>
-      val tables = AtomicPointer.read(conf, manifestPath(e)).toSeq
-        .flatMap(_.split("\n")).map(_.trim).filter(_.nonEmpty)
-      PinnedDb(this, e, w, tables)
+    case Some((e, w)) => PinnedDb(this, e, w, tablesAt(e).getOrElse(throw new IllegalStateException(
+      s"epoch $e of $db was written by an older engine — re-pin after the next verified cycle")))
   }
 
-  /** Max epoch with any stash present (stashes for the in-flight cycle sit
-    * ABOVE the pointer the moment the next commit lands first elsewhere).
+  /** Epoch `e`'s tables with their manifests (None = read live); None for
+    * a db manifest an older engine wrote, which names no table version.
     */
-  private def maxStashEpoch: Long = {
-    val listed =
-      if (!fs.exists(stashRoot)) Seq.empty
-      else fs.listStatus(stashRoot).toSeq.map(_.getPath.getName)
-        .filter(_.matches("\\d{1,18}")).map(_.toLong)
-    (listed :+ current.map(_._1).getOrElse(-1L)).max
+  private def tablesAt(e: Long): Option[Seq[(String, Option[TableManifest])]] = {
+    import scala.jdk.CollectionConverters._
+    val s = AtomicPointer.read(conf, manifestPath(e)).getOrElse(
+      throw new IllegalStateException(s"epoch $e of $db has no manifest"))
+    Some(s).filter(_.startsWith("{")).map(Json.parse(_).get("tables").asScala.toSeq.map { n =>
+      n.get("name").asText -> Option(n.get("manifest")).filterNot(_.isNull).map(TableManifest.parse)
+    })
   }
 
-  private def renameMarker(e: Long, table: String): Option[String] = {
-    val p = stashPath(e, "renamed", table)
-    AtomicPointer.read(conf, p).map(_.trim).filter(_.nonEmpty)
-  }
-
-  /** `col=value` data dirs of a partial stash plus the absent-partition
-    * markers of the same epoch (kept in a SIBLING `absent/` stash — inside
-    * the parquet tree even `_`-prefixed root-level files trip the reader).
+  /** Data file paths each kept epoch names, by table id: what retention
+    * must not delete.
     */
-  private def partsOf(e: Long, table: String, p: Path): (Seq[Path], Set[String]) = {
-    val dirs = fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-      .map(_.getPath)
-    val ab = stashPath(e, "absent", table)
-    val absent =
-      if (!fs.exists(ab)) Set.empty[String]
-      else fs.listStatus(ab).map(_.getPath.getName).toSet
-    (dirs, absent)
-  }
+  private[repl] def keptFiles: Map[String, Set[String]] =
+    current.toSeq.flatMap { case (e, _) => math.max(0L, e - KeepEpochs + 1) to e }
+      .flatMap(tablesAt(_).getOrElse(Nil)).flatMap(_._2)
+      .groupMapReduce(_.id)(_.files.map(_.path).toSet)(_ ++ _)
 
-  private def valueOf(dirName: String): String =
-    PartitionPaths.unescape(dirName.substring(dirName.indexOf('=') + 1))
-
-  /** Table `t` as of epoch `from` — see the class doc for the walk. */
-  private[repl] def resolve(table: String, from: Long): DataFrame = {
-    // retention guard FIRST: below the floor the epoch's stashes may be
-    // pruned, and the walk would silently serve a NEWER epoch's pre-image
-    current.map(_._1 - keepEpochs + 1).filter(_ > from).foreach { floor =>
+  /** Table `table` as epoch `epoch` recorded it. */
+  private[repl] def read(epoch: Long, table: String, m: Option[TableManifest]): DataFrame = {
+    // retention guard: below the floor the epoch's files may be gone
+    current.map(_._1 - KeepEpochs + 1).filter(_ > epoch).foreach { floor =>
       throw new IllegalStateException(
-        s"pinned epoch $from of $db is below the retention floor $floor " +
-        s"(keepEpochs=$keepEpochs) — re-pin")
+        s"pinned epoch $epoch of $db is below the retention floor $floor " +
+        s"(KeepEpochs=$KeepEpochs) — re-pin")
     }
-    val top = maxStashEpoch
-    var name = table
-    var k = from
-    // chosen partition layers: (parts dir, dir names chosen from it)
-    val layers = scala.collection.mutable.Buffer[(Path, Seq[String])]()
-    val resolved = scala.collection.mutable.Set[String]() // dir names decided
-    var full: Option[Path] = None
-    // per-epoch rename-cycle guard (a→b→a markers in one cycle)
-    var seenAtK = Set(name)
-    while (k <= top && full.isEmpty) {
-      // stash under the CURRENT binding first: a merge/drop that preceded
-      // a same-cycle rename stashed under the OLD name
-      val f = stashPath(k, "full", name)
-      if (fs.exists(f)) full = Some(f)
-      else {
-        val pp = stashPath(k, "parts", name)
-        if (fs.exists(pp)) {
-          val (dirs, absent) = partsOf(k, name, pp)
-          val fresh = dirs.map(_.getName).filterNot(resolved)
-          if (fresh.nonEmpty) layers += ((pp, fresh))
-          resolved ++= fresh
-          resolved ++= absent
-        }
-        renameMarker(k, name) match {
-          case Some(nn) if !seenAtK(nn) =>
-            name = nn; seenAtK += nn // re-check the SAME epoch as the new name
-          case _ =>
-            k += 1; seenAtK = Set(name)
-        }
-      }
-    }
-    def readExcluding(path: Path): DataFrame = {
-      val df = spark.read.parquet(path.toString)
-      if (resolved.isEmpty) df
-      else {
-        val partCol = partColOf(path).getOrElse(throw new IllegalStateException(
-          s"pinned read of $db.$table: partition stashes exist but $path " +
-          "has no col=value layout"))
-        // the merge's own value convention: Spark's cast-to-string is the
-        // rendering the partition dir names used
-        df.filter(!col(partCol).cast("string")
-          .isin(resolved.toSeq.map(valueOf): _*))
-      }
-    }
-    val tail: DataFrame = full match {
-      case Some(f) => readExcluding(f)
-      case None =>
-        val live = new Path(dbPath, name)
-        if (fs.exists(live)) readExcluding(live)
-        else if (layers.nonEmpty)
-          null // fully stash-resolved (table dropped later); union below
-        else throw new IllegalStateException(
-          s"pinned epoch $from of $db.$table is gone — pruned past " +
-          s"keepEpochs=$keepEpochs, or the table never existed")
-    }
-    val layerFrames = layers.map { case (pp, dirs) =>
-      val partCol = partColOf(pp).get
-      spark.read.parquet(pp.toString)
-        .filter(col(partCol).cast("string").isin(dirs.map(valueOf): _*))
-    }
-    (Option(tail).toSeq ++ layerFrames).reduce(_ unionByName _)
+    m.fold(catalog.readTable(db, table))(catalog.readVersion(db, table, _))
   }
+}
 
-  private def partColOf(p: Path): Option[String] =
-    fs.listStatus(p).find(s => s.isDirectory && s.getPath.getName.contains("="))
-      .map(_.getPath.getName.split("=")(0))
+object DbEpochs {
+
+  /** States whose files survive a commit: the new one and its predecessor. */
+  val KeepEpochs = 2
 }
 
 /** A database pinned to one committed epoch: `readTable` serves every
   * table AS OF that epoch regardless of concurrent loads (within the
-  * retention grace). `tables` is the epoch's manifest — tables created by
-  * later cycles are not visible, dropped ones still read.
+  * retention grace). `manifests` is the epoch's db manifest — tables
+  * created by later cycles are not visible, dropped ones still read.
   */
 final case class PinnedDb(epochs: DbEpochs, epoch: Long, watermark: Long,
-                          tables: Seq[String]) {
+                          manifests: Seq[(String, Option[TableManifest])]) {
+  def tables: Seq[String] = manifests.map(_._1)
+
   def readTable(table: String): DataFrame = {
-    require(tables.contains(table),
-      s"table $table is not in epoch $epoch's manifest (tables: $tables)")
-    epochs.resolve(table, epoch)
+    val m = manifests.find(_._1 == table)
+    require(m.nonEmpty, s"table $table is not in epoch $epoch's manifest (tables: $tables)")
+    epochs.read(epoch, table, m.get._2)
   }
 }

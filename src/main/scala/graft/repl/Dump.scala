@@ -34,17 +34,17 @@ final case class Dump(spark: SparkSession, source: ReplSource, dumpRoot: String,
     p
   }
 
-  /** Full snapshot; returns the dump path + the txn id it is current to
-    * (the 2-column row of `REPL DUMP`, `beeline_functions.sh:117-118`).
-    * Guarded by the global dump lock like the reference
-    * (`beeline_functions.sh:92-101`).
-    */
   /** Tables included in a dump: external tables only when the include flag
     * is on (reference default excludes them, `/root/reference/env.sh:8`).
     */
   private def dumpTables(db: String): Seq[String] =
     source.listTables(db).filter(t => cfg.includeExternalTables || !source.isExternal(t))
 
+  /** Full snapshot; returns the dump path + the txn id it is current to
+    * (the 2-column row of `REPL DUMP`, `beeline_functions.sh:117-118`).
+    * Guarded by the global dump lock like the reference
+    * (`beeline_functions.sh:92-101`).
+    */
   def bootstrap(db: String): DumpResult = withDumpLock(db) {
     val toId = source.currentTxnId(db)
     val dir = newDumpDir(db)
@@ -104,10 +104,10 @@ final case class Dump(spark: SparkSession, source: ReplSource, dumpRoot: String,
 
   private def writeManifest(dir: Path, m: DumpManifest): Unit = {
     val json =
-      s"""{"db":"${m.db}","kind":"${m.kind.name}","fromId":${m.fromId},""" +
-      s""""toId":${m.toId},"src":"${m.sourceDbPath}",""" +
-      s""""tables":[${m.tables.map("\"" + _ + "\"").mkString(",")}],""" +
-      s""""ext":[${m.externalTables.map("\"" + _ + "\"").mkString(",")}]}"""
+      s"""{"db":${Json.str(m.db)},"kind":"${m.kind.name}","fromId":${m.fromId},""" +
+      s""""toId":${m.toId},"src":${Json.str(m.sourceDbPath)},""" +
+      s""""tables":${m.tables.map(Json.str).mkString("[", ",", "]")},""" +
+      s""""ext":${m.externalTables.map(Json.str).mkString("[", ",", "]")}}"""
     val out = fs.create(new Path(dir, Dump.ManifestFile), true)
     try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
@@ -116,21 +116,16 @@ final case class Dump(spark: SparkSession, source: ReplSource, dumpRoot: String,
 object Dump {
   val ManifestFile = "_dumpmetadata.json"
 
-  /** Parse a manifest written by [[Dump]] (tiny control-plane JSON; parsed
-    * with a regex-free hand parser to avoid pulling in a JSON dependency).
-    */
+  /** Parse a manifest written by [[Dump]] (tiny control-plane JSON). */
   def readManifest(spark: SparkSession, dumpPath: String): DumpManifest = {
+    import scala.jdk.CollectionConverters._
     val p = new Path(dumpPath, ManifestFile)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val in = fs.open(p)
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    def str(k: String) = s""""$k":"([^"]*)"""".r.findFirstMatchIn(json).get.group(1)
-    def num(k: String) = s""""$k":(-?\\d+)""".r.findFirstMatchIn(json).get.group(1).toLong
-    def has(k: String): Boolean = json.contains(s""""$k":""")
-    def arr(k: String): Seq[String] =
-      (s""""$k":\\[([^\\]]*)\\]""").r.findFirstMatchIn(json).map(_.group(1))
-        .getOrElse("")
-        .split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
+    val json = Json.parse(
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close())
+    def str(k: String) = json.get(k).asText
+    def arr(k: String): Seq[String] = json.get(k).asScala.toSeq.map(_.asText)
     val tables = arr("tables")
     // Pre-upgrade manifests (written before the "ext" key existed) came
     // only from file-catalog sources, where the `ext_` naming convention IS
@@ -138,8 +133,8 @@ object Dump {
     // keeps their external tables re-syncing instead of silently stopping.
     // An EMPTY "ext" list from a current writer is authoritative (a JDBC
     // source has no file plane even if a table name matches the convention).
-    val ext = if (has("ext")) arr("ext") else tables.filter(_.startsWith("ext_"))
-    DumpManifest(str("db"), DumpKind.parse(str("kind")), num("fromId"), num("toId"),
-      tables, str("src"), ext)
+    val ext = if (json.has("ext")) arr("ext") else tables.filter(_.startsWith("ext_"))
+    DumpManifest(str("db"), DumpKind.parse(str("kind")), json.get("fromId").asLong,
+      json.get("toId").asLong, tables, str("src"), ext)
   }
 }

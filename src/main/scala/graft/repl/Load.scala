@@ -149,9 +149,9 @@ final case class Load(spark: SparkSession, target: ReplTarget, cfg: ReplConfig) 
     * NULL (`hive3repl.sh:85`), so any object already in the target db is a
     * partial prior load, never live replicated state. Objects the new
     * manifest will overwrite are left for the restore to replace; everything
-    * else — tables and views absent from the snapshot, plus staging debris a
-    * crashed swap left behind ([[ReplTarget.cleanStaging]]) — is removed so
-    * the restored db exactly mirrors the snapshot.
+    * else — tables and views absent from the snapshot, plus files a crashed
+    * write left behind ([[ReplTarget.cleanStaging]]) — is removed so the
+    * restored db exactly mirrors the snapshot.
     */
   private def cleanFailedBootstrap(m: DumpManifest, dumpPath: String): Unit = {
     val keep = m.tables.toSet
@@ -166,12 +166,6 @@ final case class Load(spark: SparkSession, target: ReplTarget, cfg: ReplConfig) 
     target.cleanStaging(m.db)
   }
 
-  /** External tables: distcp-style copy-if-changed straight from the source
-    * db path in the manifest (see [[ExtCopy]]); parallelism follows the
-    * reference's copy-task knob (`HQL/replextload.hql:5-8`). A target
-    * without a file plane cannot host external tables — refused loudly, not
-    * silently skipped (watermark-over-lost-data).
-    */
   /** Qualify a source-cluster path with `cfg.sourcePathPrefix`. Already-
     * prefixed paths pass through; a path qualified for a DIFFERENT
     * filesystem is refused loudly — blindly concatenating (what the
@@ -188,6 +182,12 @@ final case class Load(spark: SparkSession, target: ReplTarget, cfg: ReplConfig) 
     prefix + path
   }
 
+  /** External tables: distcp-style copy-if-changed straight from the source
+    * db path in the manifest (see [[ExtCopy]]); parallelism follows the
+    * reference's copy-task knob (`HQL/replextload.hql:5-8`). A target
+    * without a file plane cannot host external tables — refused loudly, not
+    * silently skipped (watermark-over-lost-data).
+    */
   private def syncExternal(m: DumpManifest, table: String): Unit = {
     val from = sourceQualified(new Path(m.sourceDbPath, table).toString)
     val to = target.extTablePath(m.db, table).getOrElse(
@@ -321,16 +321,16 @@ final case class Load(spark: SparkSession, target: ReplTarget, cfg: ReplConfig) 
         .filter(r => r.getString(2) == DbCatalog.OpAlterTable &&
           r.getLong(0) > minDml)
         .foreach { r =>
-          target.repairTable(db, t) // an earlier crash mid-rewrite is repairable here too
+          target.repairTable(db, t) // clean up after an earlier crashed rewrite
           target.migrateTable(db, t, StructType.fromDDL(r.getString(3)))
         }
       if (lastDml.get((epoch, t)).exists(_ > minDml)) {
         target.repairTable(db, t)
         // A missing table here is NOT skippable: with no CREATE_TABLE in the
         // delta the DML has nowhere to land, and silently dropping it would
-        // let a crashed swap (or an out-of-order log) "succeed" and commit
-        // the watermark past lost events. repairTable above already restored
-        // any interrupted swap, so existence is now authoritative.
+        // let an out-of-order log "succeed" and commit the watermark past
+        // lost events. A crashed write never hides a table (its last
+        // committed manifest still reads), so existence is authoritative.
         if (!target.tableExists(db, t))
           throw new NonRetryableException(
             s"delta carries DML for missing table $db.$t and no CREATE_TABLE " +
@@ -359,16 +359,6 @@ final case class Load(spark: SparkSession, target: ReplTarget, cfg: ReplConfig) 
 
     target.mergeDml(db, table, upserts, deadKeys)
   }
-}
-
-/** Fault-injection points for crash testing. Production value is a no-op;
-  * the kill-9 crash spec's forked victim JVM installs a hook that parks the
-  * process inside the merge swap's vulnerable window (live renamed aside,
-  * staged dir not yet landed) so the parent can SIGKILL it there and prove
-  * [[DbCatalog.repairTable]] + retry converge from the worst possible state.
-  */
-private[repl] object CrashHooks {
-  @volatile var betweenSwapRenames: () => Unit = () => ()
 }
 
 /** An invariant violation retrying cannot fix (missing table for DML/

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   *
   * CONCURRENCY: like [[DbCatalog.compactEvents]], callers must hold the
   * db's writer lock; [[ReplicationJob]] additionally holds the dump lock so
-  * no concurrent dump reads the log mid-swap.
+  * no concurrent dump reads the log mid-rewrite.
   */
 object Maintenance {
 

@@ -163,7 +163,8 @@ final case class TableMergeStats(
 }
 
 /** JSON string escaping shared by every hand-rendered JSON emitter (run
-  * logs, file artifacts, the CLI line). Db/table names with quotes are
+  * logs, file artifacts, the CLI line, dump and table manifests), and the
+  * one parser that reads them back. Db/table names with quotes are
   * legal throughout the engine (the JDBC planes escape them in SQL), so
   * the log plane must escape them too or emit malformed records; error
   * text additionally carries newlines and backslashes from Spark plans.
@@ -178,6 +179,11 @@ private[graft] object Json {
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   } + "\""
+
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Parse what the renderers wrote (Jackson is on Spark's classpath). */
+  def parse(json: String): com.fasterxml.jackson.databind.JsonNode = mapper.readTree(json)
 }
 
 /** Outcome of one [[Load.replay]]: the dump's manifest, the attempt that

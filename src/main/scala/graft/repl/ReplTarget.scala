@@ -10,8 +10,9 @@ import org.apache.spark.sql.types.StructType
   * target connection, `beeline_functions.sh:220-226`), so the engine
   * supports the full two-endpoint topology behind this one trait:
   *
-  *   - [[DbCatalog]]: a directory-backed warehouse (parquet tables, staged
-  *     rename swaps, file-resident metadata) — the file-native path;
+  *   - [[DbCatalog]]: a directory-backed warehouse (parquet tables, one
+  *     manifest commit per table write, file-resident metadata) — the
+  *     file-native path;
   *   - [[JdbcTarget]]: a live JDBC endpoint loaded transactionally, with
   *     the bulk rows moved by Spark's parallel batched JDBC writer and the
   *     merge committed as one endpoint transaction.
@@ -76,8 +77,8 @@ trait ReplTarget {
   // ----------------------------------------------------------- merge plane
 
   /** Apply one table's net-effect DML batch: rows whose key is in
-    * `deadKeys` disappear, then `upserts` land — as ONE atomic-enough unit
-    * for the impl's storage (staged dir swap for files, a transaction for
+    * `deadKeys` disappear, then `upserts` land — as ONE atomic unit for
+    * the impl's storage (a manifest commit for files, a transaction for
     * JDBC). `upserts` carries the table's full schema; `deadKeys` is a
     * single string column `key` (the engine key convention: first column
     * cast to string). Returns what the merge cost ([[TableMergeStats]]),
@@ -86,13 +87,15 @@ trait ReplTarget {
   def mergeDml(db: String, table: String, upserts: DataFrame,
                deadKeys: DataFrame): TableMergeStats
 
-  /** Repair any interrupted merge for this table (crashed swap, dangling
-    * staging). Idempotent; called before existence checks so a crash never
-    * masquerades as a lost table. Transactional targets are a no-op.
+  /** Clean up after any interrupted write to this table (files a crashed
+    * write left that nothing references). Idempotent; called before
+    * existence checks and merges. A no-op for targets whose writes clean
+    * up after themselves: transactional ones, and [[DbCatalog]], whose next
+    * write in the same scope deletes what a crashed one left.
     */
   def repairTable(db: String, table: String): Unit
 
-  /** Remove bootstrap-scope staging debris left by a crashed prior load. */
+  /** Remove bootstrap-scope debris left by a crashed prior load. */
   def cleanStaging(db: String): Unit
 
   // ----------------------------------------------- replication metadata

@@ -3,11 +3,10 @@ package graft.repl
 import org.apache.spark.sql.SparkSession
 
 /** Forked-JVM victim for the kill-9 crash test: replays an incremental
-  * dump but parks forever inside the merge swap's vulnerable window (live
-  * dir renamed aside, staged dir not yet landed), signalling the parent via
-  * a marker file. The parent SIGKILLs it there — a REAL hard crash of a
-  * real replay at the worst possible instant — and then proves
-  * recoverSwap + retry converge.
+  * dump but parks forever at the merge's commit point (new data files
+  * written, manifest not yet committed), signalling the parent via a marker
+  * file. The parent SIGKILLs it there — a REAL hard crash of a real replay
+  * — and then proves the next cycle converges and deletes the orphaned files.
   */
 object CrashVictim {
   def main(args: Array[String]): Unit = {
@@ -19,7 +18,7 @@ object CrashVictim {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    CrashHooks.betweenSwapRenames = () => {
+    CrashHooks.beforeCommit = _ => {
       java.nio.file.Files.createFile(java.nio.file.Paths.get(root, "_inwindow"))
       Thread.sleep(600000) // park: the parent kill -9s us here
     }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Db-level read consistency ([[DbEpochs]]): pinned readers see one
-  * committed epoch — never the torn state between two table swaps of an
+  * committed epoch — never the torn state between two table commits of an
   * in-flight incremental load (the flaw the reference shares,
   * `hive3repl.sh` applies per table too).
   */
@@ -129,45 +129,140 @@ class DbEpochSpec extends SparkSpec {
     assert(rows(epochs.pin().readTable("t")) == Set(1L -> "v2"))
   }
 
-  test("crash after a completed swap: repairTable stashes the backup, not drops it") {
-    val cat = DbCatalog(spark, tmp("repair"), epochMode = true)
-    cat.createDb("db")
-    cat.writeTable("db", "t", kv(1L -> "old"))
-    val epochs = DbEpochs(spark, cat, "db")
-    epochs.commit(1L)
-    val pinned = epochs.pin()
-    // manufacture the window: swap COMPLETED (live = merged), bak = the
-    // pre-image, crash hit before the stash/cleanup step
-    val dbp = cat.dbPath("db")
-    val fs = dbp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(dbp, "t"),
-      new org.apache.hadoop.fs.Path(dbp, "_bak_t")))
-    kv(1L -> "new").write.parquet(new org.apache.hadoop.fs.Path(dbp, "t").toString)
-    cat.repairTable("db", "t") // next load's crash recovery
-    assert(rows(cat.readTable("db", "t")) == Set(1L -> "new"))
-    assert(rows(pinned.readTable("t")) == Set(1L -> "old"),
-      "the completed swap's backup must reach the epoch stash")
+  test("commit points: a crash before or after a table's manifest commit converges to the no-crash twin") {
+    import DbCatalog._
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val root = tmp("commit")
+    // Two worlds share every source change; only the crash world's cycles
+    // fail at a commit point. Its load retries in-run (incrRerun = 2), so a
+    // crash inside the load and the retry that recovers it are one cycle;
+    // the purge runs after the load, so a crash there fails its cycle.
+    final case class World(name: String, incrRerun: Int, autoPurge: Boolean) {
+      val source = DbCatalog(spark, s"$root/$name/src")
+      val target = DbCatalog(spark, s"$root/$name/tgt", epochMode = true)
+      val job = ReplicationJob(spark, source, target, s"$root/$name/dumps",
+        ReplConfig(dumpRoot = s"$root/$name/dumps", rerunSleepMs = 10, incrRerun = incrRerun,
+          autoPurge = autoPurge))
+      source.createDb("db")
+      source.writeTable("db", "region", spark.read.parquet(s"${sf()}/region.parquet"))
+      source.writeTablePartitioned("db", "supplier",
+        spark.read.parquet(s"${sf()}/supplier.parquet"), "s_nationkey")
+      assert(job.run("db").verify == "SUCCESS")
+    }
+    val (crash, twin) = (World("crash", 2, autoPurge = true), World("twin", 1, autoPurge = false))
+    def digests(w: World): Map[String, Set[String]] = w.target.listTables("db").map { t =>
+      val df = w.target.readTable("db", t)
+      t -> Digest.tableDigest(df, col(df.columns.head), df.columns.toSeq.map(col))
+        .collect().map(_.toString).toSet
+    }.toMap
+    // parquet files under a table that neither its manifest nor a kept
+    // epoch names: what a crash or a superseding write could leak
+    def unnamed(cat: DbCatalog): Seq[String] = {
+      val kept = if (cat.epochMode) DbEpochs(spark, cat, "db").keptFiles else Map.empty[String, Set[String]]
+      (cat.listTables("db") :+ EventsTable).flatMap(t => cat.manifest("db", t).map(t -> _)).flatMap { case (t, m) =>
+        val dir = new Path(cat.dbPath("db"), t)
+        val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val named = m.files.map(_.path).toSet ++ kept.getOrElse(m.id, Set.empty)
+        val it = fs.listFiles(dir, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString)
+          .filter(_.endsWith(".parquet"))
+          .map(_.stripPrefix(fs.makeQualified(dir).toString + "/"))
+          .filterNot(named).toSeq
+      }
+    }
+
+    val nk = spark.read.parquet(s"${sf()}/supplier.parquet")
+      .select("s_nationkey").distinct().orderBy("s_nationkey").head().getInt(0)
+    def upsert(table: String, key: Long, json: String): DbCatalog => Unit =
+      _.appendEvents("db", Seq(Event(table, OpUpsert, key.toString, json))): Unit
+    // Both worlds take every change once, up front, in one cycle; the
+    // crash world then applies a scenario's change again before each of its
+    // crashes, so that cycle's delta holds only that change. Each change is
+    // idempotent, so the twin's digests are the expected state after every
+    // crash.
+    val scenarios: Seq[(String, String, Boolean, DbCatalog => Unit)] = Seq(
+      ("unpartitioned merge", "region", true,
+        upsert("region", 100L, """{"r_regionkey":100,"r_name":"R"}""")),
+      ("partitioned merge", "supplier", true,
+        upsert("supplier", 900000L, s"""{"s_suppkey":900000,"s_name":"S","s_nationkey":$nk}""")),
+      ("ALTER rewrite", "region", true, cat => {
+        val schema = cat.readTable("db", "region").schema
+        cat.alterTable("db", "region", StructType(
+          schema.fields.filterNot(_.name == "c1") :+ StructField("c1", LongType))): Unit
+      }),
+      ("event-log purge", EventsTable, false,
+        upsert("supplier", 910000L, s"""{"s_suppkey":910000,"s_name":"P","s_nationkey":$nk}""")))
+    for ((_, _, _, change) <- scenarios; w <- Seq(crash, twin)) change(w.source)
+    Seq(crash, twin).foreach(w => assert(w.job.run("db").verify == "SUCCESS", w.name))
+    val expected = digests(twin)
+    for ((what, table, inLoad, change) <- scenarios; after <- Seq(false, true)) {
+      val point = s"$what, ${if (after) "after" else "before"} the commit"
+      change(crash.source)
+      val pinned = DbEpochs(spark, crash.target, "db").pin()
+      def all(df: DataFrame) = df.collect().map(_.toString).toSet
+      val pre = pinned.tables.map(t => t -> all(crash.target.readTable("db", t))).toMap
+      def preImageServed(): Unit = pinned.tables.foreach { t =>
+        assert(all(pinned.readTable(t)) == pre(t), s"$point: pinned $t")
+      }
+      val txn = crash.source.currentTxnId("db")
+      var fired = false
+      val hook: String => Unit = t => if (t == table && !fired) {
+        fired = true; throw new RuntimeException(s"injected crash: $point")
+      }
+      if (after) CrashHooks.afterCommit = hook else CrashHooks.beforeCommit = hook
+      val run = try scala.util.Try(crash.job.run("db"))
+      finally { CrashHooks.beforeCommit = _ => (); CrashHooks.afterCommit = _ => () }
+      assert(fired, point)
+      if (inLoad) assert(run.get.verify == "SUCCESS" && run.get.attempts == 2, point)
+      else {
+        assert(run.isFailure, point)
+        preImageServed()
+        // the purge never beheads the counter; the next append continues it
+        assert(crash.source.currentTxnId("db") == txn, point)
+        change(crash.source)
+        assert(crash.source.currentTxnId("db") == txn + 1, point)
+        assert(crash.job.run("db").verify == "SUCCESS", point)
+      }
+      assert(digests(crash) == expected, point)
+      preImageServed()
+      Seq(crash.source, crash.target).foreach(c => assert(unnamed(c).isEmpty, s"$point: ${unnamed(c)}"))
+    }
   }
 
-  test("crash between swap renames: repair restores live, the retried merge stashes the pre-image") {
-    val cat = DbCatalog(spark, tmp("midswap"), epochMode = true)
-    cat.createDb("db")
-    cat.writeTable("db", "t", kv(1L -> "old"))
-    val epochs = DbEpochs(spark, cat, "db")
-    epochs.commit(1L)
-    val pinned = epochs.pin()
-    var fired = false
-    CrashHooks.betweenSwapRenames =
-      () => if (!fired) { fired = true; throw new RuntimeException("injected crash") }
-    try intercept[RuntimeException] {
-      cat.mergeDml("db", "t", kv(1L -> "new"), Seq("1").toDF("key"))
-    } finally CrashHooks.betweenSwapRenames = () => ()
-    cat.repairTable("db", "t") // live was mid-swap-missing; restore
-    assert(rows(cat.readTable("db", "t")) == Set(1L -> "old"))
-    cat.mergeDml("db", "t", kv(1L -> "new"), Seq("1").toDF("key")) // retry
-    assert(rows(cat.readTable("db", "t")) == Set(1L -> "new"))
-    assert(rows(pinned.readTable("t")) == Set(1L -> "old"),
-      "the retried merge must stash the restored pre-image")
+  test("a crashed job's committed task output under _temporary never joins the next commit") {
+    import DbCatalog._
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.Row
+    val (target, source) = (DbCatalog(spark, tmp("temporary"), epochMode = true),
+      DbCatalog(spark, tmp("temporary-src")))
+    val fs = new Path(target.root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def eventRows(ids: Long*) = spark.createDataFrame(spark.sparkContext.parallelize(
+      ids.map(i => Row(i, "t", OpUpsert, i.toString, "{}"))), EventSchema)
+    // what a driver killed after some of its tasks committed leaves behind:
+    // a committed task dir under the job attempt's `_temporary/0`
+    def plant(cat: DbCatalog, table: String, df: DataFrame): Unit = {
+      val staged = tmp("staged")
+      df.coalesce(1).write.mode("overwrite").parquet(staged)
+      val part = fs.listStatus(new Path(staged)).map(_.getPath).find(_.getName.endsWith(".parquet")).get
+      val task = new Path(cat.dbPath("db"), s"$table/_temporary/0/task_202601010000_0001_m_000000")
+      fs.mkdirs(task)
+      assert(fs.rename(part, new Path(task, "part-00000-planted.snappy.parquet")))
+    }
+    target.createDb("db")
+    target.writeTable("db", "t", kv(1L -> "a"))
+    DbEpochs(spark, target, "db").commit(1L)
+    source.createDb("db")
+    source.appendEvents("db", Seq(Event("t", OpUpsert, "1", "{}")))
+    plant(target, "t", kv(1L -> "crashed", 2L -> "crashed"))
+    plant(source, EventsTable, eventRows(7L, 8L))
+
+    target.mergeDml("db", "t", kv(3L -> "c"), Seq("3").toDF("key"))
+    assert(source.appendEvents("db", Seq(Event("t", OpUpsert, "3", "{}"))) == 2L)
+    assert(rows(target.readTable("db", "t")) == Set(1L -> "a", 3L -> "c"))
+    assert(source.readEvents("db").count() == 2L && source.currentTxnId("db") == 2L)
+    assert(!target.manifest("db", "t").get.files.exists(_.path.contains("planted")))
+    assert(!source.manifest("db", EventsTable).get.files.exists(_.path.contains("planted")))
   }
 
   test("end-to-end: a verified replication cycle publishes one epoch") {

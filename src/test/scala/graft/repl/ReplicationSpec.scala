@@ -52,20 +52,26 @@ class ReplicationSpec extends SparkSpec {
     val (_, source, target, job) = freshWorld()
     seedDb(source, "db1b")
     // Simulate a prior bootstrap that died partway: the target db holds a
-    // table and a view that the source has since dropped, plus a staging
-    // dir from a crashed swap. None committed a watermark.
+    // table and a view that the source has since dropped, plus data files a
+    // crashed write left in a table dir that no manifest names. None
+    // committed a watermark.
     target.createDb("db1b")
     target.writeTable("db1b", "zombie", spark.read.parquet(s"${sf()}/region.parquet"))
     target.createView("db1b", "zombie_v", "SELECT 1 AS one")
+    target.writeTable("db1b", "region", spark.read.parquet(s"${sf()}/region.parquet"))
+    val regionDir = new Path(target.dbPath("db1b"), "region")
+    spark.read.parquet(s"${sf()}/nation.parquet").write.mode("append").parquet(regionDir.toString)
     val fs = target.dbPath("db1b").getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(target.dbPath("db1b"), "_tmp_region"))
+    def dataFiles = fs.listStatus(regionDir).map(_.getPath.getName)
+      .filter(_.endsWith(".parquet")).toSet
+    assert(dataFiles.size > target.manifest("db1b", "region").get.files.size)
     val report = job.run("db1b")
     assert(report.kind == "bootstrap")
     assert(report.verify == "SUCCESS")
     // The restored db mirrors the snapshot exactly — debris gone.
     assert(target.listTables("db1b") == Seq("nation", "region", "supplier"))
     assert(target.listViews("db1b").isEmpty)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(target.dbPath("db1b"), "_tmp_region")))
+    assert(dataFiles == target.manifest("db1b", "region").get.files.map(_.path).toSet)
     assert(rowSet(target.readTable("db1b", "nation")) ==
       rowSet(source.readTable("db1b", "nation")))
   }
@@ -417,46 +423,6 @@ class ReplicationSpec extends SparkSpec {
     assert(after.where(col("k") === 3.5).count() == 1)
   }
 
-  test("partitioned merge crash windows: repairTable restores per partition dir") {
-    val (_, source, target, job) = freshWorld()
-    source.createDb("db_pc")
-    val sup = spark.read.parquet(s"${sf()}/supplier.parquet")
-    source.writeTablePartitioned("db_pc", "supplier", sup, "s_nationkey")
-    assert(job.run("db_pc").verify == "SUCCESS")
-    val expected = rowSet(target.readTable("db_pc", "supplier"))
-
-    val fs = target.dbPath("db_pc")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new Path(target.dbPath("db_pc"), "supplier")
-    val bak = new Path(target.dbPath("db_pc"), "_bak_supplier")
-    val parts = fs.listStatus(live).filter(_.isDirectory)
-      .map(_.getPath.getName).filter(_.startsWith("s_nationkey=")).sorted
-    assert(parts.size >= 2, s"need >=2 partitions, got $parts")
-
-    // Window 1 (crash between the two renames): a partition was moved
-    // aside to the bak dir and the staged copy never landed — live is
-    // missing that partition entirely. repairTable must restore it.
-    fs.mkdirs(bak)
-    assert(fs.rename(new Path(live, parts.head), new Path(bak, parts.head)))
-    // Window 2 (crash after the new live landed): the bak copy of ANOTHER
-    // partition is leftover while live already has it — repair must drop
-    // the stale backup, not clobber the newer live dir.
-    val liveDir2 = new Path(live, parts.last)
-    val bakDir2 = new Path(bak, parts.last)
-    fs.mkdirs(bakDir2)
-    val liveFiles2 = fs.listStatus(liveDir2).map(_.getPath.getName).toSet
-
-    target.repairTable("db_pc", "supplier")
-    assert(!fs.exists(bak), "repair must consume the whole backup dir")
-    assert(rowSet(target.readTable("db_pc", "supplier")) == expected,
-      "restored table must equal the pre-crash state")
-    assert(fs.listStatus(liveDir2).map(_.getPath.getName).toSet == liveFiles2,
-      "completed-swap partition must keep its live files")
-    // idempotent on a clean table
-    target.repairTable("db_pc", "supplier")
-    assert(rowSet(target.readTable("db_pc", "supplier")) == expected)
-  }
-
   test("two-level-partitioned source degrades to first-level scoping without row corruption") {
     // The engine's partition plane is ONE level deep (the warehouse
     // date/bucket column). A source table laid out a=…/b=…/ must still
@@ -751,27 +717,11 @@ class ReplicationSpec extends SparkSpec {
     assert(target2.viewSql("db10", "v").contains("SELECT r_name FROM region"))
   }
 
-  test("crashed merge swap is restored from backup; lost table is a hard error") {
-    val (root, source, target, job) = freshWorld()
+  test("a lost table is a hard error") {
+    val (_, source, target, job) = freshWorld()
     seedDb(source, "db8")
     job.run("db8")
     import DbCatalog._
-    source.appendEvents("db8", Seq(
-      Event("region", OpUpsert, "0", """{"r_regionkey":0,"r_name":"AFRICA-X"}""")))
-    // Simulate a crash between the swap's two renames: live was moved aside
-    // to _bak_ but the staged dir never landed.
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new Path(target.dbPath("db8"), "region")
-    val bak = new Path(target.dbPath("db8"), "_bak_region")
-    assert(fs.rename(live, bak))
-    assert(!target.tableExists("db8", "region"))
-    val r = job.run("db8")
-    assert(r.verify == "SUCCESS")
-    val region = target.readTable("db8", "region").collect()
-      .map(x => x.get(0).toString.toLong -> x.getString(1)).toMap
-    assert(region(0L) == "AFRICA-X")
-    assert(!fs.exists(bak))
-
     // A genuinely lost table (no backup, no CREATE_TABLE in the delta) must
     // refuse to replay rather than silently skip and commit the watermark.
     source.appendEvents("db8", Seq(
@@ -890,7 +840,7 @@ class ReplicationSpec extends SparkSpec {
     assert(elapsedMs < 4000, s"non-retryable violation slept through retries (${elapsedMs} ms)")
   }
 
-  test("kill -9 mid-merge-swap in a forked JVM: recovery + retry converge") {
+  test("kill -9 before a manifest commit (forked JVM): next run converges") {
     val (root, source, target, job) = freshWorld()
     seedDb(source, "db15")
     job.run("db15") // bootstrap
@@ -902,8 +852,8 @@ class ReplicationSpec extends SparkSpec {
     val cfg = ReplConfig(dumpRoot = s"$root/dumps", rerunSleepMs = 10)
     val dump = Dump(spark, source, s"$root/dumps", cfg).incremental("db15", wm0)
 
-    // Fork a real JVM that replays this dump and parks between the swap's
-    // two renames (live → _bak_ done, staged → live not), then SIGKILL it.
+    // Fork a real JVM that replays this dump and parks after the merge's
+    // new files are written and before its manifest commit, then SIGKILL it.
     import scala.jdk.CollectionConverters._
     val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala.filter(a =>
@@ -922,16 +872,20 @@ class ReplicationSpec extends SparkSpec {
              System.currentTimeMillis() < deadline && proc.isAlive)
         Thread.sleep(50)
       assert(java.nio.file.Files.exists(marker),
-        s"victim never reached the swap window:\n${scala.io.Source.fromFile(log).mkString.takeRight(2000)}")
+        s"victim never reached the commit point:\n${scala.io.Source.fromFile(log).mkString.takeRight(2000)}")
       proc.destroyForcibly() // SIGKILL — no shutdown hooks, no cleanup
       proc.waitFor()
     } finally if (proc.isAlive) { proc.destroyForcibly(); proc.waitFor() }
 
-    // The crash left the WORST legal state: live gone, backup holding the
-    // data, staged dir present, watermark NOT advanced.
+    // The crash left new data files no manifest names; the table still
+    // reads its last committed version and the watermark did NOT advance.
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new Path(target.dbPath("db15"), "_bak_region")))
-    assert(!fs.exists(new Path(target.dbPath("db15"), "region")))
+    val regionDir = new Path(target.dbPath("db15"), "region")
+    def orphans = fs.listStatus(regionDir).map(_.getPath.getName)
+      .filter(_.endsWith(".parquet")).toSet --
+      target.manifest("db15", "region").get.files.map(_.path)
+    assert(orphans.nonEmpty)
+    assert(target.readTable("db15", "region").where(col("r_name") === "AFRICA-K9").isEmpty)
     assert(meta.watermark("db15").contains(wm0))
 
     // An ordinary next cycle (what cron would run) recovers and converges.
@@ -942,9 +896,8 @@ class ReplicationSpec extends SparkSpec {
       col("r_name") === "AFRICA-K9").count() == 1)
     // all pre-crash rows intact alongside the replayed upsert
     assert(region.count() == source.readTable("db15", "region").count())
-    // no staging debris survives
-    assert(!fs.exists(new Path(target.dbPath("db15"), "_bak_region")))
-    assert(!fs.exists(new Path(target.dbPath("db15"), "_tmp_region")))
+    // no data file outlives the crash unreferenced
+    assert(orphans.isEmpty, orphans)
   }
 
   test("PartitionPaths.unescape inverts Spark's partition-dir escaping") {
@@ -1007,6 +960,22 @@ class ReplicationSpec extends SparkSpec {
     assert(r.verify == "SUCCESS")
     assert(Files.readString(Paths.get(s"$root/tgt/edbv/ext_logs/p0.txt")) == "v2-good")
     assert(meta.watermark("edbv").get > wm1)
+  }
+
+  test("dump manifest round-trips quoted db and table names") {
+    val root = tmpRoot()
+    val source = DbCatalog(spark, s"$root/src")
+    val (db, tables) = ("qu\"db", Seq("a\"b", "c,d", "e]f"))
+    source.createDb(db)
+    val fs = source.dbPath(db).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    tables.foreach(t => fs.mkdirs(new Path(source.dbPath(db), t)))
+    val d = Dump(spark, source, s"$root/dumps", ReplConfig(dumpRoot = s"$root/dumps"))
+      .incremental(db, 0L)
+    val m = Dump.readManifest(spark, d.path)
+    assert(m.db == db)
+    assert(m.tables == tables)
+    assert(m.sourceDbPath == source.sourceDbPath(db))
+    assert(m.externalTables.isEmpty)
   }
 
   test("pre-upgrade manifest without an ext key falls back to the naming convention") {
