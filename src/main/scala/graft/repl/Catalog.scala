@@ -1,11 +1,8 @@
 package graft.repl
 
-import graft.util.AtomicPointer
-import org.apache.hadoop.fs.{FileStatus, Path}
+import graft.util.{DataFile, Manifests, TableManifest}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
-  InMemoryFileIndex}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -20,11 +17,11 @@ import org.apache.spark.sql.types._
   * `last_repl_id` transaction watermark (`/root/reference/HQL/replstatus.hql:2-4`).
   *
   * Every table the catalog writes, the event log included, is a sequence
-  * of versioned MANIFESTS ([[DbCatalog.TableManifest]]): a write appends
+  * of versioned MANIFESTS ([[graft.util.TableManifest]]): a write appends
   * new, uniquely named parquet files to the table's own layout (`col=value`
   * dirs when partitioned), then commits one manifest naming the live files,
-  * the schema and the partition column through [[AtomicPointer]] — the
-  * [[graft.util.DeltaView]] recipe. Readers read the files the current
+  * the schema and the partition column ([[graft.util.Manifests]], the core
+  * [[graft.util.DeltaView]] shares). Readers read the files the current
   * manifest names, so a crash before the commit leaves the old version and
   * a crash after it the new one; files no manifest names are invisible and
   * the next write in the same scope deletes them. A directory with no
@@ -78,11 +75,8 @@ final case class DbCatalog(spark: SparkSession, root: String,
 
   // ------------------------------------------------------- table manifests
 
-  private def manifestPath(dir: Path) = new Path(dir, ManifestFile)
-
   /** The table's committed manifest; None for a dir no catalog write made. */
-  private def manifestAt(dir: Path): Option[TableManifest] =
-    AtomicPointer.read(conf, manifestPath(dir)).map(TableManifest.parse)
+  private def manifestAt(dir: Path): Option[TableManifest] = Manifests.readTable(conf, dir)
 
   private[repl] def manifest(db: String, table: String): Option[TableManifest] =
     manifestAt(tablePath(db, table))
@@ -99,7 +93,7 @@ final case class DbCatalog(spark: SparkSession, root: String,
 
   private def current(dir: Path, schema: => StructType): TableManifest =
     manifestAt(dir).getOrElse {
-      val files = dataFiles(dir)
+      val files = Manifests.listFiles(fs, dir)
       val partCol = files.map(_.path).filter(_.contains('/')).map(_.takeWhile(_ != '/'))
         .find(_.contains('=')).map(_.takeWhile(_ != '='))
       TableManifest(-1L, java.util.UUID.randomUUID().toString, partCol, schema, files)
@@ -113,57 +107,7 @@ final case class DbCatalog(spark: SparkSession, root: String,
     */
   def readTable(db: String, table: String): DataFrame = {
     val dir = tablePath(db, table)
-    readFiles(dir, current(dir))
-  }
-
-  /** The files one manifest names, under `dir`, as a relation over exactly
-    * those files. The file index is built from the manifest's paths and
-    * sizes, so no file is stat-ed or listed and no listing job runs however
-    * many files a partitioned table has; partition columns are still
-    * inferred from the `col=value` dirs, and data columns read nullable, as
-    * in a plain directory read. A version with no file keeps its schema,
-    * partition column included.
-    */
-  private def readFiles(dir: Path, m: TableManifest): DataFrame =
-    if (m.files.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      StructType(m.dataSchema ++ m.schema.filter(f => m.partCol.contains(f.name))))
-    else {
-      val base = fs.makeQualified(dir)
-      val files = m.files.map(f => new FileStatus(f.bytes, false, 1, 0L, 0L, new Path(base, f.path)))
-      val known = files.map(s => s.getPath -> Array(s)).toMap
-      val index = new InMemoryFileIndex(spark, files.map(_.getPath),
-        Map("basePath" -> base.toString), Some(m.dataSchema), new FileStatusCache {
-          override def getLeafFiles(p: Path): Option[Array[FileStatus]] = known.get(p)
-          override def putLeafFiles(p: Path, leafFiles: Array[FileStatus]): Unit = ()
-          override def invalidateAll(): Unit = ()
-        })
-      def nullable(t: DataType): DataType = t match {
-        case s: StructType =>
-          StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
-        case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
-        case mt: MapType => MapType(nullable(mt.keyType), nullable(mt.valueType), valueContainsNull = true)
-        case other => other
-      }
-      val data = StructType(m.dataSchema.filterNot(f => index.partitionSchema.fieldNames.contains(f.name)))
-      spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
-        nullable(data).asInstanceOf[StructType], None, new ParquetFileFormat, Map.empty)(spark))
-    }
-
-  /** Data files under `dir` as Spark's file index sees them (names
-    * starting with `.` or `_` are hidden, except `col=value` dirs), with
-    * paths relative to `dir`; `scope` picks which top-level dirs to descend.
-    */
-  private def dataFiles(dir: Path, scope: String => Boolean = _ => true): Seq[DataFile] = {
-    def visible(n: String) = !n.startsWith(".") && !(n.startsWith("_") && !n.contains("="))
-    def walk(d: Path, prefix: String): Seq[DataFile] =
-      (try fs.listStatus(d).toSeq catch { case _: java.io.FileNotFoundException => Nil })
-        .filter(s => visible(s.getPath.getName)).flatMap { s =>
-          val rel = prefix + s.getPath.getName
-          if (s.isFile) Seq(DataFile(rel, s.getLen))
-          else if (prefix.nonEmpty || scope(s.getPath.getName)) walk(s.getPath, rel + "/")
-          else Nil
-        }
-    walk(dir, "")
+    Manifests.readFiles(spark, dir, current(dir))
   }
 
   /** The one write path of every table: append `df` to the table's layout
@@ -184,19 +128,17 @@ final case class DbCatalog(spark: SparkSession, root: String,
                           scope: String => Boolean = _ => true,
                           check: Seq[DataFile] => Unit = _ => ()): Seq[DataFile] = {
     fs.delete(new Path(dir, "_temporary"), true)
-    val before = dataFiles(dir, scope).map(_.path).toSet
+    val before = Manifests.listFiles(fs, dir, scope).map(_.path).toSet
     (partCol match {
       case Some(p) => graft.PartitionedWrites.cluster(df, p).write.partitionBy(p)
       case None => df.write
     }).mode("append").parquet(dir.toString)
-    val after = dataFiles(dir, scope)
+    val after = Manifests.listFiles(fs, dir, scope)
     val added = after.filterNot(f => before(f.path))
     check(added)
     val next = TableManifest(cur.version + 1, cur.id, partCol, df.schema,
       cur.files.filter(keep) ++ added)
-    CrashHooks.beforeCommit(dir.getName)
-    AtomicPointer.commit(conf, manifestPath(dir), next.json)
-    CrashHooks.afterCommit(dir.getName)
+    Manifests.commitTable(conf, dir, next)
     deleteUnnamed(dir, after, next.files.map(_.path).toSet ++ keptFiles(db).getOrElse(next.id, Set.empty))
     added
   }
@@ -231,7 +173,7 @@ final case class DbCatalog(spark: SparkSession, root: String,
     * holds the table's id now.
     */
   private[repl] def readVersion(db: String, table: String, m: TableManifest): DataFrame =
-    readFiles(dirOf(db, table, m.id).getOrElse(
+    Manifests.readFiles(spark, dirOf(db, table, m.id).getOrElse(
       throw new IllegalStateException(s"pinned version of $db.$table is gone")), m)
 
   /** Retention of one db epoch that fell below the floor, from manifests
@@ -442,7 +384,7 @@ final case class DbCatalog(spark: SparkSession, root: String,
     listTables(db).map(tablePath(db, _)).foreach { dir =>
       manifestAt(dir).foreach { m =>
         fs.delete(new Path(dir, "_temporary"), true)
-        deleteUnnamed(dir, dataFiles(dir), m.files.map(_.path).toSet ++ kept.getOrElse(m.id, Set.empty))
+        deleteUnnamed(dir, Manifests.listFiles(fs, dir), m.files.map(_.path).toSet ++ kept.getOrElse(m.id, Set.empty))
       }
     }
     val dropped = new Path(dbPath(db), DroppedDir)
@@ -466,7 +408,7 @@ final case class DbCatalog(spark: SparkSession, root: String,
                         deadKeys: DataFrame): TableMergeStats = {
     val dir = tablePath(db, table)
     val cur = current(dir)
-    val live = readFiles(dir, cur)
+    val live = Manifests.readFiles(spark, dir, cur)
     val keyCol = live.schema.fields.head.name
 
     cur.partCol match {
@@ -679,7 +621,7 @@ final case class DbCatalog(spark: SparkSession, root: String,
     */
   def readEvents(db: String): DataFrame = {
     val p = eventsPath(db)
-    readFiles(p, current(p, EventSchema))
+    Manifests.readFiles(spark, p, current(p, EventSchema))
   }
 
   /** Events strictly after `fromId` (pushed down to the parquet scan). */
@@ -817,48 +759,8 @@ object DbCatalog {
   /** Per-db directory of view definition files (`<name>.sql`). */
   val ViewsDir = "_views"
 
-  /** A table's manifest pointer, inside the table dir (the `_` prefix
-    * keeps it out of Spark's file index).
-    */
-  val ManifestFile = "_manifest"
-
   /** Per-db directory where an epoch-mode drop moves a table, by id. */
   val DroppedDir = "_dropped"
-
-  /** One data file of a table version: its path under the table dir and
-    * its size.
-    */
-  final case class DataFile(path: String, bytes: Long)
-
-  /** One committed version of a table: the files it is made of, the
-    * schema it was written with (the partition column included) and the
-    * partition column. `id` names the table across renames and drops, so a
-    * pinned epoch can find the files of a version it recorded; `version`
-    * counts the table's commits.
-    */
-  final case class TableManifest(version: Long, id: String, partCol: Option[String],
-                                 schema: StructType, files: Seq[DataFile]) {
-    /** The columns stored in the files; partition values live in dir names. */
-    def dataSchema: StructType = StructType(schema.filterNot(f => partCol.contains(f.name)))
-
-    def json: String =
-      s"""{"version":$version,"id":${Json.str(id)},""" +
-      s""""partCol":${partCol.fold("null")(Json.str)},"schema":${schema.json},""" +
-      files.map(f => s"""{"path":${Json.str(f.path)},"bytes":${f.bytes}}""")
-        .mkString(""""files":[""", ",", "]}")
-  }
-
-  object TableManifest {
-    def parse(json: String): TableManifest = parse(Json.parse(json))
-
-    def parse(n: com.fasterxml.jackson.databind.JsonNode): TableManifest = {
-      import scala.jdk.CollectionConverters._
-      TableManifest(n.get("version").asLong, n.get("id").asText,
-        Option(n.get("partCol")).filterNot(_.isNull).map(_.asText),
-        DataType.fromJson(n.get("schema").toString).asInstanceOf[StructType],
-        n.get("files").asScala.toSeq.map(f => DataFile(f.get("path").asText, f.get("bytes").asLong)))
-    }
-  }
 
   /** One change event. Engine DML semantics (documented divergence from
     * Hive ACID row-ids, which are not reproducible outside Hive): every DML
@@ -887,14 +789,4 @@ object DbCatalog {
     StructField("op", StringType, nullable = false),
     StructField("key", StringType, nullable = true),
     StructField("row_json", StringType, nullable = true)))
-}
-
-/** Fault-injection points around a table write's one commit, called with
-  * the table's name. Production value is a no-op; the crash specs throw
-  * here, and the kill-9 spec's forked victim JVM parks in `beforeCommit`
-  * (new files written, manifest not yet committed) until it is SIGKILLed.
-  */
-private[repl] object CrashHooks {
-  @volatile var beforeCommit: String => Unit = _ => ()
-  @volatile var afterCommit: String => Unit = _ => ()
 }

@@ -1,7 +1,6 @@
 package graft.repl
 
-import graft.util.AtomicPointer
-import graft.repl.DbCatalog.TableManifest
+import graft.util.{AtomicPointer, GroupManifest, Manifests, TableManifest}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -11,17 +10,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * commits sees a TORN database — table A already at the new watermark,
   * table B still at the old one. The reference has the same flaw (its
   * `REPL LOAD` applies per-table too); this module exceeds it with the
-  * versioned-pointer recipe every [[DbCatalog]] table already commits
-  * through ([[graft.util.DeltaView]]'s pointer-per-commit), lifted to
-  * database granularity:
-  *
-  *  - a per-db pointer `<db>/_epochs/CURRENT` = `"<epoch>,<watermark>"`,
-  *    swapped ONCE per VERIFIED replication cycle
-  *    ([[ReplicationJob.run]] commits it after the five-way verify);
-  *  - a per-epoch DB MANIFEST `<db>/_epochs/manifest_v<epoch>` holding each
-  *    table's committed [[DbCatalog.TableManifest]] at commit time (a table
-  *    with no manifest — an `ext_` file tree — is listed by name and reads
-  *    live).
+  * group commit of the manifest core ([[graft.util.Manifests]]) that
+  * every [[DbCatalog]] table write and every [[graft.util.DeltaView]]
+  * commit goes through: an epoch is ONE [[GroupManifest]] — version =
+  * epoch, batchId = watermark, and each table's committed
+  * [[TableManifest]] (None for a table with no manifest, an `ext_` file
+  * tree, which reads live) — committed to `<db>/_epochs/CURRENT` once per
+  * VERIFIED replication cycle ([[ReplicationJob.run]] commits it after the
+  * five-way verify). The commit first keeps the outgoing epoch as
+  * `_epochs/manifest_v<epoch>`, for readers still pinned to it.
   *
   * A pinned read is a manifest lookup: the files the epoch's table
   * manifest names, under whichever dir holds the table's id now, so a
@@ -33,12 +30,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Retention matches [[graft.util.DeltaView]]: [[DbEpochs.KeepEpochs]]
   * states stay readable. A table write deletes the superseded files no
-  * kept epoch names; `commit` then releases each db manifest that falls
-  * below the floor — the files it names that no kept epoch and no live
-  * manifest names ([[DbCatalog.release]]), found from manifests with no
-  * listing — so a pinned frame survives `KeepEpochs - 1` further commits.
-  * Reading a pruned epoch fails with a diagnosable error, never silently
-  * serves newer data.
+  * kept epoch names; `commit` then releases each kept epoch manifest that
+  * falls below the floor — the files it names that no kept epoch and no
+  * live manifest names ([[DbCatalog.release]]), found from manifests with
+  * no listing — so a pinned frame survives `KeepEpochs - 1` further
+  * commits. Reading a pruned epoch fails with a diagnosable error, never
+  * silently serves newer data.
   */
 final case class DbEpochs(spark: SparkSession, catalog: DbCatalog, db: String) {
   import DbEpochs.KeepEpochs
@@ -46,37 +43,42 @@ final case class DbEpochs(spark: SparkSession, catalog: DbCatalog, db: String) {
   private def conf = spark.sparkContext.hadoopConfiguration
   private def epochsDir = new Path(catalog.dbPath(db), "_epochs")
   private def pointer = new Path(epochsDir, "CURRENT")
-  private def manifestPath(e: Long) = new Path(epochsDir, s"manifest_v$e")
+  private def keptPath(e: Long) = new Path(epochsDir, s"manifest_v$e")
 
-  /** (epoch, watermark), None before the first commit. */
-  def current: Option[(Long, Long)] =
+  /** The current epoch, None before the first commit. An older engine's
+    * `<epoch>,<watermark>` pointer still reads: its epoch's tables are in
+    * `manifest_v<epoch>`, and the next commit replaces it.
+    */
+  private def group: Option[GroupManifest] =
     AtomicPointer.read(conf, pointer).map { s =>
-      s.split(",") match {
+      if (s.startsWith("{")) GroupManifest.parse(s)
+      else s.split(",") match {
         case Array(e, w) if Seq(e, w).forall(_.matches("\\d{1,18}")) =>
-          (e.toLong, w.toLong)
-        case _ => throw new IllegalStateException(
-          s"$pointer is not a db-epoch pointer (got '$s')")
+          GroupManifest(w.toLong, e.toLong, tablesAt(e.toLong).getOrElse(Nil))
+        case _ => throw new IllegalStateException(s"$pointer is not a db-epoch pointer (got '$s')")
       }
     }
 
-  /** Publish the CURRENT live state as the next epoch: write the db
-    * manifest, swap the pointer, then apply retention. Called once per
-    * verified replication cycle. Returns the new epoch.
+  /** (epoch, watermark), None before the first commit. */
+  def current: Option[(Long, Long)] = group.map(g => (g.version, g.batchId))
+
+  /** Publish the CURRENT live state as the next epoch: keep the outgoing
+    * epoch's manifest, commit the new one, then apply retention. Called
+    * once per verified replication cycle. Returns the new epoch.
     */
   def commit(watermark: Long): Long = {
-    val e = current.map(_._1 + 1).getOrElse(0L)
-    val tables = catalog.listTables(db).map { t =>
-      s"""{"name":${Json.str(t)},"manifest":${catalog.manifest(db, t).fold("null")(_.json)}}"""
-    }
-    AtomicPointer.commit(conf, manifestPath(e), tables.mkString("""{"tables":[""", ",", "]}"))
-    AtomicPointer.commit(conf, pointer, s"$e,$watermark")
+    val cur = group
+    val e = cur.map(_.version + 1).getOrElse(0L)
+    cur.foreach(c => AtomicPointer.commit(conf, keptPath(c.version), c.json))
+    Manifests.commitGroup(conf, pointer, GroupManifest(watermark, e,
+      catalog.listTables(db).map(t => t -> catalog.manifest(db, t))))
     val fs = epochsDir.getFileSystem(conf)
     val kept = keptFiles
     fs.listStatus(epochsDir).map(_.getPath.getName.stripPrefix("manifest_v"))
       .filter(v => v.matches("\\d{1,18}") && v.toLong < e - KeepEpochs + 1)
       .foreach { v =>
         tablesAt(v.toLong).foreach(ts => catalog.release(db, ts.collect { case (t, Some(m)) => t -> m }, kept))
-        fs.delete(manifestPath(v.toLong), false)
+        fs.delete(keptPath(v.toLong), false)
       }
     e
   }
@@ -85,32 +87,31 @@ final case class DbEpochs(spark: SparkSession, catalog: DbCatalog, db: String) {
     * that epoch, immune to concurrent loads for `KeepEpochs - 1` further
     * commits.
     */
-  def pin(): PinnedDb = current match {
+  def pin(): PinnedDb = group match {
     case None => throw new IllegalStateException(
       s"no epoch committed for $db yet — run a verified cycle first")
-    case Some((e, w)) => PinnedDb(this, e, w, tablesAt(e).getOrElse(throw new IllegalStateException(
-      s"epoch $e of $db was written by an older engine — re-pin after the next verified cycle")))
+    case Some(g) if AtomicPointer.read(conf, keptPath(g.version)).exists(!_.startsWith("{")) =>
+      throw new IllegalStateException(
+        s"epoch ${g.version} of $db was written by an older engine — re-pin after the next verified cycle")
+    case Some(g) => PinnedDb(this, g.version, g.batchId, g.tables)
   }
 
-  /** Epoch `e`'s tables with their manifests (None = read live); None for
-    * a db manifest an older engine wrote, which names no table version.
+  /** Kept epoch `e`'s tables with their manifests (None = read live): a
+    * group manifest, or an older engine's `{"tables":[...]}`; None for a
+    * manifest from before table manifests, which names no table version.
     */
-  private def tablesAt(e: Long): Option[Seq[(String, Option[TableManifest])]] = {
-    import scala.jdk.CollectionConverters._
-    val s = AtomicPointer.read(conf, manifestPath(e)).getOrElse(
-      throw new IllegalStateException(s"epoch $e of $db has no manifest"))
-    Some(s).filter(_.startsWith("{")).map(Json.parse(_).get("tables").asScala.toSeq.map { n =>
-      n.get("name").asText -> Option(n.get("manifest")).filterNot(_.isNull).map(TableManifest.parse)
-    })
-  }
+  private def tablesAt(e: Long): Option[Seq[(String, Option[TableManifest])]] =
+    Some(AtomicPointer.read(conf, keptPath(e)).getOrElse(
+      throw new IllegalStateException(s"epoch $e of $db has no manifest")))
+      .filter(_.startsWith("{")).map(s => GroupManifest.tables(Json.parse(s)))
 
   /** Data file paths each kept epoch names, by table id: what retention
     * must not delete.
     */
   private[repl] def keptFiles: Map[String, Set[String]] =
-    current.toSeq.flatMap { case (e, _) => math.max(0L, e - KeepEpochs + 1) to e }
-      .flatMap(tablesAt(_).getOrElse(Nil)).flatMap(_._2)
-      .groupMapReduce(_.id)(_.files.map(_.path).toSet)(_ ++ _)
+    group.toSeq.flatMap(g => g.tables ++
+        (math.max(0L, g.version - KeepEpochs + 1) until g.version).flatMap(tablesAt(_).getOrElse(Nil)))
+      .flatMap(_._2).groupMapReduce(_.id)(_.files.map(_.path).toSet)(_ ++ _)
 
   /** Table `table` as epoch `epoch` recorded it. */
   private[repl] def read(epoch: Long, table: String, m: Option[TableManifest]): DataFrame = {

@@ -146,7 +146,7 @@ object ExtCopy {
             tfs.setTimes(to, st.getModificationTime, -1)
           }
         }
-        ExtCopyHooks.afterCopy(dstDir) // fault injection (no-op in production)
+        graft.util.FaultPoints.hit(graft.util.FaultPoints.ExtAfterCopy, dstDir)
       }
       if (verify && n > 0)
         failOnMismatches(spark, dstDir,
@@ -274,14 +274,4 @@ object ExtCopy {
         out.iterator
       }.toDF("rel_path")
   }
-}
-
-/** Fault-injection points for external-copy testing ([[CrashHooks]]'
-  * pattern): `afterCopy` runs once per sync that copied at least one file,
-  * with the target dir — the extVerify e2e spec installs a corruptor here
-  * to simulate a torn/corrupted copy and prove a digest mismatch fails the
-  * load BEFORE the watermark commits, then heals on the next cycle.
-  */
-private[repl] object ExtCopyHooks {
-  @volatile var afterCopy: String => Unit = _ => ()
 }

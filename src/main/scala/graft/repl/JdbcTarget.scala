@@ -1,5 +1,6 @@
 package graft.repl
 
+import graft.util.FaultPoints
 import java.sql.{Connection, DriverManager, SQLException}
 import java.util.Properties
 import org.apache.hadoop.fs.Path
@@ -140,7 +141,7 @@ final case class JdbcTarget(spark: SparkSession, url: String,
   override def writeTable(db: String, table: String, df: DataFrame): Unit = {
     graft.sources.Jdbc.write(df, endpoint, qt(db, table), mode = "overwrite",
       batchSize = batchSize, props = props, colTypes = stringColTypes(df))
-    JdbcTargetHooks.afterWriteTable(db, table) // fault injection (no-op in prod)
+    FaultPoints.hit(FaultPoints.JdbcAfterWriteTable, table)
   }
 
   /** No physical partition plane: the partition column stores as an
@@ -308,9 +309,9 @@ final case class JdbcTarget(spark: SparkSession, url: String,
       mode = "overwrite", batchSize = batchSize, props = props,
       colTypes = stringColTypes(upserts))
     val colList = upserts.schema.fieldNames.map(q).mkString(", ")
-    // fault injection (no-op in production): the worst endpoint-crash
-    // window — staged data landed, merge transaction not yet opened
-    JdbcTargetHooks.beforeMergeTxn(db, table)
+    // the worst endpoint-crash window: staged data landed, merge
+    // transaction not yet opened
+    FaultPoints.hit(FaultPoints.JdbcBeforeMergeTxn, table)
     // Merge cost comes free from the endpoint's own update counts — no
     // extra query. Bytes/partitions are the endpoint's plane, not ours.
     val inserted = withConn { c =>
@@ -420,20 +421,6 @@ final case class JdbcTarget(spark: SparkSession, url: String,
 
   override def extTablePath(db: String, table: String): Option[String] =
     extRoot.map(r => new Path(new Path(r, db), table).toString)
-}
-
-/** Fault-injection points for endpoint-chaos testing ([[CrashHooks]]'
-  * pattern; production values are no-ops). `afterWriteTable` fires after
-  * each bootstrap/DDL table write; `beforeMergeTxn` fires after an
-  * incremental merge's staging writes and before its transaction opens —
-  * the windows where an endpoint crash hurts most. The chaos spec installs
-  * killers here to shut the Derby engine down mid-load and prove the
-  * failure is clean (no watermark commit, no partial state past it) and
-  * the retry converges after the endpoint reboots.
-  */
-private[repl] object JdbcTargetHooks {
-  @volatile var afterWriteTable: (String, String) => Unit = (_, _) => ()
-  @volatile var beforeMergeTxn: (String, String) => Unit = (_, _) => ()
 }
 
 object JdbcTarget {

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.operators.{Dedup, TextAnalysis}
 import graft.operators.Dedup.LshIndex
-import graft.util.DeltaView
+import graft.util.{DeltaView, Frames}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -38,8 +38,8 @@ import org.apache.spark.sql.types._
   *     graft.operators.Curation.domainCap]]); an ingest cap necessarily
   *     admits by arrival — both are documented contracts, and the
   *     spec's batch reference replays arrival order;
-  *  7. commit: accepted docs append to the docs view; their set/band
-  *     rows append to the index views.
+  *  7. commit: accepted docs append to the docs view and their set/band
+  *     rows to the index views, in ONE group commit.
   *
   * The df-cap universe `ok` is a FROZEN parameter (built once from a
   * bootstrap corpus — [[Dedup.lshIndexBuild]]`.ok`), the same
@@ -48,27 +48,12 @@ import org.apache.spark.sql.types._
   * their build-time universe, and corpus churn big enough to shift df
   * statistics is a nightly full rebuild.
   *
-  * THREE coupled views, ONE batchId — crash-window contract: the docs
-  * view commits FIRST; a crash between commits replays the batch, the
-  * committed docs view no-ops, and the set/band appenders re-derive the
-  * batch's accepted ids as `batch ∩ docs view` (deterministic), so every
-  * interleaving converges to the same three views. Probes during first
-  * processing read the set/band views at the PREVIOUS batch's state —
-  * consistent, because they only ever lag within the in-flight batch.
+  * THREE coupled views, ONE commit: docs, sets and bands are one
+  * [[DeltaView.Group]], so a batch lands in all three views or in none,
+  * under one writer lock and one replay guard, and a crash leaves every
+  * view at the previous batch. Probes read the set/band views at the
+  * previous batch's state, the same state the docs gate reads.
   */
-
-/** Fault-injection for the coupled-view crash-window spec (the
-  * [[graft.repl.CrashHooks]] recipe on the streaming plane): called with
-  * a window label after each of the three view commits of a curation
-  * batch. Production value is a no-op; the forked victim JVM parks here
-  * so the parent can SIGKILL it BETWEEN view commits and prove the
-  * documented crash-window contract (replay converges to the sequential
-  * reference) by test, not by argument.
-  */
-private[graft] object StreamCrashHooks {
-  @volatile var afterViewCommit: String => Unit = _ => ()
-}
-
 object CurationStream {
 
   val DocsSchema: StructType = StructType(Seq(
@@ -86,9 +71,6 @@ object CurationStream {
   val BandsSchema: StructType = StructType(
     StructField("doc", LongType) +: StructField("band", IntegerType) +:
       (0 until bandSlots).map(bandField))
-
-  private def empty(spark: SparkSession, schema: StructType): DataFrame =
-    graft.util.Frames.empty(spark, schema)
 
   /** Stages 1+2+4's batch side: per-row gates fused into one scan pass,
     * in-batch exact dedup, LSH artifacts under the frozen universe,
@@ -162,37 +144,25 @@ object CurationStream {
       .select(col("doc_id"), col("source"), col("hash"))
   }
 
-  /** Accepted ids of THIS batch, re-derivable on any replay path:
-    * batch ∩ docs view on (doc_id, hash) — the hash term matters: a
-    * REUSED id with different content (producer bug) is rejected by the
-    * docs commit, and matching on the id alone would classify it accepted
-    * here and append a rejected document's set/band rows whenever the
-    * original admission left no set rows.
-    */
-  private def acceptedOf(e2: DataFrame, docsNow: DataFrame): DataFrame =
-    e2.select(col("doc_id").as("doc"), col("hash"))
-      .join(docsNow.select(col("doc_id").as("doc"), col("hash")),
-        Seq("doc", "hash"))
-      .select(col("doc"))
-
-  private def dvDocs(spark: SparkSession, dir: String, k: Int) =
-    DeltaView(spark, s"$dir/docs", Seq("doc_id"), compactEvery = k)
-  private def dvSets(spark: SparkSession, dir: String, k: Int) =
-    DeltaView(spark, s"$dir/sets", Seq("doc"), compactEvery = k)
-  private def dvBands(spark: SparkSession, dir: String, k: Int) =
-    DeltaView(spark, s"$dir/bands", Seq("doc"), compactEvery = k)
+  /** The docs, sets and bands views, committed as one group. */
+  private[streaming] def views(spark: SparkSession, dir: String, k: Int = 8) =
+    DeltaView.Group(spark, dir, Seq(
+      DeltaView(spark, s"$dir/docs", Seq("doc_id"), compactEvery = k),
+      DeltaView(spark, s"$dir/sets", Seq("doc"), compactEvery = k),
+      DeltaView(spark, s"$dir/bands", Seq("doc"), compactEvery = k)))
 
   /** The curated corpus (doc_id, source, hash); empty before any commit. */
   def readDocsDelta(spark: SparkSession, dir: String): DataFrame =
-    dvDocs(spark, dir, 8).read().getOrElse(empty(spark, DocsSchema))
+    views(spark, dir).read().head.getOrElse(Frames.empty(spark, DocsSchema))
 
+  /** (batchId, version, docs base version), None before any commit. */
   def committedDelta(spark: SparkSession,
                      dir: String): Option[(Long, Long, Long)] =
-    dvDocs(spark, dir, 8).committed
+    views(spark, dir).committed
 
   /** Apply one micro-batch of documents (doc_id, text, source): the full
-    * gate stack, then three idempotent commits — [[applySignedBatchDelta]]
-    * with every row an insert. Each commit ships only the batch's ACCEPTED
+    * gate stack, then one idempotent group commit — [[applySignedBatchDelta]]
+    * with every row an insert. The commit ships only the batch's ACCEPTED
     * rows — O(batch), not O(corpus) — with periodic compaction.
     */
   def applyBatchDelta(spark: SparkSession, dir: String, ok: DataFrame,
@@ -220,22 +190,17 @@ object CurationStream {
     * retractions ([[Dedup.lshIndexRetract]]'s contract): surviving
     * signatures remain valid, and a retracted doc provably never again
     * matches a probe (its set/band rows are tombstoned in the same
-    * commit).
-    *
-    * Crash-window convergence (the object doc's contract): docs commits
-    * first; replays re-derive accepted ids as `batch ∩ docs view` and
-    * re-ship the same delete keys, so every interleaving converges to the
-    * same three views.
+    * commit). The docs the commit inserts are the accepted set: the
+    * set/band views get exactly their rows.
     */
   def applySignedBatchDelta(spark: SparkSession, dir: String, ok: DataFrame,
                             batch: DataFrame, batchId: Long, capN: Long,
                             n: Int = 3, threshold: Double = 0.5,
                             compactEvery: Int = 8): Unit = {
-    val (vDocs, vSets, vBands) = (dvDocs(spark, dir, compactEvery),
-      dvSets(spark, dir, compactEvery), dvBands(spark, dir, compactEvery))
-    Dedup.ensureBandingStamp(spark, dir, vDocs.committed.isDefined)
-    if (Seq(vDocs.committed, vSets.committed, vBands.committed)
-        .forall(_.exists(_._1 >= batchId))) return
+    val group = views(spark, dir, compactEvery)
+    val cur = group.committed
+    Dedup.ensureBandingStamp(spark, dir, cur.isDefined)
+    if (cur.exists(_._1 >= batchId)) return
 
     val dels = batch.filter(col("op") === "D")
       .select(col("doc_id")).distinct().cache()
@@ -247,33 +212,19 @@ object CurationStream {
       def minus(df: DataFrame, key: String) =
         df.join(broadcast(dels.select(col("doc_id").as("_del"))),
           col(key) === col("_del"), "left_anti")
-      // probes and the cap read the POST-DELETE state
-      val index = LshIndex(ok,
-        minus(vSets.read().getOrElse(empty(spark, SetsSchema)), "doc"),
-        minus(vBands.read().getOrElse(empty(spark, BandsSchema)), "doc"))
-
-      vDocs.applyBatch(batchId) { cur =>
-        val docsV = minus(cur.getOrElse(empty(spark, DocsSchema)), "doc_id")
-        (admit(docsV, index, reps, capN, n, threshold), dels)
-      }
-      StreamCrashHooks.afterViewCommit("docs")
-
-      val accepted = acceptedOf(e2, readDocsDelta(spark, dir))
-        .localCheckpoint() // consumed by both appenders
-      val delDocs = dels.withColumnRenamed("doc_id", "doc")
-      // the re-insert guard reads the POST-DELETE view: a doc id deleted
-      // and re-admitted in THIS batch must get fresh set/band rows (the
-      // pre-delete view still holds its dying rows and would veto them)
-      vSets.applyBatch(batchId) { cur =>
-        val v = minus(cur.getOrElse(empty(spark, SetsSchema)), "doc")
-        (sets.join(accepted, "doc")
-          .join(v.select(col("doc")), Seq("doc"), "left_anti"), delDocs)
-      }
-      StreamCrashHooks.afterViewCommit("sets")
-      vBands.applyBatch(batchId) { cur =>
-        val v = minus(cur.getOrElse(empty(spark, BandsSchema)), "doc")
-        (bands.join(accepted, "doc")
-          .join(v.select(col("doc")), Seq("doc"), "left_anti"), delDocs)
+      group.applyBatch(batchId) { case Seq(docsCur, setsCur, bandsCur) =>
+        // probes and the cap read the POST-DELETE state
+        val index = LshIndex(ok,
+          minus(setsCur.getOrElse(Frames.empty(spark, SetsSchema)), "doc"),
+          minus(bandsCur.getOrElse(Frames.empty(spark, BandsSchema)), "doc"))
+        val docsV = minus(docsCur.getOrElse(Frames.empty(spark, DocsSchema)), "doc_id")
+        // admitted ids are new to the docs view, so none has set/band rows;
+        // checkpointed once, it feeds all three writes
+        val accepted = admit(docsV, index, reps, capN, n, threshold).localCheckpoint()
+        val acc = accepted.select(col("doc_id").as("doc"))
+        val delDocs = dels.withColumnRenamed("doc_id", "doc")
+        Seq((accepted, dels), (sets.join(acc, "doc"), delDocs),
+          (bands.join(acc, "doc"), delDocs))
       }: Unit
     } finally { e2.unpersist(); sets.unpersist(); dels.unpersist() }
   }

@@ -5,7 +5,6 @@ import graft.util.{AtomicPointer, DeltaView, Frames}
 import graft.util.TextPrep.tokens
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Always-on BM25 POSTINGS maintenance — the text-retrieval member of the
@@ -13,16 +12,15 @@ import org.apache.spark.sql.types._
   * [[MediaDedupStream]], curated corpus [[CurationStream]]): a stream of
   * SIGNED document rows (op ∈ I/D, doc_id, text) maintains the inverted
   * postings index that [[TextAnalysis.bm25TopKServed]] serves from, as
-  * two coupled [[DeltaView]]s — so retrieval keeps serving fresh
+  * two coupled [[DeltaView]]s committed as one group — so retrieval keeps serving fresh
   * documents without the nightly full `bm25IndexFor` rebuild, and
   * takedowns leave the index as if the document never existed.
   *
-  * State (one directory, one batchId across both views):
+  * State (one directory, one group commit per batch across both views):
   *  - `docs/`     — (doc, dl, hash): one row per live document; the
-  *    id-uniqueness invariant, the corpus stats source (N = count,
+  *    id-uniqueness invariant and the corpus stats source (N = count,
   *    avgdl = sum(dl)/N — both exact integers/long-sums, so identical
-  *    to a from-scratch scan at any partitioning), and the replay
-  *    anchor (the CurationStream `batch ∩ docs view` recipe);
+  *    to a from-scratch scan at any partitioning);
   *  - `postings/` — (term, doc, dl, tf, tb): the q156 layout, keyed by
   *    `doc` (a document's postings live and die together — "modify" is
   *    delete+reinsert), compacted bases partitioned by
@@ -34,11 +32,10 @@ import org.apache.spark.sql.types._
   * batch works — the [[CurationStream.applySignedBatchDelta]] contract);
   * in-batch duplicate ids keep ONE row deterministically (smallest text
   * md5 — the media maintainer's smallest-fingerprint rule); a re-used
-  * live id is rejected (id uniqueness is an index invariant). The docs
-  * view commits FIRST; the postings appender re-derives the batch's
-  * accepted ids as `batch ∩ docs view` on (doc, hash), so a crash
-  * between the two commits converges on replay (PostingsStreamSpec
-  * aborts in the window via [[StreamCrashHooks]] and proves it).
+  * live id is rejected (id uniqueness is an index invariant). The
+  * accepted documents go to both views in ONE group commit
+  * ([[DeltaView.Group]]): a crash leaves both views old or both new, and
+  * the replay guard is the group's.
   *
   * Serving ([[bm25TopKDelta]]): exactly [[TextAnalysis.bm25TopKServed]]'s
   * machinery — query-term buckets collected control-plane side with the
@@ -113,18 +110,16 @@ object PostingsStream {
     }
   }
 
-  private def dvDocs(spark: SparkSession, dir: String, k: Int) =
-    DeltaView(spark, s"$dir/docs", Seq("doc"), compactEvery = k)
-  private def dvPost(spark: SparkSession, dir: String, k: Int) =
-    DeltaView(spark, s"$dir/postings", Seq("doc"), compactEvery = k,
-      basePartitionCols = Seq("tb"))
-
-  private def empty(spark: SparkSession, schema: StructType): DataFrame =
-    Frames.empty(spark, schema)
+  /** The docs and postings views, committed as one group. */
+  private[streaming] def views(spark: SparkSession, dir: String, k: Int = 8) =
+    DeltaView.Group(spark, dir, Seq(
+      DeltaView(spark, s"$dir/docs", Seq("doc"), compactEvery = k),
+      DeltaView(spark, s"$dir/postings", Seq("doc"), compactEvery = k,
+        basePartitionCols = Seq("tb"))))
 
   /** Live documents (doc, dl, hash); empty before any commit. */
   def readDocsDelta(spark: SparkSession, dir: String): DataFrame =
-    dvDocs(spark, dir, 8).read().getOrElse(empty(spark, DocsSchema))
+    views(spark, dir).read().head.getOrElse(Frames.empty(spark, DocsSchema))
       .select(col("doc").cast("long"), col("dl").cast("long"), col("hash"))
 
   /** Live postings (term, doc, dl, tf, tb); empty before any commit.
@@ -132,13 +127,14 @@ object PostingsStream {
     * bases — pin the published schema regardless of file kind.
     */
   def readPostingsDelta(spark: SparkSession, dir: String): DataFrame =
-    dvPost(spark, dir, 8).read().getOrElse(empty(spark, PostingsSchema))
+    views(spark, dir).read()(1).getOrElse(Frames.empty(spark, PostingsSchema))
       .select(col("term"), col("doc").cast("long"), col("dl").cast("long"),
         col("tf").cast("long"), col("tb").cast("int"))
 
+  /** (batchId, version, docs base version), None before any commit. */
   def committedDelta(spark: SparkSession,
                      dir: String): Option[(Long, Long, Long)] =
-    dvDocs(spark, dir, 8).committed
+    views(spark, dir).committed
 
   /** A batch's postings rows — the EXACT `bm25IndexFor` build expressions
     * (same tokenizer, same tf groupBy, same bucket hash), evaluated over
@@ -161,12 +157,10 @@ object PostingsStream {
                             batch: DataFrame, batchId: Long,
                             nBuckets: Int = 64,
                             compactEvery: Int = 8): Unit = {
-    val (vDocs, vPost) = (dvDocs(spark, dir, compactEvery),
-      dvPost(spark, dir, compactEvery))
-    ensurePostingsStamp(spark, dir, nBuckets,
-      stateExists = vDocs.committed.isDefined)
-    if (Seq(vDocs.committed, vPost.committed)
-        .forall(_.exists(_._1 >= batchId))) return
+    val group = views(spark, dir, compactEvery)
+    val cur = group.committed
+    ensurePostingsStamp(spark, dir, nBuckets, stateExists = cur.isDefined)
+    if (cur.exists(_._1 >= batchId)) return
 
     val dels = batch.filter(col("op") === "D")
       .select(col("doc_id").cast("long").as("doc")).distinct().cache()
@@ -182,31 +176,16 @@ object PostingsStream {
       .cache()
     try {
       if (ins.isEmpty && dels.isEmpty) return // idle trigger: no commits
-      def minus(df: DataFrame) =
-        df.join(broadcast(dels.select(col("doc").as("_del"))),
-          col("doc") === col("_del"), "left_anti")
-
-      // docs view FIRST: inserts gate against the post-delete live set
-      vDocs.applyBatch(batchId) { cur =>
-        val live = minus(cur.getOrElse(empty(spark, DocsSchema)))
-        val acc = ins.join(live.select(col("doc")), Seq("doc"), "left_anti")
-          .select(col("doc"), size(tokens(col("text"))).cast("long").as("dl"),
-            col("hash"))
-        (acc, dels)
-      }
-      StreamCrashHooks.afterViewCommit("postings-docs")
-
-      // accepted ids re-derived from the COMMITTED docs view on
-      // (doc, hash) — replay-stable, and a re-used id with different
-      // content classifies rejected (the CurationStream recipe)
-      val accepted = ins.join(
-        readDocsDelta(spark, dir).select(col("doc"), col("hash")),
-        Seq("doc", "hash"), "left_semi")
-      vPost.applyBatch(batchId) { cur =>
-        val v = minus(cur.getOrElse(empty(spark, PostingsSchema)))
-        (postingsOf(accepted, nBuckets)
-          .join(v.select(col("doc")).distinct(), Seq("doc"), "left_anti"),
-         dels)
+      group.applyBatch(batchId) { case Seq(docsCur, _) =>
+        // inserts gate against the post-delete live set; an accepted id is
+        // new to the docs view, so it has no postings to guard against
+        val live = docsCur.getOrElse(Frames.empty(spark, DocsSchema))
+          .join(broadcast(dels.select(col("doc").as("_del"))),
+            col("doc") === col("_del"), "left_anti")
+        val accepted = ins.join(live.select(col("doc")), Seq("doc"), "left_anti")
+        Seq((accepted.select(col("doc"),
+            size(tokens(col("text"))).cast("long").as("dl"), col("hash")), dels),
+          (postingsOf(accepted, nBuckets), dels))
       }: Unit
     } finally { ins.unpersist(); dels.unpersist() }
   }
@@ -220,7 +199,7 @@ object PostingsStream {
                     nBuckets: Int = 64): DataFrame = {
     import spark.implicits._
     ensurePostingsStamp(spark, dir, nBuckets,
-      stateExists = dvDocs(spark, dir, 8).committed.isDefined)
+      stateExists = views(spark, dir).committed.isDefined)
     val allTerms = queries.flatMap(_._2.toLowerCase.trim.split(" +")).distinct
     // bucket ids via the SAME expression as the writer (driver-side
     // reimplementation would silently drift)
@@ -234,21 +213,5 @@ object PostingsStream {
       .agg(count(lit(1)).cast("double").as("n"),
         (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
     TextAnalysis.bm25ScorePostings(post, stats, queries, k, k1, b, nSalts)
-  }
-
-  /** Maintain the postings index continuously from a streaming signed
-    * frame with columns (op, doc_id, text).
-    */
-  def postingsStreamDelta(docs: DataFrame, dir: String,
-                          checkpointDir: String, nBuckets: Int = 64,
-                          compactEvery: Int = 8): StreamingQuery = {
-    val spark = docs.sparkSession
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applySignedBatchDelta(spark, dir, batch, batchId, nBuckets,
-          compactEvery)
-      }
-      .start()
   }
 }

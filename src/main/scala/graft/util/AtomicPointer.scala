@@ -5,9 +5,9 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Options, 
   RawLocalFileSystem}
 import java.nio.charset.StandardCharsets
 
-/** One-line pointer files with an ATOMIC commit — the primitive under both
-  * the replication watermark ([[graft.repl.MetadataStore]]) and the
-  * streamed-view pointer ([[DeltaView]]).
+/** One-line pointer files with an ATOMIC commit — the primitive under the
+  * replication watermark ([[graft.repl.MetadataStore]]) and every
+  * manifest commit ([[Manifests]]).
   *
   * Commit writes `<name>.tmp` then renames over the target with
   * `Options.Rename.OVERWRITE` (atomic on HDFS and the local fs) — there is
@@ -39,14 +39,15 @@ object AtomicPointer {
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream(64)
-        val chunk = new Array[Byte](256)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        Some(buf.toString(StandardCharsets.UTF_8).trim)
-      } finally in.close()
+      try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8).trim) finally in.close()
     }
+  }
+
+  /** Write `payload` to `tmp`, a temp file beside the pointer. */
+  private def writeTemp(fs: FileSystem, tmp: Path, payload: String): Unit = {
+    fs.mkdirs(tmp.getParent)
+    val out = fs.create(tmp, true)
+    try out.write(payload.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 
   /** Atomically replace the pointer's payload (write temp + overwrite
@@ -54,10 +55,8 @@ object AtomicPointer {
     */
   def commit(conf: Configuration, p: Path, payload: String): Unit = {
     val fs = fsOf(conf, p)
-    fs.mkdirs(p.getParent)
     val tmp = new Path(p.getParent, p.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(payload.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    writeTemp(fs, tmp, payload)
     fs match {
       case raw: RawLocalFileSystem =>
         if (!raw.rename(tmp, p)) throw new java.io.IOException(s"pointer commit failed: $tmp -> $p")
@@ -68,35 +67,32 @@ object AtomicPointer {
   }
 
   /** CREATE-EXCLUSIVE commit: atomically install the payload only if no
-    * pointer exists yet — write a writer-unique temp, then rename WITHOUT
-    * overwrite, which fails iff the destination already exists. Returns
-    * true iff this writer won. Two concurrent first-committers thus
-    * cannot both believe they stamped ([[graft.operators.EmbeddingIndex
-    * .ensureIndexStamp]]'s first-commit race): exactly one rename
-    * succeeds, and the loser re-reads the winner's value and fails its
-    * own validation loudly instead of running a batch under a stamp that
-    * no longer matches.
+    * pointer exists yet. Returns true iff this writer won. Two concurrent
+    * first-committers thus cannot both believe they stamped
+    * ([[graft.operators.EmbeddingIndex.ensureIndexStamp]]'s first-commit
+    * race): exactly one install succeeds, and the loser re-reads the
+    * winner's value and fails its own validation loudly instead of running
+    * a batch under a stamp that no longer matches.
+    *
+    * The payload goes to a writer-unique temp first. On the local
+    * filesystem the install is a hard link (link(2)), which fails iff the
+    * name is taken and forks nothing; elsewhere it is a rename WITHOUT
+    * overwrite. Either way the temp is gone afterwards.
     */
   def commitExclusive(conf: Configuration, p: Path, payload: String): Boolean = {
-    val fs = p.getFileSystem(conf)
-    fs.mkdirs(p.getParent)
-    val tmp = new Path(p.getParent,
-      s"${p.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(payload.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    val fc = FileContext.getFileContext(fs.getUri, conf)
+    val fs = fsOf(conf, p)
+    val tmp = new Path(p.getParent, s"${p.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+    writeTemp(fs, tmp, payload)
     try {
-      fc.rename(fs.makeQualified(tmp), fs.makeQualified(p), Options.Rename.NONE)
+      fs match {
+        case raw: RawLocalFileSystem =>
+          java.nio.file.Files.createLink(raw.pathToFile(p).toPath, raw.pathToFile(tmp).toPath)
+        case _ => FileContext.getFileContext(fs.getUri, conf)
+          .rename(fs.makeQualified(tmp), fs.makeQualified(p), Options.Rename.NONE)
+      }
       true
     } catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-           _: java.nio.file.FileAlreadyExistsException |
-           _: java.io.IOException =>
-        // rename refused: someone else won. Clean our temp and report.
-        fs.delete(tmp, false)
-        if (!fs.exists(p)) throw new java.io.IOException(
-          s"commitExclusive: rename to $p failed but no pointer exists")
-        false
-    }
+      case _: java.io.IOException if fs.exists(p) => false // someone else won
+    } finally fs.delete(tmp, false)
   }
 }

@@ -1,5 +1,6 @@
 package graft.repl
 
+import graft.util.FaultPoints
 import org.apache.spark.sql.SparkSession
 
 /** Forked-JVM victim for the kill-9 crash test: replays an incremental
@@ -18,9 +19,11 @@ object CrashVictim {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    CrashHooks.beforeCommit = _ => {
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(root, "_inwindow"))
-      Thread.sleep(600000) // park: the parent kill -9s us here
+    FaultPoints.install { (point, _) =>
+      if (point == FaultPoints.TableBeforeCommit) {
+        java.nio.file.Files.createFile(java.nio.file.Paths.get(root, "_inwindow"))
+        Thread.sleep(600000) // park: the parent kill -9s us here
+      }
     }
     val target = DbCatalog(spark, s"$root/tgt")
     Load(spark, target,

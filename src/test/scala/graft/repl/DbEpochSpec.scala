@@ -1,6 +1,7 @@
 package graft.repl
 
 import graft.SparkSpec
+import graft.util.FaultPoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -129,6 +130,46 @@ class DbEpochSpec extends SparkSpec {
     assert(rows(epochs.pin().readTable("t")) == Set(1L -> "v2"))
   }
 
+  test("an older engine's <epoch>,<watermark> pointer still pins, and the next cycle upgrades it") {
+    import graft.util.AtomicPointer
+    import org.apache.hadoop.fs.Path
+    val conf = spark.sparkContext.hadoopConfiguration
+    val cat = DbCatalog(spark, tmp("legacy"), epochMode = true)
+    cat.createDb("db")
+    cat.writeTable("db", "t", kv(1L -> "v0"))
+    val epochsDir = new Path(cat.dbPath("db"), "_epochs")
+    val epochs = DbEpochs(spark, cat, "db")
+    // epoch 0 as the engine before group manifests wrote it
+    AtomicPointer.commit(conf, new Path(epochsDir, "manifest_v0"),
+      s"""{"tables":[{"name":"t","manifest":${cat.manifest("db", "t").get.json}}]}""")
+    AtomicPointer.commit(conf, new Path(epochsDir, "CURRENT"), "0,7")
+    assert(epochs.current.contains((0L, 7L)))
+    val pinned0 = epochs.pin()
+    assert(pinned0.tables == Seq("t") && rows(pinned0.readTable("t")) == Set(1L -> "v0"))
+    // a table write keeps the files epoch 0 names; the commit upgrades the pointer
+    cat.mergeDml("db", "t", kv(1L -> "v1"), Seq("1").toDF("key"))
+    assert(rows(pinned0.readTable("t")) == Set(1L -> "v0"))
+    assert(epochs.commit(8L) == 1L)
+    assert(AtomicPointer.read(conf, new Path(epochsDir, "CURRENT")).exists(_.startsWith("{")))
+    assert(rows(epochs.pin().readTable("t")) == Set(1L -> "v1"))
+    assert(rows(pinned0.readTable("t")) == Set(1L -> "v0"), "within grace")
+
+    // db manifests from before table manifests (table names only) name no
+    // table version: pin refuses them by name, writes and the next commit go on
+    val old = DbCatalog(spark, tmp("legacy0"), epochMode = true)
+    old.createDb("db")
+    old.writeTable("db", "t", kv(1L -> "v0"))
+    val oldDir = new Path(old.dbPath("db"), "_epochs")
+    Seq("manifest_v0", "manifest_v1").foreach(f => AtomicPointer.commit(conf, new Path(oldDir, f), "t"))
+    AtomicPointer.commit(conf, new Path(oldDir, "CURRENT"), "1,9")
+    val oldEpochs = DbEpochs(spark, old, "db")
+    assert(intercept[IllegalStateException](oldEpochs.pin()).getMessage
+      .contains("epoch 1 of db was written by an older engine"))
+    old.mergeDml("db", "t", kv(1L -> "v1"), Seq("1").toDF("key"))
+    assert(oldEpochs.commit(10L) == 2L)
+    assert(rows(oldEpochs.pin().readTable("t")) == Set(1L -> "v1"))
+  }
+
   test("commit points: a crash before or after a table's manifest commit converges to the no-crash twin") {
     import DbCatalog._
     import org.apache.hadoop.fs.Path
@@ -207,12 +248,12 @@ class DbEpochSpec extends SparkSpec {
       }
       val txn = crash.source.currentTxnId("db")
       var fired = false
-      val hook: String => Unit = t => if (t == table && !fired) {
-        fired = true; throw new RuntimeException(s"injected crash: $point")
-      }
-      if (after) CrashHooks.afterCommit = hook else CrashHooks.beforeCommit = hook
-      val run = try scala.util.Try(crash.job.run("db"))
-      finally { CrashHooks.beforeCommit = _ => (); CrashHooks.afterCommit = _ => () }
+      val at = if (after) FaultPoints.TableAfterCommit else FaultPoints.TableBeforeCommit
+      val run = FaultPoints.during { (p, t) =>
+        if (p == at && t == table && !fired) {
+          fired = true; throw new RuntimeException(s"injected crash: $point")
+        }
+      }(scala.util.Try(crash.job.run("db")))
       assert(fired, point)
       if (inLoad) assert(run.get.verify == "SUCCESS" && run.get.attempts == 2, point)
       else {

@@ -74,17 +74,14 @@ class ExtCopySpec extends SparkSpec {
     // it, deletes the bad replica (self-heal), and fails retryably
     Thread.sleep(20)
     write(s"$root/src/a.txt", "alpha-v2")
-    ExtCopyHooks.afterCopy = dir => {
-      val p = Paths.get(s"$dir/a.txt")
-      Files.writeString(p, "XXXXX-v2") // same length, different bytes
-    }
-    try {
-      val e = intercept[IllegalStateException] {
-        ExtCopy.sync(spark, s"$root/src", s"$root/dst", verify = true)
-      }
-      assert(e.getMessage.contains("a.txt"))
-      assert(!Files.exists(Paths.get(s"$root/dst/a.txt"))) // self-healed
-    } finally ExtCopyHooks.afterCopy = _ => ()
+    val e = graft.util.FaultPoints.during { (point, dir) =>
+      if (point == graft.util.FaultPoints.ExtAfterCopy)
+        Files.writeString(Paths.get(s"$dir/a.txt"), "XXXXX-v2") // same length, different bytes
+    }(intercept[IllegalStateException] {
+      ExtCopy.sync(spark, s"$root/src", s"$root/dst", verify = true)
+    })
+    assert(e.getMessage.contains("a.txt"))
+    assert(!Files.exists(Paths.get(s"$root/dst/a.txt"))) // self-healed
     // the retry (corruption gone) converges
     val (c4, _) = ExtCopy.sync(spark, s"$root/src", s"$root/dst", verify = true)
     assert(c4 == 1)

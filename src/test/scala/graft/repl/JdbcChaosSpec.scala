@@ -1,6 +1,7 @@
 package graft.repl
 
 import graft.{SparkSpec, Tables}
+import graft.util.FaultPoints
 import java.sql.{DriverManager, SQLException}
 import org.apache.spark.sql.functions._
 
@@ -25,11 +26,6 @@ class JdbcChaosSpec extends SparkSpec {
     catch { case _: SQLException => () } // 08006 = shutdown succeeded
   }
 
-  private def resetHooks(): Unit = {
-    JdbcTargetHooks.afterWriteTable = (_, _) => ()
-    JdbcTargetHooks.beforeMergeTxn = (_, _) => ()
-  }
-
   test("endpoint dies mid-bootstrap: clean failure, no watermark, rerun converges") {
     val url = diskUrl("chaosboot")
     val db = "cb1"
@@ -52,12 +48,12 @@ class JdbcChaosSpec extends SparkSpec {
     // kill-and-reboot path is exercised by the mid-incremental test below,
     // where the merge path's timing is single-windowed.)
     val killed = new java.util.concurrent.atomic.AtomicInteger
-    JdbcTargetHooks.afterWriteTable = (_, _) => {
-      killed.incrementAndGet()
-      throw new SQLException("connection lost: endpoint unreachable", "08006")
-    }
-    try intercept[Exception] { job.run(db) }
-    finally resetHooks()
+    FaultPoints.during { (point, _) =>
+      if (point == FaultPoints.JdbcAfterWriteTable) {
+        killed.incrementAndGet()
+        throw new SQLException("connection lost: endpoint unreachable", "08006")
+      }
+    }(intercept[Exception] { job.run(db) })
     assert(killed.get >= 1)
     // clean failure: nothing committed a watermark over the partial state
     assert(target.watermark(db).isEmpty)
@@ -96,14 +92,14 @@ class JdbcChaosSpec extends SparkSpec {
       Event("region", OpUpsert, "0", """{"r_regionkey":0,"r_name":"CHAOS-R"}"""),
       Event("nation", OpUpsert, "0", """{"n_nationkey":0,"n_name":"CHAOS-N","n_regionkey":0}""")))
     val kills = new java.util.concurrent.atomic.AtomicInteger
-    JdbcTargetHooks.beforeMergeTxn = (_, table) =>
-      if (kills.incrementAndGet() == 2) {
+    // the retry loop reconnects (rebooting the endpoint), re-stages both
+    // tables idempotently, and the SAME RUN converges on attempt 2
+    val r = FaultPoints.during { (point, table) =>
+      if (point == FaultPoints.JdbcBeforeMergeTxn && kills.incrementAndGet() == 2) {
         killDb(url)
         throw new SQLException(s"connection lost merging $table", "08006")
       }
-    // the retry loop reconnects (rebooting the endpoint), re-stages both
-    // tables idempotently, and the SAME RUN converges on attempt 2
-    val r = try job.run(db) finally resetHooks()
+    }(job.run(db))
     assert(r.kind == "incremental" && r.verify == "SUCCESS")
     assert(kills.get >= 2) // the crash really fired
     assert(target.readTable(db, "region")

@@ -1,6 +1,7 @@
 package graft.repl
 
 import graft.SparkSpec
+import graft.util.FaultPoints
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
@@ -577,28 +578,6 @@ class ReplicationSpec extends SparkSpec {
 
   test("an incremental cycle's Spark jobs grow by at most 2 per touched table") {
     import DbCatalog._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val marker = "graft-job-count-marker"
-    // Every job started while `body` runs. Listener events arrive in order,
-    // so once a marker job's start is seen, every earlier start has been.
-    def jobsDuring(body: => Unit): Int = {
-      val sc = spark.sparkContext
-      val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = seen.put(
-          Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-            .getOrElse(""))
-      }
-      sc.addSparkListener(listener)
-      try {
-        body
-        sc.setJobDescription(marker)
-        try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-        Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
-          .takeWhile { d => assert(d != null, "marker job never seen"); d != marker }
-          .size
-      } finally sc.removeSparkListener(listener)
-    }
     // Production single-replica settings: maintenance runs in the cycle.
     def cycleJobs(db: String, tables: Seq[String]): Int = {
       val root = tmpRoot()
@@ -624,7 +603,7 @@ class ReplicationSpec extends SparkSpec {
       assert(job.run(db).verify == "SUCCESS") // warm-up
       source.appendEvents(db, delta(2))
       var verify = ""
-      val n = jobsDuring { verify = job.run(db).verify }
+      val n = graft.JobCounter.jobsDuring(spark) { verify = job.run(db).verify }
       assert(verify == "SUCCESS")
       n
     }
@@ -946,10 +925,9 @@ class ReplicationSpec extends SparkSpec {
     import DbCatalog._
     source.appendEvents("edbv", Seq(
       Event("region", OpUpsert, "0", """{"r_regionkey":0,"r_name":"XV"}""")))
-    ExtCopyHooks.afterCopy = dir =>
-      Files.writeString(Paths.get(s"$dir/p0.txt"), "v2-CORR")
-    try intercept[IllegalStateException] { job.run("edbv") }
-    finally ExtCopyHooks.afterCopy = _ => ()
+    FaultPoints.during { (p, dir) =>
+      if (p == FaultPoints.ExtAfterCopy) Files.writeString(Paths.get(s"$dir/p0.txt"), "v2-CORR")
+    }(intercept[IllegalStateException] { job.run("edbv") })
     // the digest mismatch failed the load BEFORE the watermark could
     // commit over the corrupt replica (cfg.extVerify threaded through
     // Load.syncExternal into ExtCopy.sync)

@@ -2,18 +2,16 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.operators.{Dedup, TextAnalysis}
-import graft.util.DeltaView
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Exactly-once across the COUPLED multi-view commit, proven under crash
   * injection, not by argument: CurationStream's three views (docs, sets,
-  * bands) share one batchId with a documented crash-window order (docs
-  * commits first; replays re-derive accepted ids as batch ∩ docs view).
-  * This spec SIGKILLs a real forked JVM BETWEEN view commits — in both
-  * windows — and proves the next ordinary trigger converges every view to
-  * the sequential reference (the [[graft.repl]] kill-9 merge-swap recipe
-  * applied to the streaming plane, closing the round-11 ask).
+  * bands) are one group commit. This spec SIGKILLs a real forked JVM on
+  * either side of that commit's pointer swap, proves the views are all
+  * old or all new, and proves the next ordinary trigger converges every
+  * view to the sequential reference (the [[graft.repl]] kill-9 recipe
+  * applied to the streaming plane).
   */
 class CurationCrashSpec extends SparkSpec {
 
@@ -32,13 +30,11 @@ class CurationCrashSpec extends SparkSpec {
   }
 
   private def snapshot(dir: String): (Seq[String], Seq[String], Seq[String]) = {
-    def rows(sub: String, key: Seq[String], schema: org.apache.spark.sql.types.StructType) =
-      DeltaView(spark, s"$dir/$sub", key, compactEvery = 8).read()
-        .getOrElse(graft.util.Frames.empty(spark, schema))
-        .collect().map(_.toString).toSeq.sorted
-    (rows("docs", Seq("doc_id"), CurationStream.DocsSchema),
-     rows("sets", Seq("doc"), CurationStream.SetsSchema),
-     rows("bands", Seq("doc"), CurationStream.BandsSchema))
+    val Seq(docs, sets, bands) = CurationStream.views(spark, dir).read()
+      .zip(Seq(CurationStream.DocsSchema, CurationStream.SetsSchema, CurationStream.BandsSchema))
+      .map { case (v, schema) => v.getOrElse(graft.util.Frames.empty(spark, schema))
+        .collect().map(_.toString).toSeq.sorted }
+    (docs, sets, bands)
   }
 
   private def runWindow(window: String): Unit = {
@@ -71,23 +67,27 @@ class CurationCrashSpec extends SparkSpec {
       proc.destroyForcibly(); proc.waitFor()
     } finally if (proc.isAlive) { proc.destroyForcibly(); proc.waitFor() }
 
-    // the crash left a TORN multi-view state: views up to and including
-    // `window` committed batch 0, later views never committed
-    val committedAfter = Seq("docs", "sets", "bands").map { v =>
-      v -> DeltaView(spark, s"$root/views/$v",
-        if (v == "docs") Seq("doc_id") else Seq("doc"),
-        compactEvery = 8).committed.isDefined
-    }.toMap
-    assert(committedAfter("docs"), "docs view must be committed in both windows")
-    if (window == "docs")
-      assert(!committedAfter("sets") && !committedAfter("bands"),
-        s"expected only docs committed, got $committedAfter")
+    // never torn: before the swap no view has committed, after it every
+    // view is at batch 0
+    val committed = CurationStream.views(spark, s"$root/views").read().map(_.isDefined)
+    val batch = CurationStream.committedDelta(spark, s"$root/views").map(_._1)
+    if (window == "before")
+      assert(committed == Seq(false, false, false) && batch.isEmpty,
+        s"expected no view committed, got $committed at $batch")
     else
-      assert(committedAfter("sets") && !committedAfter("bands"),
-        s"expected docs+sets committed, got $committedAfter")
+      assert(committed == Seq(true, true, true) && batch.contains(0L),
+        s"expected every view at batch 0, got $committed at $batch")
+
+    // the victim died holding the views' writer lock: age its marker past
+    // the staleness bound, as the clock would before a restarted
+    // maintainer steals it
+    val lock = new org.apache.hadoop.fs.Path(s"$root/views", graft.util.DeltaView.WriterLockFile)
+    val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.exists(lock), "the commit runs under the writer lock")
+    fs.setTimes(lock, System.currentTimeMillis() - graft.util.DeltaView.StaleMs - 60000, -1)
 
     // an ordinary replay of the SAME batch (what checkpoint recovery runs)
-    // converges the torn state
+    // converges
     val ok = okOf(d).cache()
     CurationStream.applySignedBatchDelta(spark, s"$root/views", ok,
       d.select(lit("I").as("op"), col("doc_id"), col("text"),
@@ -112,11 +112,11 @@ class CurationCrashSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ref))
   }
 
-  test("kill -9 between the docs and sets commits: replay converges") {
-    runWindow("docs")
+  test("kill -9 before the group commit: replay converges") {
+    runWindow("before")
   }
 
-  test("kill -9 between the sets and bands commits: replay converges") {
-    runWindow("sets")
+  test("kill -9 after the group commit: replay converges") {
+    runWindow("after")
   }
 }

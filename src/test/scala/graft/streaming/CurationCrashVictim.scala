@@ -1,21 +1,23 @@
 package graft.streaming
 
 import graft.operators.{Dedup, TextAnalysis}
+import graft.util.FaultPoints
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Forked-JVM victim for the coupled-view kill-9 spec: runs ONE signed
-  * curation batch over a fixture corpus but parks forever right after the
-  * view commit named by `window` ("docs" = between the docs and sets
-  * commits, "sets" = between the sets and bands commits), signalling the
-  * parent via a marker file. The parent SIGKILLs it there — a real hard
-  * crash of a real multi-view commit at its most inconsistent instant —
-  * then proves replay converges to the sequential reference.
+  * curation batch over a fixture corpus but parks forever at the group
+  * commit's fault point named by `window` ("before" = every view written,
+  * pointer not swapped; "after" = pointer swapped, retention not run),
+  * signalling the parent via a marker file. The parent SIGKILLs it there —
+  * a real hard crash of a real multi-view commit — then proves the views
+  * are all old or all new and that replay converges to the sequential
+  * reference.
   */
 object CurationCrashVictim {
   def main(args: Array[String]): Unit = {
     val root = args(0)
-    val window = args(1) // "docs" | "sets"
+    val window = args(1) // "before" | "after"
     val spark = SparkSession.builder()
       .master("local[2]")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
@@ -23,8 +25,9 @@ object CurationCrashVictim {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    StreamCrashHooks.afterViewCommit = label => {
-      if (label == window) {
+    val at = if (window == "before") FaultPoints.GroupBeforeCommit else FaultPoints.GroupAfterCommit
+    FaultPoints.install { (point, _) =>
+      if (point == at) {
         java.nio.file.Files.createFile(
           java.nio.file.Paths.get(root, "_inwindow"))
         Thread.sleep(600000) // park: the parent kill -9s us here

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.operators.{Dedup, TextAnalysis}
-import graft.util.DeltaView
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -77,7 +76,7 @@ class CurationStreamSpec extends SparkSpec {
     assert(streamed.nonEmpty)
     // the maintained index views cover only accepted docs (a doc whose
     // shingles are all df-capped has no set row — subset, not equality)
-    val setDocs = DeltaView(spark, s"$dir/sets", Seq("doc")).read().get
+    val setDocs = CurationStream.views(spark, dir).read()(1).get
       .select("doc").collect().map(_.getLong(0)).toSet
     assert(setDocs.nonEmpty && setDocs.subsetOf(streamed), setDocs.size)
   }
@@ -187,8 +186,7 @@ class CurationStreamSpec extends SparkSpec {
     val ok = Dedup.lshIndexBuild(corpus, "text", "doc_id").ok.cache()
     def docIds = CurationStream.readDocsDelta(spark, dir)
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    def setDocs = graft.util.DeltaView(spark, s"$dir/sets", Seq("doc"))
-      .read().map(_.select("doc").collect().map(_.getLong(0)).toSet)
+    def setDocs = CurationStream.views(spark, dir).read()(1).map(_.select("doc").collect().map(_.getLong(0)).toSet)
       .getOrElse(Set.empty[Long])
 
     CurationStream.applySignedBatchDelta(spark, dir, ok, corpus, 0L, capN = 100)

@@ -96,32 +96,36 @@ class PostingsStreamSpec extends SparkSpec {
     }
   }
 
-  test("crash between the docs and postings commits: replay converges") {
-    val dir = freshDir("crash")
+  test("crash before or after the group commit: replay converges") {
+    import graft.util.FaultPoints
     val d = docs.limit(200).cache()
     val batch = signed("I", d)
-    // abort INSIDE the window (docs committed, postings not) — an
-    // in-process stand-in for the forked-JVM SIGKILL the CurationCrashSpec
-    // runs; the torn on-disk state is the same
-    StreamCrashHooks.afterViewCommit = label =>
-      if (label == "postings-docs") throw new RuntimeException("boom")
-    try {
-      intercept[RuntimeException] {
-        PostingsStream.applySignedBatchDelta(spark, dir, batch, 0L)
-      }
-    } finally StreamCrashHooks.afterViewCommit = _ => ()
-    // torn: docs committed batch 0, postings never committed
-    assert(PostingsStream.committedDelta(spark, dir).exists(_._1 == 0L))
-    assert(graft.util.DeltaView(spark, s"$dir/postings", Seq("doc"))
-      .committed.isEmpty)
-    // ordinary replay converges to the clean sequential reference
-    PostingsStream.applySignedBatchDelta(spark, dir, batch, 0L)
-    val ref = freshDir("crash-ref")
-    PostingsStream.applySignedBatchDelta(spark, ref, batch, 0L)
     def snap(p: String) = PostingsStream.readPostingsDelta(spark, p)
       .select("term", "doc", "dl", "tf").collect().map(_.toString).sorted
-    assert(snap(dir).sameElements(snap(ref)))
-    assert(snap(dir).nonEmpty)
+    val ref = freshDir("crash-ref")
+    PostingsStream.applySignedBatchDelta(spark, ref, batch, 0L)
+    for (at <- Seq(FaultPoints.GroupBeforeCommit, FaultPoints.GroupAfterCommit)) {
+      val dir = freshDir("crash")
+      // abort at the point — an in-process stand-in for the forked-JVM
+      // SIGKILL the CurationCrashSpec runs; the on-disk state is the same
+      intercept[RuntimeException] {
+        FaultPoints.during { (p, label) =>
+          if (p == at && label == dir) throw new RuntimeException("boom")
+        }(PostingsStream.applySignedBatchDelta(spark, dir, batch, 0L))
+      }
+      val views = PostingsStream.views(spark, dir).read()
+      if (at == FaultPoints.GroupBeforeCommit) {
+        assert(PostingsStream.committedDelta(spark, dir).isEmpty, at)
+        assert(views.forall(_.isEmpty), at)
+      } else {
+        assert(PostingsStream.committedDelta(spark, dir).exists(_._1 == 0L), at)
+        assert(views.forall(_.nonEmpty), at)
+      }
+      // ordinary replay converges to the clean sequential reference
+      PostingsStream.applySignedBatchDelta(spark, dir, batch, 0L)
+      assert(snap(dir).sameElements(snap(ref)), at)
+    }
+    assert(snap(ref).nonEmpty)
   }
 
   test("serving scan partition-prunes to the query terms' buckets") {

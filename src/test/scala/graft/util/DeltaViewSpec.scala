@@ -148,7 +148,7 @@ class DeltaViewSpec extends SparkSpec {
     val d = tmp("lock")
     val dv = DeltaView(spark, d, Seq("k"), compactEvery = 100)
     dv.applyBatch(0)(_ => (ins(1L -> "a"), del()))
-    val p = new org.apache.hadoop.fs.Path(d, WriterLock.MarkerName)
+    val p = new org.apache.hadoop.fs.Path(d, DeltaView.WriterLockFile)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // simulate a LIVE concurrent maintainer: fresh marker held by another id
     val other = graft.repl.Locks.acquire(fs, p, "other-maintainer", staleMs = 600000)
@@ -184,6 +184,103 @@ class DeltaViewSpec extends SparkSpec {
     assert(AtomicPointer.read(conf, pointer).contains("3,3"))
     assert(new java.io.File(d).list().filterNot(_.startsWith(".")).toSeq ==
       Seq("CURRENT"))
+    // the same for the 3-field pointer DeltaView wrote before group manifests
+    val d3 = tmp("foreign3")
+    val pointer3 = new org.apache.hadoop.fs.Path(d3, "CURRENT")
+    AtomicPointer.commit(conf, pointer3, "4,5,3")
+    def refused3(body: => Any): Unit = assert(intercept[IllegalStateException](
+      body).getMessage.contains("a 3-field pointer is a DeltaView directory from before group manifests"))
+    refused3(graft.streaming.ViewMaintenance.readViewDelta(spark, d3))
+    refused3(graft.streaming.ViewMaintenance.applyBatchDelta(spark, d3,
+      Seq(("I", "A", 1.0)).toDF("op", "key", "measure"), 6L))
+    assert(AtomicPointer.read(conf, pointer3).contains("4,5,3"))
+    assert(new java.io.File(d3).list().filterNot(_.startsWith(".")).toSeq ==
+      Seq("CURRENT"))
+
+    // coupled-view dirs from before group manifests: each view had its own
+    // 3-field pointer (`docs/CURRENT`), and the dir's stamp still matches
+    def files(g: String): Set[String] = {
+      val root = java.nio.file.Paths.get(g)
+      val walk = java.nio.file.Files.walk(root)
+      try scala.jdk.CollectionConverters.IteratorHasAsScala(walk.iterator()).asScala.map(root.relativize(_).toString)
+        .filterNot(_.split('/').last.startsWith(".")).toSet
+      finally walk.close()
+    }
+    def legacy(tag: String, stamp: String, value: String)(calls: (String => Any)*): Unit = {
+      val g = tmp(tag)
+      AtomicPointer.commit(conf, new org.apache.hadoop.fs.Path(g, stamp), value)
+      AtomicPointer.commit(conf, new org.apache.hadoop.fs.Path(s"$g/docs", "CURRENT"), "4,5,3")
+      val before = files(g)
+      calls.foreach(call => refused3(call(g)))
+      assert(files(g) == before, s"$tag: nothing may be written")
+      assert(AtomicPointer.read(conf, new org.apache.hadoop.fs.Path(s"$g/docs", "CURRENT")).contains("4,5,3"))
+    }
+    import graft.streaming.{CurationStream, PostingsStream}
+    val docs = Seq(("I", 1L, "the quick brown fox", "s")).toDF("op", "doc_id", "text", "source")
+    val ok = graft.operators.Dedup.lshIndexBuild(docs, "text", "doc_id").ok
+    legacy("foreign-curation", "BANDING", graft.operators.Dedup.bandingStamp)(
+      CurationStream.readDocsDelta(spark, _),
+      CurationStream.committedDelta(spark, _),
+      CurationStream.applySignedBatchDelta(spark, _, ok, docs, 6L, capN = 10L))
+    legacy("foreign-postings", "LAYOUT", PostingsStream.postingsStamp(64))(
+      PostingsStream.readPostingsDelta(spark, _),
+      PostingsStream.committedDelta(spark, _),
+      PostingsStream.applySignedBatchDelta(spark, _, docs.drop("source"), 6L))
+  }
+
+  test("a grouped view is addressed only through its group") {
+    def group(g: String) = DeltaView.Group(spark, g,
+      Seq(DeltaView(spark, s"$g/a", Seq("k")), DeltaView(spark, s"$g/b", Seq("k"))))
+    val g = tmp("grouped")
+    assert(group(g).applyBatch(0)(_ => Seq((ins(1L -> "a"), del()), (ins(2L -> "b"), del()))))
+    assert(group(g).read().map(rows) == Seq(Set(1L -> "a"), Set(2L -> "b")))
+    // the member view on its own: refused, and no pointer of its own is made
+    def solo(body: => Any): Unit = assert(intercept[IllegalStateException](body)
+      .getMessage.contains("is a view of the group at"))
+    val member = DeltaView(spark, s"$g/a", Seq("k"))
+    solo(member.read())
+    solo(member.applyBatch(1)(_ => (ins(3L -> "c"), del())))
+    assert(!new java.io.File(s"$g/a/CURRENT").exists())
+    assert(group(g).read().map(rows) == Seq(Set(1L -> "a"), Set(2L -> "b")))
+    // the reverse: a view committed on its own is not adopted by a group
+    val g2 = tmp("grouped-solo")
+    DeltaView(spark, s"$g2/a", Seq("k")).applyBatch(0)(_ => (ins(1L -> "a"), del()))
+    assert(intercept[IllegalStateException](group(g2).read()).getMessage
+      .contains("is a view's own pointer"))
+    assert(!new java.io.File(s"$g2/CURRENT").exists())
+  }
+
+  test("building a read runs no Spark job; a curation batch is one group commit") {
+    val dv = DeltaView(spark, tmp("jobs"), Seq("k"), compactEvery = 8,
+      basePartitionCols = Seq("tb"))
+    def insT(kv: (Long, String)*) = kv.toSeq.toDF("k", "p")
+      .withColumn("tb", pmod(col("k"), lit(4)).cast("int"))
+    dv.applyBatch(0)(_ => (insT(1L -> "a", 2L -> "b", 3L -> "c"), del()))
+    dv.applyBatch(1)(_ => (insT(4L -> "d"), del(1L)))
+    dv.applyBatch(2)(_ => (insT(5L -> "e"), del()))
+    dv.applyBatch(3)(_ => (insT(1L -> "a2"), del(2L)))
+    assert(dv.committed.contains((3L, 3L, 0L))) // a tb-partitioned base + 3 deltas
+    var view: Option[DataFrame] = None
+    assert(graft.JobCounter.jobsDuring(spark) { view = dv.read() } == 0)
+    assert(rows(view) == Set(1L -> "a2", 3L -> "c", 4L -> "d", 5L -> "e"))
+
+    // CurationStream's three views: one group commit per batch, no table commit
+    val prefix = "the quick brown fox jumps over a lazy dog and runs with " +
+      "great speed to an old mill where it finds many tasty treats"
+    def docs(ids: Long*) = ids.map(i => ("I", i, prefix + " " +
+      (0 until 15).map(k => s"d${i}u$k").mkString(" "), "web"))
+      .toDF("op", "doc_id", "text", "source")
+    val ok = graft.operators.Dedup.lshIndexBuild(docs(1L, 2L, 3L), "text", "doc_id").ok.cache()
+    val cur = tmp("curation")
+    for ((batch, id) <- Seq(docs(1L, 2L), docs(3L)).zipWithIndex) {
+      val commits = scala.collection.mutable.Buffer[String]()
+      FaultPoints.during { (p, _) => commits.synchronized(commits += p) } {
+        graft.streaming.CurationStream.applySignedBatchDelta(spark, cur, ok, batch, id.toLong, capN = 100)
+      }
+      assert(commits.filter(_.endsWith("beforeCommit")) == Seq(FaultPoints.GroupBeforeCommit), id)
+    }
+    assert(graft.streaming.CurationStream.readDocsDelta(spark, cur).count() == 3)
+    ok.unpersist()
   }
 
   test("random op sequence matches the in-memory reference model") {
