@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session setup every graft main shares — the engine's form of
-  * the reference's `env.sh`, which every script sources. Test sessions
-  * (`SparkSpec`, the crash victims) keep their own deliberately small
-  * `local[n]` setups.
+/** The one session setup every graft main and the specs' shared session
+  * use — the engine's form of the reference's `env.sh`, which every script
+  * sources. Only the forked crash victims keep their own small `local[n]`
+  * setups.
   */
 object Session {
 

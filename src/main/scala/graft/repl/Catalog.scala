@@ -1,6 +1,6 @@
 package graft.repl
 
-import graft.util.{DataFile, Manifests, TableManifest}
+import graft.util.{AtomicPointer, DataFile, Manifests, TableManifest}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -357,7 +357,8 @@ final case class DbCatalog(spark: SparkSession, root: String,
 
   // ------------------------------------------------- replication target plane
   // ([[ReplTarget]] — the file-native loader: one manifest commit per table
-  // write, metadata in `_repl_metadata/` under the warehouse root)
+  // write, the watermark in the db epoch, run logs in `_repl_metadata/`
+  // under the warehouse root)
 
   override def applyRename(db: String, from: String, to: String): Unit =
     renameTableFs(db, from, to)
@@ -365,11 +366,26 @@ final case class DbCatalog(spark: SparkSession, root: String,
   override def applyTruncate(db: String, table: String): Unit =
     truncateTableFs(db, table)
 
-  private lazy val metaStore = MetadataStore(spark, root)
-  override def watermark(db: String): Option[Long] = metaStore.watermark(db)
+  /** The replica watermark (`REPL STATUS`) is the current db epoch's
+    * ([[DbEpochs]]); None = never replicated. A db with no epoch reads the
+    * `_repl_metadata/<db>/watermark` file an older engine kept, so its next
+    * cycle continues incrementally; nothing writes that file any more.
+    */
+  override def watermark(db: String): Option[Long] =
+    DbEpochs(spark, this, db).current.map(_._2).orElse(
+      AtomicPointer.read(conf, new Path(root, s"$MetaDir/$db/watermark")).map(_.toLong))
+
+  /** The watermark commit IS the db epoch commit: one pointer write
+    * publishes the loaded tables and the watermark together.
+    */
   override def commitWatermark(db: String, id: Long): Unit =
-    metaStore.commitWatermark(db, id)
-  override def logRun(r: RunReport): Unit = metaStore.logRun(r)
+    DbEpochs(spark, this, db).commit(id): Unit
+
+  /** One JSON file per run under `_repl_metadata/<db>/runs/`. */
+  override def logRun(r: RunReport): Unit = {
+    val out = fs.create(new Path(root, s"$MetaDir/${r.db}/runs/${System.nanoTime()}.json"), true)
+    try out.write(r.json.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally out.close()
+  }
 
   override def extTablePath(db: String, table: String): Option[String] =
     Some(new Path(dbPath(db), table).toString)
@@ -755,6 +771,9 @@ object DbCatalog {
     * amortizes anyway.
     */
   val LocateInlineMaxKeys = 100000
+
+  /** Warehouse-root directory of the replication run logs. */
+  val MetaDir = "_repl_metadata"
 
   /** Per-db directory of view definition files (`<name>.sql`). */
   val ViewsDir = "_views"

@@ -4,7 +4,8 @@ import graft.util.{AtomicPointer, GroupManifest, Manifests, TableManifest}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Db-LEVEL read consistency across incremental loads.
+/** A file replica's one commit point: its watermark and its db-level
+  * read consistency.
   *
   * [[Load.replay]] merges table by table, so a reader between two table
   * commits sees a TORN database — table A already at the new watermark,
@@ -15,10 +16,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * commit goes through: an epoch is ONE [[GroupManifest]] — version =
   * epoch, batchId = watermark, and each table's committed
   * [[TableManifest]] (None for a table with no manifest, an `ext_` file
-  * tree, which reads live) — committed to `<db>/_epochs/CURRENT` once per
-  * VERIFIED replication cycle ([[ReplicationJob.run]] commits it after the
-  * five-way verify). The commit first keeps the outgoing epoch as
-  * `_epochs/manifest_v<epoch>`, for readers still pinned to it.
+  * tree, which reads live) — committed to `<db>/_epochs/CURRENT`.
+  *
+  * The watermark commit is the epoch commit ([[DbCatalog.commitWatermark]]),
+  * so every path that applies a delta publishes one epoch in the same
+  * pointer write that moves the watermark: bootstrap and incremental
+  * [[Load.replay]], and each streamed batch
+  * ([[graft.streaming.StreamingReplication.applyBatch]], which
+  * [[Sweep.runPolled]] drives). The epoch's batchId IS the replica's
+  * watermark; there is no second copy to part from it. The commit first
+  * keeps the outgoing epoch as `_epochs/manifest_v<epoch>`, for readers
+  * still pinned to it.
   *
   * A pinned read is a manifest lookup: the files the epoch's table
   * manifest names, under whichever dir holds the table's id now, so a
@@ -26,7 +34,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * created by later cycles are invisible. Mid-load, a table the load
   * already merged has new files and a new manifest, but an `epochMode`
   * catalog keeps the files it superseded, so the pinned epoch still reads
-  * the pre-load state (spec: DbEpochSpec "mid-load pinned reads").
+  * the pre-load state (spec: DbEpochSpec "mid-load pinned reads"). A
+  * catalog without `epochMode` deletes superseded files at write time, so
+  * it commits epochs but refuses to pin them.
   *
   * Retention matches [[graft.util.DeltaView]]: [[DbEpochs.KeepEpochs]]
   * states stay readable. A table write deletes the superseded files no
@@ -62,9 +72,9 @@ final case class DbEpochs(spark: SparkSession, catalog: DbCatalog, db: String) {
   /** (epoch, watermark), None before the first commit. */
   def current: Option[(Long, Long)] = group.map(g => (g.version, g.batchId))
 
-  /** Publish the CURRENT live state as the next epoch: keep the outgoing
-    * epoch's manifest, commit the new one, then apply retention. Called
-    * once per verified replication cycle. Returns the new epoch.
+  /** Publish the CURRENT live state as the next epoch at `watermark`:
+    * keep the outgoing epoch's manifest, commit the new one, then apply
+    * retention. The replica's watermark commit; returns the new epoch.
     */
   def commit(watermark: Long): Long = {
     val cur = group
@@ -88,6 +98,8 @@ final case class DbEpochs(spark: SparkSession, catalog: DbCatalog, db: String) {
     * commits.
     */
   def pin(): PinnedDb = group match {
+    case _ if !catalog.epochMode => throw new IllegalStateException(
+      s"cannot pin $db: its catalog is not in epochMode, so writes delete the files an epoch names")
     case None => throw new IllegalStateException(
       s"no epoch committed for $db yet — run a verified cycle first")
     case Some(g) if AtomicPointer.read(conf, keptPath(g.version)).exists(!_.startsWith("{")) =>

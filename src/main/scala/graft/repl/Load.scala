@@ -47,7 +47,9 @@ final case class Load(spark: SparkSession, target: ReplTarget, cfg: ReplConfig) 
     * reference's retry policy (`INCR_RERUN`/`RERUN_SLEEP`,
     * `/root/reference/env.sh:24-26`); bootstrap loads do not retry
     * (`hive3repl.sh:99-100`). The watermark lives AT the target
-    * ([[ReplTarget.watermark]]) and commits LAST.
+    * ([[ReplTarget.watermark]]) and commits LAST; a file replica's
+    * watermark commit is its db epoch commit ([[DbEpochs]]), so a pinned
+    * reader sees a whole delta or none of it.
     */
   def replay(dumpPathRaw: String): LoadResult = {
     // Cross-namespace addressing: the dump lives on the SOURCE cluster's
@@ -97,7 +99,8 @@ final case class Load(spark: SparkSession, target: ReplTarget, cfg: ReplConfig) 
           m.externalTables.foreach(syncExternal(m, _))
         }
     }
-    // Commit the watermark LAST — the atomicity boundary.
+    // Commit the watermark LAST — the atomicity boundary (for a file
+    // replica, the db epoch).
     target.commitWatermark(m.db, m.toId)
     LoadResult(m, attempts, stats)
   }

@@ -35,6 +35,12 @@ object Maintenance {
     def compacted: Boolean = eventsAfter < eventsBefore
   }
 
+  /** The log maintenance can rewrite: a file-catalog source's (a remote
+    * JDBC source owns its log).
+    */
+  def logOf(source: ReplSource): Option[DbCatalog] =
+    Some(source).collect { case dc: DbCatalog => dc }
+
   /** Run the policy: compact when `events > factor × estimatedNetSize`
     * (factor ≤ 0 disables), then purge events at or below `replicaFloor`
     * (None disables; the floor must be the MIN watermark across ALL

@@ -129,9 +129,10 @@ final case class ReplConfig(
     /** Directory (any Hadoop filesystem) receiving one JSON log-file
       * artifact per run, regardless of target kind — the reference's
       * operational habit of uploading each run's log to an HDFS logs dir
-      * (`misc_functions.sh:115-149`). The run-log TABLES (file target:
-      * `_repl_metadata/<db>/runs/`; JDBC target: `graft_meta.repl_runs`)
-      * remain the queryable record; this is the ops-facing file copy.
+      * (`misc_functions.sh:115-149`). The target's own run log (file
+      * target: one JSON file per run in `_repl_metadata/<db>/runs/`; JDBC
+      * target: the `graft_meta.repl_runs` table) remains the queryable
+      * record; this is the ops-facing file copy.
       * None (default) = off.
       */
     runLogDir: Option[String] = None)
@@ -214,7 +215,7 @@ final case class RunReport(
     tableStats.sortBy(_.table).map(_.json).mkString("[", ",", "]")
 
   /** The full run record as one JSON line — the single renderer behind the
-    * engine run log ([[MetadataStore.logRun]]) and the per-run log-file
+    * engine run log ([[ReplTarget.logRun]]) and the per-run log-file
     * artifact ([[ReplicationJob]] `runLogDir`), so the formats can't drift.
     */
   def json: String =

@@ -104,7 +104,11 @@ trait ReplTarget {
     */
   def watermark(db: String): Option[Long]
 
-  /** Commit the watermark — the LAST effect of a successful load. */
+  /** Commit the watermark — the LAST effect of a successful load, and its
+    * one commit point: [[DbCatalog]] commits it as the db's next epoch
+    * ([[DbEpochs.commit]]), which publishes the loaded tables with it;
+    * [[JdbcTarget]] writes its watermark row.
+    */
   def commitWatermark(db: String, id: Long): Unit
 
   /** Append one run report to the target-resident run log. */

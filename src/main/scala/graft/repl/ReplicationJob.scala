@@ -12,6 +12,12 @@ import org.apache.spark.sql.functions._
   *   replay at target (with retries for incremental) →
   *   re-read watermark → five-way verify → run report.
   *
+  * The load's watermark commit is the cycle's one commit point: for a file
+  * replica the watermark commit is the epoch commit
+  * ([[ReplTarget.commitWatermark]]), so the replica's state becomes
+  * visible to pinned readers in the same pointer write that moves its
+  * watermark, whatever happens after it (the run log, source maintenance).
+  *
   * All beeline stdout parsing, pid locks and traps of the reference collapse
   * into typed calls, FileSystem lock markers and try/finally.
   */
@@ -63,7 +69,6 @@ final case class ReplicationJob(
       target.logRun(report)
       uploadRunLog(report)
       maintain(db, verify, postId)
-      publishEpoch(db, verify, postId)
       report
     } finally lock.release()
   }
@@ -90,23 +95,6 @@ final case class ReplicationJob(
     }
   }
 
-  /** Db-level read consistency ([[DbEpochs]]): an epoch-mode file target
-    * publishes each VERIFIED cycle as one db epoch — the pointer swap is
-    * the single instant readers observe, so a pinned reader never sees the
-    * load's per-table merge sequence mid-flight. A NOOP cycle commits only
-    * the FIRST epoch (so a freshly bootstrapped db becomes pinnable);
-    * thereafter no-op cycles leave the pointer alone.
-    */
-  private def publishEpoch(db: String, verify: VerifyResult,
-                           postId: Option[Long]): Unit = target match {
-    case dc: DbCatalog if dc.epochMode =>
-      val epochs = DbEpochs(spark, dc, db)
-      if (verify == VerifyResult.Success ||
-          (verify == VerifyResult.NoOp && epochs.current.isEmpty))
-        epochs.commit(postId.getOrElse(0L)): Unit
-    case _ => ()
-  }
-
   /** Post-success source-log maintenance ([[Maintenance]]): runs only for a
     * file-catalog source (a remote JDBC source owns its log), only after a
     * verified cycle, and under the db's dump lock so no concurrent dump
@@ -116,15 +104,13 @@ final case class ReplicationJob(
   private def maintain(db: String, verify: VerifyResult, postId: Option[Long]): Unit = {
     if (cfg.autoCompactFactor <= 0 && !cfg.autoPurge) return
     if (verify != VerifyResult.Success && verify != VerifyResult.NoOp) return
-    source match {
-      case dc: DbCatalog =>
-        val fs = new Path(dumpRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val lock = Locks.acquire(fs, new Path(dumpRoot, s"$db/dump.lock"),
-          java.util.UUID.randomUUID().toString, cfg.lockStaleMs)
-        try Maintenance.run(dc, db, cfg.autoCompactFactor,
-          if (cfg.autoPurge) postId else None)
-        finally lock.release()
-      case _ => ()
+    Maintenance.logOf(source).foreach { log =>
+      val fs = new Path(dumpRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val lock = Locks.acquire(fs, new Path(dumpRoot, s"$db/dump.lock"),
+        java.util.UUID.randomUUID().toString, cfg.lockStaleMs)
+      try Maintenance.run(log, db, cfg.autoCompactFactor,
+        if (cfg.autoPurge) postId else None)
+      finally lock.release()
     }
   }
 }

@@ -23,8 +23,8 @@ import org.apache.spark.sql.SparkSession
   *     reported; the other dbs replicate regardless — a cron fleet's
   *     independence, kept inside one process;
   *   - every attempt still lands one row in the per-db run log
-  *     ([[MetadataStore.logRun]]), so "which db last synced when" is one
-  *     scan of `_repl_metadata/<db>/runs/`.
+  *     ([[ReplTarget.logRun]]), so "which db last synced when" is one
+  *     scan of `_repl_metadata/<db>/runs/` for a file target.
   */
 final case class Sweep(spark: SparkSession, source: ReplSource,
                        target: ReplTarget, dumpRoot: String, cfg: ReplConfig) {
@@ -75,7 +75,9 @@ final case class Sweep(spark: SparkSession, source: ReplSource,
     * for the reference's per-db cron fleet (`README.md:58-62`) when "every
     * N minutes" should be "continuously". Databases must be bootstrapped
     * first (one [[run]] sweep does it); the polled stream then keeps each
-    * watermark converged. Returns the started queries in db order —
+    * watermark converged. Each applied batch commits its watermark like a
+    * cycle does, so a file replica publishes one db epoch per batch
+    * ([[DbEpochs]]). Returns the started queries in db order —
     * callers own their lifecycle (awaitTermination/stop). One-shot mode
     * drains every db once and terminates (cron catch-up / tests).
     */

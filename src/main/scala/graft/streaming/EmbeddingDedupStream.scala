@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField,
   * (op ∈ I/D, vec_id, embedding) maintains the corpus IVF cell index
   * through `foreachBatch` — the streaming form of
   * [[EmbeddingIndex.probeDedup]] (q149), completing the per-modality
-  * maintainer set (text [[StatefulDedup]], media [[MediaDedupStream]],
+  * maintainer set (text [[CurationStream]], media [[MediaDedupStream]],
   * embeddings here) on the same [[DeltaView]] idempotent-commit core.
   *
   * Per micro-batch, in order:

@@ -5,9 +5,9 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Options, 
   RawLocalFileSystem}
 import java.nio.charset.StandardCharsets
 
-/** One-line pointer files with an ATOMIC commit — the primitive under the
-  * replication watermark ([[graft.repl.MetadataStore]]) and every
-  * manifest commit ([[Manifests]]).
+/** One-line pointer files with an ATOMIC commit — the primitive under
+  * every manifest commit ([[Manifests]]), a file replica's watermark
+  * included (its db epoch, [[graft.repl.DbEpochs]]).
   *
   * Commit writes `<name>.tmp` then renames over the target with
   * `Options.Rename.OVERWRITE` (atomic on HDFS and the local fs) — there is

@@ -49,10 +49,11 @@ import org.apache.spark.sql.functions._
   * create + stale steal, the replication plane's dump lock), so a second
   * maintainer misconfigured onto the same dir fails fast with "another
   * maintainer owns this view" instead of silently racing the pointer
-  * (spec: DeltaViewSpec "writer lock"). A marker older than
-  * `writerLockStaleMs` is a crashed maintainer's and is stolen; that is
-  * safe, because the dead writer never swapped the pointer and the next
-  * commit overwrites its partial version dirs.
+  * (spec: DeltaViewSpec "writer lock"). A marker that names a dead pid on
+  * this host, or is older than `writerLockStaleMs`, is a crashed
+  * maintainer's and is stolen; that is safe, because the dead writer never
+  * swapped the pointer and the next commit overwrites its partial version
+  * dirs.
   *
   * Caller contract (what the streamed maintainers already enforce): the
   * live view's keys are UNIQUE — a batch only inserts keys that are not

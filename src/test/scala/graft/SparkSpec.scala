@@ -4,9 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs. Small partition counts keep tests
-  * fast; determinism claims are separately exercised by re-running with a
-  * different partitioning (see ExactSpec).
+/** Shared local SparkSession for specs: the mains' [[graft.Session]] on 4
+  * cores with 4 shuffle partitions, which keep tests fast; determinism
+  * claims are separately exercised by re-running with a different
+  * partitioning (see ExactSpec).
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -15,16 +16,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = graft.Session.local(
+    "spark.master" -> "local[4]", "spark.sql.shuffle.partitions" -> "4",
+    "spark.app.name" -> "graft-test")
 }

@@ -87,4 +87,22 @@ class VectorFunctionsSpec extends SparkSpec {
       .select(dotd(col("c"), col("b")).as("d")).collect()
     assert(withNull.count(_.isNullAt(0)) == 1)
   }
+
+  test("TopKAggregator equals window top-k") {
+    import spark.implicits._
+    val agg = new graft.functions.TopKAggregator(3).toColumn
+    val data = Seq(
+      (1L, 0.9, 10L), (1L, 0.8, 11L), (1L, 0.9, 9L), (1L, 0.1, 12L), (1L, 0.5, 13L),
+      (2L, 0.3, 20L), (2L, 0.7, 21L))
+      .toDF("q", "score", "id")
+    val viaAgg = data.as[(Long, Double, Long)]
+      .groupByKey(_._1)
+      .mapValues(t => (t._2, t._3))
+      .agg(agg.name("topk"))
+      .collect().toMap
+      .map { case (k, v) => k -> v.map(_._2) }
+    // expected: score desc, id asc tiebreak
+    assert(viaAgg(1L) == Seq(9L, 10L, 11L))
+    assert(viaAgg(2L) == Seq(21L, 20L))
+  }
 }

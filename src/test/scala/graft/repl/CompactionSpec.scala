@@ -163,7 +163,7 @@ class CompactionSpec extends SparkSpec {
     source.appendEvents("dbp", Seq(
       Event("region", OpUpsert, "0", """{"r_regionkey":0,"r_name":"w1"}""")))
     job.run("dbp") // replica watermark now covers event 1
-    val wm = MetadataStore(spark, target.root).watermark("dbp").get
+    val wm = target.watermark("dbp").get
     source.appendEvents("dbp", Seq(
       Event("region", OpUpsert, "1", """{"r_regionkey":1,"r_name":"w2"}""")))
 

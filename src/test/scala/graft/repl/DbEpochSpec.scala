@@ -221,36 +221,50 @@ class DbEpochSpec extends SparkSpec {
     // crash world then applies a scenario's change again before each of its
     // crashes, so that cycle's delta holds only that change. Each change is
     // idempotent, so the twin's digests are the expected state after every
-    // crash.
-    val scenarios: Seq[(String, String, Boolean, DbCatalog => Unit)] = Seq(
-      ("unpartitioned merge", "region", true,
+    // crash. A scenario names its fault points and their label: a table's
+    // dir name, or the db epochs' dir for the watermark's group commit.
+    val table = (FaultPoints.TableBeforeCommit, FaultPoints.TableAfterCommit)
+    val group = (FaultPoints.GroupBeforeCommit, FaultPoints.GroupAfterCommit)
+    val epochsDir = new Path(crash.target.dbPath("db"), "_epochs").toString
+    val scenarios: Seq[(String, (String, String), String, Boolean, DbCatalog => Unit)] = Seq(
+      ("unpartitioned merge", table, "region", true,
         upsert("region", 100L, """{"r_regionkey":100,"r_name":"R"}""")),
-      ("partitioned merge", "supplier", true,
+      ("partitioned merge", table, "supplier", true,
         upsert("supplier", 900000L, s"""{"s_suppkey":900000,"s_name":"S","s_nationkey":$nk}""")),
-      ("ALTER rewrite", "region", true, cat => {
+      ("ALTER rewrite", table, "region", true, cat => {
         val schema = cat.readTable("db", "region").schema
         cat.alterTable("db", "region", StructType(
           schema.fields.filterNot(_.name == "c1") :+ StructField("c1", LongType))): Unit
       }),
-      ("event-log purge", EventsTable, false,
-        upsert("supplier", 910000L, s"""{"s_suppkey":910000,"s_name":"P","s_nationkey":$nk}""")))
-    for ((_, _, _, change) <- scenarios; w <- Seq(crash, twin)) change(w.source)
+      ("event-log purge", table, EventsTable, false,
+        upsert("supplier", 910000L, s"""{"s_suppkey":910000,"s_name":"P","s_nationkey":$nk}""")),
+      ("db-epoch group commit", group, epochsDir, false,
+        upsert("region", 101L, """{"r_regionkey":101,"r_name":"E"}""")))
+    for ((_, _, _, _, change) <- scenarios; w <- Seq(crash, twin)) change(w.source)
     Seq(crash, twin).foreach(w => assert(w.job.run("db").verify == "SUCCESS", w.name))
     val expected = digests(twin)
-    for ((what, table, inLoad, change) <- scenarios; after <- Seq(false, true)) {
-      val point = s"$what, ${if (after) "after" else "before"} the commit"
-      change(crash.source)
+    // the replica's watermark is its epoch's: one commit point, one value
+    def oneWatermark(point: String): Unit = assert(
+      DbEpochs(spark, crash.target, "db").current.map(_._2) == crash.target.watermark("db"), point)
+    def all(df: DataFrame) = df.collect().map(_.toString).toSet
+    // pin the current epoch; the returned check asserts it still serves
+    // what it served when pinned
+    def pinNow(point: String): () => Unit = {
       val pinned = DbEpochs(spark, crash.target, "db").pin()
-      def all(df: DataFrame) = df.collect().map(_.toString).toSet
       val pre = pinned.tables.map(t => t -> all(crash.target.readTable("db", t))).toMap
-      def preImageServed(): Unit = pinned.tables.foreach { t =>
+      () => pinned.tables.foreach { t =>
         assert(all(pinned.readTable(t)) == pre(t), s"$point: pinned $t")
       }
+    }
+    for ((what, (before, afterCommit), label, inLoad, change) <- scenarios; after <- Seq(false, true)) {
+      val point = s"$what, ${if (after) "after" else "before"} the commit"
+      change(crash.source)
+      var preImageServed = pinNow(point)
       val txn = crash.source.currentTxnId("db")
       var fired = false
-      val at = if (after) FaultPoints.TableAfterCommit else FaultPoints.TableBeforeCommit
+      val at = if (after) afterCommit else before
       val run = FaultPoints.during { (p, t) =>
-        if (p == at && t == table && !fired) {
+        if (p == at && t == label && !fired) {
           fired = true; throw new RuntimeException(s"injected crash: $point")
         }
       }(scala.util.Try(crash.job.run("db")))
@@ -259,13 +273,18 @@ class DbEpochSpec extends SparkSpec {
       else {
         assert(run.isFailure, point)
         preImageServed()
-        // the purge never beheads the counter; the next append continues it
+        oneWatermark(point)
+        // no purge beheads the counter; the next append continues it
         assert(crash.source.currentTxnId("db") == txn, point)
         change(crash.source)
         assert(crash.source.currentTxnId("db") == txn + 1, point)
+        // the failed cycle may have published its epoch already: the
+        // recovery cycle is checked against a pin of what it starts from
+        preImageServed = pinNow(point)
         assert(crash.job.run("db").verify == "SUCCESS", point)
       }
       assert(digests(crash) == expected, point)
+      oneWatermark(point)
       preImageServed()
       Seq(crash.source, crash.target).foreach(c => assert(unnamed(c).isEmpty, s"$point: ${unnamed(c)}"))
     }
@@ -304,6 +323,93 @@ class DbEpochSpec extends SparkSpec {
     assert(source.readEvents("db").count() == 2L && source.currentTxnId("db") == 2L)
     assert(!target.manifest("db", "t").get.files.exists(_.path.contains("planted")))
     assert(!source.manifest("db", EventsTable).get.files.exists(_.path.contains("planted")))
+  }
+
+  /** The replica's epoch and watermark agree at `wm`, and a pin reads
+    * `post`.
+    */
+  private def oneCommitPoint(target: DbCatalog, wm: Long, post: Set[(Long, String)]): Unit = {
+    val epochs = DbEpochs(spark, target, "db")
+    val (watermark, epoch) = (target.watermark("db"), epochs.current)
+    info(s"watermark=$watermark epoch=$epoch")
+    assert(epoch.map(_._2) == watermark && watermark.contains(wm), s"watermark=$watermark epoch=$epoch")
+    assert(rows(epochs.pin().readTable("t")) == post)
+  }
+
+  private def world(tag: String, autoPurge: Boolean = false) = {
+    val root = tmp(tag)
+    val source = DbCatalog(spark, s"$root/src")
+    val target = DbCatalog(spark, s"$root/tgt", epochMode = true)
+    source.createDb("db")
+    source.writeTable("db", "t", kv(1L -> "v1", 2L -> "v2"))
+    val job = ReplicationJob(spark, source, target, s"$root/dumps",
+      ReplConfig(dumpRoot = s"$root/dumps", rerunSleepMs = 10, autoPurge = autoPurge))
+    assert(job.run("db").verify == "SUCCESS") // bootstrap: epoch 0 at watermark 0
+    (root, source, target, job)
+  }
+
+  private def upsertT(k: Long, v: String) =
+    DbCatalog.Event("t", DbCatalog.OpUpsert, k.toString, s"""{"k":$k,"v":"$v"}""")
+
+  test("a failed purge after a verified load leaves the epoch at the load's watermark") {
+    val (_, source, target, job) = world("purgefail", autoPurge = true)
+    source.appendEvents("db", Seq(upsertT(2L, "v2new"), upsertT(3L, "v3")))
+    val run = FaultPoints.during { (p, t) =>
+      if (p == FaultPoints.TableBeforeCommit && t == DbCatalog.EventsTable)
+        throw new RuntimeException("injected purge failure")
+    }(scala.util.Try(job.run("db")))
+    assert(run.isFailure)
+    assert(job.run("db").verify == "NOOP")
+    oneCommitPoint(target, 2L, Set(1L -> "v1", 2L -> "v2new", 3L -> "v3"))
+  }
+
+  test("a polled stream into an epoch-mode replica publishes each applied batch as an epoch") {
+    val (root, source, target, _) = world("polled")
+    source.appendEvents("db", Seq(upsertT(2L, "v2new")))
+    val q = graft.streaming.StreamingReplication.replicatePolled(
+      spark, source, target, "db", s"$root/ckpt")
+    q.awaitTermination(60000); q.stop()
+    oneCommitPoint(target, 1L, Set(1L -> "v1", 2L -> "v2new"))
+  }
+
+  test("upgrade: the old watermark file is read, never written, and the epoch wins") {
+    import graft.util.AtomicPointer
+    import org.apache.hadoop.fs.Path
+    val conf = spark.sparkContext.hadoopConfiguration
+    for (epochBehind <- Seq(false, true)) {
+      val (_, source, target, job) = world(s"upgrade-$epochBehind")
+      source.appendEvents("db", Seq(upsertT(2L, "v2new")))
+      assert(job.run("db").verify == "SUCCESS") // epoch 1 at watermark 1
+      // what an engine with a separate watermark file left: the file at 1,
+      // and either no epoch or one a failed purge left behind (epoch 0)
+      val legacy = new Path(target.root, "_repl_metadata/db/watermark")
+      AtomicPointer.commit(conf, legacy, "1")
+      val epochsDir = new Path(target.dbPath("db"), "_epochs")
+      if (epochBehind) AtomicPointer.commit(conf, new Path(epochsDir, "CURRENT"),
+        AtomicPointer.read(conf, new Path(epochsDir, "manifest_v0")).get)
+      else epochsDir.getFileSystem(conf).delete(epochsDir, true)
+      val from = if (epochBehind) 0L else 1L
+      assert(target.watermark("db").contains(from), s"epochBehind=$epochBehind")
+
+      source.appendEvents("db", Seq(upsertT(3L, "v3")))
+      val r = job.run("db")
+      assert(r.kind == "incremental" && r.verify == "SUCCESS" && r.fromId == from && r.toId == 2L,
+        s"epochBehind=$epochBehind: $r")
+      assert(AtomicPointer.read(conf, new Path(epochsDir, "CURRENT")).exists(_.startsWith("{")))
+      assert(AtomicPointer.read(conf, legacy).contains("1"), "the old watermark file is never written")
+      oneCommitPoint(target, 2L, Set(1L -> "v1", 2L -> "v2new", 3L -> "v3"))
+    }
+  }
+
+  test("a catalog without epochMode commits its watermark as an epoch and refuses to pin it") {
+    val cat = DbCatalog(spark, tmp("plain"))
+    cat.createDb("db")
+    cat.writeTable("db", "t", kv(1L -> "v1"))
+    cat.commitWatermark("db", 5L)
+    assert(cat.watermark("db").contains(5L))
+    assert(DbEpochs(spark, cat, "db").current.contains((0L, 5L)))
+    val e = intercept[IllegalStateException](DbEpochs(spark, cat, "db").pin())
+    assert(e.getMessage.contains("not in epochMode"), e.getMessage)
   }
 
   test("end-to-end: a verified replication cycle publishes one epoch") {

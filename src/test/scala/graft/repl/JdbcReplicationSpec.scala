@@ -160,8 +160,7 @@ class JdbcReplicationSpec extends SparkSpec {
     val target = DbCatalog(spark, s"$root/tgt")
     val cfg = ReplConfig(dumpRoot = s"$root/dumps", rerunSleepMs = 10)
     ReplicationJob(spark, source, target, s"$root/dumps", cfg).run(db) // bootstrap
-    val meta = MetadataStore(spark, target.root)
-    val wm1 = meta.watermark(db).get
+    val wm1 = target.watermark(db).get
 
     // new remote events; one polled AvailableNow pass must drain past them
     graft.sources.Jdbc.write(eventsDf(Seq(
@@ -174,14 +173,14 @@ class JdbcReplicationSpec extends SparkSpec {
     val reg = target.readTable(db, "region")
     assert(reg.where(col("r_regionkey") === 1 && col("r_name") === "S1").count() == 1)
     assert(reg.where(col("r_regionkey") === 2).isEmpty)
-    assert(meta.watermark(db).contains(3L))
-    assert(meta.watermark(db).get > wm1)
+    assert(target.watermark(db).contains(3L))
+    assert(target.watermark(db).get > wm1)
 
     // a second pass with nothing new leaves rows and watermark untouched
     val q2 = graft.streaming.StreamingReplication.replicatePolled(
       spark, source, target, db, s"$root/ckpt2")
     q2.awaitTermination(60000); q2.stop()
-    assert(meta.watermark(db).contains(3L))
+    assert(target.watermark(db).contains(3L))
     assert(target.readTable(db, "region").count() == reg.count())
   }
 }

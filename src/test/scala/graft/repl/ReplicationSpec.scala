@@ -115,21 +115,20 @@ class ReplicationSpec extends SparkSpec {
     val (root, source, target, job) = freshWorld()
     seedDb(source, "dbo")
     job.run("dbo") // bootstrap
-    val meta = MetadataStore(spark, target.root)
     val cfg = ReplConfig(dumpRoot = s"$root/dumps", rerunSleepMs = 10, incrRerun = 1)
     val dumper = Dump(spark, source, s"$root/dumps", cfg)
     val loader = Load(spark, target, cfg)
     // two consecutive deltas; try to apply only the SECOND one
     source.appendEvents("dbo", Seq(Event("nation", OpUpsert, "25",
       """{"n_nationkey":25,"n_name":"A","n_regionkey":1}""")))
-    val w0 = meta.watermark("dbo").get
+    val w0 = target.watermark("dbo").get
     val d1 = dumper.incremental("dbo", w0)
     source.appendEvents("dbo", Seq(Event("nation", OpUpsert, "26",
       """{"n_nationkey":26,"n_name":"B","n_regionkey":1}""")))
     val d2 = dumper.incremental("dbo", d1.txnId)
     val e = intercept[IllegalStateException] { loader.replay(d2.path) }
     assert(e.getMessage.contains("out-of-order"), e.getMessage)
-    assert(meta.watermark("dbo").contains(w0)) // untouched
+    assert(target.watermark("dbo").contains(w0)) // untouched
     // applying in order still works and converges: both upserts land
     loader.replay(d1.path)
     loader.replay(d2.path)
@@ -184,7 +183,6 @@ class ReplicationSpec extends SparkSpec {
     val cfg = ReplConfig(dumpRoot = s"$root/dumps", rerunSleepMs = 10)
     val dump = Dump(spark, source, s"$root/dumps", cfg).incremental("db4", 0L)
     val loader = Load(spark, target, cfg)
-    val meta = MetadataStore(spark, target.root)
     loader.replay(dump.path)
     val once = rowSet(target.readTable("db4", "region"))
     loader.replay(dump.path) // replay same dump again
@@ -640,6 +638,30 @@ class ReplicationSpec extends SparkSpec {
     val stolen = Locks.tryAcquire(fs, lockPath, "new-runner", staleMs = 10)
     assert(stolen.isDefined)
     stolen.get.release()
+
+    // a marker reads <owner>@<host>:<pid>; only a dead pid on this host is
+    // taken before its mtime goes stale
+    val host = java.net.InetAddress.getLocalHost.getHostName
+    val reaped = new ProcessBuilder("true").start()
+    reaped.waitFor()
+    def plant(marker: String): Unit = {
+      val out = fs.create(lockPath, true)
+      try out.write(marker.getBytes("UTF-8")) finally out.close()
+    }
+    def take(): Option[Locks.Lock] = Locks.tryAcquire(fs, lockPath, "next-runner", staleMs = 60000)
+    plant(s"killed-runner@$host:${reaped.pid()}")
+    val taken = take()
+    assert(taken.isDefined, "a dead local owner's lock is taken at once")
+    taken.get.release()
+    plant(s"live-runner@$host:${ProcessHandle.current().pid()}")
+    assert(take().isEmpty, "this JVM's own pid is alive")
+    plant(s"remote-runner@elsewhere.example:${reaped.pid()}")
+    assert(take().isEmpty, "another host's pid says nothing here")
+    fs.setTimes(lockPath, System.currentTimeMillis() - 120000, -1)
+    val late = take()
+    assert(late.isDefined, "another host's lock is stolen once its mtime is stale")
+    late.get.release()
+    assert(!fs.exists(lockPath))
   }
 
   test("db allowlist enforced") {
@@ -720,9 +742,8 @@ class ReplicationSpec extends SparkSpec {
     fs.mkdirs(new Path(dead, "tables/region"))
     val cfg = ReplConfig(dumpRoot = s"$root/dumps", rerunSleepMs = 10)
     val loader = Load(spark, target, cfg)
-    val meta = MetadataStore(spark, target.root)
     intercept[Exception](loader.replay(dead.toString))
-    assert(meta.watermark("db11").isEmpty) // nothing committed
+    assert(target.watermark("db11").isEmpty) // nothing committed
     val job = ReplicationJob(spark, source, target, s"$root/dumps", cfg)
     assert(job.run("db11").verify == "SUCCESS")
   }
@@ -734,22 +755,21 @@ class ReplicationSpec extends SparkSpec {
     import DbCatalog._
     val cfg = ReplConfig(dumpRoot = s"$root/dumps", rerunSleepMs = 10)
     val loader = Load(spark, target, cfg)
-    val meta = MetadataStore(spark, target.root)
     source.appendEvents("db12", Seq(
       Event("region", OpUpsert, "2", """{"r_regionkey":2,"r_name":"ASIA-v1"}""")))
     val d1 = Dump(spark, source, s"$root/dumps", cfg).incremental("db12", 0L)
     loader.replay(d1.path)
-    val wm1 = meta.watermark("db12").get
+    val wm1 = target.watermark("db12").get
     source.appendEvents("db12", Seq(
       Event("region", OpUpsert, "2", """{"r_regionkey":2,"r_name":"ASIA-v2"}""")))
     val d2 = Dump(spark, source, s"$root/dumps", cfg).incremental("db12", wm1)
     loader.replay(d2.path)
-    val wm2 = meta.watermark("db12").get
+    val wm2 = target.watermark("db12").get
     assert(wm2 > wm1)
     // Re-applying the STALE d1 must not overwrite v2 with the old v1
     // payload, and must not regress the watermark to d1.toId.
     assert(loader.replay(d1.path).attempts == 0) // skipped, not replayed
-    assert(meta.watermark("db12").contains(wm2))
+    assert(target.watermark("db12").contains(wm2))
     assert(rowSet(target.readTable("db12", "region")).exists(_.contains("ASIA-v2")))
   }
 
@@ -823,8 +843,7 @@ class ReplicationSpec extends SparkSpec {
     val (root, source, target, job) = freshWorld()
     seedDb(source, "db15")
     job.run("db15") // bootstrap
-    val meta = MetadataStore(spark, target.root)
-    val wm0 = meta.watermark("db15").get
+    val wm0 = target.watermark("db15").get
     import DbCatalog._
     source.appendEvents("db15", Seq(
       Event("region", OpUpsert, "0", """{"r_regionkey":0,"r_name":"AFRICA-K9"}""")))
@@ -865,7 +884,7 @@ class ReplicationSpec extends SparkSpec {
       target.manifest("db15", "region").get.files.map(_.path)
     assert(orphans.nonEmpty)
     assert(target.readTable("db15", "region").where(col("r_name") === "AFRICA-K9").isEmpty)
-    assert(meta.watermark("db15").contains(wm0))
+    assert(target.watermark("db15").contains(wm0))
 
     // An ordinary next cycle (what cron would run) recovers and converges.
     val r = job.run("db15")
@@ -915,8 +934,7 @@ class ReplicationSpec extends SparkSpec {
     write(s"$root/src/edbv/ext_logs/p0.txt", "v1")
     assert(job.run("edbv").verify == "SUCCESS") // clean verified bootstrap
     assert(Files.readString(Paths.get(s"$root/tgt/edbv/ext_logs/p0.txt")) == "v1")
-    val meta = MetadataStore(spark, target.root)
-    val wm1 = meta.watermark("edbv").get
+    val wm1 = target.watermark("edbv").get
 
     // new external content + a managed event; every copy of this cycle is
     // corrupted in flight (torn transfer) by the fault-injection hook
@@ -931,13 +949,13 @@ class ReplicationSpec extends SparkSpec {
     // the digest mismatch failed the load BEFORE the watermark could
     // commit over the corrupt replica (cfg.extVerify threaded through
     // Load.syncExternal into ExtCopy.sync)
-    assert(meta.watermark("edbv").contains(wm1))
+    assert(target.watermark("edbv").contains(wm1))
     // self-heal deleted the corrupt replica; the next cycle re-copies,
     // verifies green, and commits
     val r = job.run("edbv")
     assert(r.verify == "SUCCESS")
     assert(Files.readString(Paths.get(s"$root/tgt/edbv/ext_logs/p0.txt")) == "v2-good")
-    assert(meta.watermark("edbv").get > wm1)
+    assert(target.watermark("edbv").get > wm1)
   }
 
   test("dump manifest round-trips quoted db and table names") {
@@ -977,9 +995,8 @@ class ReplicationSpec extends SparkSpec {
     // key (strip it from the manifest json, as an old engine wrote it)
     Thread.sleep(20)
     write(s"$root/src/edbm/ext_logs/p0.txt", "m2")
-    val meta = MetadataStore(spark, target.root)
     val d = Dump(spark, source, s"$root/dumps", cfg)
-      .incremental("edbm", meta.watermark("edbm").get)
+      .incremental("edbm", target.watermark("edbm").get)
     // rewrite through the Hadoop fs (keeps the .crc sidecar consistent)
     val mPath = new Path(d.path, Dump.ManifestFile)
     val mfs = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)

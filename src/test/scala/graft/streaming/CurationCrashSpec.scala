@@ -78,13 +78,11 @@ class CurationCrashSpec extends SparkSpec {
       assert(committed == Seq(true, true, true) && batch.contains(0L),
         s"expected every view at batch 0, got $committed at $batch")
 
-    // the victim died holding the views' writer lock: age its marker past
-    // the staleness bound, as the clock would before a restarted
-    // maintainer steals it
+    // the victim died holding the views' writer lock; its marker names a
+    // reaped pid on this host, so the replay takes it at once
     val lock = new org.apache.hadoop.fs.Path(s"$root/views", graft.util.DeltaView.WriterLockFile)
-    val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(lock), "the commit runs under the writer lock")
-    fs.setTimes(lock, System.currentTimeMillis() - graft.util.DeltaView.StaleMs - 60000, -1)
+    assert(lock.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(lock),
+      "the commit runs under the writer lock")
 
     // an ordinary replay of the SAME batch (what checkpoint recovery runs)
     // converges

@@ -81,122 +81,6 @@ class StreamingSpec extends SparkSpec {
     assert(target.watermark("idb") == wmOnce, "watermark must not regress or advance")
   }
 
-  test("streaming hourly aggregate over a file stream matches the batch result") {
-    // Event-time ops need TIMESTAMP (tz-aware), not NTZ — cast up front
-    // (session tz is UTC so the instant is unchanged).
-    val events = Tables(spark, sf()).events
-      .withColumn("ts", col("ts").cast("timestamp")).cache()
-    // Stage events as a parquet dir and stream it with AvailableNow.
-    val dir = java.nio.file.Files.createTempDirectory("graft-ev").toString
-    events.write.mode("overwrite").parquet(s"$dir/in")
-    val stream = spark.readStream.schema(events.schema).parquet(s"$dir/in")
-      .withWatermark("ts", "1 hour")
-    val q = EventStreams.hourlyByType(stream).writeStream
-      .format("memory").queryName("hourly_stream")
-      .outputMode("complete")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-
-    val streamed = spark.table("hourly_stream")
-      .select(col("hour").cast("string"), col("event_type"), col("n"))
-      .collect().map(_.toString).toSet
-    val batch = EventStreams.hourlyByType(events)
-      .select(col("hour").cast("string"), col("event_type"), col("n"))
-      .collect().map(_.toString).toSet
-    assert(streamed == batch)
-  }
-
-  test("stream-static enrichment join matches the batch join") {
-    val events = Tables(spark, sf()).events
-      .withColumn("ts", col("ts").cast("timestamp")).cache()
-    val dim = events.select(col("user_id")).distinct()
-      .withColumn("segment", col("user_id") % 4)
-      .cache()
-    val dir = java.nio.file.Files.createTempDirectory("graft-enr").toString
-    events.write.mode("overwrite").parquet(s"$dir/in")
-    val stream = spark.readStream.schema(events.schema).parquet(s"$dir/in")
-    val q = EventStreams.enrich(stream, dim, "user_id")
-      .groupBy(col("segment")).agg(count(lit(1)).as("n"))
-      .writeStream.format("memory").queryName("enr_stream")
-      .outputMode("complete")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val streamed = spark.table("enr_stream").collect().map(_.toString).toSet
-    val batch = EventStreams.enrich(events, dim, "user_id")
-      .groupBy(col("segment")).agg(count(lit(1)).as("n"))
-      .collect().map(_.toString).toSet
-    assert(streamed == batch)
-  }
-
-  test("stream-stream interval join matches the batch join") {
-    val events = Tables(spark, sf()).events
-      .withColumn("ts", col("ts").cast("timestamp")).cache()
-    val dir = java.nio.file.Files.createTempDirectory("graft-ssj").toString
-    events.filter(col("event_type") === "view").write.parquet(s"$dir/views")
-    events.filter(col("event_type") === "click").write.parquet(s"$dir/clicks")
-    def read(p: String) =
-      spark.readStream.schema(events.schema).parquet(s"$dir/$p")
-        .withWatermark("ts", "2 hours")
-    val q = EventStreams.attributedClicks(read("views"), read("clicks"))
-      .writeStream.format("memory").queryName("attr_stream")
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val streamed = spark.table("attr_stream").collect().map(_.toString).toSet
-    val batch = EventStreams.attributedClicks(
-        events.filter(col("event_type") === "view"),
-        events.filter(col("event_type") === "click"))
-      .collect().map(_.toString).toSet
-    assert(batch.nonEmpty, "no view→click attributions in the fixture")
-    assert(streamed == batch)
-  }
-
-  test("dropDuplicatesWithinWatermark removes re-deliveries with bounded state") {
-    val events = Tables(spark, sf()).events
-      .withColumn("ts", col("ts").cast("timestamp")).limit(200).cache()
-    val dir = java.nio.file.Files.createTempDirectory("graft-dd").toString
-    // simulate an at-least-once source: every event delivered twice
-    events.union(events).write.parquet(s"$dir/in")
-    val stream = spark.readStream.schema(events.schema).parquet(s"$dir/in")
-      .withWatermark("ts", "1 hour")
-    val q = EventStreams.dedupWithinWatermark(stream)
-      .writeStream.format("memory").queryName("dedup_stream")
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val ids = spark.table("dedup_stream").select("event_id")
-      .collect().map(_.getLong(0))
-    assert(ids.length == ids.distinct.length, "duplicates survived")
-    assert(ids.length == events.count(), "legitimate events were dropped")
-  }
-
-  test("session windows bound state and match gap semantics") {
-    val events = Tables(spark, sf()).events
-    val sessions = EventStreams.sessionize(events).cache()
-    // session count per user must equal the batch q21 computation
-    val bySession = sessions.groupBy("user_id")
-      .agg(count(lit(1)).as("n_sessions"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val tsUs = unix_micros(col("ts").cast("timestamp"))
-    val prevUs = lag(tsUs, 1).over(w)
-    val batch = events
-      .select(col("user_id"), col("ts"), col("event_id"),
-        when(prevUs.isNull || tsUs - prevUs > 1800000000L, 1).otherwise(0).as("is_new"))
-      .groupBy("user_id").agg(sum("is_new").as("n_sessions"))
-    val diff = bySession.as("a").join(batch.as("b"), "user_id")
-      .filter(col("a.n_sessions") =!= col("b.n_sessions")).count()
-    assert(diff == 0)
-  }
-
   test("microsecond-vintage events replicate end-to-end through replicatePolled") {
     // Round 7 proved a generator vintage change can break every events
     // consumer at once. This case drives the CURRENT (microsecond
