@@ -85,16 +85,8 @@ object BenchScale {
       val e = Tables(spark, dir).embeddings
       val cent = EmbeddingIndex.seedCentroids(e, "embedding", "vec_id", 16)
         .cache()
-      val assigned = EmbeddingIndex.assignCells(e, cent, "embedding", "vec_id")
-        .select(col("vec_id").cast("long"), col("cell").cast("long"),
-          col("v").cast("array<double>"))
-      // direct bootstrap bypasses the maintainer, so stamp the dir the
-      // way the maintainer's first commit would (flat router + quantizer)
-      EmbeddingIndex.ensureIndexStamp(spark, root, cent,
-        EmbeddingIndex.FlatRouter, stateExists = false)
-      graft.util.DeltaView(spark, root, Seq("vec_id"), compactEvery = 1000,
-          basePartitionCols = Seq("cell"))
-        .applyBatch(0L)(_ => (assigned, e.limit(0).select(col("vec_id"))))
+      EmbeddingDedupStream.bootstrapDelta(spark, root, cent, e,
+        EmbeddingIndex.FlatRouter)
       val batch = e.filter(col("vec_id") % 10 === 1 && col("vec_id") < 2000)
         .select(lit("I").as("op"), (col("vec_id") + 10000000L).as("vec_id"),
           transform(col("embedding"), x => -x).as("embedding"))
@@ -695,22 +687,14 @@ object BenchScale {
           "vec_id", nCells = 16 * scale).cache()
         val root = java.nio.file.Files
           .createTempDirectory("graft-ivfs").toString
-        // bootstrap the index DIRECTLY (assignCells → one commit, which
-        // compacts into the cell-partitioned base — the idx_commit
-        // convention): routing the whole corpus through applyBatchDelta
+        // bootstrap the index with no dedup (bootstrapDelta: assignCells →
+        // one commit, which compacts into the cell-partitioned base — the
+        // idx_commit convention): routing the whole corpus through applyBatchDelta
         // would pay the in-batch dominance self-join (~4 min at 100×)
         // whose GC debris then contaminates the timed probe (measured:
         // 10.9 s in-row vs 1.9 s clean-JVM at 100× before this change)
-        EmbeddingIndex.ensureIndexStamp(spark, root, cent,
-          EmbeddingIndex.FlatRouter, stateExists = false)
-        graft.util.DeltaView(spark, root, Seq("vec_id"), compactEvery = 1,
-            basePartitionCols = Seq("cell"))
-          .applyBatch(0L) { _ =>
-            (EmbeddingIndex.assignCells(corpus, cent, "embedding", "vec_id")
-              .select(col("vec_id").cast("long"), col("cell").cast("long"),
-                col("v").cast("array<double>")),
-             e.limit(0).select(col("vec_id")))
-          }
+        EmbeddingDedupStream.bootstrapDelta(spark, root, cent, corpus,
+          EmbeddingIndex.FlatRouter)
         val batch = e.filter(isBatch).select("vec_id", "embedding")
         // best-of-2: the serving tier is warm by definition, and
         // probeDelta caches nothing between calls (the second run re-lists

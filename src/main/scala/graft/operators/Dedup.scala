@@ -492,10 +492,10 @@ object Dedup {
     * the round-10 full-range-multiplier family fix) silently invalidates
     * every stored signature/band row: band keys stop colliding and probes
     * return wrong emptiness instead of an error. Maintainers of persisted
-    * LSH state ([[graft.streaming.CurationStream]]) stamp this string into
-    * the state directory on first commit and call [[ensureBandingStamp]]
-    * on every open, so a mismatch fails loudly with "rebuild required"
-    * instead of a schema/join failure.
+    * LSH state ([[graft.streaming.CurationStream]]) commit this string as
+    * the layout of their group manifest ([[graft.util.DeltaView.Group]]),
+    * so a mismatch fails loudly with "rebuild required" instead of a
+    * schema/join failure.
     */
   val bandingStamp: String = {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -504,30 +504,6 @@ object Dedup {
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .take(6).map("%02x".format(_)).mkString
     s"k=$MinHashK,bands=$MinHashBands,family=$fp"
-  }
-
-  /** Validate (or, on a fresh directory, record) the banding stamp of a
-    * persisted LSH state directory. `stateExists` = the caller has already
-    * committed state there: an EXISTING but unstamped directory predates
-    * the stamp (or was built by a foreign writer) and also fails — its
-    * signatures cannot be trusted against the current family.
-    */
-  def ensureBandingStamp(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, stateExists: Boolean): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(dir, "BANDING")
-    graft.util.AtomicPointer.read(conf, p) match {
-      case Some(s) if s == bandingStamp => ()
-      case Some(s) => throw new IllegalStateException(
-        s"banding mismatch, rebuild required: $dir was built under '$s' " +
-        s"but the engine is '$bandingStamp' — stored signatures/band keys " +
-        "are not comparable across LSH configurations")
-      case None if stateExists => throw new IllegalStateException(
-        s"$dir has committed LSH state but no BANDING stamp — built by a " +
-        s"pre-stamp engine or a foreign writer; rebuild required " +
-        s"(engine is '$bandingStamp')")
-      case None => graft.util.AtomicPointer.commit(conf, p, bandingStamp)
-    }
   }
 
   /** MinHash signatures as one `sig` array column per doc, computed by the

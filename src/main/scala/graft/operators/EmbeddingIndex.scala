@@ -52,11 +52,11 @@ object EmbeddingIndex {
     * oracle-replayable default); Hier routes two-level at n·2√k (the
     * cells-∝-n build regime). Store and probe must agree: a hier-built
     * index probed flat pays the measured router-mismatch recall tax
-    * (0.855 vs 0.957 @ nProbe=4, EmbeddingIndexSpec). Maintainers stamp
-    * the router (with the quantizer digest) into the index directory via
-    * [[ensureIndexStamp]] and the serving probe dispatches FROM the stamp
-    * ([[graft.streaming.EmbeddingDedupStream.probeDelta]]), so the
-    * consistency contract is enforced, not documented.
+    * (0.855 vs 0.957 @ nProbe=4, EmbeddingIndexSpec). Maintainers commit
+    * the router (with the quantizer digest) as the index's layout
+    * ([[indexLayout]]) and the serving probe dispatches FROM it
+    * ([[committedRouter]], [[graft.streaming.EmbeddingDedupStream.probeDelta]]),
+    * so the consistency contract is enforced, not documented.
     */
   sealed abstract class Router(val name: String) {
     def assign(vectors: DataFrame, cent: DataFrame, vecCol: String,
@@ -119,11 +119,11 @@ object EmbeddingIndex {
     * (bit-replayable, every oracle's form), above it to [[HierRouter]]
     * (the n·2√k build; recall price pinned in EmbeddingIndexSpec).
     * Resolution happens once per maintainer call against the frozen
-    * quantizer (a model-sized count), BEFORE stamping — the stamp then
-    * dispatches every later probe, so an index auto-built hier is probed
-    * hier-aware automatically and a later caller who forces `flat`
-    * against it fails loudly at the stamp. Never itself stamped or
-    * probed: using it unresolved throws.
+    * quantizer (a model-sized count), BEFORE stamping — the committed
+    * stamp then dispatches every later probe, so an index auto-built hier
+    * is probed hier-aware automatically and a later caller who forces
+    * `flat` against it fails loudly at the commit. Never itself stamped
+    * or probed: using it unresolved throws.
     */
   case object AutoRouter extends Router("auto") {
     override def resolve(cent: DataFrame): Router =
@@ -170,7 +170,7 @@ object EmbeddingIndex {
     md.digest().take(8).map("%02x".format(_)).mkString
   }
 
-  /** What a persisted index directory is stamped with: the router family
+  /** What a persisted index is stamped with: the router family
     * AND the frozen quantizer's digest. Either changing invalidates every
     * stored cell assignment — probes against a re-seeded or re-routed
     * quantizer return wrong emptiness, not an error, which is exactly the
@@ -178,133 +178,61 @@ object EmbeddingIndex {
     * state. Same recipe, embedding modality.
     */
   def indexStamp(cent: DataFrame, router: Router): String =
-    s"router=${router.name},quantizer=${quantizerDigest(cent)}"
+    stamp(router, quantizerDigest(cent))
 
-  /** Validate (or, on a fresh directory, record) the ROUTER stamp of a
-    * persisted cell-index directory. `stateExists` = the caller has
-    * already committed index state there: an EXISTING but unstamped
-    * directory predates the stamp (or was written by a foreign writer)
-    * and fails — its assignments cannot be trusted against the current
-    * quantizer/router. Returns the effective router.
+  private def stamp(router: Router, digest: String): String =
+    s"router=${router.name},quantizer=$digest"
+
+  /** The writer's layout: the router `router` builds under and its stamp
+    * for `cent`, given the index's committed layout (None before the first
+    * commit). A committed stamp whose quantizer digest matches PINS the
+    * concrete family for AUTO: adopt it instead of re-deriving from the
+    * cell count. Otherwise an index built under an older default — or
+    * near the boundary after the crossover is re-tuned — would hard-fail
+    * "rebuild required" on its next trigger even though every stored
+    * assignment is still valid. The crossover decides only the FIRST
+    * commit; after that the stamp owns the family. The commit refuses a
+    * stamp other than the committed one (a re-seeded quantizer, a router
+    * flip); a mismatched probe would silently lose recall (0.855 vs 0.957
+    * @ nProbe=4, EmbeddingIndexSpec).
     */
-  def ensureIndexStamp(spark: org.apache.spark.sql.SparkSession, dir: String,
-                       cent: DataFrame, router: Router,
-                       stateExists: Boolean): Router = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    refuseIfRequantizing(conf, dir)
-    val p = new org.apache.hadoop.fs.Path(dir, "ROUTER")
+  def indexLayout(dir: String, committed: Option[String], cent: DataFrame,
+                  router: Router): (Router, String) = {
     val digest = quantizerDigest(cent)
-    graft.util.AtomicPointer.read(conf, p) match {
-      case Some(s) =>
-        val (stampedName, stampedDigest) = parseStamp(dir, s)
-        // A valid stamp (quantizer digest matches) PINS the concrete
-        // family for AUTO: adopt it instead of re-deriving from the cell
-        // count. Otherwise an index built under an older default — or
-        // near the boundary after the crossover is re-tuned — would
-        // hard-fail "rebuild required" on its next trigger even though
-        // every stored assignment is still valid. The crossover decides
-        // only the FIRST commit; after that the stamp owns the family.
-        val r = router match {
-          case AutoRouter if stampedDigest == digest =>
-            routerByName(stampedName)
-          case other => other.resolve(cent)
-        }
-        if (stampedName == r.name && stampedDigest == digest) r
-        else throw new IllegalStateException(
-          s"embedding-index stamp mismatch, rebuild required: $dir was " +
-          s"built under '$s' but this maintainer is " +
-          s"'router=${r.name},quantizer=$digest' — a different " +
-          "quantizer or router makes stored cell assignments incomparable " +
-          "(a mismatched probe silently loses recall: 0.855 vs 0.957 " +
-          "@ nProbe=4 measured in EmbeddingIndexSpec)")
-      case None if stateExists => throw new IllegalStateException(
-        s"$dir has committed index state but no ROUTER stamp — built by " +
-        s"a pre-stamp engine or a foreign writer; rebuild required")
-      case None =>
-        // First commit: AUTO resolves here — against the frozen quantizer
-        // — so only concrete family names are ever stamped.
-        val r = router.resolve(cent)
-        val want = s"router=${r.name},quantizer=$digest"
-        // CREATE-EXCLUSIVE first commit: two concurrent bootstrappers with
-        // different router/quantizer would otherwise both read None, both
-        // overwrite-stamp, and one would run a full batch under a stamp
-        // that no longer matches (surfacing only at the NEXT trigger).
-        // Exactly one rename wins; the loser validates against the
-        // winner's stamp and fails loudly NOW.
-        if (graft.util.AtomicPointer.commitExclusive(conf, p, want)) r
-        else graft.util.AtomicPointer.read(conf, p) match {
-          case Some(s) if s == want => r
-          case Some(s) => throw new IllegalStateException(
-            s"embedding-index stamp race lost: $dir was concurrently " +
-            s"stamped '$s' but this maintainer is '$want' — rebuild or " +
-            "align the bootstrappers")
-          case None => throw new IllegalStateException(
-            s"$dir/ROUTER vanished during first commit")
-        }
+    val r = (router, committed.map(parseStamp(dir, _))) match {
+      case (AutoRouter, Some((name, d))) if d == digest => routerByName(name)
+      case _ => router.resolve(cent)
     }
+    (r, stamp(r, digest))
   }
 
-  /** Marker a [[graft.streaming.EmbeddingDedupStream.requantizeDelta]]
-    * holds while moving an index between quantizers. Between the marker
-    * write and the stamp move the directory's cell assignments and its
-    * ROUTER stamp can disagree (the rebase commits first, then the stamp
-    * moves — crash between them and a reader passing the OLD centroids
-    * would match the stamp but probe NEW cells, losing recall silently).
-    * Every reader and writer funnels through [[ensureIndexStamp]] /
-    * [[stampedRouter]], so refusing here turns that silent window into a
-    * loud one: re-running the requantizer converges (rebase replays via
-    * its batchId, the stamp move is idempotent) and clears the marker.
+  /** `router=<name>,quantizer=<digest>` → (name, digest); loud on an
+    * unstamped layout and on any foreign content.
     */
-  def requantMarkerPath(dir: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(dir, "REQUANT")
-
-  private def refuseIfRequantizing(conf: org.apache.hadoop.conf.Configuration,
-                                   dir: String): Unit =
-    graft.util.AtomicPointer.read(conf, requantMarkerPath(dir)).foreach { m =>
-      throw new IllegalStateException(
-        s"$dir has a live REQUANT marker ('$m') — a re-quantization is in " +
-        "progress or crashed mid-move; re-run requantizeDelta with the " +
-        "same target quantizer to converge, then retry")
-    }
-
-  /** `router=<name>,quantizer=<digest>` → (name, digest); loud on any
-    * foreign content — shared by [[ensureIndexStamp]]/[[stampedRouter]].
-    */
-  private def parseStamp(dir: String, s: String): (String, String) =
+  private[graft] def parseStamp(dir: String, s: String): (String, String) =
     s.split(",", 2) match {
       case Array(r, q) if r.startsWith("router=") &&
           q.startsWith("quantizer=") =>
         (r.stripPrefix("router="), q.stripPrefix("quantizer="))
+      case _ if s.isEmpty => throw graft.util.DeltaView.layoutRefused(dir, s,
+        "router=<name>,quantizer=<digest>")
       case _ => throw new IllegalStateException(
-        s"$dir/ROUTER is not an embedding-index stamp (got '$s')")
+        s"$dir's layout is not an embedding-index stamp (got '$s')")
     }
 
-  /** The router a persisted index directory was built under, verifying the
-    * caller's quantizer against the stamped digest — the SERVING-side
-    * entry: readers obey the stamp instead of guessing. None = no stamp
-    * (legal only on a never-committed directory; callers pass
-    * `stateExists` to make the distinction loud).
+  /** The router an index was built under, from its committed layout,
+    * verifying the caller's quantizer against the stamped digest — the
+    * SERVING-side entry: readers obey the stamp instead of guessing.
     */
-  def stampedRouter(spark: org.apache.spark.sql.SparkSession, dir: String,
-                    cent: DataFrame, stateExists: Boolean): Option[Router] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    refuseIfRequantizing(conf, dir)
-    val p = new org.apache.hadoop.fs.Path(dir, "ROUTER")
-    graft.util.AtomicPointer.read(conf, p) match {
-      case Some(s) =>
-        val m = parseStamp(dir, s)
-        val got = quantizerDigest(cent)
-        if (m._2 != got) throw new IllegalStateException(
-          s"quantizer mismatch on $dir: index built under digest " +
-          s"'${m._2}' but the probe's quantizer is '$got' — probing " +
-          "under a different quantizer returns wrong emptiness; pass the " +
-          "frozen centroids the index was built with, or rebuild")
-        Some(routerByName(m._1))
-      case None if stateExists => throw new IllegalStateException(
-        s"$dir has committed index state but no ROUTER stamp — built by " +
-        "a pre-stamp engine or a foreign writer; rebuild required")
-      case None => None
-    }
+  def committedRouter(dir: String, layout: String, cent: DataFrame): Router = {
+    val (name, digest) = parseStamp(dir, layout)
+    val got = quantizerDigest(cent)
+    if (digest != got) throw new IllegalStateException(
+      s"quantizer mismatch on $dir: index built under digest " +
+      s"'$digest' but the probe's quantizer is '$got' — probing " +
+      "under a different quantizer returns wrong emptiness; pass the " +
+      "frozen centroids the index was built with, or rebuild")
+    routerByName(name)
   }
 
   /** First-`nCells` corpus vectors by id order — the deterministic seed
@@ -810,15 +738,7 @@ object EmbeddingIndex {
       val cent = seedCentroids(corpus, "embedding", "vec_id", nCells = 16)
       val root = java.nio.file.Files
         .createTempDirectory("graft-q158").toString
-      ensureIndexStamp(spark, root, cent, FlatRouter, stateExists = false)
-      graft.util.DeltaView(spark, root, Seq("vec_id"), compactEvery = 1,
-          basePartitionCols = Seq("cell"))
-        .applyBatch(0L) { _ =>
-          (assignCells(corpus, cent, "embedding", "vec_id")
-            .select(col("vec_id").cast("long"), col("cell").cast("long"),
-              col("v").cast("array<double>")),
-           e.limit(0).select(col("vec_id")))
-        }
+      EmbeddingDedupStream.bootstrapDelta(spark, root, cent, corpus, FlatRouter)
       EmbeddingDedupStream.applyBatchDelta(spark, root, cent,
         e.filter(isBatch).select(lit("I").as("op"), col("vec_id"),
           col("embedding")), batchId = 1L)
@@ -831,14 +751,14 @@ object EmbeddingIndex {
     // then [[graft.streaming.EmbeddingDedupStream.requantizeDelta]] re-fits
     // a FINER deterministic quantizer (first-32-live-ids seed — the
     // oracle-replayable stand-in for a kmeans re-fit; production passes
-    // kmeansCentroids output) and rebuilds in place: one DeltaView.rebase
-    // (fresh compacted base, NOT delete-all+reinsert-all), stamp moved to
-    // the new digest, live vec_id set preserved exactly. The oracle
-    // replays the grown live set from first principles and re-assigns it
-    // under the replayed new quantizer — passing proves the rebuilt state
-    // is bit-identical to a from-scratch build over the survivors, i.e.
-    // re-quantization changes WHERE vectors live, never WHICH. The crash
-    // windows (marker up, stamp not yet moved) are spec-pinned in
+    // kmeansCentroids output) and rebuilds in place: one DeltaView.Group.rebase
+    // (fresh compacted base, NOT delete-all+reinsert-all) whose commit
+    // moves the stamp to the new digest, live vec_id set preserved
+    // exactly. The oracle replays the grown live set from first principles
+    // and re-assigns it under the replayed new quantizer — passing proves
+    // the rebuilt state is bit-identical to a from-scratch build over the
+    // survivors, i.e. re-quantization changes WHERE vectors live, never
+    // WHICH. The crash points around its one commit are spec-pinned in
     // EmbeddingDedupStreamSpec, not oracle-visible.
     Query(
       "q164_ivf_requantize",
@@ -892,15 +812,7 @@ object EmbeddingIndex {
       val cent = seedCentroids(corpus, "embedding", "vec_id", nCells = 16)
       val root = java.nio.file.Files
         .createTempDirectory("graft-q164").toString
-      ensureIndexStamp(spark, root, cent, FlatRouter, stateExists = false)
-      graft.util.DeltaView(spark, root, Seq("vec_id"), compactEvery = 1,
-          basePartitionCols = Seq("cell"))
-        .applyBatch(0L) { _ =>
-          (assignCells(corpus, cent, "embedding", "vec_id")
-            .select(col("vec_id").cast("long"), col("cell").cast("long"),
-              col("v").cast("array<double>")),
-           e.limit(0).select(col("vec_id")))
-        }
+      EmbeddingDedupStream.bootstrapDelta(spark, root, cent, corpus, FlatRouter)
       EmbeddingDedupStream.applyBatchDelta(spark, root, cent,
         e.filter(isBatch).select(lit("I").as("op"), col("vec_id"),
           col("embedding")), batchId = 1L)

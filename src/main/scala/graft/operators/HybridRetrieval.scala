@@ -186,16 +186,8 @@ object HybridRetrieval {
         nCells = 16)
       val eroot = graft.PartitionedWrites.memoizedIndex(s"q166emb#$dir") {
         path =>
-          EmbeddingIndex.ensureIndexStamp(spark, path, cent,
-            EmbeddingIndex.FlatRouter, stateExists = false)
-          graft.util.DeltaView(spark, path, Seq("vec_id"), compactEvery = 3,
-              basePartitionCols = Seq("cell"))
-            .applyBatch(0L) { _ =>
-              (EmbeddingIndex.assignCells(corpus, cent, "embedding", "vec_id")
-                .select(col("vec_id").cast("long"), col("cell").cast("long"),
-                  col("v").cast("array<double>")),
-               e.limit(0).select(col("vec_id")))
-            }
+          EmbeddingDedupStream.bootstrapDelta(spark, path, cent, corpus,
+            EmbeddingIndex.FlatRouter)
           // one signed batch: takedowns + inserts, LEFT UNCOMPACTED so the
           // serve reads base + live delta (the steady state, like q163)
           EmbeddingDedupStream.applyBatchDelta(spark, path, cent,

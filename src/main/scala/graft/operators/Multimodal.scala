@@ -891,12 +891,8 @@ object Multimodal extends MultimodalFixtures with MultimodalCodecs {
           wav(col("doc_id") + 20000L).as("payload"))
       val root = java.nio.file.Files
         .createTempDirectory("graft-q159").toString
-      ensureFingerprintStamp(spark, root, stateExists = false)
-      graft.util.DeltaView(spark, root, Seq("media_id"), compactEvery = 8)
-        .applyBatch(0L) { _ =>
-          (audioFingerprintHashes(spark, originals),
-           originals.limit(0).select(col("media_id")))
-        }
+      MediaDedupStream.bootstrapDelta(spark, root,
+        audioFingerprintHashes(spark, originals))
       MediaDedupStream.applySignedBatchDelta(spark, root,
         audioFingerprintHashes(spark, copies.unionByName(novel))
           .select(lit("I").as("op"), col("media_id"), col("b0"),

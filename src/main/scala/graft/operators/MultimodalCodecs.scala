@@ -427,39 +427,14 @@ private[graft] trait MultimodalCodecs extends Serializable {
     * probes return wrong emptiness instead of an error. Same recipe as
     * [[graft.operators.Dedup.bandingStamp]] (text LSH) and
     * [[EmbeddingIndex.indexStamp]] (embedding quantizer/router): the
-    * maintainer stamps the state dir on first commit and re-validates on
-    * every open. There are no tunable coefficients here (the family is
-    * compile-time code), so the stamp is an explicit version string —
+    * maintainer commits it as its group manifest's layout, and every
+    * commit refuses another. There are no tunable coefficients here (the
+    * family is compile-time code), so the stamp is an explicit version
+    * string —
     * bump it WITH any change to [[audioFingerprintHashes]]' family or
     * the 4×16 banding.
     */
   val fingerprintStamp: String = "family=ahash64-energy64,bands=4x16,v=1"
-
-  /** Validate (or, on a fresh directory, record) the fingerprint-family
-    * stamp of a persisted media-index directory. `stateExists` = the
-    * caller has already committed index state there: an EXISTING but
-    * unstamped directory predates the stamp (or was written by a foreign
-    * writer) and fails — its fingerprints cannot be trusted against the
-    * current family.
-    */
-  def ensureFingerprintStamp(spark: SparkSession, dir: String,
-                             stateExists: Boolean): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(dir, "FPFAMILY")
-    graft.util.AtomicPointer.read(conf, p) match {
-      case Some(s) if s == fingerprintStamp => ()
-      case Some(s) => throw new IllegalStateException(
-        s"media fingerprint-family mismatch, rebuild required: $dir was " +
-        s"built under '$s' but the engine is '$fingerprintStamp' — " +
-        "stored fingerprints are not comparable across hash families or " +
-        "band layouts")
-      case None if stateExists => throw new IllegalStateException(
-        s"$dir has committed media-index state but no FPFAMILY stamp — " +
-        "built by a pre-stamp engine or a foreign writer; rebuild " +
-        s"required (engine is '$fingerprintStamp')")
-      case None => graft.util.AtomicPointer.commit(conf, p, fingerprintStamp)
-    }
-  }
 
   /** Per-clip 64-frame energy fingerprints (see [[audioFingerprintPairs]])
     * as (media_id, b0..b3) — the shared front of the pair and cluster

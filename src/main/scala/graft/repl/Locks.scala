@@ -1,7 +1,8 @@
 package graft.repl
 
 import java.nio.charset.StandardCharsets
-import org.apache.hadoop.fs.{FileSystem, Path}
+import java.nio.file.{Files, StandardOpenOption}
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 
 /** Advisory locks as atomic-create marker files on Hadoop FileSystem.
   *
@@ -10,7 +11,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * (`/root/reference/misc_functions.sh:151-183`) and the global dump lock
   * (`/root/reference/beeline_functions.sh:92-101`) — with a cluster-visible
   * primitive: `FileSystem.create(path, overwrite = false)` is atomic on
-  * HDFS, so exactly one runner wins. The marker reads
+  * HDFS, so exactly one runner wins. The local filesystem's form of it is
+  * an exists() check and then a create, which two racers can both pass,
+  * so there the marker is created with one `O_CREAT|O_EXCL` open. The
+  * marker reads
   * `<ownerId>@<host>:<pid>`. A marker that names this host and a pid with
   * no live process is a crashed holder's and is taken at once (the
   * reference's stale-pid check); any other marker is judged by its
@@ -71,8 +75,19 @@ object Locks {
     def create(): Boolean =
       try {
         fs.mkdirs(path.getParent)
-        val out = fs.create(path, false) // atomic create-if-absent
-        try out.write(marker(ownerId).getBytes(StandardCharsets.UTF_8)) finally out.close()
+        val bytes = marker(ownerId).getBytes(StandardCharsets.UTF_8)
+        val local = fs match {
+          case l: LocalFileSystem => Some(l.pathToFile(path))
+          case r: RawLocalFileSystem => Some(r.pathToFile(path))
+          case _ => None
+        }
+        local match {
+          case Some(f) => Files.write(f.toPath, bytes, StandardOpenOption.CREATE_NEW,
+            StandardOpenOption.WRITE)
+          case None =>
+            val out = fs.create(path, false) // atomic create-if-absent
+            try out.write(bytes) finally out.close()
+        }
         true
       } catch { case _: java.io.IOException => false }
 

@@ -4,11 +4,10 @@ import graft.operators.TimeSeries
 import graft.util.DeltaView
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Always-on operational anomaly monitoring: an event stream maintains a
-  * versioned (key, hr, cnt) hourly-count view through `foreachBatch`, and
+  * versioned (key, hr, cnt) hourly-count view through [[MicroBatch]], and
   * the CURRENT view is scored on demand with the batch
   * [[graft.operators.TimeSeries.rollingZScore]] — the streaming form of
   * q127, exactly as [[ViewMaintenance]] is of the batch aggregate
@@ -82,21 +81,6 @@ object AnomalyMonitor {
   /** The current hourly-count view (empty before the first commit). */
   def readCountsDelta(spark: SparkSession, viewDir: String): DataFrame =
     deltaView(spark, viewDir).read().getOrElse(emptyView(spark))
-
-  /** Maintain the hourly-count view continuously from a streaming frame
-    * with columns (key, us).
-    */
-  def monitorStreamDelta(events: DataFrame, viewDir: String,
-                         checkpointDir: String,
-                         compactEvery: Int = 8): StreamingQuery = {
-    val spark = events.sparkSession
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatchDelta(spark, viewDir, batch, batchId, compactEvery)
-      }
-      .start()
-  }
 
   /** Score the CURRENT view: every (key, hour) with its trailing-24h
     * z-score and anomaly flag — identical to running q127's operator over

@@ -5,7 +5,6 @@ import graft.operators.Dedup.LshIndex
 import graft.util.{DeltaView, Frames}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Always-on CURATION: the composed nightly pipeline (q110/q78's gate
@@ -144,16 +143,24 @@ object CurationStream {
       .select(col("doc_id"), col("source"), col("hash"))
   }
 
-  /** The docs, sets and bands views, committed as one group. */
+  /** The docs, sets and bands views, committed as one group under the
+    * banding stamp: stored signatures and band keys are only comparable
+    * under the LSH configuration that computed them.
+    */
   private[streaming] def views(spark: SparkSession, dir: String, k: Int = 8) =
     DeltaView.Group(spark, dir, Seq(
       DeltaView(spark, s"$dir/docs", Seq("doc_id"), compactEvery = k),
       DeltaView(spark, s"$dir/sets", Seq("doc"), compactEvery = k),
-      DeltaView(spark, s"$dir/bands", Seq("doc"), compactEvery = k)))
+      DeltaView(spark, s"$dir/bands", Seq("doc"), compactEvery = k)),
+      Dedup.bandingStamp)
 
-  /** The curated corpus (doc_id, source, hash); empty before any commit. */
-  def readDocsDelta(spark: SparkSession, dir: String): DataFrame =
-    views(spark, dir).read().head.getOrElse(Frames.empty(spark, DocsSchema))
+  /** The curated corpus (doc_id, source, hash); empty before any commit.
+    * A corpus committed under another banding is refused.
+    */
+  def readDocsDelta(spark: SparkSession, dir: String): DataFrame = {
+    val g = views(spark, dir)
+    g.readAt(g.checked).head.getOrElse(Frames.empty(spark, DocsSchema))
+  }
 
   /** (batchId, version, docs base version), None before any commit. */
   def committedDelta(spark: SparkSession,
@@ -198,9 +205,7 @@ object CurationStream {
                             n: Int = 3, threshold: Double = 0.5,
                             compactEvery: Int = 8): Unit = {
     val group = views(spark, dir, compactEvery)
-    val cur = group.committed
-    Dedup.ensureBandingStamp(spark, dir, cur.isDefined)
-    if (cur.exists(_._1 >= batchId)) return
+    if (group.checked.exists(_.batchId >= batchId)) return
 
     val dels = batch.filter(col("op") === "D")
       .select(col("doc_id")).distinct().cache()
@@ -228,36 +233,4 @@ object CurationStream {
       }: Unit
     } finally { e2.unpersist(); sets.unpersist(); dels.unpersist() }
   }
-
-  /** Maintain the curated corpus continuously from a SIGNED streaming
-    * document frame (op, doc_id, text, source) — admission plus takedown.
-    * No session-wide clearCache per trigger: [[applySignedBatchDelta]]
-    * releases its own caches in a finally and the probe's batch sets
-    * self-release (localCheckpoint), while a clearCache would evict the
-    * CALLER-owned frozen `ok` universe every trigger.
-    */
-  def signedCurationStreamDelta(docs: DataFrame, ok: DataFrame, dir: String,
-                                checkpointDir: String, capN: Long,
-                                n: Int = 3, threshold: Double = 0.5,
-                                compactEvery: Int = 8): StreamingQuery = {
-    val spark = docs.sparkSession
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applySignedBatchDelta(spark, dir, ok, batch, batchId, capN, n,
-          threshold, compactEvery)
-      }
-      .start()
-  }
-
-  /** Maintain the curated corpus continuously from a streaming document
-    * frame with columns (doc_id, text, source) — [[signedCurationStreamDelta]]
-    * with every row an insert.
-    */
-  def curationStreamDelta(docs: DataFrame, ok: DataFrame, dir: String,
-                          checkpointDir: String, capN: Long,
-                          n: Int = 3, threshold: Double = 0.5,
-                          compactEvery: Int = 8): StreamingQuery =
-    signedCurationStreamDelta(asInserts(docs), ok, dir, checkpointDir, capN,
-      n, threshold, compactEvery)
 }

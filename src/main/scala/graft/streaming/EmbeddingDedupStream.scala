@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField,
 
 /** Always-on EMBEDDING-ingest dedup: a stream of SIGNED vector rows
   * (op ∈ I/D, vec_id, embedding) maintains the corpus IVF cell index
-  * through `foreachBatch` — the streaming form of
+  * through [[MicroBatch]] — the streaming form of
   * [[EmbeddingIndex.probeDedup]] (q149), completing the per-modality
   * maintainer set (text [[CurationStream]], media [[MediaDedupStream]],
   * embeddings here) on the same [[DeltaView]] idempotent-commit core.
@@ -34,16 +34,16 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField,
   * quantizer-freeze contract: cell ids stay stable across every version,
   * which is exactly what makes retraction rebuild-equivalent and stored
   * assignments immortal. `cent` must therefore be deterministic across
-  * triggers (a literal frame or a read of a frozen table). ROUTER
+  * triggers (a literal frame or a read of a frozen table). Router
   * consistency is part of the same freeze — and both halves are
-  * ENFORCED, not documented: the first commit stamps the index dir with
-  * `router=<flat|hier>,quantizer=<digest>`
-  * ([[EmbeddingIndex.ensureIndexStamp]], the
+  * ENFORCED, not documented: every commit records
+  * `router=<flat|hier>,quantizer=<digest>` as the layout of the index's
+  * group manifest ([[EmbeddingIndex.indexLayout]], the
   * [[graft.operators.Dedup.bandingStamp]] recipe on the embedding
-  * modality), every later trigger re-validates it (a re-seeded quantizer
-  * or a router flip fails loudly with "rebuild required" instead of
-  * silently losing recall), and [[probeDelta]] DISPATCHES from the stamp
-  * — a hier-built index ([[EmbeddingIndex.assignCellsHier]], the
+  * modality) and refuses another (a re-seeded quantizer or a router flip
+  * fails loudly with "rebuild required" instead of silently losing
+  * recall), and [[probeDelta]] DISPATCHES from the committed stamp, read
+  * with the rows it describes — a hier-built index ([[EmbeddingIndex.assignCellsHier]], the
   * beyond-100× build regime) is probed hier-aware automatically, never
   * paying the measured store/probe router-mismatch tax (0.855 vs 0.957
   * @ nProbe=4, EmbeddingIndexSpec). The DEFAULT router is
@@ -51,7 +51,8 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField,
   * quantizer's cell count at the measured ~128-cell crossover, so a
   * caller bootstrapping a large index gets the n·2√k hier build instead
   * of silently inheriting flat's ∝-k assignment; pass a concrete router
-  * to force a family (the stamp then enforces it forever).
+  * to force a family (the stamp then enforces it until a
+  * [[requantizeDelta]] moves it).
   *
   * Exactly-once effect = checkpointed offsets × the idempotent versioned
   * commit (replayed batchIds no-op — including replayed DELETES; crash
@@ -129,22 +130,24 @@ object EmbeddingDedupStream {
                       batch: DataFrame, batchId: Long, nProbe: Int = 2,
                       threshold: Double = 0.4, compactEvery: Int = 8,
                       router: EmbeddingIndex.Router = EmbeddingIndex.AutoRouter): Unit = {
-    val dv = deltaView(spark, indexDir, compactEvery)
-    // replay check FIRST (one pointer read); prepBatch caches the batch
-    // BEFORE the emptiness probe so the probe job and the commit work
-    // share one materialization
-    val cur0 = dv.committed
-    if (cur0.exists(_._1 >= batchId)) return
+    // replay check FIRST (one pointer read): a replayed batch must not pay
+    // the quantizer digest's collect just to be skipped
+    val cur0 = group(spark, indexDir).current
+    if (cur0.exists(_.batchId >= batchId)) return
     // quantizer-freeze + router-consistency contract, enforced per trigger
     // (one model-sized collect): a re-seeded quantizer or a mismatched
-    // router fails loudly here instead of silently losing recall
-    val r = EmbeddingIndex.ensureIndexStamp(spark, indexDir, cent, router,
-      stateExists = cur0.nonEmpty)
+    // router fails loudly here, before the batch's work, instead of
+    // silently losing recall
+    val (r, layout) = EmbeddingIndex.indexLayout(indexDir, cur0.map(_.layout), cent, router)
+    cur0.filter(_.layout != layout).foreach(c =>
+      throw DeltaView.layoutRefused(indexDir, c.layout, layout))
+    // prepBatch caches the batch BEFORE the emptiness probe so the probe
+    // job and the commit work share one materialization
     val (assigned, dels, reps) = prepBatch(cent, batch, threshold, r)
     try {
       if (assigned.isEmpty && dels.isEmpty) return // idle trigger: no commit
       val cells = probedCellIds(cent, reps, nProbe, r)
-      dv.applyBatch(batchId) { cur =>
+      group(spark, indexDir, compactEvery, layout).applyBatch(batchId) { case Seq(cur) =>
         // the probe's view of the index is (current − this batch's
         // deletes) pruned to the probed cells — the post-retract state,
         // LAZY (never written); the commit ships only changes
@@ -157,10 +160,27 @@ object EmbeddingDedupStream {
           .filter(col("is_new")).select("vec_id")
         // id-uniqueness invariant over the FULL view, vec_id column only
         val liveIds = EmbeddingIndex.retract(index.select("vec_id"), dels)
-        (reps.join(kept, "vec_id").join(liveIds, Seq("vec_id"), "left_anti"),
-          dels)
+        Seq((reps.join(kept, "vec_id").join(liveIds, Seq("vec_id"), "left_anti"),
+          dels))
       }: Unit
     } finally { assigned.unpersist(); dels.unpersist() }
+  }
+
+  /** The committed index and the router it was built under, from ONE
+    * manifest read: readers OBEY the stamp — the router the index was
+    * built under is the router that probes it (a flat probe of a hier
+    * build pays the measured recall tax), and the quantizer digest must
+    * match the passed centroids — and the stamp they check describes
+    * exactly the rows they serve, even across a [[requantizeDelta]].
+    * Before any commit: no rows, probed flat.
+    */
+  private def served(spark: SparkSession, indexDir: String, cent: DataFrame)
+      : (EmbeddingIndex.Router, Option[DataFrame]) = {
+    val g = group(spark, indexDir)
+    val cur = g.current
+    (cur.fold[EmbeddingIndex.Router](EmbeddingIndex.FlatRouter)(c =>
+      EmbeddingIndex.committedRouter(indexDir, c.layout, cent)),
+      g.readAt(cur).head.map(normalize))
   }
 
   /** Serve a dedup probe from the CURRENT committed delta-core index —
@@ -179,16 +199,8 @@ object EmbeddingDedupStream {
                  threshold: Double = 0.4): DataFrame = {
     val q = queries.select(col("vec_id").cast("long").as("vec_id"),
       col("embedding").cast("array<double>").as("v"))
-    val view = deltaView(spark, indexDir, compactEvery = 8).read()
-    // readers OBEY the stamp: the router the index was built under is the
-    // router that probes it (a flat probe of a hier build pays the
-    // measured recall tax), and the quantizer digest must match the
-    // passed centroids — both enforced, not documented
-    val router = EmbeddingIndex
-      .stampedRouter(spark, indexDir, cent, stateExists = view.nonEmpty)
-      .getOrElse(EmbeddingIndex.FlatRouter)
-    val idx = view.map(normalize)
-      .getOrElse(graft.util.Frames.empty(spark, IndexSchema))
+    val (router, view) = served(spark, indexDir, cent)
+    val idx = view.getOrElse(graft.util.Frames.empty(spark, IndexSchema))
     val cells = probedCellIds(cent, q, nProbe, router)
     router.probe(idx.filter(col("cell").isin(cells: _*)),
       cent, q, "v", "vec_id", nProbe, threshold)
@@ -211,12 +223,8 @@ object EmbeddingDedupStream {
     import graft.functions.VectorFunctions._
     val q = queries.select(col("vec_id").cast("long").as("query_id"),
       col("embedding").cast("array<double>").as("qv"))
-    val view = deltaView(spark, indexDir, compactEvery = 8).read()
-    val router = EmbeddingIndex
-      .stampedRouter(spark, indexDir, cent, stateExists = view.nonEmpty)
-      .getOrElse(EmbeddingIndex.FlatRouter)
-    val idx = view.map(normalize)
-      .getOrElse(graft.util.Frames.empty(spark, IndexSchema))
+    val (router, view) = served(spark, indexDir, cent)
+    val idx = view.getOrElse(graft.util.Frames.empty(spark, IndexSchema))
     val routed = router.routing(cent, q, "qv", "query_id", nProbe)
       .select(col("bid").as("query_id"), col("qv"),
         col("cell").cast("long").as("cell"))
@@ -251,12 +259,8 @@ object EmbeddingDedupStream {
                      candidates: Seq[Int] = Seq(1, 2, 4, 8, 16, 32),
                      threshold: Double = 0.4,
                      maxQueries: Int = 256): (Int, Seq[(Int, Double)]) = {
-    val view = deltaView(spark, indexDir, compactEvery = 8).read()
-    val router = EmbeddingIndex
-      .stampedRouter(spark, indexDir, cent, stateExists = view.nonEmpty)
-      .getOrElse(EmbeddingIndex.FlatRouter)
-    val idx = view.map(normalize)
-      .getOrElse(graft.util.Frames.empty(spark, IndexSchema))
+    val (router, view) = served(spark, indexDir, cent)
+    val idx = view.getOrElse(graft.util.Frames.empty(spark, IndexSchema))
     EmbeddingIndex.tuneNProbe(idx, cent,
       queries.select(col("vec_id"), col("embedding")), "embedding", "vec_id",
       targetRecall, candidates, threshold, maxQueries, excludeSelf = true,
@@ -295,7 +299,7 @@ object EmbeddingDedupStream {
     * near-dup at `threshold` (nothing evaluable — a corpus the dedup
     * already keeps near-dup-free at the serving threshold needs no
     * re-quantize signal). Otherwise records the measured curve NEXT TO
-    * THE STAMP (`<dir>/RECALL`, atomic pointer — the evidence trail a
+    * THE INDEX (`<dir>/RECALL`, atomic pointer — the evidence trail a
     * retune review reads) and recommends re-quantization when the
     * serving recall has fallen below `targetRecall` — the target is
     * unreachable at the stamped nProbe, so either nProbe grows (paying
@@ -312,12 +316,9 @@ object EmbeddingDedupStream {
                         targetRecall: Double = 0.9,
                         threshold: Double = 0.4,
                         maxQueries: Int = 256): Option[DriftReport] = {
-    val view = deltaView(spark, indexDir, compactEvery = 8).read()
+    val (router, view) = served(spark, indexDir, cent)
     if (view.isEmpty) return None
-    val router = EmbeddingIndex
-      .stampedRouter(spark, indexDir, cent, stateExists = true)
-      .getOrElse(EmbeddingIndex.FlatRouter)
-    val idx = normalize(view.get)
+    val idx = view.get
     val probes = (Seq(1, 2, 4, 8) :+ nProbe).distinct.sorted
     val rows = EmbeddingIndex.estimateProbeRecall(idx, cent,
         idx.select(col("vec_id"), col("v")), "v", "vec_id",
@@ -338,81 +339,88 @@ object EmbeddingDedupStream {
 
   /** RE-QUANTIZE the maintained index — the lifecycle act
     * [[monitorDriftDelta]]'s recommendation points at: re-assign every
-    * live vector under `newCent`, rewrite the state as one fresh
-    * compacted base ([[DeltaView.rebase]] — NOT delete-all+reinsert-all,
-    * which would put the corpus in the tombstone set and break the
-    * fold's broadcast bound), and move the ROUTER stamp to the new
-    * quantizer's digest. The live `vec_id` set is preserved EXACTLY:
-    * survivors stay survivors, takedowns stay gone — re-quantization
-    * changes WHERE vectors live, never WHICH vectors live (no re-dedup;
-    * past accept/reject decisions are history, not state).
+    * live vector under `newCent` and rewrite the state as one fresh
+    * compacted base ([[DeltaView.Group.rebase]] — NOT
+    * delete-all+reinsert-all, which would put the corpus in the tombstone
+    * set and break the fold's broadcast bound) whose commit moves the
+    * layout stamp to the new quantizer's digest. The live `vec_id` set is
+    * preserved EXACTLY: survivors stay survivors, takedowns stay gone —
+    * re-quantization changes WHERE vectors live, never WHICH vectors live
+    * (no re-dedup; past accept/reject decisions are history, not state).
     *
-    * Crash safety: the stamp and the cell assignments can never disagree
-    * SILENTLY. A create-exclusive `REQUANT` marker (the target stamp
-    * string) goes up first; every reader/writer gate
-    * ([[EmbeddingIndex.ensureIndexStamp]]/[[EmbeddingIndex.stampedRouter]])
-    * refuses while it exists. Then the rebase commits (replay-keyed by
-    * `batchId`), the ROUTER stamp moves, the stale `RECALL` curve (it
-    * measured the OLD quantizer) is removed, and the marker clears. A
-    * crash in any window converges by re-running with the same
-    * `newCent`: a marker with a DIFFERENT target refuses (two
-    * requantizers racing is an operator error to adjudicate, not to
-    * last-write-win). `AutoRouter` re-resolves against `newCent` — a
-    * re-quantize IS a rebuild, so the crossover decision is fresh.
+    * Crash safety: the cells and the stamp move in ONE pointer write, so
+    * they never disagree. A crash before it leaves the old index serving
+    * under the old quantizer, and a re-run converges; after it, the new
+    * index serves and a replay returns false. A different target at an
+    * already-committed `batchId` is refused, never last-write-wins, and
+    * so is a rebase onto a stamp another writer moved meanwhile. The
+    * stale `RECALL` curve (it measured the OLD quantizer) is removed after
+    * the commit; one a crash leaves behind carries its `batch_id`, and the
+    * next monitor run replaces it. `AutoRouter` re-resolves against
+    * `newCent` — a re-quantize IS a rebuild, so the crossover decision is
+    * fresh.
     *
     * Cost: one live-view scan + the codegen argmax assignment + one
     * clustered `partitionBy(cell)` base write — the compaction price,
     * paid on the cadence drift actually demands (the monitor's), not per
-    * trigger. Returns false on a pure replay (stamp already moved,
-    * batchId already committed, no marker).
+    * trigger.
     */
   def requantizeDelta(spark: SparkSession, indexDir: String,
                       newCent: DataFrame, batchId: Long,
                       router: EmbeddingIndex.Router = EmbeddingIndex.AutoRouter,
                       compactEvery: Int = 8): Boolean = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val marker = EmbeddingIndex.requantMarkerPath(indexDir)
-    val stampP = new org.apache.hadoop.fs.Path(indexDir, "ROUTER")
-    val fs = stampP.getFileSystem(conf)
-    val dv = deltaView(spark, indexDir, compactEvery)
-    val cur = dv.committed
-    require(cur.nonEmpty,
+    val committed = group(spark, indexDir).current
+    require(committed.nonEmpty,
       s"requantizeDelta: $indexDir has no committed index state")
-    val r = router.resolve(newCent)
-    val want = EmbeddingIndex.indexStamp(newCent, r)
-    graft.util.AtomicPointer.read(conf, marker) match {
-      case Some(m) if m == want => // resume a crashed attempt at this target
-      case Some(m) => throw new IllegalStateException(
-        s"$indexDir/REQUANT is held by a different re-quantization " +
-        s"('$m' vs this run's '$want') — converge that one first " +
-        "(re-run with ITS quantizer) or adjudicate manually")
-      case None =>
-        if (graft.util.AtomicPointer.read(conf, stampP).contains(want) &&
-            cur.exists(_._1 >= batchId)) return false // replayed, complete
-        require(cur.exists(_._1 < batchId),
-          s"requantizeDelta: batchId $batchId does not advance past the " +
-          s"committed ${cur.get._1} — the rebase would no-op on live state")
-        if (!graft.util.AtomicPointer.commitExclusive(conf, marker, want))
-          throw new IllegalStateException(
-            s"$indexDir/REQUANT appeared concurrently — another " +
-            "re-quantizer is live; exactly one may run")
+    val cur = committed.get
+    EmbeddingIndex.parseStamp(indexDir, cur.layout) // an unstamped index is refused
+    val (r, want) = EmbeddingIndex.indexLayout(indexDir, None, newCent, router)
+    if (cur.batchId >= batchId) {
+      if (cur.layout == want) return false // replayed, complete
+      throw new IllegalStateException(s"requantizeDelta: batch $batchId is " +
+        s"already committed at $indexDir under '${cur.layout}', not this " +
+        s"run's '$want' — refusing rather than last-write-wins")
     }
-    dv.rebase(batchId) { view =>
-      r.assign(normalize(view).select(col("vec_id"), col("v")),
-          newCent, "v", "vec_id")
-        .select(col("vec_id").cast("long"), col("cell").cast("long"),
-          col("v").cast("array<double>"))
+    val moved = group(spark, indexDir, compactEvery, cur.layout)
+      .rebase(batchId, to = want) { case Seq(view) =>
+        Seq(r.assign(normalize(view).select(col("vec_id"), col("v")),
+            newCent, "v", "vec_id")
+          .select(col("vec_id").cast("long"), col("cell").cast("long"),
+            col("v").cast("array<double>")))
+      }
+    if (moved) {
+      val recall = new org.apache.hadoop.fs.Path(indexDir, "RECALL")
+      recall.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(recall, false)
     }
-    graft.util.AtomicPointer.commit(conf, stampP, want)
-    fs.delete(new org.apache.hadoop.fs.Path(indexDir, "RECALL"), false)
-    fs.delete(marker, false)
-    true
+    moved
   }
 
-  private def deltaView(spark: SparkSession, indexDir: String,
-                        compactEvery: Int): DeltaView =
-    DeltaView(spark, indexDir, keyCols = Seq("vec_id"),
-      compactEvery = compactEvery, basePartitionCols = Seq("cell"))
+  /** The index: one view, committed under `layout` (the stamp of its
+    * router and quantizer; the default is for reads, which do not check).
+    */
+  private def group(spark: SparkSession, indexDir: String, compactEvery: Int = 8,
+                    layout: String = ""): DeltaView.Group =
+    DeltaView.Group(spark, indexDir, Seq(DeltaView(spark, indexDir,
+      keyCols = Seq("vec_id"), compactEvery = compactEvery,
+      basePartitionCols = Seq("cell"))), layout)
+
+  /** Commit `vectors` (vec_id, embedding) as the index's batch 0, assigned
+    * under `router` and stamped with it and `cent`, with no dedup: a
+    * corpus already known to be near-dup-free seeds the index in one
+    * cell-partitioned base commit (the assignment, then the write).
+    */
+  def bootstrapDelta(spark: SparkSession, indexDir: String, cent: DataFrame,
+                     vectors: DataFrame,
+                     router: EmbeddingIndex.Router = EmbeddingIndex.AutoRouter): Unit = {
+    val (r, layout) = EmbeddingIndex.indexLayout(indexDir,
+      group(spark, indexDir).current.map(_.layout), cent, router)
+    group(spark, indexDir, layout = layout).applyBatch(0L) { _ =>
+      Seq((r.assign(vectors, cent, "embedding", "vec_id")
+          .select(col("vec_id").cast("long"), col("cell").cast("long"),
+            col("v").cast("array<double>")),
+        graft.util.Frames.empty(spark, IndexSchema).select("vec_id")))
+    }: Unit
+  }
 
   /** Partition-column type inference on compacted bases reads `cell` back
     * as int — pin the published schema regardless of which file kind a
@@ -423,12 +431,12 @@ object EmbeddingDedupStream {
 
   /** The current accepted-vector index (empty before any commit). */
   def readIndexDelta(spark: SparkSession, indexDir: String): DataFrame =
-    deltaView(spark, indexDir, compactEvery = 8).read().map(normalize)
+    group(spark, indexDir).read().head.map(normalize)
       .getOrElse(graft.util.Frames.empty(spark, IndexSchema))
 
   def committedDelta(spark: SparkSession,
                      indexDir: String): Option[(Long, Long, Long)] =
-    deltaView(spark, indexDir, compactEvery = 8).committed
+    group(spark, indexDir).committed
 
   /** Maintain the index continuously from a streaming signed frame with
     * columns (op, vec_id, embedding) — O(batch) commits with periodic
@@ -443,25 +451,22 @@ object EmbeddingDedupStream {
                        monitorEvery: Int = 0, targetRecall: Double = 0.9)
       : StreamingQuery = {
     val spark = changes.sparkSession
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatchDelta(spark, indexDir, cent, batch, batchId, nProbe,
-          threshold, compactEvery, router)
-        // drift cadence: every `monitorEvery` commits, measure the grown
-        // index's served recall against the frozen quantizer and persist
-        // the curve next to the stamp (0 = off). A recommendation is a
-        // SIGNAL for the operator (re-fit + rebuild under a new stamp),
-        // never an automatic rebuild — the stamp contract stays frozen.
-        if (monitorEvery > 0 && batchId % monitorEvery == 0)
-          monitorDriftDelta(spark, indexDir, cent, nProbe, targetRecall,
-              threshold).foreach { rep =>
-            if (rep.requantizeRecommended) System.err.println(
-              s"[embedding-dedup] quantizer drift: recall@$nProbe = " +
-              f"${rep.recallAtNProbe}%.3f < target $targetRecall — " +
-              "re-quantize recommended (curve at " + s"$indexDir/RECALL)")
-          }
-      }
-      .start()
+    MicroBatch.start(changes, checkpointDir) { (batch, batchId) =>
+      applyBatchDelta(spark, indexDir, cent, batch, batchId, nProbe,
+        threshold, compactEvery, router)
+      // drift cadence: every `monitorEvery` commits, measure the grown
+      // index's served recall against the frozen quantizer and persist
+      // the curve next to the index (0 = off). A recommendation is a
+      // SIGNAL for the operator (re-fit + rebuild under a new stamp),
+      // never an automatic rebuild — the stamp contract stays frozen.
+      if (monitorEvery > 0 && batchId % monitorEvery == 0)
+        monitorDriftDelta(spark, indexDir, cent, nProbe, targetRecall,
+            threshold).foreach { rep =>
+          if (rep.requantizeRecommended) System.err.println(
+            s"[embedding-dedup] quantizer drift: recall@$nProbe = " +
+            f"${rep.recallAtNProbe}%.3f < target $targetRecall — " +
+            "re-quantize recommended (curve at " + s"$indexDir/RECALL)")
+        }
+    }
   }
 }

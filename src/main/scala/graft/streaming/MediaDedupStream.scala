@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * (media_id, b0..b3 — produced upstream by
   * [[Multimodal.audioFingerprintHashes]] / the image-hash path, so the
   * heavy payload decode stays on the ingest executors) maintains the
-  * corpus fingerprint INDEX through `foreachBatch` — the streaming form
+  * corpus fingerprint INDEX through [[MicroBatch]] — the streaming form
   * of [[Multimodal.fingerprintIndexProbe]] (q144), as
   * [[ViewMaintenance]] is of the batch aggregate maintainer.
   *
@@ -81,23 +81,18 @@ object MediaDedupStream {
   def applySignedBatchDelta(spark: SparkSession, indexDir: String,
                             batch: DataFrame, batchId: Long,
                             maxDist: Int = 3, compactEvery: Int = 8): Unit = {
-    val dv = deltaView(spark, indexDir, compactEvery)
-    // replay check FIRST (one pointer read): a recovered/replayed batch
-    // must not pay the emptiness job below just to be skipped inside
-    val cur = dv.committed
-    if (cur.exists(_._1 >= batchId)) return
-    // fingerprint-family freeze, enforced per trigger: a hash-family or
-    // band-layout change fails loudly instead of probing wrong emptiness
-    Multimodal.ensureFingerprintStamp(spark, indexDir,
-      stateExists = cur.nonEmpty)
+    val g = group(spark, indexDir, compactEvery)
+    // one pointer read: the fingerprint-family freeze (a hash-family or
+    // band-layout change fails loudly instead of probing wrong emptiness)
+    // and the replay check, before the emptiness job below
+    if (g.checked.exists(_.batchId >= batchId)) return
     val (hashes, dels) = splitSigned(batch)
     try {
       if (hashes.isEmpty && dels.isEmpty) return // idle trigger: no commit
       val repHashes = repsOf(hashes, maxDist)
-      dv.applyBatch(batchId) { cur =>
+      g.applyBatch(batchId) { case Seq(cur) =>
         val index = cur.getOrElse(graft.util.Frames.empty(spark, IndexSchema))
-        val accepted = acceptedAgainst(index, repHashes, dels, maxDist)
-        (accepted, dels)
+        Seq((acceptedAgainst(index, repHashes, dels, maxDist), dels))
       }: Unit
     } finally { hashes.unpersist(); dels.unpersist() }
   }
@@ -143,19 +138,34 @@ object MediaDedupStream {
       .join(afterDel.select(col("media_id")), Seq("media_id"), "left_anti")
   }
 
-  private def deltaView(spark: SparkSession, indexDir: String,
-                        compactEvery: Int): DeltaView =
-    DeltaView(spark, indexDir, keyCols = Seq("media_id"),
-      compactEvery = compactEvery)
+  /** The index: one view, committed under the fingerprint-family stamp. */
+  private def group(spark: SparkSession, indexDir: String,
+                    compactEvery: Int = 8): DeltaView.Group =
+    DeltaView.Group(spark, indexDir, Seq(DeltaView(spark, indexDir,
+      keyCols = Seq("media_id"), compactEvery = compactEvery)),
+      Multimodal.fingerprintStamp)
 
-  /** The current accepted-fingerprint index (empty before any commit). */
-  def readIndexDelta(spark: SparkSession, indexDir: String): DataFrame =
-    deltaView(spark, indexDir, 8).read().getOrElse(
-      graft.util.Frames.empty(spark, IndexSchema))
+  /** Commit `hashes` (media_id, b0..b3) as the index's batch 0 under this
+    * maintainer's view and stamp, with no probe: a corpus already known
+    * to be near-dup-free seeds the index in one base commit.
+    */
+  def bootstrapDelta(spark: SparkSession, indexDir: String,
+                     hashes: DataFrame): Unit =
+    group(spark, indexDir).applyBatch(0L) { _ =>
+      Seq((hashes, graft.util.Frames.empty(spark, IndexSchema).select("media_id")))
+    }: Unit
+
+  /** The current accepted-fingerprint index (empty before any commit). An
+    * index committed under another fingerprint family is refused.
+    */
+  def readIndexDelta(spark: SparkSession, indexDir: String): DataFrame = {
+    val g = group(spark, indexDir)
+    g.readAt(g.checked).head.getOrElse(graft.util.Frames.empty(spark, IndexSchema))
+  }
 
   def committedDelta(spark: SparkSession,
                      indexDir: String): Option[(Long, Long, Long)] =
-    deltaView(spark, indexDir, 8).committed
+    group(spark, indexDir).committed
 
   /** The WHOLE media-ingest pipeline as one always-on stream: watch a
     * directory of loose media objects — audio (.wav) AND images (.png),
@@ -166,7 +176,7 @@ object MediaDedupStream {
     * file name (`..._<id>.wav`, the bucket convention); `pathGlobFilter`
     * keeps sidecar objects out of the source itself. Checkpointed file
     * offsets + the idempotent versioned commit give the same exactly-once
-    * contract as [[signedStreamDelta]].
+    * contract as every maintainer on [[MicroBatch]].
     *
     * Poison-file safety — an always-on stream must never crash-loop on a
     * bad object (checkpoint replay would re-read it forever):
@@ -196,63 +206,42 @@ object MediaDedupStream {
       .schema(BinaryFileSchema)
       .option("pathGlobFilter", glob)
       .load(watchDir)
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // try_cast: ANSI mode (Spark 4 default) makes a plain cast of a
-        // non-matching extract ("") THROW — the exact poison loop this
-        // path exists to prevent. Modality routes by extension; anything
-        // else the glob admitted is skipped, not fatal.
-        val media = batch.select(
-          expr("try_cast(regexp_extract(path, '_(\\\\d+)\\\\.[a-z]+$', 1) AS LONG)")
-            .as("media_id"),
-          when(col("path").endsWith(".wav"), "audio")
-            .when(col("path").endsWith(".png"), "image")
-            .as("kind"),
-          col("content").as("payload"))
-          .filter(col("media_id").isNotNull && col("kind").isNotNull)
-          .cache() // ONE payload read per trigger; both modality
-                   // pipelines (and their isEmpty probes) reuse it
-        // ONE INDEX PER MODALITY: an audio and an image fingerprint
-        // landing within hamming 3 is numerology, not a duplicate —
-        // cross-kind rejections must be impossible. Two idempotent
-        // commits share the batchId: a crash between them replays the
-        // batch, the committed side no-ops, the other converges.
-        // One row per derived id, as signed inserts.
-        def uniqInserts(h: DataFrame): DataFrame = {
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("media_id"))
-            .orderBy(col("b0"), col("b1"), col("b2"), col("b3"))
-          h.withColumn("_rn", row_number().over(w))
-            .filter(col("_rn") === 1).drop("_rn").withColumn("op", lit("I"))
-        }
-        try {
-          applySignedBatchDelta(spark, s"$indexDir/audio",
-            uniqInserts(Multimodal.audioFingerprintHashesSafe(spark, media)),
-            batchId, maxDist)
-          applySignedBatchDelta(spark, s"$indexDir/image",
-            uniqInserts(Multimodal.imageHashesSafe(spark, media)),
-            batchId, maxDist)
-        } finally media.unpersist() // trigger-owned; nothing session-wide
+    MicroBatch.start(raw, checkpointDir) { (batch, batchId) =>
+      // try_cast: ANSI mode (Spark 4 default) makes a plain cast of a
+      // non-matching extract ("") THROW — the exact poison loop this
+      // path exists to prevent. Modality routes by extension; anything
+      // else the glob admitted is skipped, not fatal.
+      val media = batch.select(
+        expr("try_cast(regexp_extract(path, '_(\\\\d+)\\\\.[a-z]+$', 1) AS LONG)")
+          .as("media_id"),
+        when(col("path").endsWith(".wav"), "audio")
+          .when(col("path").endsWith(".png"), "image")
+          .as("kind"),
+        col("content").as("payload"))
+        .filter(col("media_id").isNotNull && col("kind").isNotNull)
+        .cache() // ONE payload read per trigger; both modality
+                 // pipelines (and their isEmpty probes) reuse it
+      // ONE INDEX PER MODALITY: an audio and an image fingerprint
+      // landing within hamming 3 is numerology, not a duplicate —
+      // cross-kind rejections must be impossible. Two idempotent
+      // commits share the batchId: a crash between them replays the
+      // batch, the committed side no-ops, the other converges.
+      // One row per derived id, as signed inserts.
+      def uniqInserts(h: DataFrame): DataFrame = {
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("media_id"))
+          .orderBy(col("b0"), col("b1"), col("b2"), col("b3"))
+        h.withColumn("_rn", row_number().over(w))
+          .filter(col("_rn") === 1).drop("_rn").withColumn("op", lit("I"))
       }
-      .start()
-  }
-
-  /** Maintain the index continuously from a SIGNED streaming frame with
-    * columns (op ∈ I/D, media_id, b0..b3) — inserts dedup-and-append,
-    * deletes retract (see [[applySignedBatchDelta]]); O(batch) commits
-    * with periodic compaction.
-    */
-  def signedStreamDelta(changes: DataFrame, indexDir: String,
-                        checkpointDir: String, maxDist: Int = 3,
-                        compactEvery: Int = 8): StreamingQuery = {
-    val spark = changes.sparkSession
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applySignedBatchDelta(spark, indexDir, batch, batchId, maxDist,
-          compactEvery)
-      }
-      .start()
+      try {
+        applySignedBatchDelta(spark, s"$indexDir/audio",
+          uniqInserts(Multimodal.audioFingerprintHashesSafe(spark, media)),
+          batchId, maxDist)
+        applySignedBatchDelta(spark, s"$indexDir/image",
+          uniqInserts(Multimodal.imageHashesSafe(spark, media)),
+          batchId, maxDist)
+      } finally media.unpersist() // trigger-owned; nothing session-wide
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.TextAnalysis
-import graft.util.{AtomicPointer, DeltaView, Frames}
+import graft.util.{DeltaView, Frames}
 import graft.util.TextPrep.tokens
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -48,12 +48,12 @@ import org.apache.spark.sql.types._
   * corpus.
   *
   * The index layout is STAMPED (tokenizer family, bucket count, hash) —
-  * the [[graft.operators.Dedup.bandingStamp]] recipe: a maintainer or
-  * server under a different nBuckets/tokenization fails "rebuild
-  * required" instead of writing to (or pruning) the wrong buckets; the
-  * first commit is create-exclusive ([[AtomicPointer.commitExclusive]]),
-  * so two concurrent bootstrappers with different configs cannot both
-  * believe they stamped.
+  * the [[graft.operators.Dedup.bandingStamp]] recipe: [[postingsStamp]]
+  * is the layout of the group manifest, committed with the rows, so a
+  * maintainer or server under a different nBuckets/tokenization fails
+  * "rebuild required" instead of writing to (or pruning) the wrong
+  * buckets. The first commit holds the writer lock, so of two concurrent
+  * bootstrappers with different configs the second is refused.
   *
   * 100 TB shape: a day's ingest costs the day — per-batch tokenize +
   * one groupBy over the batch's (term, doc) pairs + O(batch) delta
@@ -72,62 +72,40 @@ object PostingsStream {
     StructField("dl", LongType), StructField("tf", LongType),
     StructField("tb", IntegerType)))
 
-  /** What a postings directory is stamped with: the tokenizer family and
+  /** What a postings index is stamped with: the tokenizer family and
     * the bucketing (count + hash). Any change invalidates stored rows
     * and every serving-side bucket computation.
     */
   def postingsStamp(nBuckets: Int): String =
     s"postings=v1,tokens=ws-lower,bucket=xxhash64%$nBuckets"
 
-  /** Validate (or create-exclusively record) the layout stamp. */
-  def ensurePostingsStamp(spark: SparkSession, dir: String, nBuckets: Int,
-                          stateExists: Boolean): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(dir, "LAYOUT")
-    val want = postingsStamp(nBuckets)
-    AtomicPointer.read(conf, p) match {
-      case Some(s) if s == want => ()
-      case Some(s) => throw new IllegalStateException(
-        s"postings-layout stamp mismatch, rebuild required: $dir was " +
-        s"built under '$s' but this engine is '$want' — a tokenizer or " +
-        "bucketing change makes stored postings incomparable (a " +
-        "mismatched server prunes the WRONG buckets and returns wrong " +
-        "emptiness)")
-      case None if stateExists => throw new IllegalStateException(
-        s"$dir has committed postings state but no LAYOUT stamp — built " +
-        s"by a pre-stamp engine or a foreign writer; rebuild required " +
-        s"(engine is '$want')")
-      case None =>
-        if (!AtomicPointer.commitExclusive(conf, p, want))
-          AtomicPointer.read(conf, p) match {
-            case Some(s) if s == want => ()
-            case Some(s) => throw new IllegalStateException(
-              s"postings-layout stamp race lost: $dir was concurrently " +
-              s"stamped '$s' but this maintainer is '$want'")
-            case None => throw new IllegalStateException(
-              s"$dir/LAYOUT vanished during first commit")
-          }
-    }
-  }
-
-  /** The docs and postings views, committed as one group. */
-  private[streaming] def views(spark: SparkSession, dir: String, k: Int = 8) =
+  /** The docs and postings views, committed as one group under the
+    * layout of `nBuckets`.
+    */
+  private[streaming] def views(spark: SparkSession, dir: String, k: Int = 8,
+                               nBuckets: Int = 64) =
     DeltaView.Group(spark, dir, Seq(
       DeltaView(spark, s"$dir/docs", Seq("doc"), compactEvery = k),
       DeltaView(spark, s"$dir/postings", Seq("doc"), compactEvery = k,
-        basePartitionCols = Seq("tb"))))
+        basePartitionCols = Seq("tb"))), postingsStamp(nBuckets))
 
   /** Live documents (doc, dl, hash); empty before any commit. */
   def readDocsDelta(spark: SparkSession, dir: String): DataFrame =
-    views(spark, dir).read().head.getOrElse(Frames.empty(spark, DocsSchema))
+    docsOf(spark, views(spark, dir).read().head)
+
+  /** Live postings (term, doc, dl, tf, tb); empty before any commit. */
+  def readPostingsDelta(spark: SparkSession, dir: String): DataFrame =
+    postingsOf(spark, views(spark, dir).read()(1))
+
+  private def docsOf(spark: SparkSession, view: Option[DataFrame]): DataFrame =
+    view.getOrElse(Frames.empty(spark, DocsSchema))
       .select(col("doc").cast("long"), col("dl").cast("long"), col("hash"))
 
-  /** Live postings (term, doc, dl, tf, tb); empty before any commit.
-    * Partition-column inference reads `tb` back as int on compacted
+  /** Partition-column inference reads `tb` back as int on compacted
     * bases — pin the published schema regardless of file kind.
     */
-  def readPostingsDelta(spark: SparkSession, dir: String): DataFrame =
-    views(spark, dir).read()(1).getOrElse(Frames.empty(spark, PostingsSchema))
+  private def postingsOf(spark: SparkSession, view: Option[DataFrame]): DataFrame =
+    view.getOrElse(Frames.empty(spark, PostingsSchema))
       .select(col("term"), col("doc").cast("long"), col("dl").cast("long"),
         col("tf").cast("long"), col("tb").cast("int"))
 
@@ -142,7 +120,7 @@ object PostingsStream {
     * on its own document's text, which is what makes the maintained index
     * row-identical to a full rebuild over the live corpus.
     */
-  private def postingsOf(docsWithText: DataFrame, nBuckets: Int): DataFrame =
+  private def batchPostings(docsWithText: DataFrame, nBuckets: Int): DataFrame =
     docsWithText.select(col("doc"), tokens(col("text")).as("tk"))
       .select(col("doc"), size(col("tk")).cast("long").as("dl"), col("tk"))
       .select(col("doc"), col("dl"), explode(col("tk")).as("term"))
@@ -157,10 +135,8 @@ object PostingsStream {
                             batch: DataFrame, batchId: Long,
                             nBuckets: Int = 64,
                             compactEvery: Int = 8): Unit = {
-    val group = views(spark, dir, compactEvery)
-    val cur = group.committed
-    ensurePostingsStamp(spark, dir, nBuckets, stateExists = cur.isDefined)
-    if (cur.exists(_._1 >= batchId)) return
+    val group = views(spark, dir, compactEvery, nBuckets)
+    if (group.checked.exists(_.batchId >= batchId)) return
 
     val dels = batch.filter(col("op") === "D")
       .select(col("doc_id").cast("long").as("doc")).distinct().cache()
@@ -185,31 +161,34 @@ object PostingsStream {
         val accepted = ins.join(live.select(col("doc")), Seq("doc"), "left_anti")
         Seq((accepted.select(col("doc"),
             size(tokens(col("text"))).cast("long").as("dl"), col("hash")), dels),
-          (postingsOf(accepted, nBuckets), dels))
+          (batchPostings(accepted, nBuckets), dels))
       }: Unit
     } finally { ins.unpersist(); dels.unpersist() }
   }
 
   /** BM25 top-k served from the MAINTAINED index — q156's serving path on
     * the streamed state: same bucket pruning, same exact df, same scorer.
+    * Both views come from one manifest read whose layout must be
+    * `nBuckets`'s: a server under another bucketing is refused instead of
+    * pruning the wrong buckets.
     */
   def bm25TopKDelta(spark: SparkSession, dir: String,
                     queries: Seq[(Long, String)], k: Int = 10,
                     k1: Double = 1.2, b: Double = 0.75, nSalts: Int = 16,
                     nBuckets: Int = 64): DataFrame = {
     import spark.implicits._
-    ensurePostingsStamp(spark, dir, nBuckets,
-      stateExists = views(spark, dir).committed.isDefined)
+    val group = views(spark, dir, nBuckets = nBuckets)
+    val Seq(docsV, postingsV) = group.readAt(group.checked)
     val allTerms = queries.flatMap(_._2.toLowerCase.trim.split(" +")).distinct
     // bucket ids via the SAME expression as the writer (driver-side
     // reimplementation would silently drift)
     val buckets = allTerms.toDF("term")
       .select(pmod(xxhash64(col("term")), lit(nBuckets)).cast("int").as("tb"))
       .distinct().collect().map(_.getInt(0)).toIndexedSeq
-    val post = readPostingsDelta(spark, dir)
+    val post = postingsOf(spark, postingsV)
       .filter(col("tb").isin(buckets: _*) && col("term").isin(allTerms: _*))
       .select(col("term"), col("doc"), col("dl"), col("tf"))
-    val stats = readDocsDelta(spark, dir)
+    val stats = docsOf(spark, docsV)
       .agg(count(lit(1)).cast("double").as("n"),
         (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
     TextAnalysis.bm25ScorePostings(post, stats, queries, k, k1, b, nSalts)

@@ -4,11 +4,10 @@ import graft.operators.Warehouse
 import graft.util.DeltaView
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming SCD Type-2 dimension maintenance: a change stream of
   * (key, ts, tb, attr) observations maintains the versioned dimension of
-  * [[graft.operators.Warehouse.scd2]] through `foreachBatch` — the
+  * [[graft.operators.Warehouse.scd2]] through [[MicroBatch]] — the
   * dimension-side companion of [[ViewMaintenance]] (together they are the
   * replica-warehouse consumers of the change stream the replication plane
   * ships).
@@ -95,19 +94,4 @@ object Scd2Maintenance {
   /** The current dimension (None before the first commit). */
   def readDimDelta(spark: SparkSession, dimDir: String): Option[DataFrame] =
     deltaView(spark, dimDir).read()
-
-  /** Maintain the dimension continuously from a streaming change frame with
-    * columns (key, ts, tb, attr).
-    */
-  def maintainStreamDelta(changes: DataFrame, dimDir: String,
-                          checkpointDir: String,
-                          compactEvery: Int = 8): StreamingQuery = {
-    val spark = changes.sparkSession
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatchDelta(spark, dimDir, batch, batchId, compactEvery)
-      }
-      .start()
-  }
 }

@@ -4,12 +4,11 @@ import graft.operators.Warehouse
 import graft.util.DeltaView
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DecimalType, LongType, StringType, StructField, StructType}
 
 /** Streaming incremental view maintenance: a CDC stream of
   * (op ∈ I/D, key, measure) rows maintains a materialized per-key aggregate
-  * (count + additive sum) through `foreachBatch` — the always-on form of
+  * (count + additive sum) through [[MicroBatch]] — the always-on form of
   * [[graft.operators.Warehouse.maintainAgg]], exactly as
   * [[StreamingReplication]] is the always-on form of the batch replication
   * cycle (reference context: the cron loop in
@@ -70,19 +69,4 @@ object ViewMaintenance {
     deltaView(spark, viewDir).read().getOrElse(
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ViewSchema))
-
-  /** Maintain the view continuously from a streaming CDC frame with columns
-    * (op, key, measure).
-    */
-  def maintainStreamDelta(changes: DataFrame, viewDir: String,
-                          checkpointDir: String,
-                          compactEvery: Int = 8): StreamingQuery = {
-    val spark = changes.sparkSession
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatchDelta(spark, viewDir, batch, batchId, compactEvery)
-      }
-      .start()
-  }
 }

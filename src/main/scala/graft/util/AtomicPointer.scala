@@ -43,20 +43,15 @@ object AtomicPointer {
     }
   }
 
-  /** Write `payload` to `tmp`, a temp file beside the pointer. */
-  private def writeTemp(fs: FileSystem, tmp: Path, payload: String): Unit = {
-    fs.mkdirs(tmp.getParent)
-    val out = fs.create(tmp, true)
-    try out.write(payload.getBytes(StandardCharsets.UTF_8)) finally out.close()
-  }
-
   /** Atomically replace the pointer's payload (write temp + overwrite
     * rename).
     */
   def commit(conf: Configuration, p: Path, payload: String): Unit = {
     val fs = fsOf(conf, p)
     val tmp = new Path(p.getParent, p.getName + ".tmp")
-    writeTemp(fs, tmp, payload)
+    fs.mkdirs(tmp.getParent)
+    val out = fs.create(tmp, true)
+    try out.write(payload.getBytes(StandardCharsets.UTF_8)) finally out.close()
     fs match {
       case raw: RawLocalFileSystem =>
         if (!raw.rename(tmp, p)) throw new java.io.IOException(s"pointer commit failed: $tmp -> $p")
@@ -64,35 +59,5 @@ object AtomicPointer {
         val fc = FileContext.getFileContext(fs.getUri, conf)
         fc.rename(fs.makeQualified(tmp), fs.makeQualified(p), Options.Rename.OVERWRITE)
     }
-  }
-
-  /** CREATE-EXCLUSIVE commit: atomically install the payload only if no
-    * pointer exists yet. Returns true iff this writer won. Two concurrent
-    * first-committers thus cannot both believe they stamped
-    * ([[graft.operators.EmbeddingIndex.ensureIndexStamp]]'s first-commit
-    * race): exactly one install succeeds, and the loser re-reads the
-    * winner's value and fails its own validation loudly instead of running
-    * a batch under a stamp that no longer matches.
-    *
-    * The payload goes to a writer-unique temp first. On the local
-    * filesystem the install is a hard link (link(2)), which fails iff the
-    * name is taken and forks nothing; elsewhere it is a rename WITHOUT
-    * overwrite. Either way the temp is gone afterwards.
-    */
-  def commitExclusive(conf: Configuration, p: Path, payload: String): Boolean = {
-    val fs = fsOf(conf, p)
-    val tmp = new Path(p.getParent, s"${p.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    writeTemp(fs, tmp, payload)
-    try {
-      fs match {
-        case raw: RawLocalFileSystem =>
-          java.nio.file.Files.createLink(raw.pathToFile(p).toPath, raw.pathToFile(tmp).toPath)
-        case _ => FileContext.getFileContext(fs.getUri, conf)
-          .rename(fs.makeQualified(tmp), fs.makeQualified(p), Options.Rename.NONE)
-      }
-      true
-    } catch {
-      case _: java.io.IOException if fs.exists(p) => false // someone else won
-    } finally fs.delete(tmp, false)
   }
 }

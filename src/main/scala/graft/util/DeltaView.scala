@@ -25,13 +25,23 @@ import org.apache.spark.sql.functions._
   * by construction) and `dir/delta_v<V>` for V in (B, current] (the
   * view's rows with an `_op` column: `I` rows carry payload, `D` rows
   * carry only the key). `dir/CURRENT` holds one [[GroupManifest]]: the
-  * committed batchId, the version, and one [[TableManifest]] per live
-  * version dir, naming its files. A view is a [[DeltaView.Group]] of one;
-  * coupled views of one maintainer are a group of several, committed by
-  * ONE pointer swap, so a crash leaves every view old or every view new.
-  * A replayed batch (`batchId <= committed`) no-ops; a crash between a
-  * data write and the pointer swap replays by overwriting the same
-  * version directory.
+  * committed batchId, the version, the layout stamp, and one
+  * [[TableManifest]] per live version dir, naming its files. A view is a
+  * [[DeltaView.Group]] of one; coupled views of one maintainer are a group
+  * of several, committed by ONE pointer swap, so a crash leaves every view
+  * old or every view new. A replayed batch (`batchId <= committed`)
+  * no-ops; a crash between a data write and the pointer swap replays by
+  * overwriting the same version directory.
+  *
+  * The layout stamp names what the rows were computed under — a
+  * maintainer's hash family, bucketing or quantizer; "" for an unstamped
+  * view — so the rows and their meaning turn over in one pointer write.
+  * A commit refuses, by name, a committed stamp other than the group's;
+  * only [[DeltaView.Group.rebase]] moves it, rewriting every row in the
+  * same commit. Reads do not check it: a serving path that knows its
+  * stamp reads through [[DeltaView.Group.checked]], or takes the stamp and
+  * the rows from one manifest read ([[DeltaView.Group.current]],
+  * [[DeltaView.Group.readAt]]).
   *
   * Fold rule (the read side): an `I` row at version v is live unless some
   * tombstone for its key exists at version v' > v. Deletes apply BEFORE
@@ -112,21 +122,6 @@ final case class DeltaView(spark: SparkSession, dir: String,
   def applyBatch(batchId: Long)
                 (fn: Option[DataFrame] => (DataFrame, DataFrame)): Boolean =
     solo.applyBatch(batchId)(views => Seq(fn(views.head)))
-
-  /** Rewrite the ENTIRE view as one fresh compacted base: `fn` maps the
-    * current view to its replacement (same schema). This is the lifecycle
-    * commit a delta log cannot express as a batch — re-quantizing an
-    * embedding index, a layout migration — where every row changes at
-    * once: routing it through [[applyBatch]] as delete-all + reinsert-all
-    * would put the whole corpus in the tombstone set and break the fold's
-    * broadcast bound. A rebase ignores the compaction cadence (it IS a
-    * compaction), keeps the replay contract (`batchId` ≤ committed
-    * no-ops), holds the writer lock, and prunes like any commit. Requires
-    * committed state — an empty view has nothing to rewrite; bootstrap
-    * through [[applyBatch]].
-    */
-  def rebase(batchId: Long)(fn: DataFrame => DataFrame): Boolean =
-    solo.rebase(batchId)(views => Seq(fn(views.head)))
 
   /** Live rows of a (base ∪ deltas) frame carrying `_v`/`_op`. Key
     * equality is null-safe (`<=>`): a maintainer whose key can be null
@@ -221,6 +216,16 @@ object DeltaView {
   /** Writes a view's version dir with partition columns; names it in the group. */
   private type Writer = (String, DataFrame, Seq[String]) => (String, TableManifest)
 
+  /** The refusal, by name, of a committed layout other than `want`. A
+    * manifest from before layouts were recorded reads as "".
+    */
+  def layoutRefused(dir: String, committed: String, want: String): IllegalStateException =
+    new IllegalStateException(
+      if (committed.isEmpty) s"$dir was committed before layout stamps moved into the manifest, " +
+        s"or by an unstamped writer — rebuild required (this maintainer's layout is '$want')"
+      else s"layout mismatch, rebuild required: $dir was committed under '$committed', " +
+        s"but this maintainer's layout is '$want'")
+
   /** Views committed together under one pointer, `dir/CURRENT`: a batch
     * lands in every view or in none, under one writer lock and one replay
     * guard. Each view keeps its version dirs under its own `dir`, which is
@@ -231,9 +236,12 @@ object DeltaView {
     * The lock goes stale at the smallest of the views' `writerLockStaleMs`.
     * A grouped view is addressed only through its group: a view's own
     * pointer under a group, or a group naming a view opened on its own,
-    * is refused by name, never bootstrapped over.
+    * is refused by name, never bootstrapped over. `layout` is what every
+    * commit records and requires of the committed state (see
+    * [[DeltaView]]'s layout paragraph).
     */
-  final case class Group(spark: SparkSession, dir: String, views: Seq[DeltaView]) {
+  final case class Group(spark: SparkSession, dir: String, views: Seq[DeltaView],
+                         layout: String = "") {
     require(views.map(_.dir) == Seq(dir) ||
       views.forall(v => new Path(v.dir).getParent == new Path(dir)), s"views must be $dir or its subdirs")
     private val prefixes = views.map(v => if (v.dir == dir) "" else new Path(v.dir).getName + "/")
@@ -241,7 +249,8 @@ object DeltaView {
     private def conf = spark.sparkContext.hadoopConfiguration
     private def pointer = new Path(dir, "CURRENT")
 
-    private def manifest: Option[GroupManifest] =
+    /** The committed manifest (one pointer read), None before any commit. */
+    def current: Option[GroupManifest] =
       AtomicPointer.read(conf, pointer).map(parse(pointer, _)).orElse {
         val up = new Path(new Path(dir).getParent, "CURRENT")
         if (prefixes == Seq("") && AtomicPointer.read(conf, up).filter(_.startsWith("{"))
@@ -268,16 +277,28 @@ object DeltaView {
     private def tablesOf(g: GroupManifest, i: Int): Seq[(String, TableManifest)] =
       g.tables.collect { case (n, Some(m)) if n.startsWith(prefixes(i)) => n -> m }
 
+    /** [[current]], refusing a committed layout other than this group's:
+      * the check every commit makes, for a caller that wants it before a
+      * batch's work or a serving read.
+      */
+    def checked: Option[GroupManifest] = current.map { g =>
+      if (g.layout != layout) throw layoutRefused(dir, g.layout, layout)
+      g
+    }
+
     /** (committedBatchId, version, the first view's base version), None
       * before any commit.
       */
     def committed: Option[(Long, Long, Long)] =
-      manifest.map(g => (g.batchId, g.version, tablesOf(g, 0).head._2.version))
+      current.map(g => (g.batchId, g.version, tablesOf(g, 0).head._2.version))
 
     /** Each view, or None before the first commit. */
-    def read(): Seq[Option[DataFrame]] = readAt(manifest)
+    def read(): Seq[Option[DataFrame]] = readAt(current)
 
-    private def readAt(g: Option[GroupManifest]): Seq[Option[DataFrame]] =
+    /** Each view as of `g`, a manifest this group read (None: before the
+      * first commit).
+      */
+    def readAt(g: Option[GroupManifest]): Seq[Option[DataFrame]] =
       views.indices.map(i => g.map(m => views(i).readVersions(dir, tablesOf(m, i))))
 
     /** Apply one micro-batch to every view: `fn` maps the current views
@@ -287,7 +308,7 @@ object DeltaView {
       */
     def applyBatch(batchId: Long)
                   (fn: Seq[Option[DataFrame]] => Seq[(DataFrame, DataFrame)]): Boolean =
-      commit(batchId) { (cur, newV, write) =>
+      commit(batchId, layout) { (cur, newV, write) =>
         val current = readAt(cur)
         val changes = fn(current)
         require(changes.size == views.size, s"${changes.size} changes for ${views.size} views")
@@ -297,11 +318,23 @@ object DeltaView {
         }
       }
 
-    /** Rewrite every view as one fresh base, as [[DeltaView.rebase]] does
-      * for one.
+    /** Rewrite EVERY view as one fresh compacted base: `fn` maps the
+      * current views to their replacements (same schemas), and the commit
+      * records `to` as the layout — the one commit that may move it, since
+      * it rewrites every row. This is the lifecycle commit a delta log
+      * cannot express as a batch — re-quantizing an embedding index, a
+      * layout migration — where every row changes at once: routing it
+      * through [[applyBatch]] as delete-all + reinsert-all would put the
+      * whole corpus in the tombstone set and break the fold's broadcast
+      * bound. A rebase ignores the compaction cadence (it IS a
+      * compaction), keeps the replay contract (`batchId` ≤ committed
+      * no-ops), refuses a committed layout other than the group's, holds
+      * the writer lock, and prunes like any commit. Requires committed
+      * state — an empty view has nothing to rewrite; bootstrap through
+      * [[applyBatch]].
       */
-    def rebase(batchId: Long)(fn: Seq[DataFrame] => Seq[DataFrame]): Boolean =
-      commit(batchId) { (cur, newV, write) =>
+    def rebase(batchId: Long, to: String = layout)(fn: Seq[DataFrame] => Seq[DataFrame]): Boolean =
+      commit(batchId, to) { (cur, newV, write) =>
         require(cur.nonEmpty,
           s"rebase requires committed state at $dir — bootstrap via applyBatch")
         views.indices.zip(fn(readAt(cur).map(_.get))).map { case (i, next) =>
@@ -309,12 +342,13 @@ object DeltaView {
         }
       }
 
-    /** The one commit path: under the writer lock, skip a replayed batch,
-      * let `body` write the next version's dirs (through the writer of
-      * each view, `write(i)`), commit them as one group manifest, then
-      * delete what no kept state needs.
+    /** The one commit path: under the writer lock, refuse a committed
+      * layout other than this group's, skip a replayed batch, let `body`
+      * write the next version's dirs (through the writer of each view,
+      * `write(i)`), commit them with layout `to` as one group manifest,
+      * then delete what no kept state needs.
       */
-    private def commit(batchId: Long)
+    private def commit(batchId: Long, to: String)
                       (body: (Option[GroupManifest], Long, Int => Writer)
                         => Seq[(String, TableManifest)]): Boolean = {
       val lockFile = new Path(dir, WriterLockFile)
@@ -322,7 +356,7 @@ object DeltaView {
         java.util.UUID.randomUUID.toString, views.map(_.writerLockStaleMs).min).getOrElse(
         throw new graft.repl.LockBusyException(s"another maintainer owns this view: $lockFile"))
       try {
-        val cur = manifest // read ONCE per batch (guards pointer + view read)
+        val cur = checked // read ONCE per batch (guards pointer + view read)
         if (cur.exists(_.batchId >= batchId)) return false
         val newV = cur.fold(0L)(_.version + 1)
         val fs = new Path(dir).getFileSystem(conf)
@@ -339,7 +373,7 @@ object DeltaView {
         val due = cur.toSeq.flatMap(_.retired).filter(t => fs.exists(new Path(dir, t)))
         val retired = due ++ cur.toSeq.flatMap(_.tables.map(_._1)).filterNot(live)
         Manifests.commitGroup(conf, pointer,
-          GroupManifest(batchId, newV, tables.map { case (n, m) => n -> Some(m) }, retired))
+          GroupManifest(batchId, newV, tables.map { case (n, m) => n -> Some(m) }, retired, to))
         due.foreach(t => fs.delete(new Path(dir, t), true))
         true
       } finally lock.release()

@@ -48,13 +48,17 @@ object TableManifest {
   * swaps them all, so a reader sees every table old or every table new.
   * `tables` maps each name to its version (None: a table read live, with
   * no manifest); `retired` names tables an earlier version held that may
-  * still be on disk, for the committer's retention.
+  * still be on disk, for the committer's retention. `layout` stamps what
+  * the tables' rows were computed under (a streamed index's hash family,
+  * bucketing or quantizer), committed by the same pointer write as the
+  * rows; "" for an unstamped group, and for a manifest written before the
+  * field existed.
   */
 final case class GroupManifest(batchId: Long, version: Long,
                                tables: Seq[(String, Option[TableManifest])],
-                               retired: Seq[String] = Nil) {
+                               retired: Seq[String] = Nil, layout: String = "") {
   def json: String =
-    s"""{"batchId":$batchId,"version":$version,""" +
+    s"""{"batchId":$batchId,"version":$version,"layout":${Json.str(layout)},""" +
     tables.map { case (t, m) => s"""{"name":${Json.str(t)},"manifest":${m.fold("null")(_.json)}}""" }
       .mkString(""""tables":[""", ",", "],") +
     retired.map(Json.str).mkString(""""retired":[""", ",", "]}")
@@ -66,7 +70,8 @@ object GroupManifest {
   def parse(json: String): GroupManifest = {
     val n = Json.parse(json)
     GroupManifest(n.get("batchId").asLong, n.get("version").asLong, tables(n),
-      n.get("retired").asScala.toSeq.map(_.asText))
+      n.get("retired").asScala.toSeq.map(_.asText),
+      Option(n.get("layout")).fold("")(_.asText))
   }
 
   /** The `tables` of a group manifest's JSON object. */

@@ -381,67 +381,84 @@ class EmbeddingIndexSpec extends SparkSpec {
     intercept[IllegalStateException] {
       EmbeddingIndex.AutoRouter.assign(corpus, few, "embedding", "vec_id")
     }
-    // a maintainer bootstrapping under the default (AUTO) stamps the
-    // RESOLVED family, and the serving probe dispatches from that stamp
-    val dirF = java.nio.file.Files.createTempDirectory("graft-auto-f").toString
-    val gotF = EmbeddingIndex.ensureIndexStamp(spark, dirF, few,
-      EmbeddingIndex.AutoRouter, stateExists = false)
-    assert(gotF == EmbeddingIndex.FlatRouter)
-    assert(EmbeddingIndex.stampedRouter(spark, dirF, few,
-      stateExists = false).contains(EmbeddingIndex.FlatRouter))
-    val dirH = java.nio.file.Files.createTempDirectory("graft-auto-h").toString
-    val gotH = EmbeddingIndex.ensureIndexStamp(spark, dirH, many,
-      EmbeddingIndex.AutoRouter, stateExists = false)
-    assert(gotH == EmbeddingIndex.HierRouter)
-    assert(EmbeddingIndex.stampedRouter(spark, dirH, many,
-      stateExists = false).contains(EmbeddingIndex.HierRouter))
+    // a maintainer bootstrapping under the default (AUTO) commits the
+    // RESOLVED family as its layout, and the serving probe dispatches from it
+    import graft.streaming.{EmbeddingDedupStream, Stamps}
+    def tmp(tag: String) = java.nio.file.Files.createTempDirectory(tag).toString
+    def router(dir: String, cent: org.apache.spark.sql.DataFrame) =
+      EmbeddingIndex.committedRouter(dir, Stamps.layout(spark, dir).get, cent)
+    val dirF = tmp("graft-auto-f")
+    EmbeddingDedupStream.bootstrapDelta(spark, dirF, few, corpus)
+    assert(router(dirF, few) == EmbeddingIndex.FlatRouter)
+    val dirH = tmp("graft-auto-h")
+    EmbeddingDedupStream.bootstrapDelta(spark, dirH, many, corpus)
+    assert(router(dirH, many) == EmbeddingIndex.HierRouter)
     // an explicit FLAT build against the auto-stamped hier dir fails
-    // loudly at the stamp (build appropriateness is now enforced)
+    // loudly at the commit (build appropriateness is now enforced)
+    val batch = embs.filter(isBatch).limit(4)
+      .select(lit("I").as("op"), col("vec_id"), col("embedding"))
     intercept[IllegalStateException] {
-      EmbeddingIndex.ensureIndexStamp(spark, dirH, many,
-        EmbeddingIndex.FlatRouter, stateExists = true)
+      EmbeddingDedupStream.applyBatchDelta(spark, dirH, many, batch, 1L,
+        router = EmbeddingIndex.FlatRouter)
     }
     // AUTO against an EXISTING valid stamp ADOPTS the stamped family
     // instead of re-deriving from the cell count: an index built 'flat'
     // under an older default (or before a crossover re-tune) with a
     // quantizer ABOVE today's crossover must keep serving, not hard-fail
     // "rebuild required" while its state is perfectly valid (r12 ADVICE)
-    val dirAdopt = java.nio.file.Files.createTempDirectory("graft-auto-adopt").toString
-    assert(EmbeddingIndex.ensureIndexStamp(spark, dirAdopt, many,
-      EmbeddingIndex.FlatRouter, stateExists = false) == EmbeddingIndex.FlatRouter)
-    assert(EmbeddingIndex.ensureIndexStamp(spark, dirAdopt, many,
-      EmbeddingIndex.AutoRouter, stateExists = true) == EmbeddingIndex.FlatRouter)
+    val dirAdopt = tmp("graft-auto-adopt")
+    EmbeddingDedupStream.bootstrapDelta(spark, dirAdopt, many, corpus,
+      EmbeddingIndex.FlatRouter)
+    val flat = Stamps.layout(spark, dirAdopt)
+    assert(EmbeddingIndex.indexLayout(dirAdopt, flat, many,
+      EmbeddingIndex.AutoRouter) == (EmbeddingIndex.FlatRouter -> flat.get))
+    EmbeddingDedupStream.applyBatchDelta(spark, dirAdopt, many, batch, 1L)
+    assert(EmbeddingDedupStream.committedDelta(spark, dirAdopt).map(_._1).contains(1L))
+    assert(Stamps.layout(spark, dirAdopt) == flat)
     // ...but adoption is digest-gated: AUTO against a DIFFERENT quantizer
     // still fails loudly (assignments are incomparable either way)
     intercept[IllegalStateException] {
-      EmbeddingIndex.ensureIndexStamp(spark, dirAdopt, few,
-        EmbeddingIndex.AutoRouter, stateExists = true)
+      EmbeddingDedupStream.applyBatchDelta(spark, dirAdopt, few, batch, 2L)
     }
   }
 
-  test("first-commit stamp is create-exclusive: a concurrent loser fails loudly") {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = java.nio.file.Files.createTempDirectory("graft-stamp-race").toString
-    val p = new org.apache.hadoop.fs.Path(dir, "ROUTER")
-    // winner installs; loser's exclusive commit reports the loss instead
-    // of overwriting (the last-writer-wins window the round-11 advice
-    // flagged)
-    assert(graft.util.AtomicPointer.commitExclusive(conf, p, "router=flat,quantizer=aaaa"))
-    assert(!graft.util.AtomicPointer.commitExclusive(conf, p, "router=hier,quantizer=bbbb"))
-    assert(graft.util.AtomicPointer.read(conf, p)
-      .contains("router=flat,quantizer=aaaa"))
-    // ensureIndexStamp's first-commit path surfaces the race as an error
-    // for the loser: a second bootstrapper with a DIFFERENT quantizer
-    // must throw, not silently run under the winner's stamp
+  test("first commit holds the writer lock: a concurrent bootstrapper under another quantizer fails loudly") {
+    import graft.streaming.{EmbeddingDedupStream, Stamps}
     val corpus = embs.filter(!isBatch)
     val centA = EmbeddingIndex.seedCentroids(corpus, "embedding", "vec_id", 16)
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-stamp-race2").toString
-    EmbeddingIndex.ensureIndexStamp(spark, dir2, centA,
-      EmbeddingIndex.FlatRouter, stateExists = false)
     val centB = EmbeddingIndex.seedCentroids(corpus, "embedding", "vec_id", 8)
-    intercept[IllegalStateException] {
-      EmbeddingIndex.ensureIndexStamp(spark, dir2, centB,
-        EmbeddingIndex.FlatRouter, stateExists = false)
+    val dir = java.nio.file.Files.createTempDirectory("graft-stamp-race").toString
+    // two bootstrappers race for the fresh dir: one wins the writer lock and
+    // commits rows and stamp in one pointer write; the other is refused,
+    // either by the held lock or by the winner's stamp — never run under a
+    // stamp it did not write
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val runs = Seq(centA, centB).map { c =>
+        pool.submit(() => {
+          start.await()
+          scala.util.Try(EmbeddingDedupStream.bootstrapDelta(spark, dir, c, corpus,
+            EmbeddingIndex.FlatRouter))
+        })
+      }
+      start.countDown()
+      val outcomes = runs.map(_.get())
+      assert(outcomes.count(_.isSuccess) == 1, outcomes.toString)
+      outcomes.filter(_.isFailure).foreach(f => assert(f.failed.get.getMessage
+        .matches("(?s).*(another maintainer owns this view|layout mismatch, rebuild required).*"),
+        f.failed.get.getMessage))
+      val won = if (outcomes.head.isSuccess) centA else centB
+      assert(Stamps.layout(spark, dir).contains(
+        EmbeddingIndex.indexStamp(won, EmbeddingIndex.FlatRouter)))
+    } finally pool.shutdown()
+    // a later bootstrapper under the loser's quantizer is refused by the stamp
+    val lost = if (Stamps.layout(spark, dir).contains(
+      EmbeddingIndex.indexStamp(centA, EmbeddingIndex.FlatRouter))) centB else centA
+    val e = intercept[IllegalStateException] {
+      EmbeddingDedupStream.bootstrapDelta(spark, dir, lost, corpus,
+        EmbeddingIndex.FlatRouter)
     }
+    assert(e.getMessage.contains("layout mismatch, rebuild required"), e.getMessage)
   }
 }

@@ -24,8 +24,8 @@ class AnomalyMonitorSpec extends SparkSpec {
     val (b1, b2) = all.partition { case (_, us) => us < 5 * H + 5 }
 
     val mem = MemoryStream[(String, Long)]
-    val q = AnomalyMonitor.monitorStreamDelta(
-      mem.toDS().toDF("key", "us"), s"$dir/view", s"$dir/ckpt")
+    val q = MicroBatch.start(mem.toDS().toDF("key", "us"), s"$dir/ckpt")(
+      AnomalyMonitor.applyBatchDelta(spark, s"$dir/view", _, _))
     mem.addData(b1: _*); q.processAllAvailable()
     mem.addData(b2: _*); q.processAllAvailable()
     q.stop()

@@ -124,9 +124,8 @@ class CurationStreamSpec extends SparkSpec {
     val ok3 = Dedup.lshIndexBuild(all, "text", "doc_id", maxShingleDf = 100).ok
 
     val mem = MemoryStream[(Long, String, String)]
-    val q = CurationStream.curationStreamDelta(
-      mem.toDS().toDF("doc_id", "text", "source"), ok3,
-      dir, s"$dir/ckpt", capN = 10L)
+    val q = MicroBatch.start(mem.toDS().toDF("doc_id", "text", "source"),
+      s"$dir/ckpt")(CurationStream.applyBatchDelta(spark, dir, ok3, _, _, capN = 10L))
     mem.addData((1L, base, "web"), (2L, base + " tail change here.", "web"))
     q.processAllAvailable()
     // an exact copy of doc 1 and a near-dup of the base arrive later
@@ -218,24 +217,19 @@ class CurationStreamSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-cur6").toString
     CurationStream.applyBatchDelta(spark, dir, frozenOk,
       docs.limit(20), 0L, capN = 60L)
-    // the stamp was recorded on first commit
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(dir, "BANDING")
-    assert(graft.util.AtomicPointer.read(conf, p).contains(Dedup.bandingStamp))
-    // simulate an engine whose banding/family changed: stamp mismatch
-    graft.util.AtomicPointer.commit(conf, p, "k=64,bands=32,family=deadbeef")
-    val e = intercept[IllegalStateException] {
-      CurationStream.applyBatchDelta(spark, dir, frozenOk,
-        docs.limit(20), 1L, capN = 60L)
+    // the stamp is the group manifest's layout, committed with the rows
+    assert(Stamps.layout(spark, dir).contains(Dedup.bandingStamp))
+    // simulate an engine whose banding/family changed: refused on write
+    // and on read, and nothing is written
+    Stamps.restamp(spark, dir, "k=64,bands=32,family=deadbeef")
+    val before = Stamps.files(dir)
+    for (call <- Seq[() => Any](
+        () => CurationStream.applyBatchDelta(spark, dir, frozenOk,
+          docs.limit(20), 1L, capN = 60L),
+        () => CurationStream.readDocsDelta(spark, dir))) {
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains("layout mismatch, rebuild required"), e.getMessage)
     }
-    assert(e.getMessage.contains("banding mismatch"))
-    // an unstamped directory WITH committed state also fails (pre-stamp
-    // or foreign writer)
-    p.getFileSystem(conf).delete(p, false)
-    val e2 = intercept[IllegalStateException] {
-      CurationStream.applyBatchDelta(spark, dir, frozenOk,
-        docs.limit(20), 1L, capN = 60L)
-    }
-    assert(e2.getMessage.contains("no BANDING stamp"))
+    assert(Stamps.files(dir) == before)
   }
 }

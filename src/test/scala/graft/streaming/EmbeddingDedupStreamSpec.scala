@@ -228,31 +228,34 @@ class EmbeddingDedupStreamSpec extends SparkSpec {
       rows.toDF("op", "vec_id", "embedding")
     EmbeddingDedupStream.applyBatchDelta(spark, idx, centFrame,
       batch(("I", 2L, e1), ("I", 9L, e2)), 0L)
-    // the first commit stamped the dir with router + quantizer digest
-    val stamp = graft.util.AtomicPointer.read(
-      spark.sparkContext.hadoopConfiguration,
-      new org.apache.hadoop.fs.Path(idx, "ROUTER"))
+    // the first commit's manifest carries router + quantizer digest
+    val stamp = Stamps.layout(spark, idx)
     assert(stamp.exists(_.startsWith("router=flat,quantizer=")), stamp.toString)
 
     // a RE-SEEDED quantizer (different centroid vectors) must be refused —
-    // both on the write path and on the serving probe
+    // on the write path and on every serving read — and write nothing
     val centB = Seq((0L, e2), (1L, e1), (2L, e4), (3L, e3)).toDF("cid", "cv")
+    val before = Stamps.files(idx)
     val eW = intercept[IllegalStateException] {
       EmbeddingDedupStream.applyBatchDelta(spark, idx, centB,
         batch(("I", 30L, e3)), 1L)
     }
-    assert(eW.getMessage.contains("stamp mismatch"), eW.getMessage)
-    val eP = intercept[IllegalStateException] {
-      EmbeddingDedupStream.probeDelta(spark, idx, centB,
-        Seq((100L, e1close)).toDF("vec_id", "embedding")).collect()
+    assert(eW.getMessage.contains("layout mismatch, rebuild required"), eW.getMessage)
+    val queries = Seq((100L, e1close)).toDF("vec_id", "embedding")
+    for (serve <- Seq[() => Any](
+        () => EmbeddingDedupStream.probeDelta(spark, idx, centB, queries).collect(),
+        () => EmbeddingDedupStream.annTopKDelta(spark, idx, centB, queries, k = 1).collect(),
+        () => EmbeddingDedupStream.tuneProbeDelta(spark, idx, centB, queries, 0.9))) {
+      val eP = intercept[IllegalStateException](serve())
+      assert(eP.getMessage.contains("quantizer mismatch"), eP.getMessage)
     }
-    assert(eP.getMessage.contains("quantizer mismatch"), eP.getMessage)
     // a ROUTER flip under the same quantizer is refused too
     val eR = intercept[IllegalStateException] {
       EmbeddingDedupStream.applyBatchDelta(spark, idx, centFrame,
         batch(("I", 30L, e3)), 1L, router = EmbeddingIndex.HierRouter)
     }
-    assert(eR.getMessage.contains("stamp mismatch"), eR.getMessage)
+    assert(eR.getMessage.contains("layout mismatch, rebuild required"), eR.getMessage)
+    assert(Stamps.files(idx) == before, "a refused call writes nothing")
     // the matching quantizer + router still works
     EmbeddingDedupStream.applyBatchDelta(spark, idx, centFrame,
       batch(("I", 30L, e3)), 1L)
@@ -272,7 +275,7 @@ class EmbeddingDedupStreamSpec extends SparkSpec {
       EmbeddingDedupStream.probeDelta(spark, bare, centFrame,
         Seq((100L, e1close)).toDF("vec_id", "embedding")).collect()
     }
-    assert(eB.getMessage.contains("no ROUTER stamp"), eB.getMessage)
+    assert(eB.getMessage.contains("by an unstamped writer"), eB.getMessage)
   }
 
   test("a hier-built index is stamped hier and probeDelta dispatches hier-aware from the stamp") {
@@ -286,9 +289,7 @@ class EmbeddingDedupStreamSpec extends SparkSpec {
       embs.filter(col("vec_id") % 3 =!= 2)
         .select(lit("I").as("op"), col("vec_id"), col("embedding")),
       0L, router = EmbeddingIndex.HierRouter)
-    val stamp = graft.util.AtomicPointer.read(
-      spark.sparkContext.hadoopConfiguration,
-      new org.apache.hadoop.fs.Path(idx, "ROUTER"))
+    val stamp = Stamps.layout(spark, idx)
     assert(stamp.exists(_.startsWith("router=hier,")), stamp.toString)
     // the maintained assignments ARE the hier build's (not flat's)
     val got = EmbeddingDedupStream.readIndexDelta(spark, idx)
@@ -423,47 +424,63 @@ class EmbeddingDedupStreamSpec extends SparkSpec {
       batchId = 1L))
   }
 
-  test("requantize crash window: a live REQUANT marker refuses every read/write until the re-run converges") {
+  test("requantize: cells and stamp move in one commit; a crash on either side converges") {
     import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = java.nio.file.Files.createTempDirectory("graft-requant").toString
+    import graft.util.FaultPoints
     val cent = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0))).toDF("cid", "cv")
+    val cent2 = Seq((0L, Seq(0.8, 0.6)), (1L, Seq(-0.6, 0.8))).toDF("cid", "cv")
     val rows = Seq(("I", 1L, Seq(0.9, 0.1)), ("I", 2L, Seq(0.1, 0.9)))
       .toDF("op", "vec_id", "embedding")
-    EmbeddingDedupStream.applyBatchDelta(spark, dir, cent, rows, 0L,
-      threshold = 0.9999)
-    // simulate a requantizer that died after raising its marker: the
-    // target stamp is up, the data/stamp may disagree — every gate must
-    // refuse rather than serve the ambiguous state
-    val cent2 = Seq((0L, Seq(0.8, 0.6)), (1L, Seq(-0.6, 0.8))).toDF("cid", "cv")
-    val want = graft.operators.EmbeddingIndex.indexStamp(cent2,
-      graft.operators.EmbeddingIndex.FlatRouter)
-    assert(graft.util.AtomicPointer.commitExclusive(conf,
-      graft.operators.EmbeddingIndex.requantMarkerPath(dir), want))
-    val exProbe = intercept[IllegalStateException] {
-      EmbeddingDedupStream.probeDelta(spark, dir, cent,
-        rows.select($"vec_id", $"embedding"))
+    val q = Seq((9L, Seq(0.8, 0.6))).toDF("vec_id", "embedding")
+    def serves(dir: String, c: org.apache.spark.sql.DataFrame): Boolean =
+      try { EmbeddingDedupStream.probeDelta(spark, dir, c, q, nProbe = 1).collect(); true }
+      catch { case e: IllegalStateException
+        if e.getMessage.contains("quantizer mismatch") => false }
+    def index(dir: String) = EmbeddingDedupStream.readIndexDelta(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def fresh(): String = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-requant").toString
+      EmbeddingDedupStream.applyBatchDelta(spark, dir, cent, rows, 0L,
+        threshold = 0.9999)
+      dir
     }
-    assert(exProbe.getMessage.contains("REQUANT"), exProbe.getMessage)
-    val exWrite = intercept[IllegalStateException] {
-      EmbeddingDedupStream.applyBatchDelta(spark, dir, cent, rows, 1L)
+    def crashAt(point: String): String = {
+      val dir = fresh()
+      intercept[RuntimeException] {
+        FaultPoints.during { (p, label) =>
+          if (p == point && label == dir) throw new RuntimeException("boom")
+        }(EmbeddingDedupStream.requantizeDelta(spark, dir, cent2, batchId = 1L))
+      }
+      dir
     }
-    assert(exWrite.getMessage.contains("REQUANT"), exWrite.getMessage)
-    // a marker toward a DIFFERENT target refuses (no last-write-wins)
+    // the reference: the same requantize with no crash
+    val ref = fresh()
+    assert(EmbeddingDedupStream.requantizeDelta(spark, ref, cent2, batchId = 1L))
+    assert(!serves(ref, cent) && serves(ref, cent2))
+
+    // before the commit: the old index serves under the old quantizer, the
+    // new one is refused, and a re-run converges to the reference
+    val before = crashAt(FaultPoints.GroupBeforeCommit)
+    assert(serves(before, cent) && !serves(before, cent2))
+    assert(EmbeddingDedupStream.committedDelta(spark, before).map(_._1).contains(0L))
+    assert(EmbeddingDedupStream.requantizeDelta(spark, before, cent2, batchId = 1L))
+    assert(!serves(before, cent) && serves(before, cent2))
+    assert(index(before) == index(ref))
+
+    // after the commit: the new index serves, and a replay returns false
+    val after = crashAt(FaultPoints.GroupAfterCommit)
+    assert(!serves(after, cent) && serves(after, cent2))
+    assert(index(after) == index(ref))
+    assert(!EmbeddingDedupStream.requantizeDelta(spark, after, cent2, batchId = 1L))
+    // another target at the committed batchId is refused, never
+    // last-write-wins, and writes nothing
+    val files = Stamps.files(after)
     val cent3 = Seq((0L, Seq(1.0, 1.0))).toDF("cid", "cv")
     val exOther = intercept[IllegalStateException] {
-      EmbeddingDedupStream.requantizeDelta(spark, dir, cent3, batchId = 1L)
+      EmbeddingDedupStream.requantizeDelta(spark, after, cent3, batchId = 1L)
     }
-    assert(exOther.getMessage.contains("different re-quantization"),
+    assert(exOther.getMessage.contains("refusing rather than last-write-wins"),
       exOther.getMessage)
-    // re-running with the MARKER'S target converges and clears it
-    assert(EmbeddingDedupStream.requantizeDelta(spark, dir, cent2,
-      batchId = 1L))
-    assert(graft.util.AtomicPointer.read(conf,
-      graft.operators.EmbeddingIndex.requantMarkerPath(dir)).isEmpty)
-    val served = EmbeddingDedupStream.probeDelta(spark, dir, cent2,
-      Seq((9L, Seq(0.8, 0.6))).toDF("vec_id", "embedding"), nProbe = 1,
-      threshold = 0.4)
-    assert(served.count() == 1)
+    assert(Stamps.files(after) == files && serves(after, cent2))
   }
 }

@@ -15,10 +15,9 @@ class MediaDedupStreamSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-mds").toString
 
     val mem = MemoryStream[(Long, Long, Long, Long, Long)]
-    val q = MediaDedupStream.signedStreamDelta(
-      mem.toDS().toDF("media_id", "b0", "b1", "b2", "b3")
-        .withColumn("op", lit("I")),
-      s"$dir/index", s"$dir/ckpt")
+    val q = MicroBatch.start(mem.toDS().toDF("media_id", "b0", "b1", "b2", "b3")
+        .withColumn("op", lit("I")), s"$dir/ckpt")(
+      MediaDedupStream.applySignedBatchDelta(spark, s"$dir/index", _, _))
 
     // batch 1: two fingerprint-identical clips arrive TOGETHER — only the
     // smaller id may enter the index — plus one distinct clip.
@@ -153,9 +152,9 @@ class MediaDedupStreamSpec extends SparkSpec {
       rows.toDF("op", "media_id", "b0", "b1", "b2", "b3")
 
     val mem = MemoryStream[(String, Long, Long, Long, Long, Long)]
-    val q = MediaDedupStream.signedStreamDelta(
-      mem.toDS().toDF("op", "media_id", "b0", "b1", "b2", "b3"),
-      idx, s"$dir/ckpt")
+    val q = MicroBatch.start(
+      mem.toDS().toDF("op", "media_id", "b0", "b1", "b2", "b3"), s"$dir/ckpt")(
+      MediaDedupStream.applySignedBatchDelta(spark, idx, _, _))
     // batch 1: two distinct clips enter
     mem.addData(("I", 1L, 50L, 7L, 9L, 11L),
       ("I", 2L, 1L << 10, 1L << 11, 1L << 12, 1L << 13))
@@ -218,23 +217,22 @@ class MediaDedupStreamSpec extends SparkSpec {
         .toDF("op", "media_id", "b0", "b1", "b2", "b3")
     MediaDedupStream.applySignedBatchDelta(spark, idx,
       batch(fp(1L, 50L)), 0L)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val stamp = graft.util.AtomicPointer.read(conf,
-      new org.apache.hadoop.fs.Path(idx, "FPFAMILY"))
-    assert(stamp.contains(graft.operators.Multimodal.fingerprintStamp))
+    assert(Stamps.layout(spark, idx).contains(graft.operators.Multimodal.fingerprintStamp))
 
     // a FUTURE family retune (simulated foreign stamp) must refuse the
-    // maintainer instead of probing wrong emptiness
-    graft.util.AtomicPointer.commit(conf,
-      new org.apache.hadoop.fs.Path(idx, "FPFAMILY"),
-      "family=phash64,bands=8x8,v=2")
-    val e1 = intercept[IllegalStateException] {
-      MediaDedupStream.applySignedBatchDelta(spark, idx,
-        batch(fp(2L, 60L)), 1L)
+    // maintainer and the reader instead of probing wrong emptiness, and
+    // write nothing
+    Stamps.restamp(spark, idx, "family=phash64,bands=8x8,v=2")
+    val before = Stamps.files(idx)
+    for (call <- Seq[() => Any](
+        () => MediaDedupStream.applySignedBatchDelta(spark, idx, batch(fp(2L, 60L)), 1L),
+        () => MediaDedupStream.readIndexDelta(spark, idx))) {
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains("layout mismatch, rebuild required"), e.getMessage)
     }
-    assert(e1.getMessage.contains("fingerprint-family mismatch"), e1.getMessage)
+    assert(Stamps.files(idx) == before)
 
-    // committed state WITHOUT a stamp (pre-stamp engine / foreign writer)
+    // committed state WITHOUT a stamp (an unstamped writer)
     val bare = s"$dir/bare"
     graft.util.DeltaView(spark, bare, Seq("media_id")).applyBatch(0L) { _ =>
       (Seq((1L, 50L, 7L, 9L, 11L)).toDF("media_id", "b0", "b1", "b2", "b3"),
@@ -244,7 +242,6 @@ class MediaDedupStreamSpec extends SparkSpec {
       MediaDedupStream.applySignedBatchDelta(spark, bare,
         batch(fp(2L, 60L)), 1L)
     }
-    assert(e2.getMessage.contains("no FPFAMILY stamp"), e2.getMessage)
-
+    assert(e2.getMessage.contains("by an unstamped writer"), e2.getMessage)
   }
 }

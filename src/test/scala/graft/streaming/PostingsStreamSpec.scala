@@ -86,14 +86,17 @@ class PostingsStreamSpec extends SparkSpec {
     val d = docs.limit(20)
     PostingsStream.applySignedBatchDelta(spark, dir, signed("I", d), 0L,
       nBuckets = 64)
-    intercept[IllegalStateException] {
-      PostingsStream.applySignedBatchDelta(spark, dir, signed("I", d), 1L,
-        nBuckets = 32)
+    assert(Stamps.layout(spark, dir).contains(PostingsStream.postingsStamp(64)))
+    val before = Stamps.files(dir)
+    for (call <- Seq[() => Any](
+        () => PostingsStream.applySignedBatchDelta(spark, dir, signed("I", d), 1L,
+          nBuckets = 32),
+        () => PostingsStream.bm25TopKDelta(spark, dir, TextAnalysis.Bm25Queries,
+          nBuckets = 32))) {
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains("layout mismatch, rebuild required"), e.getMessage)
     }
-    intercept[IllegalStateException] {
-      PostingsStream.bm25TopKDelta(spark, dir, TextAnalysis.Bm25Queries,
-        nBuckets = 32)
-    }
+    assert(Stamps.files(dir) == before, "a refused call writes nothing")
   }
 
   test("crash before or after the group commit: replay converges") {

@@ -21,8 +21,8 @@ class Scd2MaintenanceSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-scd2m").toString
 
     val mem = MemoryStream[(Long, Long, Long, String)]
-    val q = Scd2Maintenance.maintainStreamDelta(
-      mem.toDS().toDF("key", "ts", "tb", "attr"), s"$dir/dim", s"$dir/ckpt")
+    val q = MicroBatch.start(mem.toDS().toDF("key", "ts", "tb", "attr"),
+      s"$dir/ckpt")(Scd2Maintenance.applyBatchDelta(spark, s"$dir/dim", _, _))
 
     // event-time ordered per key across batches
     mem.addData((1L, 10L, 1L, "A"), (2L, 15L, 2L, "Z"))

@@ -18,8 +18,8 @@ class ViewMaintenanceSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-vm").toString
 
     val mem = MemoryStream[(String, String, Double)]
-    val q = ViewMaintenance.maintainStreamDelta(
-      mem.toDS().toDF("op", "key", "measure"), s"$dir/view", s"$dir/ckpt")
+    val q = MicroBatch.start(mem.toDS().toDF("op", "key", "measure"),
+      s"$dir/ckpt")(ViewMaintenance.applyBatchDelta(spark, s"$dir/view", _, _))
 
     mem.addData(("I", "A", 10.0), ("I", "A", 20.0), ("I", "B", 5.0))
     q.processAllAvailable()

@@ -70,25 +70,33 @@ class DeltaViewSpec extends SparkSpec {
   test("rebase rewrites the whole view as one fresh base; replay no-ops; empty dir refuses") {
     val dir = tmp("rebase")
     val dv = DeltaView(spark, dir, Seq("k"), compactEvery = 100)
+    val g = DeltaView.Group(spark, dir, Seq(dv))
+    def upperP(vs: Seq[DataFrame]) = vs.map(_.withColumn("p", upper(col("p"))))
     // an empty directory has nothing to rewrite
     intercept[IllegalArgumentException] {
-      dv.rebase(0)(identity)
+      g.rebase(0)(identity)
     }
     dv.applyBatch(0)(_ => (ins(1L -> "a", 2L -> "b"), del()))
     dv.applyBatch(1)(_ => (ins(3L -> "c"), del(1L)))
     // every row transforms at once — the commit a delta batch cannot
     // express without corpus-sized tombstones
-    assert(dv.rebase(2)(v => v.withColumn("p", upper(col("p")))))
+    assert(g.rebase(2)(upperP))
     assert(rows(dv.read()) == Set(2L -> "B", 3L -> "C"))
     // the rewrite IS a compaction: the new state is one base, no deltas
     val (_, v, base) = dv.committed.get
     assert(v == base, s"v=$v base=$base")
     // replay no-ops (the transform must not apply twice)
-    assert(!dv.rebase(2)(v => v.withColumn("p", upper(col("p")))))
+    assert(!g.rebase(2)(upperP))
     assert(rows(dv.read()) == Set(2L -> "B", 3L -> "C"))
     // normal delta commits continue on top of the rebased state
     dv.applyBatch(3)(_ => (ins(4L -> "d"), del(2L)))
     assert(rows(dv.read()) == Set(3L -> "C", 4L -> "d"))
+    // only a rebase moves the layout; a commit under the old one is then
+    // refused by name
+    assert(g.rebase(4, to = "v2")(identity))
+    assert(g.copy(layout = "v2").checked.exists(_.layout == "v2"))
+    assert(intercept[IllegalStateException](dv.applyBatch(5)(_ => (ins(5L -> "e"), del())))
+      .getMessage.contains("layout mismatch, rebuild required"))
   }
 
   test("replayed batches no-op; the pointer is the replay guard") {
